@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from liresolr_spark.functions.codec import decode_block
 from liresolr_spark.operators.phrase import conjunctive_docids
+from liresolr_spark.operators.wand import _run_shard_kernel, postings_estimate
 from liresolr_spark.plans.build import read_meta
 
 
@@ -42,10 +43,13 @@ def disjunctive_docids(
     field: str = "text",
     blocks_df: DataFrame | None = None,
     meta=None,
+    dictionary_map: dict | None = None,
 ) -> DataFrame:
     """DataFrame(shard, docID) of docs whose `field` contains ANY term —
     the boolean-OR doc set (the MUST_NOT exclusion input). Per shard:
-    decode each term's docID stream and take the sorted union."""
+    decode each term's docID stream and take the sorted union.
+    dictionary_map: the driver-side {field: {term: df}} snapshot; it sizes
+    the request for the kernel dispatch (operators.wand._run_shard_kernel)."""
     uniq = sorted(set(terms))
     if not uniq:
         return spark.createDataFrame([], "shard int, docID long")
@@ -68,10 +72,9 @@ def disjunctive_docids(
         return pd.DataFrame({"shard": np.full(len(ids), shard, dtype="int32"),
                              "docID": ids})
 
-    from liresolr_spark.operators.wand import _run_shard_kernel
-
     return _run_shard_kernel(
-        spark, blocks, kernel, "shard int, docID long", meta.num_shards)
+        spark, blocks, kernel, "shard int, docID long", meta,
+        postings=postings_estimate(dictionary_map, field, uniq))
 
 
 def boolean_restriction(
@@ -82,16 +85,20 @@ def boolean_restriction(
     field: str = "text",
     blocks_df: DataFrame | None = None,
     meta=None,
+    dictionary_map: dict | None = None,
 ) -> tuple[DataFrame | None, DataFrame | None]:
     """(allow, deny) docID restriction frames for a boolean query: allow =
     docs containing ALL `must` terms (None when no MUST clauses — no
     restriction), deny = docs containing ANY `must_not` term (None when
-    empty). Both plug into wand_topk / phrase_topk unchanged."""
+    empty). Both plug into wand_topk / phrase_topk unchanged.
+    dictionary_map: see disjunctive_docids."""
     allow = deny = None
     if must:
         allow = conjunctive_docids(spark, index_dir, must, field=field,
-                                   blocks_df=blocks_df, meta=meta)
+                                   blocks_df=blocks_df, meta=meta,
+                                   dictionary_map=dictionary_map)
     if must_not:
         deny = disjunctive_docids(spark, index_dir, must_not, field=field,
-                                  blocks_df=blocks_df, meta=meta)
+                                  blocks_df=blocks_df, meta=meta,
+                                  dictionary_map=dictionary_map)
     return allow, deny

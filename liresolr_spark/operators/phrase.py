@@ -52,7 +52,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 
 from liresolr_spark.functions.codec import decode_block, decode_positions
 from liresolr_spark.functions.tokenizer import py_tokenize, tokenize_expr
-from liresolr_spark.operators.wand import _in_sorted
+from liresolr_spark.operators.wand import (_in_sorted, _run_shard_kernel,
+                                           postings_estimate)
 from liresolr_spark.plans.build import NATURAL_KEY, read_meta
 
 
@@ -81,9 +82,12 @@ def conjunctive_docids(
     field: str = "text",
     blocks_df: DataFrame | None = None,
     meta=None,
+    dictionary_map: dict | None = None,
 ) -> DataFrame:
     """DataFrame(shard, docID) of docs whose `field` contains EVERY term —
     the boolean-AND candidate set, from posting-list intersection.
+    dictionary_map: the driver-side {field: {term: df}} snapshot; it sizes
+    the request for the kernel dispatch (operators.wand._run_shard_kernel).
 
     Per shard (one Arrow batch, same dispatch as the WAND kernel): decode
     each term's docID stream (blocks are docID-sorted and block_seq-ordered,
@@ -126,10 +130,9 @@ def conjunctive_docids(
         return pd.DataFrame({"shard": np.full(len(cur), shard, dtype="int32"),
                              "docID": cur})
 
-    from liresolr_spark.operators.wand import _run_shard_kernel
-
     return _run_shard_kernel(
-        spark, blocks, kernel, "shard int, docID long", meta.num_shards)
+        spark, blocks, kernel, "shard int, docID long", meta,
+        postings=postings_estimate(dictionary_map, field, uniq))
 
 
 def _decode_term_postings(bl: pd.DataFrame) -> dict:
@@ -220,6 +223,7 @@ def positional_matches(
     field: str = "text",
     blocks_df: DataFrame | None = None,
     meta=None,
+    dictionary_map: dict | None = None,
 ) -> DataFrame:
     """DataFrame(shard, docID, tf, doclen) of SLIDING phrase matches,
     answered entirely from the positional index (no corpus access).
@@ -267,11 +271,10 @@ def positional_matches(
             "shard": np.full(len(ids), shard, dtype="int32"),
             "docID": ids, "tf": tf, "doclen": dls})
 
-    from liresolr_spark.operators.wand import _run_shard_kernel
-
     return _run_shard_kernel(
         spark, blocks, kernel,
-        "shard int, docID long, tf long, doclen long", meta.num_shards)
+        "shard int, docID long, tf long, doclen long", meta,
+        postings=postings_estimate(dictionary_map, field, uniq))
 
 
 def positional_matches_many(
@@ -281,6 +284,7 @@ def positional_matches_many(
     field: str = "text",
     blocks_df: DataFrame | None = None,
     meta=None,
+    dictionary_map: dict | None = None,
 ) -> DataFrame:
     """Batched positional phrase matching: DataFrame(qid, shard, docID, tf,
     doclen) for ALL phrases in ONE distributed job — the blocks of the
@@ -330,12 +334,10 @@ def positional_matches_many(
                 "docID": ids, "tf": tf, "doclen": dls}))
         return pd.concat(frames, ignore_index=True) if frames else empty
 
-    from liresolr_spark.operators.wand import _run_shard_kernel
-
     return _run_shard_kernel(
         spark, blocks, kernel,
-        "qid string, shard int, docID long, tf long, doclen long",
-        meta.num_shards)
+        "qid string, shard int, docID long, tf long, doclen long", meta,
+        postings=postings_estimate(dictionary_map, field, all_terms))
 
 
 def phrase_topk_many(
@@ -348,6 +350,7 @@ def phrase_topk_many(
     meta=None,
     deny_docids: DataFrame | None = None,
     cache_out: list | None = None,
+    dictionary_map: dict | None = None,
 ) -> DataFrame:
     """Batched exact phrase top-k (positional indexes only):
     DataFrame(qid, docID, score) with each qid's matches ranked by its own
@@ -357,7 +360,8 @@ def phrase_topk_many(
     specs = {q: py_tokenize(p) for q, p in phrases.items()}
     meta = meta or read_meta(index_dir)
     matched = positional_matches_many(spark, index_dir, specs, field=field,
-                                      blocks_df=blocks_df, meta=meta)
+                                      blocks_df=blocks_df, meta=meta,
+                                      dictionary_map=dictionary_map)
     if deny_docids is not None:
         matched = matched.join(deny_docids.select("shard", "docID"),
                                ["shard", "docID"], "left_anti")
@@ -494,6 +498,7 @@ def phrase_topk(
     deny_docids: DataFrame | None = None,
     cache_out: list | None = None,
     mode: str = "auto",
+    dictionary_map: dict | None = None,
 ) -> DataFrame:
     """Exact phrase top-k through the index: DataFrame(docID, score), the
     phrase matches ranked by phrase-BM25 (score DESC, docID ASC).
@@ -507,7 +512,9 @@ def phrase_topk(
     as wand_topk (fq pushdown / tombstones), applied to the match/candidate
     set BEFORE the df aggregate (a filtered phrase query scores under the
     filter, consistent across both paths). cache_out: see
-    _score_phrase_matches — without it the match pipeline runs twice."""
+    _score_phrase_matches — without it the match pipeline runs twice.
+    dictionary_map: the driver-side {field: {term: df}} snapshot that sizes
+    the match kernel's dispatch (operators.wand._run_shard_kernel)."""
     terms = py_tokenize(phrase)
     if not terms:
         return spark.createDataFrame([], "docID long, score double")
@@ -517,7 +524,8 @@ def phrase_topk(
 
     if positional:
         matched = positional_matches(spark, index_dir, terms, field=field,
-                                     blocks_df=blocks_df, meta=meta)
+                                     blocks_df=blocks_df, meta=meta,
+                                     dictionary_map=dictionary_map)
         if allow_docids is not None:
             matched = matched.join(allow_docids.select("shard", "docID"),
                                    ["shard", "docID"])
@@ -534,7 +542,8 @@ def phrase_topk(
                 "index stores sha256, not content); build the index "
                 "with_positions=True for corpus-free phrase queries")
         cand = conjunctive_docids(spark, index_dir, terms, field=field,
-                                  blocks_df=blocks_df, meta=meta)
+                                  blocks_df=blocks_df, meta=meta,
+                                  dictionary_map=dictionary_map)
         if allow_docids is not None:
             cand = cand.join(allow_docids.select("shard", "docID"),
                              ["shard", "docID"])

@@ -24,11 +24,23 @@ This is a SAFE optimization: results are exactly the exhaustive top-k
 candidate cap of 20000 (LireRequestHandler.java:59).
 
 Spark plan: blocks are partition-pruned to the query's terms (parquet
-row-group stats on `term`); the kernel runs as applyInPandas grouped by
-shard — one Arrow batch per shard, no driver-side posting materialization,
-no shuffle of raw postings. Doclens travel INSIDE each block (codec third
-stream, the analog of Lucene per-segment norms), so a query's input is
-proportional to the posting lists of its terms — it never scans a
+row-group stats on `term`), then the per-shard kernel runs on one of two
+paths, chosen per request in `_run_shard_kernel` before any job runs:
+
+  - driver: when the request's posting count (sum of df over its distinct
+    terms, read from the pinned dictionary snapshot) is at most
+    DRIVER_MAX_POSTINGS, the pruned block rows are collected once and the
+    SAME kernel closure runs per shard in the driver process. A served
+    request moves KB of postings, so the pandas-UDF stage (shuffle, Python
+    worker round trip) would cost far more than the arithmetic;
+  - spark: otherwise (or with no dictionary snapshot) the kernel runs as
+    applyInPandas grouped by shard — one Arrow batch per shard, no
+    driver-side posting materialization, no shuffle of raw postings.
+
+Both paths return a Spark DataFrame with the kernel's schema, so the merge
+and everything downstream are shared. Doclens travel INSIDE each block
+(codec third stream, the analog of Lucene per-segment norms), so a query's
+input is proportional to the posting lists of its terms — it never scans a
 corpus-sized doc-stats table (critical at 10^12 docs).
 """
 
@@ -38,10 +50,38 @@ import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from liresolr_spark.functions.codec import decode_block
 from liresolr_spark.operators.bm25 import idf_lucene
 from liresolr_spark.plans.build import read_meta
+
+# Postings (sum of df over a request's distinct terms) at or under which the
+# shard kernels run in the driver instead of a pandas-UDF stage. Both paths
+# took equal wall time at ~255k postings (local[4], positional index; SCALE.md
+# §3, "Driver-local kernel dispatch"); the bound sits well below that,
+# because the driver path is single-threaded and the Spark path gains
+# from every added core.
+DRIVER_MAX_POSTINGS = 100_000
+
+
+def postings_estimate(dictionary_map: dict | None, field: str,
+                      terms) -> int | None:
+    """Sum of df over the distinct `terms` of `field` from a driver-side
+    {field: {term: df}} snapshot — the request's posting count, known
+    before any job runs. None when there is no snapshot."""
+    if dictionary_map is None:
+        return None
+    dmap = dictionary_map.get(field, {})
+    return sum(dmap.get(t, 0) for t in set(terms))
+
+
+def kernel_dispatch(postings: int | None) -> str:
+    """'driver' when a request's posting estimate is known and at most
+    DRIVER_MAX_POSTINGS, else 'spark' (see _run_shard_kernel)."""
+    if postings is not None and postings <= DRIVER_MAX_POSTINGS:
+        return "driver"
+    return "spark"
 
 
 def _mask_from_pdf(mask_pdf: pd.DataFrame | None, allow_mode: bool):
@@ -340,20 +380,58 @@ def _restrict_df(allow_docids: DataFrame | None,
     return out
 
 
-def _run_shard_kernel(spark, blocks, kernel, schema, num_shards,
-                      restrict=None):
-    """Dispatch the per-shard kernel with an EXPLICIT hash repartition on
-    shard, pinned to min(num_shards, default parallelism).
+def _run_shard_kernel(spark, blocks, kernel, schema, meta, restrict=None,
+                      postings=None):
+    """Run the per-shard kernel over the pruned `blocks`, optionally
+    cogrouped with a (shard, docID, allow) `restrict` frame, and return a
+    DataFrame with `schema`. `postings` is the request's posting estimate
+    (postings_estimate); kernel_dispatch picks the path.
 
-    Why: the pruned block rows for a query batch are tiny (KB-MB), so
-    AQE's partition coalescing folds the pre-kernel shuffle into ONE
-    partition and the shard kernels run serially — measured 2x batch
-    latency at 32 cores. A user-specified repartition count is exempt from
-    AQE coalescing, and hashpartitioning(shard, P) already satisfies the
-    kernel's required distribution, so no second shuffle appears. The
-    kernel's cost is CPU (decode + score), not data size — parallelism
-    should follow shard count, not shuffle bytes."""
-    n_parts = max(1, min(int(num_shards), spark.sparkContext.defaultParallelism))
+    Driver path (small requests): one collect of the block rows, plus one
+    of the restriction rows that fall in the collected blocks' aligned
+    docID ranges (block_seq = docID // block_size) — the kernel only masks
+    decoded docIDs, so rows outside those ranges can never matter, and the
+    collected restriction stays bounded by block_size per block row. The
+    same kernel closure then runs once per shard, under the cogroup
+    contract: a shard with blocks but no mask rows gets an EMPTY mask frame
+    (under allow-mode it matches nothing); a shard with mask rows but no
+    blocks is skipped (every kernel returns no rows for zero blocks).
+
+    Spark path: applyInPandas (cogroup when restricted) after an EXPLICIT
+    hash repartition on shard, pinned to min(num_shards, default
+    parallelism). Why: the pruned block rows for a query batch are tiny
+    (KB-MB), so AQE's partition coalescing folds the pre-kernel shuffle
+    into ONE partition and the shard kernels run serially — measured 2x
+    batch latency at 32 cores. A user-specified repartition count is
+    exempt from AQE coalescing, and hashpartitioning(shard, P) already
+    satisfies the kernel's required distribution, so no second shuffle
+    appears. The kernel's cost is CPU (decode + score), not data size —
+    parallelism should follow shard count, not shuffle bytes."""
+    if kernel_dispatch(postings) == "driver":
+        bl = blocks.toPandas()
+        if restrict is not None and len(bl):
+            seqs = sorted({int(s) for s in bl["block_seq"]})
+            mk = restrict.filter(
+                F.expr(f"docID div {int(meta.block_size)}").isin(seqs)
+            ).select("shard", "docID", "allow").toPandas()
+            masks = dict(tuple(mk.groupby("shard")))
+        out = []
+        for shard, grp in bl.groupby("shard"):
+            grp = grp.reset_index(drop=True)
+            if restrict is None:
+                res = kernel(grp)
+            else:
+                res = kernel(grp, masks.get(shard, mk.iloc[:0])
+                             .reset_index(drop=True))
+            if len(res):
+                out.append(res)
+        if not out:
+            return spark.createDataFrame([], schema)
+        struct = StructType.fromDDL(schema)
+        return spark.createDataFrame(
+            pd.concat(out, ignore_index=True)[struct.names], struct)
+    n_parts = max(1, min(int(meta.num_shards),
+                         spark.sparkContext.defaultParallelism))
     blocks = blocks.repartition(n_parts, "shard")
     if restrict is None:
         return blocks.groupBy("shard").applyInPandas(
@@ -422,8 +500,9 @@ def wand_topk_many(
                                 allow_mode=allow_docids is not None)
     schema = "qid string, docID long, score double"
     per_shard = _run_shard_kernel(
-        spark, blocks, kernel, schema, meta.num_shards,
-        _restrict_df(allow_docids, deny_docids))
+        spark, blocks, kernel, schema, meta,
+        _restrict_df(allow_docids, deny_docids),
+        postings_estimate(dictionary_map, field, union_terms))
     return _merge_topk_per_qid(per_shard, k)
 
 
@@ -556,7 +635,8 @@ def wand_topk(
                            allow_mode=allow_docids is not None)
     schema = "docID long, score double"
     per_shard = _run_shard_kernel(
-        spark, blocks, kernel, schema, meta.num_shards,
-        _restrict_df(allow_docids, deny_docids))
+        spark, blocks, kernel, schema, meta,
+        _restrict_df(allow_docids, deny_docids),
+        postings_estimate(dictionary_map, field, idf))
     # global merge: bounded heap per partition + driver merge (TakeOrderedAndProject)
     return per_shard.orderBy(F.desc("score"), F.asc("docID")).limit(k)

@@ -130,3 +130,36 @@ def test_boolean_restriction_none_sides(spark, bidx):
     assert allow is None and deny is None
     allow, deny = boolean_restriction(spark, bidx[0], ["alpha"], None)
     assert allow is not None and deny is None
+
+
+def test_boolean_clauses_on_hash_field_equal_oracle(spark, bidx):
+    """must/must_not on the hash-token field ('ha') are hashed like the
+    query's own tokens — search(hashes=..., must=...) and
+    search_many(field='ha', must=...) equal the brute-force 'ha' ranking
+    restricted by the clauses, MUST terms scored (they used to match no
+    'ha' postings and silently return nothing)."""
+    from liresolr_spark.api import LireQueryEngine
+    from liresolr_spark.functions.tokenizer import py_hash_token
+    from liresolr_spark.oracle import brute_force_topk
+
+    d, _ = bidx
+    eng = LireQueryEngine(spark, d)
+    content = dict(_DOCS)
+    docs = [(r["docID"], content[r["path"]]) for r in
+            spark.read.parquet(f"{d}/docstats").select("docID", "path")
+            .collect()]
+    keep = {i for i, text in docs
+            if "alpha" in text.split() and "gamma" not in text.split()}
+    want = [(i, s) for i, s in brute_force_topk(
+        docs, "read common alpha", k=100, field="ha") if i in keep][:10]
+    assert want
+
+    single = eng.search(hashes=[py_hash_token(t) for t in ("read", "common")],
+                        must=["alpha"], must_not=["gamma"], rows=10).collect()
+    batched = eng.search_many({"q": "read common"}, field="ha",
+                              must=["alpha"], must_not=["gamma"],
+                              rows=10).collect()
+    for got in (single, batched):
+        assert [r["docID"] for r in got] == [i for i, _ in want]
+        for r, (_, s) in zip(got, want):
+            assert abs(r["score"] - s) < 1e-9
