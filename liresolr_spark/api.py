@@ -6,7 +6,13 @@ registered in solrconfig.xml (ref: README.md:108-132):
   /lireSim  -> LireQueryEngine.similar(...)       (SimilarRequestHandler)
   lirefunc  -> LireQueryEngine.function_sort(...) (LireValueSource)
 
-Each method returns a DataFrame (lazy logical plan); per-request metrics are
+Each method returns a DataFrame. A kernel-backed handler whose shard
+kernels all run in the driver (operators.wand.kernel_dispatch) returns an
+EXECUTED local relation, not a lazy plan: its kernel rows stay in pandas
+through the merge, pagination and restriction steps, and the page's payload
+fetch is the request's last Spark job, so the caller's collect() runs none.
+A request with any Spark-dispatched kernel, and the non-kernel handlers
+(function_sort, random_sample), return a lazy plan. Per-request metrics are
 returned alongside via `last_metrics` — the analog of RawDocsSearchTime /
 ReRankSearchTime in the reference's responses
 (ref: LireRequestHandler.java:460-461,493-494).
@@ -14,18 +20,21 @@ ReRankSearchTime in the reference's responses
 
 from __future__ import annotations
 
+import functools
 import random
 import time
 
+import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
-
-import functools
+from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
 from liresolr_spark import DEFAULT_CANDIDATES, DEFAULT_ROWS, MAX_QUERY_TERMS
+from liresolr_spark.frames import empty_pdf, local_frame
 from liresolr_spark.functions.tokenizer import py_hash_token, py_tokenize
-from liresolr_spark.operators.wand import (kernel_dispatch, postings_estimate,
-                                           wand_topk)
+from liresolr_spark.operators.wand import (MANY_SCHEMA, WAND_SCHEMA,
+                                           kernel_dispatch, postings_estimate,
+                                           top_k, wand_topk)
 from liresolr_spark.plans.build import read_meta
 
 
@@ -33,9 +42,10 @@ def _counted(fn):
     """Cumulative request statistics, the analog of the reference's
     per-handler numRequests / numErrors / totalTime counters
     (ref: LireRequestHandler.java:51-53, reported at :568-574). Timed span
-    is plan construction (our DataFrames are lazy; execution time lives in
-    the Spark UI/metrics) — `last_metrics` keeps the per-request figure.
-    Also starts the request's shard-kernel dispatch log (_log_dispatch)."""
+    is the handler call: plan construction for a lazy result, the whole
+    execution for a local-relation result (see the module docstring) —
+    `last_metrics` keeps the per-request figure. Also starts the request's
+    shard-kernel dispatch log (_dispatch)."""
 
     @functools.wraps(fn)
     def wrapper(self, *a, **kw):
@@ -94,6 +104,9 @@ class LireQueryEngine:
         self.meta = read_meta(self.index_dir)
         self._blocks = self.spark.read.parquet(f"{self.index_dir}/blocks")
         self._docstats_df = self.spark.read.parquet(f"{self.index_dir}/docstats")
+        # response payload columns: docID + the stored fields
+        self._payload = self._docstats_df.select(
+            "docID", "repo", "path", "commit", "lang").schema
         if self.pin_blocks:
             self._blocks = self._blocks.cache()
             self._docstats_df = self._docstats_df.cache()
@@ -187,34 +200,20 @@ class LireQueryEngine:
         self._load_fresh_filters()
         return len(self._filter_by_predicate)
 
-    def _wand(self, terms, k, field="text", allow_docids=None,
-              extra_deny=None):
-        deny = self._deny
-        if extra_deny is not None:
-            # deny-mode filter artifact: its complement rows join the
-            # tombstone deny-list (kernel gives deny precedence). Plain
-            # union, NO distinct: both sides are cached, unionByName is
-            # narrow (no shuffle), and the kernel mask is duplicate-
-            # tolerant (sorted-array searchsorted membership) — a distinct
-            # here would re-shuffle up to corpus/2 deny rows per query on
-            # the hot serving path.
-            deny = (extra_deny if deny is None
-                    else deny.unionByName(extra_deny))
-        self._log_dispatch(field, terms)
-        return wand_topk(
-            self.spark, self.index_dir, terms, k=k, field=field,
-            blocks_df=self._blocks, dictionary_df=self._dictionary,
-            dictionary_map=self._dict_map, meta=self.meta,
-            allow_docids=allow_docids, deny_docids=deny)
-
     # -- internals ----------------------------------------------------------
 
-    def _log_dispatch(self, field: str, terms) -> None:
-        """Record one shard-kernel dispatch of the current request by its
-        posting estimate (operators.wand.postings_estimate over the same
-        pinned snapshot the operator sizes it with)."""
-        self._dispatch_log.append(
-            postings_estimate(self._dict_map, field, terms))
+    def _dispatch(self, *kernels) -> bool:
+        """Log the request's shard-kernel dispatches, one (field, terms)
+        pair per kernel, by posting estimate (operators.wand.
+        postings_estimate over the same pinned snapshot the operators size
+        them with), and return True when every kernel of the request runs
+        in the driver. Such a request keeps its kernel rows in pandas and
+        ends in the local tail (_local_page); any Spark-dispatched kernel
+        puts the whole request on the Spark tail."""
+        for field, terms in kernels:
+            self._dispatch_log.append(
+                postings_estimate(self._dict_map, field, terms))
+        return all(kernel_dispatch(p) == "driver" for p in self._dispatch_log)
 
     def _dispatch_metrics(self) -> dict:
         """last_metrics fields naming the path that served the request:
@@ -228,6 +227,22 @@ class LireQueryEngine:
         paths = {kernel_dispatch(p) for p in log}
         return {"dispatch": "spark" if "spark" in paths else "driver",
                 "postings_est": (None if None in log else sum(log))}
+
+    def _wand(self, terms, k, field, local, restriction):
+        """WAND top-k of `terms` — or of every query of a {qid: terms}
+        batch — under `restriction` (_restriction): driver pandas rows for
+        a local request, else the lazy public operator."""
+        from liresolr_spark.operators import wand
+
+        allow, deny = restriction
+        if isinstance(terms, dict):
+            op = wand._wand_topk_many if local else wand.wand_topk_many
+        else:
+            op = wand._wand_topk if local else wand_topk
+        return op(self.spark, self.index_dir, terms, k=k, field=field,
+                  blocks_df=self._blocks, dictionary_df=self._dictionary,
+                  dictionary_map=self._dict_map, meta=self.meta,
+                  allow_docids=allow, deny_docids=deny)
 
     def _docstats(self) -> DataFrame:
         if self._deny is None:
@@ -272,19 +287,11 @@ class LireQueryEngine:
                     df.unpersist()
         return pair
 
-    def _resolve_restriction(self, fq, must, must_not, field):
-        """(allow, deny, must_terms) docID restriction shared by the
-        single-query and batched serving paths: the fq filter resolves
-        through the cached/warmed tiers (_fq_allow); boolean clauses
-        (Lucene BooleanQuery semantics, the Solr +term/-term surface —
-        MUST restricts AND scores, MUST_NOT excludes) resolve from posting
-        lists only (operators/boolean.py) and compose with fq through the
-        same kernel-mask seam, so the top-k stays exact under the full
-        restriction. must/must_not strings are tokenized; lists are taken
-        as tokens. Callers add the returned must_terms to the scored term
-        set (Occur.MUST scores). On the hash-token field ('ha') the clause
-        tokens are hashed like the query's own, so they match its postings."""
-        allow, deny = self._fq_allow(fq) if fq else (None, None)
+    def _clause_terms(self, must, must_not, field):
+        """(must_terms, not_terms) of the boolean clauses: strings are
+        tokenized, lists are taken as tokens. On the hash-token field
+        ('ha') the clause tokens are hashed like the query's own, so they
+        match its postings."""
         must_terms = (py_tokenize(must) if isinstance(must, str)
                       else list(must or []))
         not_terms = (py_tokenize(must_not) if isinstance(must_not, str)
@@ -292,23 +299,39 @@ class LireQueryEngine:
         if field == "ha":
             must_terms = [py_hash_token(t) for t in must_terms]
             not_terms = [py_hash_token(t) for t in not_terms]
-        if must_terms or not_terms:
-            from liresolr_spark.operators.boolean import boolean_restriction
+        return must_terms, not_terms
 
-            for clause in (must_terms, not_terms):
-                if clause:
-                    self._log_dispatch(field, clause)
-            b_allow, b_deny = boolean_restriction(
-                self.spark, self.index_dir, must_terms, not_terms,
+    def _restriction(self, local, fq=None, must_terms=(), not_terms=(),
+                     field="text"):
+        """(allow, deny) docID restriction sides of a request, shared by
+        every kernel-backed handler. The operators intersect the allow
+        sides and union the deny sides inside the shard kernel's mask
+        (operators.wand._restrict_df / _mask_rows), so the top-k is exact
+        under the full restriction. deny always holds the tombstones; the
+        fq filter resolves through the cached/warmed tiers (_fq_allow);
+        boolean clauses (Lucene BooleanQuery semantics, the Solr
+        +term/-term surface — MUST restricts AND scores, MUST_NOT excludes)
+        resolve from posting lists only (operators/boolean.py), as driver
+        pandas sets on a local request. Callers add must_terms to the
+        scored term set (Occur.MUST scores)."""
+        allow = []
+        deny = [] if self._deny is None else [self._deny]
+        if fq:
+            fq_allow, fq_deny = self._fq_allow(fq)
+            allow += [fq_allow] if fq_allow is not None else []
+            deny += [fq_deny] if fq_deny is not None else []
+        if must_terms or not_terms:
+            from liresolr_spark.operators import boolean
+
+            resolve = (boolean._boolean_restriction if local
+                       else boolean.boolean_restriction)
+            b_allow, b_deny = resolve(
+                self.spark, self.index_dir, list(must_terms), list(not_terms),
                 field=field, blocks_df=self._blocks, meta=self.meta,
                 dictionary_map=self._dict_map)
-            if b_allow is not None:
-                allow = (b_allow if allow is None
-                         else allow.join(b_allow, ["shard", "docID"]))
-            if b_deny is not None:
-                deny = (b_deny if deny is None
-                        else deny.unionByName(b_deny))
-        return allow, deny, must_terms
+            allow += [b_allow] if b_allow is not None else []
+            deny += [b_deny] if b_deny is not None else []
+        return allow, deny
 
     def _field_present(self, field: str) -> bool:
         """True iff the index carries any terms for `field` (e.g. an index
@@ -325,9 +348,43 @@ class LireQueryEngine:
                 f"too many query terms: {len(terms)} > {MAX_QUERY_TERMS}")
         return terms
 
+    # -- response tails: local (driver-resident hits) and Spark ------------
+
+    def _respond(self, hits, start: int = 0, rows: int | None = None
+                 ) -> DataFrame:
+        """The response for ranked hits — (docID, score) rows, or (qid,
+        docID, score) for a batch — sliced to [start, start+rows) when rows
+        is given (ref: LireRequestHandler.java:519-528). Driver-side hits
+        (a pandas frame: every kernel of the request ran in the driver)
+        take the local tail, lazy hits the Spark tail."""
+        if isinstance(hits, pd.DataFrame):
+            end = None if rows is None else start + rows
+            return self._local_page(hits.iloc[start:end])
+        if rows is not None:
+            hits = self._paginate(hits, start, rows)
+        return self._project(hits)
+
+    def _local_page(self, page: pd.DataFrame) -> DataFrame:
+        """Local tail: the payload of an already-ranked page, fetched in
+        the request's only Spark job (a docID filter over docstats), merged
+        in pandas and returned in the page's order as an Arrow local
+        relation — an executed result whose collect() runs no job. The
+        kernels applied the tombstone masks, so unlike _project there is
+        no anti-join. Columns: [qid,] docID, payload, score[, dist]."""
+        lead = [StructField("qid", StringType())] if "qid" in page else []
+        tail = [StructField(c, DoubleType()) for c in page.columns
+                if c not in ("qid", "docID")]
+        struct = StructType(lead + list(self._payload.fields) + tail)
+        if len(page):
+            payload = (self._docstats_df
+                       .filter(F.col("docID").isin(
+                           sorted({int(d) for d in page["docID"]})))
+                       .select(*self._payload.names).toPandas())
+            page = page.merge(payload, on="docID")
+        return local_frame(self.spark, page, struct)
+
     def _paginate(self, hits: DataFrame, start: int, rows: int) -> DataFrame:
-        """Slice [start, start+rows) of the ranked hits
-        (ref: LireRequestHandler.java:519-528)."""
+        """Spark tail: slice [start, start+rows) of the ranked hits."""
         from pyspark.sql.window import Window
 
         if start == 0:
@@ -339,15 +396,19 @@ class LireQueryEngine:
             .drop("_rank")
         )
 
-    def _project(self, hits: DataFrame) -> DataFrame:
-        """Response projection {id fields, score} + payload join
-        (ref: LireRequestHandler.java:520-524 — SURVEY P1/J2). The hits
-        side is bounded (top-k) and broadcast, so the payload fetch never
-        shuffles the corpus-sized docstats table."""
-        stats = self._docstats().select("docID", "repo", "path", "commit", "lang")
+    def _project(self, hits: DataFrame, *order) -> DataFrame:
+        """Spark tail: response projection {[qid,] id fields, score[,
+        dist]} + payload join (ref: LireRequestHandler.java:520-524 —
+        SURVEY P1/J2), ordered by `order` (default score desc, docID asc;
+        a batch orders by qid first). The hits side is bounded (top-k) and
+        broadcast, so the payload fetch never shuffles the corpus-sized
+        docstats table."""
+        lead = ["qid"] if "qid" in hits.columns else []
+        tail = [c for c in hits.columns if c not in ("qid", "docID")]
+        order = order or (F.desc("score"), F.asc("docID"))
+        stats = self._docstats().select(*self._payload.names)
         return stats.join(F.broadcast(hits), "docID").select(
-            "docID", "repo", "path", "commit", "lang", "score"
-        ).orderBy(F.desc("score"), F.asc("docID"))
+            *lead, *self._payload.names, *tail).orderBy(*lead, *order)
 
     # -- /lireq analog ------------------------------------------------------
 
@@ -436,14 +497,16 @@ class LireQueryEngine:
         # the filter bitset ANDed into the collector. Cached per fq string
         # (see _fq_allow), so repeated filters skip the docstats scan.
         # Boolean clauses compose with fq through the same mask seam.
-        allow, fq_deny, must_terms = self._resolve_restriction(
-            fq, must, must_not, field)
+        must_terms, not_terms = self._clause_terms(must, must_not, field)
         if must_terms:
             # MUST clauses also score (Lucene Occur.MUST)
             terms = self._check_clauses(terms + must_terms)
-        hits = self._wand(terms, k=pool, field=field, allow_docids=allow,
-                          extra_deny=fq_deny)
-        out = self._project(self._paginate(hits, start, rows))
+        local = self._dispatch(
+            *[(field, c) for c in (must_terms, not_terms) if c],
+            (field, terms))
+        hits = self._wand(terms, pool, field, local, self._restriction(
+            local, fq, must_terms, not_terms, field))
+        out = self._respond(hits, start, rows)
         if fl_expr is not None:
             out = out.withColumn("fval", F.expr(fl_expr))
         self.last_metrics = {
@@ -472,31 +535,20 @@ class LireQueryEngine:
         docID masks, so every qid's top-k is exact under the restriction.
         MUST terms also score, appended to every query's term set (Lucene
         Occur.MUST), exactly as search() does per query."""
-        from liresolr_spark.operators.wand import wand_topk_many
-
         t0 = time.time()
-        allow, fq_deny, must_terms = self._resolve_restriction(
-            fq, must, must_not, field)
+        must_terms, not_terms = self._clause_terms(must, must_not, field)
         queries = {}
         for qid, text in texts.items():
             terms = py_tokenize(text)
             if field == "ha":
                 terms = [py_hash_token(t) for t in terms]
             queries[qid] = self._check_clauses(terms + must_terms)
-        self._log_dispatch(field, [t for ts in queries.values() for t in ts])
-        deny = self._deny
-        if fq_deny is not None:
-            deny = (fq_deny if deny is None
-                    else deny.unionByName(fq_deny))
-        hits = wand_topk_many(
-            self.spark, self.index_dir, queries, k=rows, field=field,
-            blocks_df=self._blocks, dictionary_df=self._dictionary,
-            dictionary_map=self._dict_map, meta=self.meta,
-            allow_docids=allow, deny_docids=deny)
-        stats = self._docstats().select("docID", "repo", "path", "commit", "lang")
-        out = stats.join(F.broadcast(hits), "docID").select(
-            "qid", "docID", "repo", "path", "commit", "lang", "score"
-        ).orderBy("qid", F.desc("score"), F.asc("docID"))
+        local = self._dispatch(
+            *[(field, c) for c in (must_terms, not_terms) if c],
+            (field, [t for ts in queries.values() for t in ts]))
+        out = self._respond(self._wand(
+            queries, rows, field, local,
+            self._restriction(local, fq, must_terms, not_terms, field)))
         self.last_metrics = {
             "RawDocsSearchTime_planning_ms": round((time.time() - t0) * 1000, 1),
             "field": field, "n_queries": len(queries), "pool": rows,
@@ -516,7 +568,6 @@ class LireQueryEngine:
         no rows for its qid (same contract as an unknown-term query in
         search_many). fq applies to the whole batch."""
         from liresolr_spark.operators.multiterm import expand_prefix
-        from liresolr_spark.operators.wand import wand_topk_many
 
         t0 = time.time()
         cap = self._expansion_cap(max_expansions)
@@ -528,27 +579,14 @@ class LireQueryEngine:
                 dictionary_map=self._dict_map)
             if terms:
                 queries[qid] = self._check_clauses(terms)
-        allow, fq_deny = self._fq_allow(fq) if fq else (None, None)
-        deny = self._deny
-        if fq_deny is not None:
-            deny = (fq_deny if deny is None
-                    else deny.unionByName(fq_deny))
-        if not queries:
-            hits = self.spark.createDataFrame(
-                [], "qid string, docID long, score double")
+        if queries:
+            local = self._dispatch(
+                (field, [t for ts in queries.values() for t in ts]))
+            hits = self._wand(queries, rows, field, local,
+                              self._restriction(local, fq))
         else:
-            self._log_dispatch(
-                field, [t for ts in queries.values() for t in ts])
-            hits = wand_topk_many(
-                self.spark, self.index_dir, queries, k=rows, field=field,
-                blocks_df=self._blocks, dictionary_df=self._dictionary,
-                dictionary_map=self._dict_map, meta=self.meta,
-                allow_docids=allow, deny_docids=deny)
-        stats = self._docstats().select("docID", "repo", "path", "commit",
-                                        "lang")
-        out = stats.join(F.broadcast(hits), "docID").select(
-            "qid", "docID", "repo", "path", "commit", "lang", "score"
-        ).orderBy("qid", F.desc("score"), F.asc("docID"))
+            hits = empty_pdf(MANY_SCHEMA)
+        out = self._respond(hits)
         self.last_metrics = {
             "RawDocsSearchTime_planning_ms": round((time.time() - t0) * 1000, 1),
             "field": field, "n_queries": len(prefixes),
@@ -603,11 +641,16 @@ class LireQueryEngine:
             for r in blocks.select("term", "docids")
             .mapInPandas(find_terms, schema="term string").collect()
         ]
-        hits = self._wand(hit_terms, k=start + rows + 1, field="ha")
-        hits = hits.filter(F.col("docID") != doc_id)
+        local = self._dispatch(("ha", hit_terms))
+        hits = self._wand(hit_terms, start + rows + 1, "ha", local,
+                          self._restriction(local))
+        if local:
+            hits = hits[hits["docID"] != doc_id]
+        else:
+            hits = hits.filter(F.col("docID") != doc_id)
         self.last_metrics = {"field": "ha", "n_terms": len(hit_terms),
                              "doc_id": doc_id, **self._dispatch_metrics()}
-        return self._project(self._paginate(hits, start, rows))
+        return self._respond(hits, start, rows)
 
     @_counted
     def prefix_search(
@@ -710,27 +753,18 @@ class LireQueryEngine:
 
     def _serve_expansion(self, terms, start, rows, fq, field, fl_expr, t0,
                          **query_label) -> DataFrame:
-        """Shared tail of the multi-term rewrites (prefix/wildcard): clause
-        guard, empty-expansion short-circuit, fq pushdown, WAND, pagination,
-        projection, fl_expr, metrics."""
+        """Shared tail of the multi-term rewrites (prefix/wildcard/fuzzy):
+        clause guard, empty-expansion short-circuit, fq pushdown, WAND,
+        pagination, projection, fl_expr, metrics."""
         self._check_clauses(terms)
-        if not terms:
-            empty = self.spark.createDataFrame([], "docID long, score double")
-            out = self._project(empty)
-            if fl_expr is not None:
-                out = out.withColumn("fval", F.expr(fl_expr))
-            self.last_metrics = {
-                "RawDocsSearchTime_planning_ms":
-                    round((time.time() - t0) * 1000, 1),
-                "field": field, "n_terms": 0, "pool": 0, **query_label,
-                **self._dispatch_metrics(),
-            }
-            return out
-        pool = start + rows
-        allow, fq_deny = self._fq_allow(fq) if fq else (None, None)
-        hits = self._wand(terms, k=pool, field=field, allow_docids=allow,
-                          extra_deny=fq_deny)
-        out = self._project(self._paginate(hits, start, rows))
+        pool = start + rows if terms else 0
+        if terms:
+            local = self._dispatch((field, terms))
+            hits = self._wand(terms, pool, field, local,
+                              self._restriction(local, fq))
+        else:
+            hits = empty_pdf(WAND_SCHEMA)
+        out = self._respond(hits, start, rows)
         if fl_expr is not None:
             out = out.withColumn("fval", F.expr(fl_expr))
         self.last_metrics = {
@@ -756,35 +790,33 @@ class LireQueryEngine:
         is answered entirely from the posting blocks (Lucene PhraseQuery
         semantics, operators/phrase.py); otherwise the two-stage verify
         path runs and needs `corpus` (the index stores sha256, not
-        content). Unlike the other handlers this returns an EAGERLY
-        materialized result (local relation): the match pipeline has two
-        consumers (scores + phrase df) and eager materialization through
-        the cache handle is what keeps it single-pass without leaking a
-        persisted relation past the request."""
+        content). The result is always executed (local relation): on the
+        Spark tail the match pipeline has two consumers (scores + phrase
+        df), and eager materialization through the cache handle is what
+        keeps it single-pass without leaking a persisted relation past the
+        request; on the local tail the matches are scored in the driver."""
+        from liresolr_spark.operators import phrase
         from liresolr_spark.operators.bm25 import materialize_and_release
-        from liresolr_spark.operators.phrase import phrase_topk
 
         t0 = time.time()
-        allow, fq_deny = self._fq_allow(fq) if fq else (None, None)
-        deny = self._deny
-        if fq_deny is not None:
-            deny = (fq_deny if deny is None
-                    else deny.unionByName(fq_deny))
-        cache: list = []
-        self._log_dispatch("text", py_tokenize(text))
-        hits = materialize_and_release(
-            phrase_topk(
-                self.spark, self.index_dir, corpus, text,
-                k=start + rows, blocks_df=self._blocks, meta=self.meta,
-                allow_docids=allow, deny_docids=deny, cache_out=cache,
-                dictionary_map=self._dict_map),
-            cache)
-        out = self._project(self._paginate(hits, start, rows))
+        positional = getattr(self.meta, "with_positions", False)
+        local = self._dispatch(("text", py_tokenize(text))) and positional
+        allow, deny = self._restriction(local, fq)
+        args = (self.spark, self.index_dir, corpus, text)
+        kw = dict(k=start + rows, blocks_df=self._blocks, meta=self.meta,
+                  allow_docids=allow, deny_docids=deny,
+                  dictionary_map=self._dict_map)
+        if local:
+            hits = phrase._phrase_topk(*args, **kw)
+        else:
+            cache: list = []
+            hits = materialize_and_release(
+                phrase.phrase_topk(*args, **kw, cache_out=cache), cache)
+        out = self._respond(hits, start, rows)
         self.last_metrics = {
             "RawDocsSearchTime_planning_ms": round((time.time() - t0) * 1000, 1),
             "field": "text", "phrase": text,
-            "path": ("positions" if getattr(self.meta, "with_positions",
-                                            False) else "verify"),
+            "path": "positions" if positional else "verify",
             **self._dispatch_metrics(),
         }
         return out
@@ -798,8 +830,7 @@ class LireQueryEngine:
         decoded once per shard (the search_many amortization). Returns
         DataFrame(qid, docID, repo, path, commit, lang, score), each qid's
         exact top-`rows`, rank-identical to per-phrase phrase_search().
-        Eagerly materialized for the same cache-lifecycle reason as
-        phrase_search.
+        Always executed, for the same reasons as phrase_search.
 
         On a POSITIONLESS index the batch degrades to the two-stage verify
         path per phrase (needs `corpus` — the index stores sha256, not
@@ -808,15 +839,13 @@ class LireQueryEngine:
         phrases, so throughput is the single-query rate times parallel
         subtree overlap — build with with_positions=True for the batched
         fast path (the error below steers there when corpus is absent)."""
+        from liresolr_spark.operators import phrase
         from liresolr_spark.operators.bm25 import materialize_and_release
-        from liresolr_spark.operators.phrase import (phrase_topk,
-                                                     phrase_topk_many)
 
         t0 = time.time()
         cache: list = []
         if not texts:
-            hits = self.spark.createDataFrame(
-                [], "qid string, docID long, score double")
+            hits = empty_pdf(MANY_SCHEMA)
         elif not getattr(self.meta, "with_positions", False):
             if corpus is None:
                 raise ValueError(
@@ -825,13 +854,14 @@ class LireQueryEngine:
                     " stream (rebuild with with_positions=True for the"
                     " shared-decode fast path) or corpus= for the per-"
                     "phrase verify fallback")
-            for text in texts.values():
-                self._log_dispatch("text", py_tokenize(text))
+            self._dispatch(*[("text", py_tokenize(t))
+                             for t in texts.values()])
+            deny = self._restriction(False)[1]
             per = [
-                phrase_topk(
+                phrase.phrase_topk(
                     self.spark, self.index_dir, corpus, text, k=rows,
                     blocks_df=self._blocks, meta=self.meta,
-                    deny_docids=self._deny, cache_out=cache,
+                    deny_docids=deny, cache_out=cache,
                     dictionary_map=self._dict_map)
                 .select(F.lit(qid).alias("qid"), "docID", "score")
                 for qid, text in sorted(texts.items())
@@ -841,20 +871,19 @@ class LireQueryEngine:
                 hits = hits.unionByName(nxt)
             hits = materialize_and_release(hits, cache)
         else:
-            self._log_dispatch(
-                "text", [t for x in texts.values() for t in py_tokenize(x)])
-            hits = materialize_and_release(
-                phrase_topk_many(
-                    self.spark, self.index_dir, texts, k=rows,
-                    blocks_df=self._blocks, meta=self.meta,
-                    deny_docids=self._deny, cache_out=cache,
-                    dictionary_map=self._dict_map),
-                cache)
-        stats = self._docstats().select("docID", "repo", "path", "commit",
-                                        "lang")
-        out = stats.join(F.broadcast(hits), "docID").select(
-            "qid", "docID", "repo", "path", "commit", "lang", "score"
-        ).orderBy("qid", F.desc("score"), F.asc("docID"))
+            local = self._dispatch(
+                ("text", [t for x in texts.values() for t in py_tokenize(x)]))
+            args = (self.spark, self.index_dir, texts)
+            kw = dict(k=rows, blocks_df=self._blocks, meta=self.meta,
+                      deny_docids=self._restriction(local)[1],
+                      dictionary_map=self._dict_map)
+            if local:
+                hits = phrase._phrase_topk_many(*args, **kw)
+            else:
+                hits = materialize_and_release(
+                    phrase.phrase_topk_many(*args, **kw, cache_out=cache),
+                    cache)
+        out = self._respond(hits)
         self.last_metrics = {
             "RawDocsSearchTime_planning_ms": round((time.time() - t0) * 1000, 1),
             "field": "text", "n_queries": len(texts), "pool": rows,
@@ -891,17 +920,35 @@ class LireQueryEngine:
         # phase 1: cheap candidate pass on the hash field; an index without
         # hash tokens degrades to the lexical field (documented fallback)
         if self._field_present("ha"):
-            ha_terms = [py_hash_token(t) for t in terms]
-            cand = self._wand(ha_terms, k=candidates, field="ha")
+            phase1 = ("ha", [py_hash_token(t) for t in terms])
         else:
-            cand = self._wand(terms, k=candidates, field="text")
+            phase1 = ("text", terms)
+        phase2 = [("text", terms)] if verify_threshold is not None else []
+        local = self._dispatch(phase1, *phase2)
+        restriction = self._restriction(local)
+        cand = self._wand(phase1[1], candidates, phase1[0], local, restriction)
+        self.last_metrics = {"n_terms": len(terms),
+                             **self._dispatch_metrics()}
+        if local:
+            passed = cand.assign(dist=1.0 / (1.0 + cand["score"]))
+            passed = passed[passed["dist"] < threshold]
+            if phase2:
+                verify = self._wand(terms, candidates, "text", local,
+                                    restriction)
+                passed = passed[["docID"]].merge(verify, on="docID")
+                passed = passed.assign(dist=1.0 / (1.0 + passed["score"]))
+                passed = passed[passed["dist"] < verify_threshold]
+            return self._respond(passed.sort_values(
+                ["dist", "docID"], kind="stable")[["docID", "score", "dist"]],
+                0, rows)
         cand = cand.withColumn("dist", 1.0 / (1.0 + F.col("score")))
         passed = cand.filter(F.col("dist") < threshold)
-        if verify_threshold is not None:
+        if phase2:
             # phase 2: exact verification on the lexical field; the join is
             # a semi-restriction of the (small) phase-1 pool, then the
             # anti-predicate drops survivors failing the second threshold
-            verify = self._wand(terms, k=candidates, field="text").select(
+            verify = self._wand(
+                terms, candidates, "text", local, restriction).select(
                 "docID", F.col("score").alias("vscore"))
             passed = (
                 passed.select("docID", "score").join(verify, "docID")
@@ -915,18 +962,8 @@ class LireQueryEngine:
         # shape referenced `passed` twice (projection join + dist join) and
         # duplicated the kernel subtree unless ReusedExchange caught it
         # (round-4 verdict demerit #1: serving_identity ~2x serving_similar)
-        self.last_metrics = {"n_terms": len(terms),
-                             **self._dispatch_metrics()}
-        stats = self._docstats().select("docID", "repo", "path", "commit",
-                                        "lang")
-        return (
-            stats.join(F.broadcast(passed.select("docID", "score", "dist")),
-                       "docID")
-            .select("docID", "repo", "path", "commit", "lang", "score",
-                    "dist")
-            .orderBy(F.asc("dist"), F.asc("docID"))
-            .limit(rows)
-        )
+        return self._project(passed.select("docID", "score", "dist"),
+                             F.asc("dist"), F.asc("docID")).limit(rows)
 
     # -- /lireSim analog ----------------------------------------------------
 
@@ -942,12 +979,18 @@ class LireQueryEngine:
         union + dropDuplicates + re-rank by combined score (SURVEY U1/J4)."""
         terms = py_tokenize(text)
         ha_terms = [py_hash_token(t) for t in terms]
-        c1 = self._wand(terms, k=pool_text, field="text")
-        c2 = self._wand(ha_terms, k=pool_ha, field="ha")
-        pool = c1.unionByName(c2).groupBy("docID").agg(
-            F.max("score").alias("score"))
+        local = self._dispatch(("text", terms), ("ha", ha_terms))
+        restriction = self._restriction(local)
+        c1 = self._wand(terms, pool_text, "text", local, restriction)
+        c2 = self._wand(ha_terms, pool_ha, "ha", local, restriction)
         self.last_metrics = {"n_terms": len(terms),
                              **self._dispatch_metrics()}
+        if local:
+            pool = pd.concat([c1, c2]).groupby(
+                "docID", as_index=False)["score"].max()
+            return self._respond(top_k(pool, rows))
+        pool = c1.unionByName(c2).groupBy("docID").agg(
+            F.max("score").alias("score"))
         return self._project(
             pool.orderBy(F.desc("score"), F.asc("docID")).limit(rows))
 

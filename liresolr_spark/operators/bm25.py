@@ -25,11 +25,13 @@ from __future__ import annotations
 
 import math
 
+import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.functions import broadcast
 
 from liresolr_spark import BM25_B, BM25_K1
+from liresolr_spark.frames import local_frame
 from liresolr_spark.functions.tokenizer import tokenize_expr
 
 
@@ -217,13 +219,15 @@ def bm25_score_corpus(
 def materialize_and_release(topk: DataFrame, cache: list) -> DataFrame:
     """Collect a BOUNDED top-k result, then unpersist every handle in
     `cache` (the list populated via `bm25_scores_all(cache_out=...)`).
-    The k collected rows come straight back as a local-relation DataFrame
-    with the same schema, so downstream re-consumption never recomputes
-    the corpus scan."""
+    The k collected rows come straight back as an Arrow local relation
+    with the same schema (built from pandas, not from Rows, which would be
+    a LogicalRDD whose every collect runs a job), so downstream
+    re-consumption never recomputes the corpus scan."""
     rows = topk.collect()
     for cached in cache or []:
         cached.unpersist()
-    return topk.sparkSession.createDataFrame(rows, topk.schema)
+    pdf = pd.DataFrame.from_records(rows, columns=topk.columns)
+    return local_frame(topk.sparkSession, pdf, topk.schema)
 
 
 def bm25_topk_from_index(
@@ -241,7 +245,6 @@ def bm25_topk_from_index(
     `bm25_score_corpus`. Scales: no driver-side posting materialization.
     """
     import numpy as np
-    import pandas as pd
 
     from liresolr_spark.functions.codec import decode_block
     from liresolr_spark.plans.build import read_meta

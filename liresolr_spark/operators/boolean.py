@@ -30,13 +30,22 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from liresolr_spark.frames import as_frame, empty_pdf
 from liresolr_spark.functions.codec import decode_block
-from liresolr_spark.operators.phrase import conjunctive_docids
+from liresolr_spark.operators.phrase import DOCSET_SCHEMA, _conjunctive_docids
 from liresolr_spark.operators.wand import _run_shard_kernel, postings_estimate
 from liresolr_spark.plans.build import read_meta
 
 
-def disjunctive_docids(
+def disjunctive_docids(spark: SparkSession, *args, **kwargs) -> DataFrame:
+    """The boolean-OR doc set as a DataFrame(shard, docID): the arguments
+    and result of _disjunctive_docids, a driver-side result wrapped as a
+    local relation."""
+    return as_frame(spark, _disjunctive_docids(spark, *args, **kwargs),
+                    DOCSET_SCHEMA)
+
+
+def _disjunctive_docids(
     spark: SparkSession,
     index_dir: str,
     terms: list[str],
@@ -44,15 +53,16 @@ def disjunctive_docids(
     blocks_df: DataFrame | None = None,
     meta=None,
     dictionary_map: dict | None = None,
-) -> DataFrame:
-    """DataFrame(shard, docID) of docs whose `field` contains ANY term —
-    the boolean-OR doc set (the MUST_NOT exclusion input). Per shard:
-    decode each term's docID stream and take the sorted union.
+):
+    """(shard, docID) rows of docs whose `field` contains ANY term — the
+    boolean-OR doc set (the MUST_NOT exclusion input); a pandas frame when
+    the kernel ran in the driver, else a lazy DataFrame. Per shard: decode
+    each term's docID stream and take the sorted union.
     dictionary_map: the driver-side {field: {term: df}} snapshot; it sizes
     the request for the kernel dispatch (operators.wand._run_shard_kernel)."""
     uniq = sorted(set(terms))
     if not uniq:
-        return spark.createDataFrame([], "shard int, docID long")
+        return empty_pdf(DOCSET_SCHEMA)
     meta = meta or read_meta(index_dir)
     src = (blocks_df if blocks_df is not None
            else spark.read.parquet(f"{index_dir}/blocks"))
@@ -73,11 +83,21 @@ def disjunctive_docids(
                              "docID": ids})
 
     return _run_shard_kernel(
-        spark, blocks, kernel, "shard int, docID long", meta,
+        spark, blocks, kernel, DOCSET_SCHEMA, meta,
         postings=postings_estimate(dictionary_map, field, uniq))
 
 
-def boolean_restriction(
+def boolean_restriction(spark: SparkSession, *args, **kwargs
+                        ) -> tuple[DataFrame | None, DataFrame | None]:
+    """(allow, deny) docID restriction frames for a boolean query: the
+    arguments and result of _boolean_restriction, each driver-side set
+    wrapped as a local relation. Both plug into wand_topk / phrase_topk
+    unchanged."""
+    return tuple(None if side is None else as_frame(spark, side, DOCSET_SCHEMA)
+                 for side in _boolean_restriction(spark, *args, **kwargs))
+
+
+def _boolean_restriction(
     spark: SparkSession,
     index_dir: str,
     must: list[str] | None,
@@ -86,19 +106,19 @@ def boolean_restriction(
     blocks_df: DataFrame | None = None,
     meta=None,
     dictionary_map: dict | None = None,
-) -> tuple[DataFrame | None, DataFrame | None]:
-    """(allow, deny) docID restriction frames for a boolean query: allow =
-    docs containing ALL `must` terms (None when no MUST clauses — no
+):
+    """(allow, deny) docID restriction for a boolean query: allow = docs
+    containing ALL `must` terms (None when no MUST clauses — no
     restriction), deny = docs containing ANY `must_not` term (None when
-    empty). Both plug into wand_topk / phrase_topk unchanged.
-    dictionary_map: see disjunctive_docids."""
+    empty); each a pandas frame when its kernel ran in the driver, else a
+    lazy DataFrame. dictionary_map: see _disjunctive_docids."""
     allow = deny = None
     if must:
-        allow = conjunctive_docids(spark, index_dir, must, field=field,
+        allow = _conjunctive_docids(spark, index_dir, must, field=field,
+                                    blocks_df=blocks_df, meta=meta,
+                                    dictionary_map=dictionary_map)
+    if must_not:
+        deny = _disjunctive_docids(spark, index_dir, must_not, field=field,
                                    blocks_df=blocks_df, meta=meta,
                                    dictionary_map=dictionary_map)
-    if must_not:
-        deny = disjunctive_docids(spark, index_dir, must_not, field=field,
-                                  blocks_df=blocks_df, meta=meta,
-                                  dictionary_map=dictionary_map)
     return allow, deny

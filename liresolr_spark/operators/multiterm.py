@@ -37,7 +37,8 @@ import re
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from liresolr_spark.operators.wand import wand_topk
+from liresolr_spark.frames import empty_frame
+from liresolr_spark.operators.wand import WAND_SCHEMA, wand_topk
 
 # the tokenizer's output alphabet (functions/tokenizer.py spec step d):
 # a prefix outside it can never match a dictionary term
@@ -316,5 +317,5 @@ def prefix_topk(
         dictionary_df=wand_kwargs.get("dictionary_df"),
         dictionary_map=wand_kwargs.get("dictionary_map"))
     if not terms:
-        return spark.createDataFrame([], "docID long, score double")
+        return empty_frame(spark, WAND_SCHEMA)
     return wand_topk(spark, index_dir, terms, k=k, field=field, **wand_kwargs)

@@ -50,11 +50,18 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession
 
+from liresolr_spark.frames import as_frame, empty_pdf
 from liresolr_spark.functions.codec import decode_block, decode_positions
 from liresolr_spark.functions.tokenizer import py_tokenize, tokenize_expr
-from liresolr_spark.operators.wand import (_in_sorted, _run_shard_kernel,
-                                           postings_estimate)
+from liresolr_spark.operators.wand import (MANY_SCHEMA, WAND_SCHEMA,
+                                           _in_sorted, _merge_topk_per_qid,
+                                           _restrict_rows, _run_shard_kernel,
+                                           postings_estimate, top_k)
 from liresolr_spark.plans.build import NATURAL_KEY, read_meta
+
+DOCSET_SCHEMA = "shard int, docID long"
+MATCH_SCHEMA = "shard int, docID long, tf long, doclen long"
+MATCH_MANY_SCHEMA = "qid string, " + MATCH_SCHEMA
 
 
 def _pre_intersect_blocks(bl: pd.DataFrame, n_required: int
@@ -75,7 +82,15 @@ def _pre_intersect_blocks(bl: pd.DataFrame, n_required: int
                                                       kind="stable")
 
 
-def conjunctive_docids(
+def conjunctive_docids(spark: SparkSession, *args, **kwargs) -> DataFrame:
+    """The boolean-AND doc set as a DataFrame(shard, docID): the arguments
+    and result of _conjunctive_docids, a driver-side result wrapped as a
+    local relation."""
+    return as_frame(spark, _conjunctive_docids(spark, *args, **kwargs),
+                    DOCSET_SCHEMA)
+
+
+def _conjunctive_docids(
     spark: SparkSession,
     index_dir: str,
     terms: list[str],
@@ -83,9 +98,10 @@ def conjunctive_docids(
     blocks_df: DataFrame | None = None,
     meta=None,
     dictionary_map: dict | None = None,
-) -> DataFrame:
-    """DataFrame(shard, docID) of docs whose `field` contains EVERY term —
-    the boolean-AND candidate set, from posting-list intersection.
+):
+    """(shard, docID) rows of docs whose `field` contains EVERY term — the
+    boolean-AND candidate set, from posting-list intersection; a pandas
+    frame when the kernel ran in the driver, else a lazy DataFrame.
     dictionary_map: the driver-side {field: {term: df}} snapshot; it sizes
     the request for the kernel dispatch (operators.wand._run_shard_kernel).
 
@@ -96,7 +112,7 @@ def conjunctive_docids(
     empties that shard; absent from every shard -> empty result."""
     uniq = sorted(set(terms))
     if not uniq:
-        return spark.createDataFrame([], "shard int, docID long")
+        return empty_pdf(DOCSET_SCHEMA)
     meta = meta or read_meta(index_dir)
     src = (blocks_df if blocks_df is not None
            else spark.read.parquet(f"{index_dir}/blocks"))
@@ -131,7 +147,7 @@ def conjunctive_docids(
                              "docID": cur})
 
     return _run_shard_kernel(
-        spark, blocks, kernel, "shard int, docID long", meta,
+        spark, blocks, kernel, DOCSET_SCHEMA, meta,
         postings=postings_estimate(dictionary_map, field, uniq))
 
 
@@ -216,7 +232,15 @@ def _sliding_match(per: dict, seq: list[str]):
             dls0[dl_map_idx].astype(np.int64))
 
 
-def positional_matches(
+def positional_matches(spark: SparkSession, *args, **kwargs) -> DataFrame:
+    """Sliding phrase matches as a DataFrame(shard, docID, tf, doclen): the
+    arguments and result of _positional_matches, a driver-side result
+    wrapped as a local relation."""
+    return as_frame(spark, _positional_matches(spark, *args, **kwargs),
+                    MATCH_SCHEMA)
+
+
+def _positional_matches(
     spark: SparkSession,
     index_dir: str,
     terms: list[str],
@@ -224,9 +248,10 @@ def positional_matches(
     blocks_df: DataFrame | None = None,
     meta=None,
     dictionary_map: dict | None = None,
-) -> DataFrame:
-    """DataFrame(shard, docID, tf, doclen) of SLIDING phrase matches,
-    answered entirely from the positional index (no corpus access).
+):
+    """(shard, docID, tf, doclen) rows of SLIDING phrase matches, answered
+    entirely from the positional index (no corpus access); a pandas frame
+    when the kernel ran in the driver, else a lazy DataFrame.
 
     Per shard: decode the phrase terms' postings + position streams, AND
     the docIDs, then intersect (doc, position - i) key sets across the
@@ -235,8 +260,7 @@ def positional_matches(
     numpy: the per-doc loop Lucene runs is replaced by one sorted-array
     intersection per phrase term over composite int64 keys."""
     if not terms:
-        return spark.createDataFrame(
-            [], "shard int, docID long, tf long, doclen long")
+        return empty_pdf(MATCH_SCHEMA)
     meta = meta or read_meta(index_dir)
     if not getattr(meta, "with_positions", False):
         raise ValueError(
@@ -272,12 +296,20 @@ def positional_matches(
             "docID": ids, "tf": tf, "doclen": dls})
 
     return _run_shard_kernel(
-        spark, blocks, kernel,
-        "shard int, docID long, tf long, doclen long", meta,
+        spark, blocks, kernel, MATCH_SCHEMA, meta,
         postings=postings_estimate(dictionary_map, field, uniq))
 
 
-def positional_matches_many(
+def positional_matches_many(spark: SparkSession, *args, **kwargs
+                            ) -> DataFrame:
+    """Batched sliding phrase matches as a DataFrame(qid, shard, docID, tf,
+    doclen): the arguments and result of _positional_matches_many, a
+    driver-side result wrapped as a local relation."""
+    return as_frame(spark, _positional_matches_many(spark, *args, **kwargs),
+                    MATCH_MANY_SCHEMA)
+
+
+def _positional_matches_many(
     spark: SparkSession,
     index_dir: str,
     phrases: dict[str, list[str]],
@@ -285,17 +317,17 @@ def positional_matches_many(
     blocks_df: DataFrame | None = None,
     meta=None,
     dictionary_map: dict | None = None,
-) -> DataFrame:
-    """Batched positional phrase matching: DataFrame(qid, shard, docID, tf,
-    doclen) for ALL phrases in ONE distributed job — the blocks of the
+):
+    """Batched positional phrase matching: (qid, shard, docID, tf, doclen)
+    rows — pandas or lazy, as _positional_matches — for ALL phrases in ONE
+    distributed job — the blocks of the
     UNION of every phrase's terms are scanned and decoded once per shard,
     then each phrase sliding-matches against the shared decoded postings
     (the search_many amortization applied to phrases: a hot term's posting
     list is decoded once no matter how many phrases use it)."""
     phrases = {q: list(t) for q, t in phrases.items() if t}
     if not phrases:
-        return spark.createDataFrame(
-            [], "qid string, shard int, docID long, tf long, doclen long")
+        return empty_pdf(MATCH_MANY_SCHEMA)
     meta = meta or read_meta(index_dir)
     if not getattr(meta, "with_positions", False):
         raise ValueError(
@@ -335,12 +367,19 @@ def positional_matches_many(
         return pd.concat(frames, ignore_index=True) if frames else empty
 
     return _run_shard_kernel(
-        spark, blocks, kernel,
-        "qid string, shard int, docID long, tf long, doclen long", meta,
+        spark, blocks, kernel, MATCH_MANY_SCHEMA, meta,
         postings=postings_estimate(dictionary_map, field, all_terms))
 
 
-def phrase_topk_many(
+def phrase_topk_many(spark: SparkSession, *args, **kwargs) -> DataFrame:
+    """Batched exact phrase top-k as a DataFrame(qid, docID, score): the
+    arguments and result of _phrase_topk_many, a driver-side result wrapped
+    as a local relation."""
+    return as_frame(spark, _phrase_topk_many(spark, *args, **kwargs),
+                    MANY_SCHEMA)
+
+
+def _phrase_topk_many(
     spark: SparkSession,
     index_dir: str,
     phrases: dict[str, str],
@@ -351,20 +390,25 @@ def phrase_topk_many(
     deny_docids: DataFrame | None = None,
     cache_out: list | None = None,
     dictionary_map: dict | None = None,
-) -> DataFrame:
-    """Batched exact phrase top-k (positional indexes only):
-    DataFrame(qid, docID, score) with each qid's matches ranked by its own
-    phrase-BM25 (per-qid df from a small keyed aggregate, broadcast back).
-    Rank-identical per qid to phrase_topk. Final merge reuses the batched
-    serving merge (operators.wand._merge_topk_per_qid)."""
+):
+    """Batched exact phrase top-k (positional indexes only): (qid, docID,
+    score) rows with each qid's matches ranked by its own phrase-BM25.
+    Rank-identical per qid to phrase_topk. When the match kernel ran in the
+    driver, scoring (per-qid df = match count) and the merge are pandas and
+    the result is a pandas frame ordered by (qid, score desc, docID);
+    otherwise the per-qid df is a small keyed aggregate broadcast back and
+    the merge is the batched serving merge
+    (operators.wand._merge_topk_per_qid)."""
     specs = {q: py_tokenize(p) for q, p in phrases.items()}
     meta = meta or read_meta(index_dir)
-    matched = positional_matches_many(spark, index_dir, specs, field=field,
-                                      blocks_df=blocks_df, meta=meta,
-                                      dictionary_map=dictionary_map)
-    if deny_docids is not None:
-        matched = matched.join(deny_docids.select("shard", "docID"),
-                               ["shard", "docID"], "left_anti")
+    matched = _positional_matches_many(spark, index_dir, specs, field=field,
+                                       blocks_df=blocks_df, meta=meta,
+                                       dictionary_map=dictionary_map)
+    matched = _restrict_rows(spark, matched, None, deny_docids,
+                             meta.block_size)
+    if isinstance(matched, pd.DataFrame):
+        scored = matched.assign(score=_phrase_bm25(matched, meta, "qid"))
+        return top_k(scored[["qid", "docID", "score"]], k, group="qid")
     if cache_out is not None:
         matched = matched.persist()
         cache_out.append(matched)
@@ -384,9 +428,27 @@ def phrase_topk_many(
                           / F.lit(float(meta.avgdl)))))
         .select("qid", "docID", "score")
     )
-    from liresolr_spark.operators.wand import _merge_topk_per_qid
-
     return _merge_topk_per_qid(scored, k)
+
+
+def _phrase_bm25(matched: pd.DataFrame, meta, group: str | None = None
+                 ) -> np.ndarray:
+    """Driver twin of the Spark phrase scoring: the phrase is ONE BM25
+    clause whose df is the match count (per `group` value when given),
+    evaluated in the same operation order as the Spark expressions. Only
+    the logarithm differs (libm here, StrictMath in Spark): scores may
+    differ in the last ulp, never in rank order beyond exact ties."""
+    if group:
+        df = matched.groupby(group)["docID"].transform("size")
+    else:
+        df = pd.Series(len(matched), index=matched.index)
+    df = df.to_numpy(np.float64)
+    idf = np.log(1.0 + (float(meta.n_docs) - df + 0.5) / (df + 0.5))
+    tf = matched["tf"].to_numpy(np.float64)
+    dl = matched["doclen"].to_numpy(np.float64)
+    k1, b = meta.k1, meta.b
+    return idf * tf * (k1 + 1.0) / (
+        tf + k1 * (1.0 - b + b * dl / float(meta.avgdl)))
 
 
 def _score_phrase_matches(
@@ -484,7 +546,14 @@ def phrase_scores(
     return _score_phrase_matches(matched, n_docs, avgdl, k1, b, cache_out)
 
 
-def phrase_topk(
+def phrase_topk(spark: SparkSession, *args, **kwargs) -> DataFrame:
+    """Exact phrase top-k as a DataFrame(docID, score): the arguments and
+    result of _phrase_topk, a driver-side result wrapped as a local
+    relation."""
+    return as_frame(spark, _phrase_topk(spark, *args, **kwargs), WAND_SCHEMA)
+
+
+def _phrase_topk(
     spark: SparkSession,
     index_dir: str,
     corpus: DataFrame | None,
@@ -499,16 +568,18 @@ def phrase_topk(
     cache_out: list | None = None,
     mode: str = "auto",
     dictionary_map: dict | None = None,
-) -> DataFrame:
-    """Exact phrase top-k through the index: DataFrame(docID, score), the
-    phrase matches ranked by phrase-BM25 (score DESC, docID ASC).
+):
+    """Exact phrase top-k through the index: (docID, score) rows, the
+    phrase matches ranked by phrase-BM25 (score DESC, docID ASC) — a pandas
+    frame when the positional match kernel ran in the driver (restriction,
+    scoring and top-k then run in pandas), else a lazy DataFrame.
 
     mode: 'auto' uses the positional path when the index carries positions
     (corpus may then be None), else the two-stage verify; 'positions' /
     'verify' force one path ('verify' requires `corpus`; the two differ
     only on self-overlapping phrases — see module docstring).
 
-    allow_docids / deny_docids: the same (shard, docID) restriction frames
+    allow_docids / deny_docids: the same (shard, docID) restriction sides
     as wand_topk (fq pushdown / tombstones), applied to the match/candidate
     set BEFORE the df aggregate (a filtered phrase query scores under the
     filter, consistent across both paths). cache_out: see
@@ -517,21 +588,20 @@ def phrase_topk(
     the match kernel's dispatch (operators.wand._run_shard_kernel)."""
     terms = py_tokenize(phrase)
     if not terms:
-        return spark.createDataFrame([], "docID long, score double")
+        return empty_pdf(WAND_SCHEMA)
     meta = meta or read_meta(index_dir)
     positional = getattr(meta, "with_positions", False) \
         if mode == "auto" else (mode == "positions")
 
     if positional:
-        matched = positional_matches(spark, index_dir, terms, field=field,
-                                     blocks_df=blocks_df, meta=meta,
-                                     dictionary_map=dictionary_map)
-        if allow_docids is not None:
-            matched = matched.join(allow_docids.select("shard", "docID"),
-                                   ["shard", "docID"])
-        if deny_docids is not None:
-            matched = matched.join(deny_docids.select("shard", "docID"),
-                                   ["shard", "docID"], "left_anti")
+        matched = _positional_matches(spark, index_dir, terms, field=field,
+                                      blocks_df=blocks_df, meta=meta,
+                                      dictionary_map=dictionary_map)
+        matched = _restrict_rows(spark, matched, allow_docids, deny_docids,
+                                 meta.block_size)
+        if isinstance(matched, pd.DataFrame):
+            scored = matched.assign(score=_phrase_bm25(matched, meta))
+            return top_k(scored[["docID", "score"]], k)
         scored = _score_phrase_matches(
             matched.withColumn("_dl", F.col("doclen").cast("double")),
             meta.n_docs, meta.avgdl, meta.k1, meta.b, cache_out)
@@ -544,12 +614,8 @@ def phrase_topk(
         cand = conjunctive_docids(spark, index_dir, terms, field=field,
                                   blocks_df=blocks_df, meta=meta,
                                   dictionary_map=dictionary_map)
-        if allow_docids is not None:
-            cand = cand.join(allow_docids.select("shard", "docID"),
-                             ["shard", "docID"])
-        if deny_docids is not None:
-            cand = cand.join(deny_docids.select("shard", "docID"),
-                             ["shard", "docID"], "left_anti")
+        cand = _restrict_rows(spark, cand, allow_docids, deny_docids,
+                              meta.block_size)
         stats = spark.read.parquet(f"{index_dir}/docstats").select(
             "shard", "docID", "doclen", "sha256", *NATURAL_KEY)
         # the sha256 equality pin (the north-rule per-row invariant, stored

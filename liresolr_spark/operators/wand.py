@@ -32,15 +32,20 @@ paths, chosen per request in `_run_shard_kernel` before any job runs:
     DRIVER_MAX_POSTINGS, the pruned block rows are collected once and the
     SAME kernel closure runs per shard in the driver process. A served
     request moves KB of postings, so the pandas-UDF stage (shuffle, Python
-    worker round trip) would cost far more than the arithmetic;
+    worker round trip) would cost far more than the arithmetic. The kernel
+    rows stay a pandas frame and the global merge is a numpy sort;
   - spark: otherwise (or with no dictionary snapshot) the kernel runs as
     applyInPandas grouped by shard — one Arrow batch per shard, no
-    driver-side posting materialization, no shuffle of raw postings.
+    driver-side posting materialization, no shuffle of raw postings — and
+    the merge is a Spark top-k.
 
-Both paths return a Spark DataFrame with the kernel's schema, so the merge
-and everything downstream are shared. Doclens travel INSIDE each block
-(codec third stream, the analog of Lucene per-segment norms), so a query's
-input is proportional to the posting lists of its terms — it never scans a
+The public operators always return a DataFrame: a driver-side result is
+wrapped as an Arrow local relation (liresolr_spark.frames), which collects
+without a Spark job. The serving engine (api.LireQueryEngine) calls the
+underscored bodies instead and keeps a driver-side result in pandas until
+its response is built. Doclens travel INSIDE each block (codec third
+stream, the analog of Lucene per-segment norms), so a query's input is
+proportional to the posting lists of its terms — it never scans a
 corpus-sized doc-stats table (critical at 10^12 docs).
 """
 
@@ -50,8 +55,9 @@ import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
 
+from liresolr_spark.frames import (as_frame, empty_pdf, local_frame,
+                                   struct_of)
 from liresolr_spark.functions.codec import decode_block
 from liresolr_spark.operators.bm25 import idf_lucene
 from liresolr_spark.plans.build import read_meta
@@ -362,40 +368,141 @@ def _shard_kernel_many(idfs: dict, k: int, k1: float, b: float, avgdl: float,
     return kernel
 
 
-def _restrict_df(allow_docids: DataFrame | None,
-                 deny_docids: DataFrame | None) -> DataFrame | None:
-    """Combine optional allow (fq) / deny (tombstone) docID sets into ONE
-    (shard, docID, allow) frame for the cogrouped kernel. Scale note: the
-    deny side is tiny (only superseded docs); the allow side is proportional
-    to fq selectivity — the pushdown is meant for SELECTIVE filters, exactly
-    the case the post-filter silently breaks. At 10^12 docs an unselective
-    fq would instead use a per-shard bitmap artifact; the cogroup seam stays
-    the same."""
+def _sides(restriction) -> list:
+    """A restriction argument as a list of (shard, docID) sides: None, one
+    frame (Spark or pandas) or a list of frames."""
+    if restriction is None:
+        return []
+    if isinstance(restriction, (list, tuple)):
+        return list(restriction)
+    return [restriction]
+
+
+def _spark_side(spark, side) -> DataFrame:
+    if isinstance(side, pd.DataFrame):
+        return local_frame(spark, side, "shard int, docID long")
+    return side.select("shard", "docID")
+
+
+def _restrict_df(spark, allow_docids, deny_docids) -> DataFrame | None:
+    """Combine the allow (fq, MUST) / deny (tombstones, MUST_NOT) sides
+    into ONE (shard, docID, allow) frame for the cogrouped kernel: allow
+    sides intersect (join), deny sides union — a plain narrow unionByName,
+    no distinct: the sides are cached and the kernel mask is duplicate-
+    tolerant (sorted-array searchsorted membership), while a distinct
+    would re-shuffle up to corpus/2 deny rows per query. Scale note: the
+    deny side is tiny (only superseded docs); the allow side is
+    proportional to fq selectivity — the pushdown is meant for SELECTIVE
+    filters, exactly the case the post-filter silently breaks. At 10^12
+    docs an unselective fq would instead use a per-shard bitmap artifact;
+    the cogroup seam stays the same."""
+    allow = [_spark_side(spark, a) for a in _sides(allow_docids)]
+    deny = [_spark_side(spark, d) for d in _sides(deny_docids)]
     out = None
-    if allow_docids is not None:
-        out = allow_docids.select("shard", "docID", F.lit(True).alias("allow"))
-    if deny_docids is not None:
-        d = deny_docids.select("shard", "docID", F.lit(False).alias("allow"))
+    if allow:
+        a = allow[0]
+        for nxt in allow[1:]:
+            a = a.join(nxt, ["shard", "docID"])
+        out = a.select("shard", "docID", F.lit(True).alias("allow"))
+    for d in deny:
+        d = d.select("shard", "docID", F.lit(False).alias("allow"))
         out = d if out is None else out.unionByName(d)
     return out
 
 
-def _run_shard_kernel(spark, blocks, kernel, schema, meta, restrict=None,
-                      postings=None):
+def _mask_rows(allow_docids, deny_docids, seqs, block_size: int
+               ) -> pd.DataFrame:
+    """Driver-side (shard, docID, allow) restriction rows, the pandas twin
+    of _restrict_df: allow sides intersect, deny sides union. Spark sides
+    (cached fq allow-lists, tombstones) are collected together in ONE job,
+    restricted to the aligned docID ranges `seqs` (block_seq = docID //
+    block_size) — the kernels only mask decoded docIDs, so rows outside
+    the collected blocks' ranges can never matter, and the collected rows
+    stay bounded by block_size per block. Pandas sides (driver-kernel
+    boolean sets) are used as they are."""
+    allow, deny = _sides(allow_docids), _sides(deny_docids)
+    sides = allow + deny
+    spark_ids = [i for i, s in enumerate(sides) if isinstance(s, DataFrame)]
+    got = None
+    if spark_ids:
+        union = None
+        for i in spark_ids:
+            f = sides[i].select("shard", "docID", F.lit(i).alias("_side"))
+            union = f if union is None else union.unionByName(f)
+        ranges = sorted({int(q) for q in seqs})
+        got = union.filter(
+            F.expr(f"docID div {int(block_size)}").isin(ranges)).toPandas()
+
+    def rows(i):
+        side = got[got["_side"] == i] if i in spark_ids else sides[i]
+        return side[["shard", "docID"]]
+
+    parts = []
+    if allow:
+        a = rows(0)
+        for i in range(1, len(allow)):
+            a = a.merge(rows(i), on=["shard", "docID"])
+        parts.append(a.assign(allow=True))
+    parts += [rows(i).assign(allow=False)
+              for i in range(len(allow), len(sides))]
+    return pd.concat(parts, ignore_index=True)
+
+
+def _restrict_rows(spark, df, allow_docids, deny_docids, block_size: int):
+    """Rows of a (shard, docID, ...) result inside the restriction: kept
+    when in every allow side and in no deny side. A pandas frame is
+    filtered in the driver (sides collected through _mask_rows over the
+    rows' aligned docID ranges), a Spark DataFrame by joins."""
+    allow, deny = _sides(allow_docids), _sides(deny_docids)
+    if not (allow or deny):
+        return df
+    if isinstance(df, pd.DataFrame):
+        if not len(df):
+            return df
+        mk = _mask_rows(allow, deny, df["docID"] // block_size, block_size)
+        ids = df["docID"].to_numpy()
+        keep = ~np.isin(ids, mk.loc[~mk["allow"], "docID"].to_numpy())
+        if allow:
+            keep &= np.isin(ids, mk.loc[mk["allow"], "docID"].to_numpy())
+        return df[keep].reset_index(drop=True)
+    for a in allow:
+        df = df.join(_spark_side(spark, a), ["shard", "docID"])
+    for d in deny:
+        df = df.join(_spark_side(spark, d), ["shard", "docID"], "left_anti")
+    return df
+
+
+def top_k(hits: pd.DataFrame, k: int, group: str | None = None
+          ) -> pd.DataFrame:
+    """Exact top-k of driver-side hits under (score desc, docID asc), per
+    `group` value when given (rows ordered by group first) — the driver
+    twin of the Spark merges below."""
+    keys = [group] if group else []
+    ranked = hits.sort_values(keys + ["score", "docID"],
+                              ascending=[True] * len(keys) + [False, True],
+                              kind="stable")
+    ranked = ranked.groupby(group).head(k) if group else ranked.head(k)
+    return ranked.reset_index(drop=True)
+
+
+def _run_shard_kernel(spark, blocks, kernel, schema, meta, allow=None,
+                      deny=None, postings=None):
     """Run the per-shard kernel over the pruned `blocks`, optionally
-    cogrouped with a (shard, docID, allow) `restrict` frame, and return a
-    DataFrame with `schema`. `postings` is the request's posting estimate
-    (postings_estimate); kernel_dispatch picks the path.
+    cogrouped with the `allow`/`deny` docID restriction (sides as in
+    _restrict_df), and return the kernel rows with `schema`: a pandas
+    frame on the driver path, a lazy DataFrame on the Spark path.
+    `postings` is the request's posting estimate (postings_estimate);
+    kernel_dispatch picks the path.
 
     Driver path (small requests): one collect of the block rows, plus one
     of the restriction rows that fall in the collected blocks' aligned
-    docID ranges (block_seq = docID // block_size) — the kernel only masks
-    decoded docIDs, so rows outside those ranges can never matter, and the
-    collected restriction stays bounded by block_size per block row. The
-    same kernel closure then runs once per shard, under the cogroup
-    contract: a shard with blocks but no mask rows gets an EMPTY mask frame
-    (under allow-mode it matches nothing); a shard with mask rows but no
-    blocks is skipped (every kernel returns no rows for zero blocks).
+    docID ranges (_mask_rows). The same kernel closure then runs once per
+    shard, under the cogroup contract: a shard with blocks but no mask
+    rows gets an EMPTY mask frame (under allow-mode it matches nothing); a
+    shard with mask rows but no blocks is skipped (every kernel returns no
+    rows for zero blocks). The rows stay in the driver: callers merge them
+    with numpy, and the public operators wrap their result as a local
+    relation.
 
     Spark path: applyInPandas (cogroup when restricted) after an EXPLICIT
     hash repartition on shard, pinned to min(num_shards, default
@@ -407,42 +514,50 @@ def _run_shard_kernel(spark, blocks, kernel, schema, meta, restrict=None,
     satisfies the kernel's required distribution, so no second shuffle
     appears. The kernel's cost is CPU (decode + score), not data size —
     parallelism should follow shard count, not shuffle bytes."""
+    restricted = bool(_sides(allow) or _sides(deny))
     if kernel_dispatch(postings) == "driver":
         bl = blocks.toPandas()
-        if restrict is not None and len(bl):
-            seqs = sorted({int(s) for s in bl["block_seq"]})
-            mk = restrict.filter(
-                F.expr(f"docID div {int(meta.block_size)}").isin(seqs)
-            ).select("shard", "docID", "allow").toPandas()
+        if restricted and len(bl):
+            mk = _mask_rows(allow, deny, bl["block_seq"], meta.block_size)
             masks = dict(tuple(mk.groupby("shard")))
         out = []
         for shard, grp in bl.groupby("shard"):
             grp = grp.reset_index(drop=True)
-            if restrict is None:
+            if not restricted:
                 res = kernel(grp)
             else:
                 res = kernel(grp, masks.get(shard, mk.iloc[:0])
                              .reset_index(drop=True))
             if len(res):
                 out.append(res)
+        struct = struct_of(schema)
         if not out:
-            return spark.createDataFrame([], schema)
-        struct = StructType.fromDDL(schema)
-        return spark.createDataFrame(
-            pd.concat(out, ignore_index=True)[struct.names], struct)
+            return empty_pdf(struct)
+        return pd.concat(out, ignore_index=True)[struct.names]
     n_parts = max(1, min(int(meta.num_shards),
                          spark.sparkContext.defaultParallelism))
     blocks = blocks.repartition(n_parts, "shard")
-    if restrict is None:
+    if not restricted:
         return blocks.groupBy("shard").applyInPandas(
             lambda bl: kernel(bl), schema=schema)
-    restrict = restrict.repartition(n_parts, "shard")
+    restrict = _restrict_df(spark, allow, deny).repartition(n_parts, "shard")
     return blocks.groupBy("shard").cogroup(
         restrict.groupBy("shard")
     ).applyInPandas(lambda bl, mk: kernel(bl, mk), schema=schema)
 
 
-def wand_topk_many(
+MANY_SCHEMA = "qid string, docID long, score double"
+
+
+def wand_topk_many(spark: SparkSession, *args, **kwargs) -> DataFrame:
+    """Batched block-max WAND as a DataFrame(qid, docID, score): the
+    arguments and result of _wand_topk_many, a driver-side result wrapped
+    as a local relation."""
+    return as_frame(spark, _wand_topk_many(spark, *args, **kwargs),
+                    MANY_SCHEMA)
+
+
+def _wand_topk_many(
     spark: SparkSession,
     index_dir: str,
     queries: dict[str, list[str]],
@@ -454,14 +569,17 @@ def wand_topk_many(
     meta=None,
     allow_docids: DataFrame | None = None,
     deny_docids: DataFrame | None = None,
-) -> DataFrame:
+):
     """Batched block-max WAND: ALL queries answered in ONE distributed job.
 
-    Returns DataFrame(qid, docID, score) — each qid's rows are its exact
-    top-k under (score desc, docID asc). This is the serving-throughput
-    path: per-job overhead (scheduling, Python worker round-trip, shuffle
-    setup) is paid once for the whole batch instead of per query, and the
-    kernel decodes each hot block once for every query that touches it.
+    Returns (qid, docID, score) rows — each qid's rows are its exact top-k
+    under (score desc, docID asc) — as a pandas frame ordered by (qid,
+    score desc, docID) when the kernels ran in the driver, else as a lazy
+    DataFrame. Restriction sides as in _wand_topk. This is the
+    serving-throughput path: per-job overhead (scheduling, Python worker
+    round-trip, shuffle setup) is paid once for the whole batch instead of
+    per query, and the kernel decodes each hot block once for every query
+    that touches it.
     queries: {query_id: [terms...]}."""
     from collections import Counter
 
@@ -486,7 +604,7 @@ def wand_topk_many(
         if m:
             idfs[qid] = m
     if not idfs:
-        return spark.createDataFrame([], "qid string, docID long, score double")
+        return empty_pdf(MANY_SCHEMA)
     union_terms = sorted({t for m in idfs.values() for t in m})
 
     src = (blocks_df if blocks_df is not None
@@ -497,12 +615,12 @@ def wand_topk_many(
              "max_tf", "min_dl")
 
     kernel = _shard_kernel_many(idfs, k, meta.k1, meta.b, meta.avgdl,
-                                allow_mode=allow_docids is not None)
-    schema = "qid string, docID long, score double"
+                                allow_mode=bool(_sides(allow_docids)))
     per_shard = _run_shard_kernel(
-        spark, blocks, kernel, schema, meta,
-        _restrict_df(allow_docids, deny_docids),
+        spark, blocks, kernel, MANY_SCHEMA, meta, allow_docids, deny_docids,
         postings_estimate(dictionary_map, field, union_terms))
+    if isinstance(per_shard, pd.DataFrame):
+        return top_k(per_shard, k, group="qid")
     return _merge_topk_per_qid(per_shard, k)
 
 
@@ -563,7 +681,17 @@ def _merge_topk_per_qid(per_shard: DataFrame, k: int,
                      F.col("_e.score").alias("score"))
 
 
-def wand_topk(
+WAND_SCHEMA = "docID long, score double"
+
+
+def wand_topk(spark: SparkSession, *args, **kwargs) -> DataFrame:
+    """Block-max WAND top-k as a DataFrame(docID, score): the arguments and
+    result of _wand_topk, a driver-side result wrapped as a local
+    relation."""
+    return as_frame(spark, _wand_topk(spark, *args, **kwargs), WAND_SCHEMA)
+
+
+def _wand_topk(
     spark: SparkSession,
     index_dir: str,
     query_terms: list[str],
@@ -576,13 +704,17 @@ def wand_topk(
     stats_out: dict | None = None,
     allow_docids: DataFrame | None = None,
     deny_docids: DataFrame | None = None,
-) -> DataFrame:
-    """Block-max WAND top-k: returns DataFrame(docID, score), globally exact.
+):
+    """Block-max WAND top-k, globally exact: (docID, score) rows ordered by
+    (score desc, docID asc) — a pandas frame when the shard kernels ran in
+    the driver, else a lazy DataFrame.
 
-    allow_docids / deny_docids: optional (shard, docID) restriction frames,
-    cogrouped into the shard kernel. allow = pushed-down fq (top-k is exact
-    UNDER the filter — no candidate-pool recall loss); deny = tombstoned
-    docs (cross-segment overwrites). See _shard_kernel.
+    allow_docids / deny_docids: optional (shard, docID) restriction — one
+    frame, Spark or pandas, or a list of them (allow sides intersect, deny
+    sides union) — cogrouped into the shard kernel. allow = pushed-down fq
+    or MUST set (top-k is exact UNDER the filter — no candidate-pool recall
+    loss); deny = tombstoned docs (cross-segment overwrites) or MUST_NOT
+    set. See _shard_kernel.
 
     blocks_df / dictionary_df / meta: optional pre-loaded handles (a serving
     layer caches these once per index — repeated queries then skip file
@@ -613,7 +745,7 @@ def wand_topk(
         idf = {r["term"]: idf_lucene(meta.n_docs, r["df"]) * qtf[r["term"]]
                for r in dstats}
     if not idf:
-        return spark.createDataFrame([], "docID long, score double")
+        return empty_pdf(WAND_SCHEMA)
 
     # partition pruning on shard dirs is automatic; row-group stats prune term
     src = (blocks_df if blocks_df is not None
@@ -632,11 +764,11 @@ def wand_topk(
 
     kernel = _shard_kernel(idf, k, meta.k1, meta.b, meta.avgdl,
                            meta.block_size, acc_total, acc_visited,
-                           allow_mode=allow_docids is not None)
-    schema = "docID long, score double"
+                           allow_mode=bool(_sides(allow_docids)))
     per_shard = _run_shard_kernel(
-        spark, blocks, kernel, schema, meta,
-        _restrict_df(allow_docids, deny_docids),
+        spark, blocks, kernel, WAND_SCHEMA, meta, allow_docids, deny_docids,
         postings_estimate(dictionary_map, field, idf))
+    if isinstance(per_shard, pd.DataFrame):
+        return top_k(per_shard, k)
     # global merge: bounded heap per partition + driver merge (TakeOrderedAndProject)
     return per_shard.orderBy(F.desc("score"), F.asc("docID")).limit(k)

@@ -3,9 +3,11 @@
 stage (applyInPandas / cogroup) or in the driver process, chosen by the
 request's posting estimate against DRIVER_MAX_POSTINGS. Every served
 kernel must return identical rows — and the WAND range accumulators
-identical counts — on both paths. The bound is monkeypatched to 0 (force
-the Spark path) and to a huge value (force the driver path), so the small
-fixtures here cover both."""
+identical counts — on both paths, and so must every engine handler, whose
+driver-dispatched requests finish in the driver (api.LireQueryEngine's
+local tail). The bound is monkeypatched to 0 (force the Spark path) and to
+a huge value (force the driver path), so the small fixtures here cover
+both."""
 
 from __future__ import annotations
 
@@ -15,6 +17,7 @@ import pyspark.sql.functions as F
 import pytest
 
 import liresolr_spark.operators.wand as wand
+from liresolr_spark.functions.tokenizer import py_hash_token
 from liresolr_spark.operators.bm25 import bm25_topk_from_index
 from liresolr_spark.operators.boolean import disjunctive_docids
 from liresolr_spark.operators.phrase import (
@@ -240,3 +243,131 @@ def test_engine_records_dispatch(spark, pos_index, vocab, monkeypatch):
     assert eng.last_metrics["dispatch"] == "driver"
     eng.search(text=vocab[0], must=[vocab[9]], rows=3).collect()
     assert eng.last_metrics["dispatch"] == "spark"
+
+
+# -- engine handlers: local tail vs Spark tail ------------------------------
+
+@pytest.fixture(scope="module")
+def tomb_index(spark, corpus200, tmp_path_factory):
+    """A positional two-segment index whose second segment overwrites ~1/5
+    of the first one's docs (same repo/path, new commit and content), so
+    the superseded docs are tombstoned."""
+    from liresolr_spark.streaming.ingest import append_segment
+
+    d = str(tmp_path_factory.mktemp("dispatch_tomb_index"))
+    append_segment(corpus200, d, epoch_id=0, num_shards=4, block_size=32,
+                   with_positions=True)
+    over = (corpus200.filter(F.abs(F.hash("repo", "path")) % 5 == 0)
+            .withColumn("commit", F.concat("commit", F.lit("-v2")))
+            .withColumn("content", F.concat("content", F.lit(" revised"))))
+    append_segment(over, d, epoch_id=1)
+    return d, _dict_map(spark, d)
+
+
+@pytest.fixture(scope="module", params=["plain", "tombstoned"])
+def served(request, spark, corpus200, pos_index, tomb_index):
+    """(engine, vocab by df desc, two indexed phrases) per index."""
+    from liresolr_spark.api import LireQueryEngine
+    from liresolr_spark.functions.tokenizer import py_tokenize
+
+    d, dmap = pos_index if request.param == "plain" else tomb_index
+    eng = LireQueryEngine(spark, d)
+    assert (eng._deny is not None) == (request.param == "tombstoned")
+    vocab = sorted(dmap["text"], key=lambda t: (-dmap["text"][t], t))
+    toks = [py_tokenize(r["content"]) for r in corpus200.limit(2).collect()]
+    return eng, vocab, [" ".join(t[2:4]) for t in toks]
+
+
+HANDLERS = {
+    "search_start": lambda e, v, p: e.search(
+        text=f"{v[0]} {v[5]} {v[-3]}", start=3, rows=5),
+    "search_fq_fl_expr": lambda e, v, p: e.search(
+        text=f"{v[1]} {v[7]}", fq="lang != 'go'", rows=6,
+        fl_expr="concat(repo, '/', path)"),
+    "search_fq_must": lambda e, v, p: e.search(
+        text=v[2], fq="lang != 'js'", must=[v[4]], rows=6),
+    "search_must_not": lambda e, v, p: e.search(
+        text=f"{v[0]} {v[3]}", must_not=[v[-1]], start=1, rows=6),
+    "search_hashes": lambda e, v, p: e.search(
+        hashes=[py_hash_token(t) for t in (v[0], v[9], v[20])], rows=5),
+    "search_doc_id": lambda e, v, p: e.search(doc_id=5, start=1, rows=4),
+    "search_many": lambda e, v, p: e.search_many(
+        {"a": v[0], "b": f"{v[3]} {v[-2]}", "c": "zz_nope"}, rows=4,
+        fq="lang != 'java'", must_not=[v[-1]]),
+    "prefix_search_many": lambda e, v, p: e.prefix_search_many(
+        {"a": v[0][:2], "b": v[11][:3], "c": "zzq"}, rows=4),
+    "prefix_search": lambda e, v, p: e.prefix_search(
+        v[1][:2], start=2, rows=4, fq="lang != 'go'"),
+    "wildcard_search": lambda e, v, p: e.wildcard_search(
+        v[3][:2] + "*" + v[3][-1], rows=4),
+    "fuzzy_search": lambda e, v, p: e.fuzzy_search(
+        v[2][:-1] + "q", max_edits=1, rows=4),
+    "phrase_search": lambda e, v, p: e.phrase_search(p[0], start=1, rows=4),
+    "phrase_search_fq": lambda e, v, p: e.phrase_search(
+        p[1], fq="lang != 'js'", rows=4),
+    "phrase_search_many": lambda e, v, p: e.phrase_search_many(
+        {"a": p[0], "b": p[1], "c": "zz_nope zz_nope"}, rows=3),
+    "identity": lambda e, v, p: e.identity(
+        f"{v[0]} {v[4]} {v[12]}", threshold=0.99, verify_threshold=0.99,
+        rows=5),
+    "similar": lambda e, v, p: e.similar(f"{v[1]} {v[6]}", rows=5),
+    "empty_search": lambda e, v, p: e.search(
+        text="zz_nope", rows=5, fl_expr="repo"),
+    "empty_fuzzy": lambda e, v, p: e.fuzzy_search("qqqqqqqq", rows=4),
+    "empty_search_many": lambda e, v, p: e.search_many({}, rows=4),
+    "empty_phrase_search_many": lambda e, v, p: e.phrase_search_many({}),
+}
+
+
+@pytest.mark.parametrize("case", list(HANDLERS))
+def test_engine_handlers_two_paths(served, monkeypatch, case):
+    """Every kernel-backed handler returns identical full rows (payload,
+    qid, dist, fval) on the local tail and the Spark tail. Phrase scores
+    are compared at 9 decimals (Spark's log is StrictMath, the driver's is
+    libm) with an identical docID order."""
+    eng, vocab, phrases = served
+    got = {}
+    for path, bound in BOUNDS.items():
+        monkeypatch.setattr(wand, "DRIVER_MAX_POSTINGS", bound)
+        rows = [tuple(r) for r in HANDLERS[case](eng, vocab, phrases)
+                .collect()]
+        if case.startswith("phrase"):
+            rows = [tuple(round(x, 9) if isinstance(x, float) else x
+                          for x in r) for r in rows]
+        if not case.startswith("empty"):  # an empty request is 0 postings
+            assert eng.last_metrics["dispatch"] == path, case
+        got[path] = rows
+    assert got["spark"] == got["driver"]
+    assert bool(got["driver"]) != case.startswith("empty"), got["driver"]
+
+
+def _jobs_run(spark, fn):
+    """(fn(), number of Spark jobs fn ran)."""
+    sc = spark.sparkContext
+    group = f"job-count-{random.random()}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_driver_dispatched_job_counts(spark, pos_index, vocab, corpus200):
+    """On a pinned engine, a driver-dispatched search() or phrase_search()
+    runs at most 2 Spark jobs — the pruned block collect and the page's
+    payload fetch — and the returned page is an executed local relation:
+    collecting it runs none."""
+    from liresolr_spark.api import LireQueryEngine
+    from liresolr_spark.functions.tokenizer import py_tokenize
+
+    eng = LireQueryEngine(spark, pos_index[0])
+    phrase = " ".join(py_tokenize(corpus200.first()["content"])[2:4])
+    for call in (lambda: eng.search(text=f"{vocab[0]} {vocab[5]}", rows=5),
+                 lambda: eng.phrase_search(phrase, rows=5)):
+        page, n_call = _jobs_run(spark, call)
+        rows, n_collect = _jobs_run(spark, page.collect)
+        assert eng.last_metrics["dispatch"] == "driver"
+        assert rows and n_call + n_collect <= 2, (n_call, n_collect)
+        assert n_collect == 0

@@ -81,12 +81,21 @@ def main() -> None:
     # each WAND kernel (phase-1 ha retrieve, phase-2 text verify) in the
     # plan ONCE; the pre-round-5 shape referenced the cascade twice
     # (projection join + dist join) and duplicated both kernel subtrees
+    # The audit is of the Spark tail: a request whose kernels all fit
+    # DRIVER_MAX_POSTINGS returns an executed local relation with no kernel
+    # in its plan, so the bound is lowered to 0 for this one request.
     if os.path.exists(f"{idx}/meta.json"):
+        import liresolr_spark.operators.wand as wand
         from liresolr_spark.api import LireQueryEngine
 
         eng = LireQueryEngine(spark, idx, pin_blocks=False)
-        ident = eng.identity("import return def public", threshold=0.9999,
-                             verify_threshold=0.9999, rows=10)
+        bound, wand.DRIVER_MAX_POSTINGS = wand.DRIVER_MAX_POSTINGS, 0
+        try:
+            ident = eng.identity("import return def public",
+                                 threshold=0.9999, verify_threshold=0.9999,
+                                 rows=10)
+        finally:
+            wand.DRIVER_MAX_POSTINGS = bound
         plan = ident._jdf.queryExecution().executedPlan().toString()
         lines = plan.splitlines()
         n_kernels = sum(1 for l in lines if "FlatMapGroupsInPandas" in l)

@@ -79,6 +79,9 @@ def child(cores: int, rows: int, num_shards: int = 32,
             "overwrite").parquet(corpus_path)
     corpus = spark.read.parquet(corpus_path)
     corpus.count()  # warm the scan; generation/JVM spin-up is not the job
+    # the build's byte window opens here: corpus generation and the warm
+    # scan above are not build traffic
+    build_start_ms = time.time() * 1000.0
 
     idx = f"/tmp/liresolr_scaling_index_{rows}_{cores}"
     if queries_only and os.path.exists(os.path.join(idx, "meta.json")):
@@ -140,7 +143,8 @@ def child(cores: int, rows: int, num_shards: int = 32,
     }
     spark.stop()  # closes (renames) the event log
     if build_sec:
-        bts = _phase_bytes(os.path.join(evdir, app_id), build_end_ms)
+        bts = _phase_bytes(os.path.join(evdir, app_id), build_start_ms,
+                           build_end_ms)
         if bts:
             out["build_bytes"] = bts
             moved = (bts["input"] + bts["shuffle_read"]
@@ -149,9 +153,12 @@ def child(cores: int, rows: int, num_shards: int = 32,
     print(json.dumps(out))
 
 
-def _phase_bytes(ev_path: str, until_ms: float) -> dict | None:
-    """Sum task-level byte metrics from a Spark event log for tasks that
-    FINISHED before `until_ms` (the build phase; queries start after).
+def _phase_bytes(ev_path: str, start_ms: float, until_ms: float
+                 ) -> dict | None:
+    """Sum task-level byte metrics from a Spark event log for tasks
+    LAUNCHED at or after `start_ms` and FINISHED by `until_ms` (the build
+    phase: corpus generation and the warm scan run before it, queries
+    after).
     Returns {input, shuffle_read, shuffle_write, output} byte totals —
     the denominator-free evidence for the bandwidth-scaling analysis."""
     if not os.path.exists(ev_path):
@@ -166,7 +173,8 @@ def _phase_bytes(ev_path: str, until_ms: float) -> dict | None:
             except ValueError:
                 continue
             ti = ev.get("Task Info") or {}
-            if ti.get("Finish Time", 0) > until_ms:
+            if (ti.get("Launch Time", 0) < start_ms
+                    or ti.get("Finish Time", 0) > until_ms):
                 continue
             tm = ev.get("Task Metrics") or {}
             im = tm.get("Input Metrics") or {}
