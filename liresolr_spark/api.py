@@ -6,15 +6,15 @@ registered in solrconfig.xml (ref: README.md:108-132):
   /lireSim  -> LireQueryEngine.similar(...)       (SimilarRequestHandler)
   lirefunc  -> LireQueryEngine.function_sort(...) (LireValueSource)
 
-Each method returns a DataFrame. A kernel-backed handler whose shard
-kernels all run in the driver (operators.wand.kernel_dispatch) returns an
-EXECUTED local relation, not a lazy plan: its kernel rows stay in pandas
-through the merge, pagination and restriction steps, and the page's payload
-fetch is the request's last Spark job, so the caller's collect() runs none.
-A request with any Spark-dispatched kernel, and the non-kernel handlers
-(function_sort, random_sample), return a lazy plan. Per-request metrics are
-returned alongside via `last_metrics` — the analog of RawDocsSearchTime /
-ReRankSearchTime in the reference's responses
+Each method returns a DataFrame. Every kernel-backed handler returns an
+EXECUTED local relation, not a lazy plan: its ranked hits, a bounded top-k,
+become driver rows at one point (_collect) whichever path its shard kernels
+took (operators.wand.kernel_dispatch); pagination, the identity/similar
+steps and the payload merge run in pandas, and the page's payload fetch is
+the request's last Spark job, so the caller's collect() runs none. The
+non-kernel handlers (function_sort, random_sample) return a lazy plan.
+Per-request metrics are returned alongside via `last_metrics` — the analog
+of RawDocsSearchTime / ReRankSearchTime in the reference's responses
 (ref: LireRequestHandler.java:460-461,493-494).
 """
 
@@ -33,8 +33,11 @@ from liresolr_spark import DEFAULT_CANDIDATES, DEFAULT_ROWS, MAX_QUERY_TERMS
 from liresolr_spark.frames import empty_pdf, local_frame
 from liresolr_spark.functions.tokenizer import py_hash_token, py_tokenize
 from liresolr_spark.operators.wand import (MANY_SCHEMA, WAND_SCHEMA,
+                                           _wand_topk, _wand_topk_many,
                                            kernel_dispatch, postings_estimate,
-                                           top_k, wand_topk)
+                                           top_k)
+# unused here; perfbench's layer tracer hooks it by name as api.wand_topk
+from liresolr_spark.operators.wand import wand_topk  # noqa: F401
 from liresolr_spark.plans.build import read_meta
 
 
@@ -42,25 +45,46 @@ def _counted(fn):
     """Cumulative request statistics, the analog of the reference's
     per-handler numRequests / numErrors / totalTime counters
     (ref: LireRequestHandler.java:51-53, reported at :568-574). Timed span
-    is the handler call: plan construction for a lazy result, the whole
-    execution for a local-relation result (see the module docstring) —
-    `last_metrics` keeps the per-request figure. Also starts the request's
-    shard-kernel dispatch log (_dispatch)."""
+    is the handler call: the whole execution for a kernel-backed handler
+    (see the module docstring), plan construction for function_sort and
+    random_sample. Also resets the request's `last_metrics` and
+    shard-kernel dispatch log (_dispatch), and fills in the keys every
+    request has: RawDocsSearchTime_planning_ms (the timed span), dispatch
+    and postings_est (_dispatch_metrics). Handlers add their own fields."""
 
     @functools.wraps(fn)
     def wrapper(self, *a, **kw):
         t0 = time.time()
         self._dispatch_log = []
+        self.last_metrics = {}
         self.request_stats["numRequests"] += 1
         try:
-            return fn(self, *a, **kw)
+            out = fn(self, *a, **kw)
         except Exception:
             self.request_stats["numErrors"] += 1
             raise
         finally:
-            self.request_stats["totalTime_ms"] += (time.time() - t0) * 1000.0
+            ms = (time.time() - t0) * 1000.0
+            self.request_stats["totalTime_ms"] += ms
+        self.last_metrics.update(RawDocsSearchTime_planning_ms=round(ms, 1),
+                                 **self._dispatch_metrics())
+        return out
 
     return wrapper
+
+
+def _collect(hits, cache=()) -> pd.DataFrame:
+    """Ranked operator rows as driver rows in response order ([qid,] score
+    desc, docID asc). A lazy result (some shard kernel ran as a pandas-UDF
+    stage) is a bounded top-k: it is collected, re-ordered — the batched
+    Spark merge emits rows in no particular order — and the `cache`
+    handles its plan read are released. Driver rows pass through."""
+    if isinstance(hits, pd.DataFrame):
+        return hits
+    rows = hits.toPandas()
+    for cached in cache:
+        cached.unpersist()
+    return top_k(rows, len(rows), group="qid" if "qid" in rows else None)
 
 
 class LireQueryEngine:
@@ -202,18 +226,15 @@ class LireQueryEngine:
 
     # -- internals ----------------------------------------------------------
 
-    def _dispatch(self, *kernels) -> bool:
-        """Log the request's shard-kernel dispatches, one (field, terms)
-        pair per kernel, by posting estimate (operators.wand.
+    def _dispatch(self, *kernels) -> None:
+        """Log the request's shard-kernel dispatches for last_metrics, one
+        (field, terms) pair per kernel, by posting estimate (operators.wand.
         postings_estimate over the same pinned snapshot the operators size
-        them with), and return True when every kernel of the request runs
-        in the driver. Such a request keeps its kernel rows in pandas and
-        ends in the local tail (_local_page); any Spark-dispatched kernel
-        puts the whole request on the Spark tail."""
+        them with). The operators pick each kernel's path themselves; the
+        response is an executed local relation on either path."""
         for field, terms in kernels:
             self._dispatch_log.append(
                 postings_estimate(self._dict_map, field, terms))
-        return all(kernel_dispatch(p) == "driver" for p in self._dispatch_log)
 
     def _dispatch_metrics(self) -> dict:
         """last_metrics fields naming the path that served the request:
@@ -228,21 +249,17 @@ class LireQueryEngine:
         return {"dispatch": "spark" if "spark" in paths else "driver",
                 "postings_est": (None if None in log else sum(log))}
 
-    def _wand(self, terms, k, field, local, restriction):
+    def _wand(self, terms, k, field, restriction) -> pd.DataFrame:
         """WAND top-k of `terms` — or of every query of a {qid: terms}
-        batch — under `restriction` (_restriction): driver pandas rows for
-        a local request, else the lazy public operator."""
-        from liresolr_spark.operators import wand
-
+        batch — under `restriction` (_restriction), as driver rows in
+        response order (_collect)."""
         allow, deny = restriction
-        if isinstance(terms, dict):
-            op = wand._wand_topk_many if local else wand.wand_topk_many
-        else:
-            op = wand._wand_topk if local else wand_topk
-        return op(self.spark, self.index_dir, terms, k=k, field=field,
-                  blocks_df=self._blocks, dictionary_df=self._dictionary,
-                  dictionary_map=self._dict_map, meta=self.meta,
-                  allow_docids=allow, deny_docids=deny)
+        op = _wand_topk_many if isinstance(terms, dict) else _wand_topk
+        return _collect(op(
+            self.spark, self.index_dir, terms, k=k, field=field,
+            blocks_df=self._blocks, dictionary_df=self._dictionary,
+            dictionary_map=self._dict_map, meta=self.meta,
+            allow_docids=allow, deny_docids=deny))
 
     def _docstats(self) -> DataFrame:
         if self._deny is None:
@@ -301,7 +318,7 @@ class LireQueryEngine:
             not_terms = [py_hash_token(t) for t in not_terms]
         return must_terms, not_terms
 
-    def _restriction(self, local, fq=None, must_terms=(), not_terms=(),
+    def _restriction(self, fq=None, must_terms=(), not_terms=(),
                      field="text"):
         """(allow, deny) docID restriction sides of a request, shared by
         every kernel-backed handler. The operators intersect the allow
@@ -311,9 +328,10 @@ class LireQueryEngine:
         fq filter resolves through the cached/warmed tiers (_fq_allow);
         boolean clauses (Lucene BooleanQuery semantics, the Solr
         +term/-term surface — MUST restricts AND scores, MUST_NOT excludes)
-        resolve from posting lists only (operators/boolean.py), as driver
-        pandas sets on a local request. Callers add must_terms to the
-        scored term set (Occur.MUST scores)."""
+        resolve from posting lists only (operators/boolean.py): a driver
+        pandas set when its kernel ran in the driver, else a lazy frame —
+        the operators take either. Callers add must_terms to the scored
+        term set (Occur.MUST scores)."""
         allow = []
         deny = [] if self._deny is None else [self._deny]
         if fq:
@@ -323,9 +341,7 @@ class LireQueryEngine:
         if must_terms or not_terms:
             from liresolr_spark.operators import boolean
 
-            resolve = (boolean._boolean_restriction if local
-                       else boolean.boolean_restriction)
-            b_allow, b_deny = resolve(
+            b_allow, b_deny = boolean._boolean_restriction(
                 self.spark, self.index_dir, list(must_terms), list(not_terms),
                 field=field, blocks_df=self._blocks, meta=self.meta,
                 dictionary_map=self._dict_map)
@@ -348,29 +364,21 @@ class LireQueryEngine:
                 f"too many query terms: {len(terms)} > {MAX_QUERY_TERMS}")
         return terms
 
-    # -- response tails: local (driver-resident hits) and Spark ------------
+    # -- response tail -----------------------------------------------------
 
-    def _respond(self, hits, start: int = 0, rows: int | None = None
-                 ) -> DataFrame:
-        """The response for ranked hits — (docID, score) rows, or (qid,
-        docID, score) for a batch — sliced to [start, start+rows) when rows
-        is given (ref: LireRequestHandler.java:519-528). Driver-side hits
-        (a pandas frame: every kernel of the request ran in the driver)
-        take the local tail, lazy hits the Spark tail."""
-        if isinstance(hits, pd.DataFrame):
-            end = None if rows is None else start + rows
-            return self._local_page(hits.iloc[start:end])
-        if rows is not None:
-            hits = self._paginate(hits, start, rows)
-        return self._project(hits)
-
-    def _local_page(self, page: pd.DataFrame) -> DataFrame:
-        """Local tail: the payload of an already-ranked page, fetched in
-        the request's only Spark job (a docID filter over docstats), merged
-        in pandas and returned in the page's order as an Arrow local
-        relation — an executed result whose collect() runs no job. The
-        kernels applied the tombstone masks, so unlike _project there is
-        no anti-join. Columns: [qid,] docID, payload, score[, dist]."""
+    def _respond(self, hits: pd.DataFrame, start: int = 0,
+                 rows: int | None = None) -> DataFrame:
+        """The response for ranked driver rows (_collect) — (docID, score[,
+        dist]) rows, or (qid, docID, score) for a batch — sliced to [start,
+        start+rows) when rows is given (ref: LireRequestHandler.java:519-528).
+        The page's payload is fetched in the request's last Spark job (a
+        docID filter over docstats), merged in pandas and returned in the
+        page's order as an Arrow local relation — an executed result whose
+        collect() runs no job. The kernels applied the tombstone masks, so
+        there is no anti-join. Columns: [qid,] docID, payload, score[,
+        dist]."""
+        end = None if rows is None else start + rows
+        page = hits.iloc[start:end]
         lead = [StructField("qid", StringType())] if "qid" in page else []
         tail = [StructField(c, DoubleType()) for c in page.columns
                 if c not in ("qid", "docID")]
@@ -382,33 +390,6 @@ class LireQueryEngine:
                        .select(*self._payload.names).toPandas())
             page = page.merge(payload, on="docID")
         return local_frame(self.spark, page, struct)
-
-    def _paginate(self, hits: DataFrame, start: int, rows: int) -> DataFrame:
-        """Spark tail: slice [start, start+rows) of the ranked hits."""
-        from pyspark.sql.window import Window
-
-        if start == 0:
-            return hits.limit(rows)
-        w = Window.orderBy(F.desc("score"), F.asc("docID"))
-        return (
-            hits.withColumn("_rank", F.row_number().over(w))
-            .filter(F.col("_rank").between(start + 1, start + rows))
-            .drop("_rank")
-        )
-
-    def _project(self, hits: DataFrame, *order) -> DataFrame:
-        """Spark tail: response projection {[qid,] id fields, score[,
-        dist]} + payload join (ref: LireRequestHandler.java:520-524 —
-        SURVEY P1/J2), ordered by `order` (default score desc, docID asc;
-        a batch orders by qid first). The hits side is bounded (top-k) and
-        broadcast, so the payload fetch never shuffles the corpus-sized
-        docstats table."""
-        lead = ["qid"] if "qid" in hits.columns else []
-        tail = [c for c in hits.columns if c not in ("qid", "docID")]
-        order = order or (F.desc("score"), F.asc("docID"))
-        stats = self._docstats().select(*self._payload.names)
-        return stats.join(F.broadcast(hits), "docID").select(
-            *lead, *self._payload.names, *tail).orderBy(*lead, *order)
 
     # -- /lireq analog ------------------------------------------------------
 
@@ -466,7 +447,6 @@ class LireQueryEngine:
         fl_expr="url_encode(concat(repo, '/', path))" reproduces the
         reference's URL-encoded title field (ParallelSolrIndexer.java:456).
         """
-        t0 = time.time()
         field = "text"
         if (must or must_not) and text is None and hashes is None:
             # the boolean-clause block runs only on the term-scored
@@ -482,7 +462,7 @@ class LireQueryEngine:
         elif doc_id is not None:
             return self._search_by_example(doc_id, start, rows)
         else:
-            return self.random_sample(rows, seed=seed)
+            return self._random_sample(rows, seed)
         self._check_clauses(terms)
         if subsample is not None and terms:
             rng = random.Random(seed)  # seeded, unlike ref Collections.shuffle
@@ -501,19 +481,14 @@ class LireQueryEngine:
         if must_terms:
             # MUST clauses also score (Lucene Occur.MUST)
             terms = self._check_clauses(terms + must_terms)
-        local = self._dispatch(
-            *[(field, c) for c in (must_terms, not_terms) if c],
-            (field, terms))
-        hits = self._wand(terms, pool, field, local, self._restriction(
-            local, fq, must_terms, not_terms, field))
+        self._dispatch(*[(field, c) for c in (must_terms, not_terms) if c],
+                       (field, terms))
+        hits = self._wand(terms, pool, field, self._restriction(
+            fq, must_terms, not_terms, field))
         out = self._respond(hits, start, rows)
         if fl_expr is not None:
             out = out.withColumn("fval", F.expr(fl_expr))
-        self.last_metrics = {
-            "RawDocsSearchTime_planning_ms": round((time.time() - t0) * 1000, 1),
-            "field": field, "n_terms": len(terms), "pool": pool,
-            **self._dispatch_metrics(),
-        }
+        self.last_metrics.update(field=field, n_terms=len(terms), pool=pool)
         return out
 
     @_counted
@@ -535,7 +510,6 @@ class LireQueryEngine:
         docID masks, so every qid's top-k is exact under the restriction.
         MUST terms also score, appended to every query's term set (Lucene
         Occur.MUST), exactly as search() does per query."""
-        t0 = time.time()
         must_terms, not_terms = self._clause_terms(must, must_not, field)
         queries = {}
         for qid, text in texts.items():
@@ -543,17 +517,13 @@ class LireQueryEngine:
             if field == "ha":
                 terms = [py_hash_token(t) for t in terms]
             queries[qid] = self._check_clauses(terms + must_terms)
-        local = self._dispatch(
-            *[(field, c) for c in (must_terms, not_terms) if c],
-            (field, [t for ts in queries.values() for t in ts]))
+        self._dispatch(*[(field, c) for c in (must_terms, not_terms) if c],
+                       (field, [t for ts in queries.values() for t in ts]))
         out = self._respond(self._wand(
-            queries, rows, field, local,
-            self._restriction(local, fq, must_terms, not_terms, field)))
-        self.last_metrics = {
-            "RawDocsSearchTime_planning_ms": round((time.time() - t0) * 1000, 1),
-            "field": field, "n_queries": len(queries), "pool": rows,
-            **self._dispatch_metrics(),
-        }
+            queries, rows, field,
+            self._restriction(fq, must_terms, not_terms, field)))
+        self.last_metrics.update(field=field, n_queries=len(queries),
+                                 pool=rows)
         return out
 
     @_counted
@@ -569,7 +539,6 @@ class LireQueryEngine:
         search_many). fq applies to the whole batch."""
         from liresolr_spark.operators.multiterm import expand_prefix
 
-        t0 = time.time()
         cap = self._expansion_cap(max_expansions)
         queries = {}
         for qid, prefix in prefixes.items():
@@ -580,20 +549,13 @@ class LireQueryEngine:
             if terms:
                 queries[qid] = self._check_clauses(terms)
         if queries:
-            local = self._dispatch(
-                (field, [t for ts in queries.values() for t in ts]))
-            hits = self._wand(queries, rows, field, local,
-                              self._restriction(local, fq))
+            self._dispatch((field, [t for ts in queries.values() for t in ts]))
+            hits = self._wand(queries, rows, field, self._restriction(fq))
         else:
             hits = empty_pdf(MANY_SCHEMA)
-        out = self._respond(hits)
-        self.last_metrics = {
-            "RawDocsSearchTime_planning_ms": round((time.time() - t0) * 1000, 1),
-            "field": field, "n_queries": len(prefixes),
-            "n_expanded": len(queries), "pool": rows,
-            **self._dispatch_metrics(),
-        }
-        return out
+        self.last_metrics.update(field=field, n_queries=len(prefixes),
+                                 n_expanded=len(queries), pool=rows)
+        return self._respond(hits)
 
     def _search_by_example(self, doc_id: int, start: int, rows: int) -> DataFrame:
         """Query-by-example: point-lookup the doc, re-generate its hash tokens
@@ -641,16 +603,12 @@ class LireQueryEngine:
             for r in blocks.select("term", "docids")
             .mapInPandas(find_terms, schema="term string").collect()
         ]
-        local = self._dispatch(("ha", hit_terms))
-        hits = self._wand(hit_terms, start + rows + 1, "ha", local,
-                          self._restriction(local))
-        if local:
-            hits = hits[hits["docID"] != doc_id]
-        else:
-            hits = hits.filter(F.col("docID") != doc_id)
-        self.last_metrics = {"field": "ha", "n_terms": len(hit_terms),
-                             "doc_id": doc_id, **self._dispatch_metrics()}
-        return self._respond(hits, start, rows)
+        self._dispatch(("ha", hit_terms))
+        hits = self._wand(hit_terms, start + rows + 1, "ha",
+                          self._restriction())
+        self.last_metrics.update(field="ha", n_terms=len(hit_terms),
+                                 doc_id=doc_id)
+        return self._respond(hits[hits["docID"] != doc_id], start, rows)
 
     @_counted
     def prefix_search(
@@ -676,13 +634,12 @@ class LireQueryEngine:
         SimilarRequestHandler.java:101)."""
         from liresolr_spark.operators.multiterm import expand_prefix
 
-        t0 = time.time()
         terms = expand_prefix(
             self.spark, self.index_dir, prefix, field=field,
             max_expansions=self._expansion_cap(max_expansions),
             dictionary_df=self._dictionary, dictionary_map=self._dict_map)
         return self._serve_expansion(terms, start, rows, fq, field, fl_expr,
-                                     t0, prefix=prefix)
+                                     prefix=prefix)
 
     @_counted
     def wildcard_search(
@@ -705,13 +662,12 @@ class LireQueryEngine:
         present (no Spark job for the expansion)."""
         from liresolr_spark.operators.multiterm import expand_wildcard
 
-        t0 = time.time()
         terms = expand_wildcard(
             self.spark, self.index_dir, pattern, field=field,
             max_expansions=self._expansion_cap(max_expansions),
             dictionary_df=self._dictionary, dictionary_map=self._dict_map)
         return self._serve_expansion(terms, start, rows, fq, field, fl_expr,
-                                     t0, pattern=pattern)
+                                     pattern=pattern)
 
     @_counted
     def fuzzy_search(
@@ -735,14 +691,13 @@ class LireQueryEngine:
         fq pushdown, pagination, projection."""
         from liresolr_spark.operators.multiterm import expand_fuzzy
 
-        t0 = time.time()
         terms = expand_fuzzy(
             self.spark, self.index_dir, term, max_edits=max_edits,
             prefix_length=prefix_length, field=field,
             max_expansions=self._expansion_cap(max_expansions),
             dictionary_df=self._dictionary, dictionary_map=self._dict_map)
         return self._serve_expansion(terms, start, rows, fq, field, fl_expr,
-                                     t0, term=term, max_edits=max_edits)
+                                     term=term, max_edits=max_edits)
 
     @staticmethod
     def _expansion_cap(max_expansions: int | None) -> int:
@@ -751,7 +706,7 @@ class LireQueryEngine:
         return (DEFAULT_MAX_EXPANSIONS if max_expansions is None
                 else max_expansions)
 
-    def _serve_expansion(self, terms, start, rows, fq, field, fl_expr, t0,
+    def _serve_expansion(self, terms, start, rows, fq, field, fl_expr,
                          **query_label) -> DataFrame:
         """Shared tail of the multi-term rewrites (prefix/wildcard/fuzzy):
         clause guard, empty-expansion short-circuit, fq pushdown, WAND,
@@ -759,19 +714,15 @@ class LireQueryEngine:
         self._check_clauses(terms)
         pool = start + rows if terms else 0
         if terms:
-            local = self._dispatch((field, terms))
-            hits = self._wand(terms, pool, field, local,
-                              self._restriction(local, fq))
+            self._dispatch((field, terms))
+            hits = self._wand(terms, pool, field, self._restriction(fq))
         else:
             hits = empty_pdf(WAND_SCHEMA)
         out = self._respond(hits, start, rows)
         if fl_expr is not None:
             out = out.withColumn("fval", F.expr(fl_expr))
-        self.last_metrics = {
-            "RawDocsSearchTime_planning_ms": round((time.time() - t0) * 1000, 1),
-            "field": field, "n_terms": len(terms), "pool": pool,
-            **query_label, **self._dispatch_metrics(),
-        }
+        self.last_metrics.update(field=field, n_terms=len(terms), pool=pool,
+                                 **query_label)
         return out
 
     @_counted
@@ -790,36 +741,24 @@ class LireQueryEngine:
         is answered entirely from the posting blocks (Lucene PhraseQuery
         semantics, operators/phrase.py); otherwise the two-stage verify
         path runs and needs `corpus` (the index stores sha256, not
-        content). The result is always executed (local relation): on the
-        Spark tail the match pipeline has two consumers (scores + phrase
-        df), and eager materialization through the cache handle is what
-        keeps it single-pass without leaking a persisted relation past the
-        request; on the local tail the matches are scored in the driver."""
-        from liresolr_spark.operators import phrase
-        from liresolr_spark.operators.bm25 import materialize_and_release
+        content). When the matches are scored in Spark they have two
+        consumers (scores + phrase df): the match relation is cached for
+        the one collect and released right after it (_collect), so the
+        pipeline runs once and nothing persisted outlives the request."""
+        from liresolr_spark.operators.phrase import _phrase_topk
 
-        t0 = time.time()
         positional = getattr(self.meta, "with_positions", False)
-        local = self._dispatch(("text", py_tokenize(text))) and positional
-        allow, deny = self._restriction(local, fq)
-        args = (self.spark, self.index_dir, corpus, text)
-        kw = dict(k=start + rows, blocks_df=self._blocks, meta=self.meta,
-                  allow_docids=allow, deny_docids=deny,
-                  dictionary_map=self._dict_map)
-        if local:
-            hits = phrase._phrase_topk(*args, **kw)
-        else:
-            cache: list = []
-            hits = materialize_and_release(
-                phrase.phrase_topk(*args, **kw, cache_out=cache), cache)
-        out = self._respond(hits, start, rows)
-        self.last_metrics = {
-            "RawDocsSearchTime_planning_ms": round((time.time() - t0) * 1000, 1),
-            "field": "text", "phrase": text,
-            "path": "positions" if positional else "verify",
-            **self._dispatch_metrics(),
-        }
-        return out
+        self._dispatch(("text", py_tokenize(text)))
+        allow, deny = self._restriction(fq)
+        cache: list = []
+        hits = _phrase_topk(
+            self.spark, self.index_dir, corpus, text, k=start + rows,
+            blocks_df=self._blocks, meta=self.meta, allow_docids=allow,
+            deny_docids=deny, cache_out=cache, dictionary_map=self._dict_map)
+        self.last_metrics.update(
+            field="text", phrase=text,
+            path="positions" if positional else "verify")
+        return self._respond(_collect(hits, cache), start, rows)
 
     @_counted
     def phrase_search_many(self, texts: dict[str, str],
@@ -830,7 +769,7 @@ class LireQueryEngine:
         decoded once per shard (the search_many amortization). Returns
         DataFrame(qid, docID, repo, path, commit, lang, score), each qid's
         exact top-`rows`, rank-identical to per-phrase phrase_search().
-        Always executed, for the same reasons as phrase_search.
+        The match relation is cached and released as in phrase_search.
 
         On a POSITIONLESS index the batch degrades to the two-stage verify
         path per phrase (needs `corpus` — the index stores sha256, not
@@ -840,9 +779,7 @@ class LireQueryEngine:
         subtree overlap — build with with_positions=True for the batched
         fast path (the error below steers there when corpus is absent)."""
         from liresolr_spark.operators import phrase
-        from liresolr_spark.operators.bm25 import materialize_and_release
 
-        t0 = time.time()
         cache: list = []
         if not texts:
             hits = empty_pdf(MANY_SCHEMA)
@@ -856,7 +793,7 @@ class LireQueryEngine:
                     "phrase verify fallback")
             self._dispatch(*[("text", py_tokenize(t))
                              for t in texts.values()])
-            deny = self._restriction(False)[1]
+            deny = self._restriction()[1]
             per = [
                 phrase.phrase_topk(
                     self.spark, self.index_dir, corpus, text, k=rows,
@@ -866,30 +803,18 @@ class LireQueryEngine:
                 .select(F.lit(qid).alias("qid"), "docID", "score")
                 for qid, text in sorted(texts.items())
             ]
-            hits = per[0]
-            for nxt in per[1:]:
-                hits = hits.unionByName(nxt)
-            hits = materialize_and_release(hits, cache)
+            hits = functools.reduce(DataFrame.unionByName, per)
         else:
-            local = self._dispatch(
+            self._dispatch(
                 ("text", [t for x in texts.values() for t in py_tokenize(x)]))
-            args = (self.spark, self.index_dir, texts)
-            kw = dict(k=rows, blocks_df=self._blocks, meta=self.meta,
-                      deny_docids=self._restriction(local)[1],
-                      dictionary_map=self._dict_map)
-            if local:
-                hits = phrase._phrase_topk_many(*args, **kw)
-            else:
-                hits = materialize_and_release(
-                    phrase.phrase_topk_many(*args, **kw, cache_out=cache),
-                    cache)
-        out = self._respond(hits)
-        self.last_metrics = {
-            "RawDocsSearchTime_planning_ms": round((time.time() - t0) * 1000, 1),
-            "field": "text", "n_queries": len(texts), "pool": rows,
-            **self._dispatch_metrics(),
-        }
-        return out
+            hits = phrase._phrase_topk_many(
+                self.spark, self.index_dir, texts, k=rows,
+                blocks_df=self._blocks, meta=self.meta,
+                deny_docids=self._restriction()[1], cache_out=cache,
+                dictionary_map=self._dict_map)
+        self.last_metrics.update(field="text", n_queries=len(texts),
+                                 pool=rows)
+        return self._respond(_collect(hits, cache))
 
     # -- /lireId analog -----------------------------------------------------
 
@@ -924,46 +849,23 @@ class LireQueryEngine:
         else:
             phase1 = ("text", terms)
         phase2 = [("text", terms)] if verify_threshold is not None else []
-        local = self._dispatch(phase1, *phase2)
-        restriction = self._restriction(local)
-        cand = self._wand(phase1[1], candidates, phase1[0], local, restriction)
-        self.last_metrics = {"n_terms": len(terms),
-                             **self._dispatch_metrics()}
-        if local:
-            passed = cand.assign(dist=1.0 / (1.0 + cand["score"]))
-            passed = passed[passed["dist"] < threshold]
-            if phase2:
-                verify = self._wand(terms, candidates, "text", local,
-                                    restriction)
-                passed = passed[["docID"]].merge(verify, on="docID")
-                passed = passed.assign(dist=1.0 / (1.0 + passed["score"]))
-                passed = passed[passed["dist"] < verify_threshold]
-            return self._respond(passed.sort_values(
-                ["dist", "docID"], kind="stable")[["docID", "score", "dist"]],
-                0, rows)
-        cand = cand.withColumn("dist", 1.0 / (1.0 + F.col("score")))
-        passed = cand.filter(F.col("dist") < threshold)
+        self._dispatch(phase1, *phase2)
+        restriction = self._restriction()
+        cand = self._wand(phase1[1], candidates, phase1[0], restriction)
+        self.last_metrics.update(n_terms=len(terms))
+        passed = cand.assign(dist=1.0 / (1.0 + cand["score"]))
+        passed = passed[passed["dist"] < threshold]
         if phase2:
-            # phase 2: exact verification on the lexical field; the join is
-            # a semi-restriction of the (small) phase-1 pool, then the
-            # anti-predicate drops survivors failing the second threshold
-            verify = self._wand(
-                terms, candidates, "text", local, restriction).select(
-                "docID", F.col("score").alias("vscore"))
-            passed = (
-                passed.select("docID", "score").join(verify, "docID")
-                .withColumn("dist", 1.0 / (1.0 + F.col("vscore")))
-                .filter(F.col("dist") < verify_threshold)
-                .select("docID", F.col("vscore").alias("score"), "dist")
-            )
-        # single-pass projection: `dist` rides the SAME broadcast join as
-        # the payload fetch, so the cascade pipeline (one or two WAND
-        # kernels) appears exactly once in the physical plan — the old
-        # shape referenced `passed` twice (projection join + dist join) and
-        # duplicated the kernel subtree unless ReusedExchange caught it
-        # (round-4 verdict demerit #1: serving_identity ~2x serving_similar)
-        return self._project(passed.select("docID", "score", "dist"),
-                             F.asc("dist"), F.asc("docID")).limit(rows)
+            # phase 2: exact verification on the lexical field, restricted
+            # to the phase-1 survivors; the anti-predicate then drops those
+            # failing the second threshold
+            verify = self._wand(terms, candidates, "text", restriction)
+            passed = passed[["docID"]].merge(verify, on="docID")
+            passed = passed.assign(dist=1.0 / (1.0 + passed["score"]))
+            passed = passed[passed["dist"] < verify_threshold]
+        return self._respond(passed.sort_values(
+            ["dist", "docID"], kind="stable")[["docID", "score", "dist"]],
+            0, rows)
 
     # -- /lireSim analog ----------------------------------------------------
 
@@ -979,20 +881,14 @@ class LireQueryEngine:
         union + dropDuplicates + re-rank by combined score (SURVEY U1/J4)."""
         terms = py_tokenize(text)
         ha_terms = [py_hash_token(t) for t in terms]
-        local = self._dispatch(("text", terms), ("ha", ha_terms))
-        restriction = self._restriction(local)
-        c1 = self._wand(terms, pool_text, "text", local, restriction)
-        c2 = self._wand(ha_terms, pool_ha, "ha", local, restriction)
-        self.last_metrics = {"n_terms": len(terms),
-                             **self._dispatch_metrics()}
-        if local:
-            pool = pd.concat([c1, c2]).groupby(
-                "docID", as_index=False)["score"].max()
-            return self._respond(top_k(pool, rows))
-        pool = c1.unionByName(c2).groupBy("docID").agg(
-            F.max("score").alias("score"))
-        return self._project(
-            pool.orderBy(F.desc("score"), F.asc("docID")).limit(rows))
+        self._dispatch(("text", terms), ("ha", ha_terms))
+        restriction = self._restriction()
+        c1 = self._wand(terms, pool_text, "text", restriction)
+        c2 = self._wand(ha_terms, pool_ha, "ha", restriction)
+        self.last_metrics.update(n_terms=len(terms))
+        pool = pd.concat([c1, c2]).groupby(
+            "docID", as_index=False)["score"].max()
+        return self._respond(top_k(pool, rows))
 
     # -- lirefunc analog ----------------------------------------------------
 
@@ -1025,6 +921,11 @@ class LireQueryEngine:
     def random_sample(self, rows: int, seed: int = 42) -> DataFrame:
         """Seeded random docs (ref: LireRequestHandler.java:207-232 uses
         Math.random(); we hash with a seed for reproducibility)."""
+        return self._random_sample(rows, seed)
+
+    def _random_sample(self, rows: int, seed: int) -> DataFrame:
+        """random_sample's body, also search()'s no-query dispatch: one
+        counted request either way."""
         stats = self._docstats()
         return (
             stats.withColumn(

@@ -41,9 +41,10 @@ paths, chosen per request in `_run_shard_kernel` before any job runs:
 
 The public operators always return a DataFrame: a driver-side result is
 wrapped as an Arrow local relation (liresolr_spark.frames), which collects
-without a Spark job. The serving engine (api.LireQueryEngine) calls the
-underscored bodies instead and keeps a driver-side result in pandas until
-its response is built. Doclens travel INSIDE each block (codec third
+without a Spark job, and a Spark-path result stays a lazy plan. The serving
+engine (api.LireQueryEngine) calls the underscored bodies instead and
+collects their bounded top-k into the driver on either path, where its
+response is built. Doclens travel INSIDE each block (codec third
 stream, the analog of Lucene per-segment norms), so a query's input is
 proportional to the posting lists of its terms — it never scans a
 corpus-sized doc-stats table (critical at 10^12 docs).
@@ -624,52 +625,17 @@ def _wand_topk_many(
     return _merge_topk_per_qid(per_shard, k)
 
 
-def _merge_topk_per_qid(per_shard: DataFrame, k: int,
-                        strategy: str | None = None) -> DataFrame:
+def _merge_topk_per_qid(per_shard: DataFrame, k: int) -> DataFrame:
     """Global merge of the per-shard candidate rows (<= k per (qid, shard))
     into each qid's exact top-k under (score desc, docID asc) — the last
-    barrier of the batched serving path.
-
-    Strategies (all rank-identical; pytest-gated):
-      window — row_number over a per-qid window: shuffle by qid + SORT of
-               every candidate row, then a filter.
-      agg    — hash aggregate collecting each qid's candidates into one
-               array, sorted and sliced to k INSIDE the aggregate row
-               (sort_array on a (-score, docID) struct), then exploded.
-               Replaces the partition-wide sort with per-qid sorts of tiny
-               (<= shards*k) arrays and enables partial (map-side)
-               aggregation of the collect.
-      kernel — groupBy(qid).applyInPandas numpy lexsort top-k.
-
-    Measured (960-query batch, 20k-doc index, local[32], min-of-3 and a
-    5-rep re-run; BASELINE.md round-4 notes): 'agg' and 'window' are
-    WITHIN HOST NOISE of each other end-to-end (1.6-1.9s vs 1.9-2.0s,
-    then 1.83 vs 1.86 on the re-run); 'kernel' is ~1.4-1.5x slower (Arrow
-    per-group overhead for tiny groups). Default 'agg': at equal measured
-    cost it replaces the sort-based exchange + partition-wide sort with a
-    hash aggregate + per-qid sorts of bounded (<= shards*k) arrays, the
-    shape that degrades more gracefully when batch size x shard count
-    grows on a real cluster. The per-shard input is already k-truncated,
-    so shuffle volume is identical for both. Override via strategy /
-    LIRESOLR_MERGE_STRATEGY for re-measurement."""
-    import os
-
-    strategy = strategy or os.environ.get("LIRESOLR_MERGE_STRATEGY", "agg")
-    from pyspark.sql.window import Window
-
-    if strategy == "window":
-        w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("docID"))
-        return (per_shard.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") <= k).drop("_rn"))
-    if strategy == "kernel":
-        def topk(pdf: pd.DataFrame) -> pd.DataFrame:
-            order = np.lexsort((pdf["docID"].values,
-                                -pdf["score"].values))[:k]
-            return pdf.iloc[order]
-
-        return per_shard.groupBy("qid").applyInPandas(
-            topk, schema="qid string, docID long, score double")
-    # 'agg': sort_array ascending on (-score, docID) == (score desc, docID asc)
+    barrier of the batched Spark path. A hash aggregate collects each
+    qid's candidates into one array, sorted and sliced to k INSIDE the
+    aggregate row (sort_array on a (-score, docID) struct), then exploded:
+    per-qid sorts of tiny (<= shards*k) arrays instead of a partition-wide
+    sort, with partial (map-side) aggregation of the collect. The rows
+    come out in no particular order. A row_number window and a
+    groupBy(qid).applyInPandas merge measured no better (960-query batch,
+    20k-doc index, local[32]; BASELINE.md round-4 notes)."""
     merged = per_shard.groupBy("qid").agg(
         F.slice(
             F.sort_array(F.collect_list(

@@ -272,6 +272,20 @@ def test_dedup_components_closes_chains(spark):
     assert greedy[2] == (False, 1) and greedy[1] == (False, 0)
 
 
+def test_no_query_search_is_one_request(engine):
+    """search() with no query dispatches to the random sample (ref:
+    handleRandomSearch) as ONE request: numRequests grows by exactly 1,
+    and last_metrics holds this request's figures, not the previous
+    request's."""
+    engine.search(text="read file", rows=3).collect()
+    before = engine.request_stats["numRequests"]
+    assert len(engine.search(rows=3).collect()) == 3
+    assert engine.request_stats["numRequests"] == before + 1
+    m = engine.last_metrics
+    assert m["dispatch"] is None and "n_terms" not in m
+    assert m["RawDocsSearchTime_planning_ms"] >= 0
+
+
 def test_request_counters_and_function_sort_degrade(spark, corpus200,
                                                     tmp_path_factory):
     """Cumulative numRequests/numErrors/totalTime counters (ref:

@@ -4,8 +4,8 @@ stage (applyInPandas / cogroup) or in the driver process, chosen by the
 request's posting estimate against DRIVER_MAX_POSTINGS. Every served
 kernel must return identical rows — and the WAND range accumulators
 identical counts — on both paths, and so must every engine handler, whose
-driver-dispatched requests finish in the driver (api.LireQueryEngine's
-local tail). The bound is monkeypatched to 0 (force the Spark path) and to
+requests finish in the driver on either path (api.LireQueryEngine's one
+response tail). The bound is monkeypatched to 0 (force the Spark path) and to
 a huge value (force the driver path), so the small fixtures here cover
 both."""
 
@@ -245,7 +245,7 @@ def test_engine_records_dispatch(spark, pos_index, vocab, monkeypatch):
     assert eng.last_metrics["dispatch"] == "spark"
 
 
-# -- engine handlers: local tail vs Spark tail ------------------------------
+# -- engine handlers: driver vs Spark dispatch -----------------------------
 
 @pytest.fixture(scope="module")
 def tomb_index(spark, corpus200, tmp_path_factory):
@@ -322,7 +322,7 @@ HANDLERS = {
 @pytest.mark.parametrize("case", list(HANDLERS))
 def test_engine_handlers_two_paths(served, monkeypatch, case):
     """Every kernel-backed handler returns identical full rows (payload,
-    qid, dist, fval) on the local tail and the Spark tail. Phrase scores
+    qid, dist, fval) on the driver and the Spark dispatch. Phrase scores
     are compared at 9 decimals (Spark's log is StrictMath, the driver's is
     libm) with an identical docID order."""
     eng, vocab, phrases = served
@@ -354,20 +354,33 @@ def _jobs_run(spark, fn):
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def test_driver_dispatched_job_counts(spark, pos_index, vocab, corpus200):
-    """On a pinned engine, a driver-dispatched search() or phrase_search()
-    runs at most 2 Spark jobs — the pruned block collect and the page's
-    payload fetch — and the returned page is an executed local relation:
-    collecting it runs none."""
+def test_driver_dispatched_job_counts(spark, pos_index, vocab, corpus200,
+                                      monkeypatch):
+    """Every engine handler returns an executed local relation: collecting
+    the page runs no Spark job on either dispatch path. On a pinned
+    engine, a driver-dispatched search() or phrase_search() runs at most 2
+    Spark jobs for call + collect — the pruned block collect and the
+    page's payload fetch. With every kernel on the Spark path, search()
+    runs at most 3 and identity() with verify_threshold at most 5: the
+    top-k is collected once, then one payload fetch."""
     from liresolr_spark.api import LireQueryEngine
     from liresolr_spark.functions.tokenizer import py_tokenize
 
     eng = LireQueryEngine(spark, pos_index[0])
     phrase = " ".join(py_tokenize(corpus200.first()["content"])[2:4])
-    for call in (lambda: eng.search(text=f"{vocab[0]} {vocab[5]}", rows=5),
-                 lambda: eng.phrase_search(phrase, rows=5)):
-        page, n_call = _jobs_run(spark, call)
-        rows, n_collect = _jobs_run(spark, page.collect)
-        assert eng.last_metrics["dispatch"] == "driver"
-        assert rows and n_call + n_collect <= 2, (n_call, n_collect)
-        assert n_collect == 0
+    search = lambda: eng.search(text=f"{vocab[0]} {vocab[5]}", rows=5)
+    calls = {
+        "driver": [(search, 2), (lambda: eng.phrase_search(phrase, rows=5), 2)],
+        "spark": [(search, 3), (lambda: eng.identity(
+            f"{vocab[0]} {vocab[4]} {vocab[12]}", threshold=0.99,
+            verify_threshold=0.99, rows=5), 5)],
+    }
+    for path, bounded in calls.items():
+        monkeypatch.setattr(wand, "DRIVER_MAX_POSTINGS", BOUNDS[path])
+        for call, most in bounded:
+            page, n_call = _jobs_run(spark, call)
+            rows, n_collect = _jobs_run(spark, page.collect)
+            assert eng.last_metrics["dispatch"] == path
+            assert rows and n_call + n_collect <= most, (
+                path, n_call, n_collect)
+            assert n_collect == 0

@@ -181,11 +181,11 @@ def test_deny_tombstones_excluded(spark, indexed, vocab):
     assert got == want
 
 
-def test_merge_strategies_rank_identical(spark, indexed, vocab):
-    """The batched final merge (_merge_topk_per_qid) has three physical
-    strategies (window / agg / kernel). All must return the IDENTICAL
-    per-qid top-k under (score desc, docID asc) — including ties, k larger
-    than the candidate pool, and single-candidate qids."""
+def test_batched_merge_rank_identical(spark, indexed, vocab):
+    """The batched final merge (_merge_topk_per_qid) must return each
+    qid's IDENTICAL top-k under (score desc, docID asc) as the single-query
+    path — including ties, k larger than the candidate pool, and
+    single-candidate qids."""
     from liresolr_spark.operators.wand import wand_topk_many
 
     hot = [t for t, _ in vocab[:6]]
@@ -197,27 +197,13 @@ def test_merge_strategies_rank_identical(spark, indexed, vocab):
         "qd": [hot[4], hot[4], hot[5]],       # repeated term
         "qe": ["zz_out_of_vocab_zz", hot[2]],
     }
-    import os
-
-    results = {}
-    for strat in ("window", "agg", "kernel"):
-        os.environ["LIRESOLR_MERGE_STRATEGY"] = strat
-        try:
-            df = wand_topk_many(spark, indexed, queries, k=15)
-            rows = df.collect()
-        finally:
-            os.environ.pop("LIRESOLR_MERGE_STRATEGY", None)
-        by_qid = {}
-        for r in rows:
-            by_qid.setdefault(r["qid"], []).append(
-                (r["docID"], round(r["score"], 9)))
-        for qid in by_qid:
-            by_qid[qid].sort(key=lambda t: (-t[1], t[0]))
-        results[strat] = by_qid
-    assert results["agg"] == results["window"], "agg != window"
-    assert results["kernel"] == results["window"], "kernel != window"
-    # and the merge is exact vs the single-query reference path
+    by_qid: dict = {}
+    for r in wand_topk_many(spark, indexed, queries, k=15).collect():
+        by_qid.setdefault(r["qid"], []).append(
+            (r["docID"], round(r["score"], 9)))
+    for qid in by_qid:
+        by_qid[qid].sort(key=lambda t: (-t[1], t[0]))
     for qid, terms in queries.items():
         want = [(r["docID"], round(r["score"], 9))
                 for r in wand_topk(spark, indexed, terms, k=15).collect()]
-        assert results["window"].get(qid, []) == want, qid
+        assert by_qid.get(qid, []) == want, qid

@@ -77,36 +77,12 @@ def main() -> None:
         out += ["## filter-artifact read (warmed fq tier)", "", "```"]
         out += scan[:2] + ["```", ""]
 
-    # round-5: identity() single-pass — the dual-feature cascade must put
-    # each WAND kernel (phase-1 ha retrieve, phase-2 text verify) in the
-    # plan ONCE; the pre-round-5 shape referenced the cascade twice
-    # (projection join + dist join) and duplicated both kernel subtrees
-    # The audit is of the Spark tail: a request whose kernels all fit
-    # DRIVER_MAX_POSTINGS returns an executed local relation with no kernel
-    # in its plan, so the bound is lowered to 0 for this one request.
-    if os.path.exists(f"{idx}/meta.json"):
-        import liresolr_spark.operators.wand as wand
-        from liresolr_spark.api import LireQueryEngine
-
-        eng = LireQueryEngine(spark, idx, pin_blocks=False)
-        bound, wand.DRIVER_MAX_POSTINGS = wand.DRIVER_MAX_POSTINGS, 0
-        try:
-            ident = eng.identity("import return def public",
-                                 threshold=0.9999, verify_threshold=0.9999,
-                                 rows=10)
-        finally:
-            wand.DRIVER_MAX_POSTINGS = bound
-        plan = ident._jdf.queryExecution().executedPlan().toString()
-        lines = plan.splitlines()
-        n_kernels = sum(1 for l in lines if "FlatMapGroupsInPandas" in l)
-        out += ["## identity() cascade (single-pass projection)", "",
-                f"- shard-kernel subtrees in plan: {n_kernels} "
-                "(expect 2 — one per cascade phase; the dist column rides "
-                "the same broadcast payload join as the projection)", "",
-                "```"]
-        out += [l.strip()[:160] for l in lines
-                if "FlatMapGroupsInPandas" in l or "BroadcastHashJoin" in l][:5]
-        out += ["```", ""]
+    # identity() single-pass: no plan to audit any more. Every served
+    # handler collects its ranked top-k and returns the page as an executed
+    # local relation, so the plan identity() returns holds no shard kernel;
+    # each cascade phase's kernel runs once per request by construction
+    # (tests/test_dispatch.py::test_driver_dispatched_job_counts bounds the
+    # request's Spark jobs on both dispatch paths).
 
     # round-4b: prefix/phrase paths — the conjunctive candidate scan must
     # push field + both terms into the blocks scan and read ONLY docids;
