@@ -10,9 +10,17 @@ Each method returns a DataFrame. Every kernel-backed handler returns an
 EXECUTED local relation, not a lazy plan: its ranked hits, a bounded top-k,
 become driver rows at one point (_collect) whichever path its shard kernels
 took (operators.wand.kernel_dispatch); pagination, the identity/similar
-steps and the payload merge run in pandas, and the page's payload fetch is
-the request's last Spark job, so the caller's collect() runs none. The
-non-kernel handlers (function_sort, random_sample) return a lazy plan.
+steps and the payload merge run in pandas, so the caller's collect() runs
+no job. The non-kernel handlers (function_sort, random_sample) return a
+lazy plan.
+
+A small index is DRIVER-RESIDENT (see _open): its posting blocks, the
+docstats payload and the tombstones are read into driver memory once per
+open, and a request takes its block rows, masks and payload from there —
+the Solr searcher holding its segments in-process. Such a request runs
+no Spark job unless an fq misses the filter cache; only the returned
+local relation touches Spark. A larger index reads its blocks, masks and
+payload through Spark jobs.
 Per-request metrics are returned alongside via `last_metrics` — the analog
 of RawDocsSearchTime / ReRankSearchTime in the reference's responses
 (ref: LireRequestHandler.java:460-461,493-494).
@@ -24,21 +32,24 @@ import functools
 import random
 import time
 
+import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
 from liresolr_spark import DEFAULT_CANDIDATES, DEFAULT_ROWS, MAX_QUERY_TERMS
-from liresolr_spark.frames import empty_pdf, local_frame
+from liresolr_spark.frames import driver_table, empty_pdf, local_frame
+from liresolr_spark.functions.codec import decode_block
 from liresolr_spark.functions.tokenizer import py_hash_token, py_tokenize
 from liresolr_spark.operators.wand import (MANY_SCHEMA, WAND_SCHEMA,
+                                           BlockSnapshot, _spark_side,
                                            _wand_topk, _wand_topk_many,
                                            kernel_dispatch, postings_estimate,
                                            top_k)
 # unused here; perfbench's layer tracer hooks it by name as api.wand_topk
 from liresolr_spark.operators.wand import wand_topk  # noqa: F401
-from liresolr_spark.plans.build import read_meta
+from liresolr_spark.plans.build import load_tombstones, read_meta
 
 
 def _counted(fn):
@@ -49,8 +60,10 @@ def _counted(fn):
     (see the module docstring), plan construction for function_sort and
     random_sample. Also resets the request's `last_metrics` and
     shard-kernel dispatch log (_dispatch), and fills in the keys every
-    request has: RawDocsSearchTime_planning_ms (the timed span), dispatch
-    and postings_est (_dispatch_metrics). Handlers add their own fields."""
+    request has: RawDocsSearchTime_ms (the timed span) and its older name
+    RawDocsSearchTime_planning_ms (same value), resident (the engine
+    serves from a driver-resident snapshot, see _open), dispatch and
+    postings_est (_dispatch_metrics). Handlers add their own fields."""
 
     @functools.wraps(fn)
     def wrapper(self, *a, **kw):
@@ -66,11 +79,33 @@ def _counted(fn):
         finally:
             ms = (time.time() - t0) * 1000.0
             self.request_stats["totalTime_ms"] += ms
-        self.last_metrics.update(RawDocsSearchTime_planning_ms=round(ms, 1),
-                                 **self._dispatch_metrics())
+        ms = round(ms, 1)
+        self.last_metrics.update(
+            RawDocsSearchTime_ms=ms, RawDocsSearchTime_planning_ms=ms,
+            resident=self.resident, **self._dispatch_metrics())
         return out
 
     return wrapper
+
+
+def _unpersist(sides) -> None:
+    """Release the Spark-cached frames among fq restriction sides."""
+    for side in sides:
+        if isinstance(side, DataFrame):
+            side.unpersist()
+
+
+def _terms_containing(blocks: pd.DataFrame, doc_id: int) -> list[str]:
+    """Terms of the (term, docids) block rows whose docID stream holds
+    doc_id. Decoded docID runs are ascending (delta codec), so membership
+    is a searchsorted probe, not a linear scan."""
+    hits = []
+    for t, d in zip(blocks["term"], blocks["docids"]):
+        ids = decode_block(bytes(d), b"", b"")[0].astype(np.int64)
+        j = np.searchsorted(ids, doc_id)
+        if j < len(ids) and ids[j] == doc_id:
+            hits.append(t)
+    return hits
 
 
 def _collect(hits, cache=()) -> pd.DataFrame:
@@ -100,11 +135,13 @@ class LireQueryEngine:
 
     def __init__(self, spark: SparkSession, index_dir: str,
                  pin_blocks: bool = True):
-        """pin_blocks: persist the blocks and docstats tables in the cluster
-        cache (MEMORY_AND_DISK — Spark spills gracefully, the Lucene
-        page-cache analog). Right for a serving deployment where the index
-        fits aggregate cluster memory+disk; pass False for one-off queries
-        against an index far larger than the cache."""
+        """pin_blocks: persist the blocks and docstats tables of an index
+        that is not driver-resident (see _open) in the cluster cache
+        (MEMORY_AND_DISK — Spark spills gracefully, the Lucene page-cache
+        analog). Right for a serving deployment where the index fits
+        aggregate cluster memory+disk; pass False for one-off queries
+        against an index far larger than the cache. A driver-resident
+        index caches nothing in Spark either way."""
         self.spark = spark
         self.index_dir = index_dir
         self.pin_blocks = pin_blocks
@@ -115,36 +152,29 @@ class LireQueryEngine:
         from collections import OrderedDict
 
         # fq -> (allow, deny) pair; exactly one side non-None (see _fq_allow)
-        self._fq_cache: OrderedDict[
-            str, tuple[DataFrame | None, DataFrame | None]] = OrderedDict()
+        self._fq_cache: OrderedDict[str, tuple] = OrderedDict()
         self._open()
 
     def _open(self) -> None:
-        # serving caches: file listing + parquet footers resolved once; the
-        # dictionary additionally snapshotted DRIVER-side when small enough —
-        # idf for a query is then pure arithmetic, and the hot path costs
-        # exactly one Spark job (the pruned block scan). The Solr
-        # searcher-reuse analog.
-        self.meta = read_meta(self.index_dir)
-        self._blocks = self.spark.read.parquet(f"{self.index_dir}/blocks")
-        self._docstats_df = self.spark.read.parquet(f"{self.index_dir}/docstats")
-        # response payload columns: docID + the stored fields
-        self._payload = self._docstats_df.select(
-            "docID", "repo", "path", "commit", "lang").schema
-        if self.pin_blocks:
-            self._blocks = self._blocks.cache()
-            self._docstats_df = self._docstats_df.cache()
-        # tombstones: docs superseded by cross-segment overwrites — excluded
-        # from RESULTS (kernel deny-list + docstats anti-join) while df/N
-        # keep counting them until compaction, exactly Lucene's deleted-docs
-        # statistics behavior (see streaming.ingest / plans.compact)
-        from liresolr_spark.plans.build import load_tombstones
+        """Open the serving state of the current commit (the Solr
+        searcher-reuse analog): meta, the fresh filter artifacts, and the
+        dictionary, snapshotted DRIVER-side when it has at most
+        MAX_DRIVER_DICT_TERMS entries — idf for a query is then pure
+        arithmetic.
 
-        tombs = load_tombstones(self.spark, self.index_dir)
-        if tombs is not None and tombs.head(1):
-            self._deny = tombs.select("shard", "docID").distinct().cache()
-        else:
-            self._deny = None
+        The index is DRIVER-RESIDENT when the dictionary is pinned and its
+        total posting count (Σ df over every field) is within the kernel
+        dispatch bound (operators.wand.DRIVER_MAX_POSTINGS). No request
+        can then exceed it, so every shard kernel runs in the driver, and
+        the rest of the serving state is read into driver memory too, with
+        pyarrow, from exactly the files of the Spark readers
+        (frames.driver_table): the posting blocks (wand.BlockSnapshot), the
+        docstats payload sorted by docID, and the distinct tombstones as a
+        pandas (shard, docID) frame. Nothing is cached in Spark; the
+        readers stay lazy for the Spark-path fallbacks. Otherwise blocks
+        and docstats are Spark readers (cached when pin_blocks) and the
+        tombstones a cached Spark frame."""
+        self.meta = read_meta(self.index_dir)
         # persisted filter artifacts (plans/filters.py — the warmed tier
         # under the in-memory fq cache), indexed by predicate string for
         # transparent use by _fq_allow
@@ -166,6 +196,40 @@ class LireQueryEngine:
                 self._dict_map.setdefault(r["field"], {})[r["term"]] = int(r["df"])
         else:
             self._dict_map = None  # too big to pin: per-query cluster lookup
+        postings = (None if self._dict_map is None else
+                    sum(sum(m.values()) for m in self._dict_map.values()))
+        self.resident = kernel_dispatch(postings) == "driver"
+
+        blocks = self.spark.read.parquet(f"{self.index_dir}/blocks")
+        self._docstats_df = self.spark.read.parquet(
+            f"{self.index_dir}/docstats")
+        # response payload columns: docID + the stored fields
+        self._payload = self._docstats_df.select(
+            "docID", "repo", "path", "commit", "lang").schema
+        # tombstones: docs superseded by cross-segment overwrites — excluded
+        # from RESULTS (kernel deny-list + docstats anti-join) while df/N
+        # keep counting them until compaction, exactly Lucene's deleted-docs
+        # statistics behavior (see streaming.ingest / plans.compact)
+        tombs = load_tombstones(self.spark, self.index_dir)
+        if self.resident:
+            self._blocks = BlockSnapshot(blocks)
+            self._docs = driver_table(
+                self._docstats_df, ["shard", *self._payload.names]
+            ).sort_by("docID").to_pandas()
+            self._deny = None
+            if tombs is not None:
+                deny = driver_table(tombs, ["shard", "docID"]).to_pandas()
+                if len(deny):
+                    self._deny = deny.drop_duplicates(ignore_index=True)
+            return
+        self._blocks, self._docs = blocks, None
+        if self.pin_blocks:
+            self._blocks = self._blocks.cache()
+            self._docstats_df = self._docstats_df.cache()
+        if tombs is not None and tombs.head(1):
+            self._deny = tombs.select("shard", "docID").distinct().cache()
+        else:
+            self._deny = None
 
     def refresh(self, rebuild_filters: bool = False) -> None:
         """Reopen the index after a committed segment append (the Solr
@@ -186,20 +250,19 @@ class LireQueryEngine:
             refresh_filter_artifacts(self.spark, self.index_dir)
         self._drop_fq_cache()
         self._dictionary.unpersist()
-        if self._deny is not None:
-            self._deny.unpersist()
-        if self.pin_blocks:
-            self._blocks.unpersist()
-            self._docstats_df.unpersist()
+        if not self.resident:
+            if self._deny is not None:
+                self._deny.unpersist()
+            if self.pin_blocks:
+                self._blocks.unpersist()
+                self._docstats_df.unpersist()
         self._open()
 
     def _drop_fq_cache(self) -> None:
         """Unpersist and clear every cached fq (allow, deny) pair — the
         single eviction path shared by refresh() and reload_filters()."""
         for pair in self._fq_cache.values():
-            for df in pair:
-                if df is not None:
-                    df.unpersist()
+            _unpersist(pair)
         self._fq_cache.clear()
 
     def _load_fresh_filters(self) -> None:
@@ -265,9 +328,10 @@ class LireQueryEngine:
         if self._deny is None:
             return self._docstats_df
         return self._docstats_df.join(
-            self._deny.select("docID"), "docID", "left_anti")
+            _spark_side(self.spark, self._deny).select("docID"), "docID",
+            "left_anti")
 
-    def _fq_allow(self, fq: str) -> tuple[DataFrame | None, DataFrame | None]:
+    def _fq_allow(self, fq: str) -> tuple:
         """(allow, deny) docID restriction for an fq, cached per fq string —
         the CachingWrapperFilter analog (Solr computes a filter query's
         bitset once per searcher and reuses it,
@@ -284,24 +348,26 @@ class LireQueryEngine:
            (plans/filters.py): a pruned parquet read, no corpus scan —
            allow-mode fills the allow side, deny-mode the deny side;
         3. compute from docstats (and cache).
-        Exactly one side of the returned tuple is non-None."""
+        Exactly one side of the returned tuple is non-None: a (shard,
+        docID) pandas frame on a driver-resident engine — collected once
+        per cache entry, the one Spark job of an fq-missing request — else
+        a cached Spark frame."""
         cached = self._fq_cache.get(fq)
         if cached is not None:
             self._fq_cache.move_to_end(fq)
             return cached
         art = self._filter_by_predicate.get(fq)
         if art is not None:
-            side = self.spark.read.parquet(art["data_path"]).cache()
-            pair = (side, None) if art["mode"] == "allow" else (None, side)
+            side = self.spark.read.parquet(art["data_path"])
         else:
-            pair = (self._docstats().filter(F.expr(fq))
-                    .select("shard", "docID").cache(), None)
+            side = self._docstats().filter(F.expr(fq))
+        side = side.select("shard", "docID")
+        side = side.toPandas() if self.resident else side.cache()
+        allow = art is None or art["mode"] == "allow"
+        pair = (side, None) if allow else (None, side)
         self._fq_cache[fq] = pair
         if len(self._fq_cache) > self.FQ_CACHE_SIZE:
-            _, evicted = self._fq_cache.popitem(last=False)
-            for df in evicted:
-                if df is not None:
-                    df.unpersist()
+            _unpersist(self._fq_cache.popitem(last=False)[1])
         return pair
 
     def _clause_terms(self, must, must_not, field):
@@ -371,8 +437,9 @@ class LireQueryEngine:
         """The response for ranked driver rows (_collect) — (docID, score[,
         dist]) rows, or (qid, docID, score) for a batch — sliced to [start,
         start+rows) when rows is given (ref: LireRequestHandler.java:519-528).
-        The page's payload is fetched in the request's last Spark job (a
-        docID filter over docstats), merged in pandas and returned in the
+        The page's payload is a docID lookup in the driver-resident
+        docstats (no job), or else the request's last Spark job (a docID
+        filter over docstats); it is merged in pandas and returned in the
         page's order as an Arrow local relation — an executed result whose
         collect() runs no job. The kernels applied the tombstone masks, so
         there is no anti-join. Columns: [qid,] docID, payload, score[,
@@ -384,10 +451,13 @@ class LireQueryEngine:
                 if c not in ("qid", "docID")]
         struct = StructType(lead + list(self._payload.fields) + tail)
         if len(page):
-            payload = (self._docstats_df
-                       .filter(F.col("docID").isin(
-                           sorted({int(d) for d in page["docID"]})))
-                       .select(*self._payload.names).toPandas())
+            ids = sorted({int(d) for d in page["docID"]})
+            if self._docs is not None:
+                payload = self._docs.loc[self._docs["docID"].isin(ids),
+                                         self._payload.names]
+            else:
+                payload = (self._docstats_df.filter(F.col("docID").isin(ids))
+                           .select(*self._payload.names).toPandas())
             page = page.merge(payload, on="docID")
         return local_frame(self.spark, page, struct)
 
@@ -560,19 +630,37 @@ class LireQueryEngine:
     def _search_by_example(self, doc_id: int, start: int, rows: int) -> DataFrame:
         """Query-by-example: point-lookup the doc, re-generate its hash tokens
         from the payload (recompute-vs-store, ref: LireRequestHandler.java:179-180),
-        search the ha field, excluding the example itself."""
-        stats = self._docstats()
-        row = stats.filter(F.col("docID") == doc_id).first()
+        search the ha field, excluding the example itself.
+
+        The doc's terms come from its shard's 'ha' blocks whose
+        [first_docid, last_docid] range covers it — the Lucene "fetch
+        doc's terms" analog: taken from the driver-resident snapshot and
+        probed in-process, or else partition- and row-group-pruned and
+        probed in a mapInPandas stage."""
+        if self._docs is not None:
+            docs = self._docs[self._docs["docID"] == doc_id]
+            if not len(docs) or (self._deny is not None and (
+                    self._deny["docID"] == doc_id).any()):
+                raise KeyError(f"docID {doc_id} not in index")
+            hit_terms = _terms_containing(self._blocks.covering(
+                int(docs["shard"].iloc[0]), "ha", doc_id), doc_id)
+        else:
+            hit_terms = self._example_terms(doc_id)
+        self._dispatch(("ha", hit_terms))
+        hits = self._wand(hit_terms, start + rows + 1, "ha",
+                          self._restriction())
+        self.last_metrics.update(field="ha", n_terms=len(hit_terms),
+                                 doc_id=doc_id)
+        return self._respond(hits[hits["docID"] != doc_id], start, rows)
+
+    def _example_terms(self, doc_id: int) -> list[str]:
+        """_search_by_example's term lookup through Spark: a docstats point
+        lookup for the doc's shard, then a distributed probe that decodes
+        only that shard's 'ha' blocks (partition pruned) whose range covers
+        the doc (row-group stat pruned)."""
+        row = self._docstats().filter(F.col("docID") == doc_id).first()
         if row is None:
             raise KeyError(f"docID {doc_id} not in index")
-        # hashes regenerated from indexed terms of this doc (payload analog):
-        # decode the doc's own posting terms from the ha field via dictionary
-        # would need an inverted lookup; instead recompute from content if the
-        # corpus is reachable — here we use the lexical terms of the doc by
-        # scanning its shard's postings (cheap: one shard, term-major).
-        # Distributed inverted lookup: decode only this doc's shard (partition
-        # pruned) and only blocks whose [first_docid, last_docid] range covers
-        # it (row-group stat pruned) — the Lucene "fetch doc's terms" analog.
         from liresolr_spark.ship import ship_package
 
         ship_package(self.spark)
@@ -582,33 +670,11 @@ class LireQueryEngine:
         )
 
         def find_terms(batches):
-            import numpy as np
-            import pandas as pd
-
-            from liresolr_spark.functions.codec import decode_block as _dec
-
             for pdf in batches:
-                hits = []
-                for t, d in zip(pdf["term"], pdf["docids"]):
-                    # decoded docID runs are ascending (delta codec), so
-                    # membership is a searchsorted probe, not a linear scan
-                    ids = _dec(bytes(d), b"", b"")[0].astype(np.int64)
-                    j = np.searchsorted(ids, doc_id)
-                    if j < len(ids) and ids[j] == doc_id:
-                        hits.append(t)
-                yield pd.DataFrame({"term": hits})
+                yield pd.DataFrame({"term": _terms_containing(pdf, doc_id)})
 
-        hit_terms = [
-            r["term"]
-            for r in blocks.select("term", "docids")
-            .mapInPandas(find_terms, schema="term string").collect()
-        ]
-        self._dispatch(("ha", hit_terms))
-        hits = self._wand(hit_terms, start + rows + 1, "ha",
-                          self._restriction())
-        self.last_metrics.update(field="ha", n_terms=len(hit_terms),
-                                 doc_id=doc_id)
-        return self._respond(hits[hits["docID"] != doc_id], start, rows)
+        return [r["term"] for r in blocks.select("term", "docids")
+                .mapInPandas(find_terms, schema="term string").collect()]
 
     @_counted
     def prefix_search(

@@ -496,8 +496,8 @@ def r03(spark, sf_dir):
 # ---- dedup operators (training-data pipeline, first-class) -----------------
 
 _SH3 = (
-    "[concat_ws(' ', l[i], l[i+1], l[i+2]) "
-    "for i in generate_series(1, greatest(len(l)-2, 0))]"
+    "list_transform(generate_series(1, greatest(len(l)-2, 0)), "
+    "i -> concat_ws(' ', l[i], l[i+1], l[i+2]))"
 )
 
 # 5-gram variant for the composite pipeline: with 3-grams and overlap>=1
@@ -505,8 +505,8 @@ _SH3 = (
 # cover nearly every trigram) — longer shingles + a 2-hit floor is also
 # what real decontam pipelines run (GPT-3 used 13-grams).
 _SH5 = (
-    "[concat_ws(' ', l[i], l[i+1], l[i+2], l[i+3], l[i+4]) "
-    "for i in generate_series(1, greatest(len(l)-4, 0))]"
+    "list_transform(generate_series(1, greatest(len(l)-4, 0)), "
+    "i -> concat_ws(' ', l[i], l[i+1], l[i+2], l[i+3], l[i+4]))"
 )
 
 
@@ -536,10 +536,10 @@ WITH sh AS (
   FROM (SELECT doc_id, {TOK} AS l FROM documents WHERE doc_id < 100)
 )
 SELECT doc_id AS id,
-       CASE WHEN len(sh) > 0 THEN list_min([substr(md5('h0:' || s), 1, 8) for s in sh]) END AS mh0,
-       CASE WHEN len(sh) > 0 THEN list_min([substr(md5('h0:' || s), 9, 8) for s in sh]) END AS mh1,
-       CASE WHEN len(sh) > 0 THEN list_min([substr(md5('h0:' || s), 17, 8) for s in sh]) END AS mh2,
-       CASE WHEN len(sh) > 0 THEN list_min([substr(md5('h0:' || s), 25, 8) for s in sh]) END AS mh3
+       CASE WHEN len(sh) > 0 THEN list_min(list_transform(sh, s -> substr(md5('h0:' || s), 1, 8))) END AS mh0,
+       CASE WHEN len(sh) > 0 THEN list_min(list_transform(sh, s -> substr(md5('h0:' || s), 9, 8))) END AS mh1,
+       CASE WHEN len(sh) > 0 THEN list_min(list_transform(sh, s -> substr(md5('h0:' || s), 17, 8))) END AS mh2,
+       CASE WHEN len(sh) > 0 THEN list_min(list_transform(sh, s -> substr(md5('h0:' || s), 25, 8))) END AS mh3
 FROM sh ORDER BY id
 """,
 )
@@ -560,10 +560,10 @@ WITH sh AS (
 ),
 sig AS (
   SELECT doc_id,
-         list_min([substr(md5('h0:' || s), 1, 8) for s in sh]) AS mh0,
-         list_min([substr(md5('h0:' || s), 9, 8) for s in sh]) AS mh1,
-         list_min([substr(md5('h0:' || s), 17, 8) for s in sh]) AS mh2,
-         list_min([substr(md5('h0:' || s), 25, 8) for s in sh]) AS mh3
+         list_min(list_transform(sh, s -> substr(md5('h0:' || s), 1, 8))) AS mh0,
+         list_min(list_transform(sh, s -> substr(md5('h0:' || s), 9, 8))) AS mh1,
+         list_min(list_transform(sh, s -> substr(md5('h0:' || s), 17, 8))) AS mh2,
+         list_min(list_transform(sh, s -> substr(md5('h0:' || s), 25, 8))) AS mh3
   FROM sh WHERE len(sh) > 0
 ),
 bands AS (
@@ -658,10 +658,10 @@ WITH sh0 AS (
 ),
 sig AS (
   SELECT doc_id,
-         list_min([substr(md5('h0:' || s), 1, 8) for s in sh]) AS mh0,
-         list_min([substr(md5('h0:' || s), 9, 8) for s in sh]) AS mh1,
-         list_min([substr(md5('h0:' || s), 17, 8) for s in sh]) AS mh2,
-         list_min([substr(md5('h0:' || s), 25, 8) for s in sh]) AS mh3
+         list_min(list_transform(sh, s -> substr(md5('h0:' || s), 1, 8))) AS mh0,
+         list_min(list_transform(sh, s -> substr(md5('h0:' || s), 9, 8))) AS mh1,
+         list_min(list_transform(sh, s -> substr(md5('h0:' || s), 17, 8))) AS mh2,
+         list_min(list_transform(sh, s -> substr(md5('h0:' || s), 25, 8))) AS mh3
   FROM sh0 WHERE len(sh) > 0
 ),
 bands AS (
@@ -717,10 +717,10 @@ WITH RECURSIVE sh0 AS (
 ),
 sig AS (
   SELECT doc_id,
-         list_min([substr(md5('h0:' || s), 1, 8) for s in sh]) AS mh0,
-         list_min([substr(md5('h0:' || s), 9, 8) for s in sh]) AS mh1,
-         list_min([substr(md5('h0:' || s), 17, 8) for s in sh]) AS mh2,
-         list_min([substr(md5('h0:' || s), 25, 8) for s in sh]) AS mh3
+         list_min(list_transform(sh, s -> substr(md5('h0:' || s), 1, 8))) AS mh0,
+         list_min(list_transform(sh, s -> substr(md5('h0:' || s), 9, 8))) AS mh1,
+         list_min(list_transform(sh, s -> substr(md5('h0:' || s), 17, 8))) AS mh2,
+         list_min(list_transform(sh, s -> substr(md5('h0:' || s), 25, 8))) AS mh3
   FROM sh0 WHERE len(sh) > 0
 ),
 bands AS (
@@ -849,15 +849,17 @@ def e01(spark, sf_dir):
     f"""
 WITH q AS (SELECT embedding::DOUBLE[] AS b FROM embeddings WHERE vec_id = 1),
 qb AS (
-  SELECT list_aggregate([CASE WHEN b[i] > 0 THEN '1' ELSE '0' END
-                         for i in generate_series(1, 8)], 'string_agg', '') AS bucket
+  SELECT list_aggregate(list_transform(generate_series(1, 8),
+                         i -> CASE WHEN b[i] > 0 THEN '1' ELSE '0' END),
+                        'string_agg', '') AS bucket
   FROM q
 ),
 cand AS (
   SELECT vec_id, embedding::DOUBLE[] AS a
   FROM embeddings, qb
-  WHERE list_aggregate([CASE WHEN embedding[i] > 0 THEN '1' ELSE '0' END
-                        for i in generate_series(1, 8)], 'string_agg', '') = qb.bucket
+  WHERE list_aggregate(list_transform(generate_series(1, 8),
+                        i -> CASE WHEN embedding[i] > 0 THEN '1' ELSE '0' END),
+                       'string_agg', '') = qb.bucket
 )
 SELECT vec_id AS id, round({_COS}, 4) AS cosine
 FROM cand, q
@@ -1339,7 +1341,7 @@ WITH tok AS (
 SELECT doc_id AS id,
   len(toks) AS n_tokens,
   round(CASE WHEN len(toks) > 0
-        THEN list_sum([length(t) for t in toks]) * 1.0 / len(toks)
+        THEN list_sum(list_transform(toks, t -> length(t))) * 1.0 / len(toks)
         ELSE 0 END, 4) AS mean_token_len,
   round(CASE WHEN length(text) > 0
         THEN (length(text) - length(regexp_replace(text, '[^a-zA-Z0-9\\s]', '', 'g'))) * 1.0 / length(text)
@@ -1385,12 +1387,12 @@ def t03(spark, sf_dir):
     f"""
 WITH sh AS (
   SELECT doc_id,
-         [concat_ws(' ', l[i], l[i+1], l[i+2], l[i+3], l[i+4])
-          for i in generate_series(1, greatest(len(l)-4, 0))] AS sh
+         list_transform(generate_series(1, greatest(len(l)-4, 0)),
+                        i -> concat_ws(' ', l[i], l[i+1], l[i+2], l[i+3], l[i+4])) AS sh
   FROM (SELECT doc_id, {TOK} AS l FROM documents WHERE doc_id < 300)
 )
 SELECT doc_id AS id,
-       list_min([md5(s) for s in sh]) AS fingerprint,
+       list_min(list_transform(sh, s -> md5(s))) AS fingerprint,
        len(sh) AS n_shingles
 FROM sh ORDER BY id
 """,
@@ -1416,7 +1418,7 @@ base AS (
                ELSE 0 END, 4) AS dup_line_frac,
          n_toks
   FROM (SELECT doc_id,
-               list_filter([trim(x) for x in string_split(text, chr(10))],
+               list_filter(list_transform(string_split(text, chr(10)), x -> trim(x)),
                            x -> x <> '') AS lines,
                len(l) AS n_toks
         FROM tok)
@@ -1431,8 +1433,8 @@ btop AS (
   SELECT doc_id, max(c) AS top_c FROM (
     SELECT doc_id, g, count(*) AS c
     FROM (SELECT doc_id,
-                 unnest([concat_ws(' ', l[i], l[i+1])
-                         for i in generate_series(1, greatest(len(l)-1, 0))]) AS g
+                 unnest(list_transform(generate_series(1, greatest(len(l)-1, 0)),
+                                       i -> concat_ws(' ', l[i], l[i+1]))) AS g
           FROM tok) GROUP BY doc_id, g
   ) GROUP BY doc_id
 )
@@ -2367,7 +2369,7 @@ WITH tok AS (
 sig AS (
   SELECT doc_id, len(toks) AS n_tokens,
     CASE WHEN len(toks) > 0
-         THEN list_sum([length(t) for t in toks]) * 1.0 / len(toks)
+         THEN list_sum(list_transform(toks, t -> length(t))) * 1.0 / len(toks)
          ELSE 0 END AS mean_len,
     CASE WHEN len(toks) > 0
          THEN len(list_filter(toks, t -> t IN
@@ -2457,7 +2459,7 @@ WITH tok AS (
 sig AS (
   SELECT doc_id, source, text, l, len(l) AS n_tokens,
     CASE WHEN len(l) > 0
-         THEN list_sum([length(t) for t in l]) * 1.0 / len(l)
+         THEN list_sum(list_transform(l, t -> length(t))) * 1.0 / len(l)
          ELSE 0 END AS mean_len,
     CASE WHEN len(l) > 0
          THEN len(list_filter(l, t -> t IN

@@ -27,13 +27,13 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from liresolr_spark.frames import as_frame, empty_pdf
 from liresolr_spark.functions.codec import decode_block
 from liresolr_spark.operators.phrase import DOCSET_SCHEMA, _conjunctive_docids
-from liresolr_spark.operators.wand import _run_shard_kernel, postings_estimate
+from liresolr_spark.operators.wand import (_run_shard_kernel,
+                                           postings_estimate, prune_blocks)
 from liresolr_spark.plans.build import read_meta
 
 
@@ -64,11 +64,8 @@ def _disjunctive_docids(
     if not uniq:
         return empty_pdf(DOCSET_SCHEMA)
     meta = meta or read_meta(index_dir)
-    src = (blocks_df if blocks_df is not None
-           else spark.read.parquet(f"{index_dir}/blocks"))
-    blocks = src.filter(
-        (F.col("field") == field) & F.col("term").isin(uniq)
-    ).select("shard", "term", "block_seq", "docids")
+    blocks = prune_blocks(spark, index_dir, blocks_df, field, uniq,
+                          ["shard", "term", "block_seq", "docids"])
 
     def kernel(bl: pd.DataFrame) -> pd.DataFrame:
         empty = pd.DataFrame({"shard": pd.Series(dtype="int32"),

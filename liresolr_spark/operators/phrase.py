@@ -56,12 +56,16 @@ from liresolr_spark.functions.tokenizer import py_tokenize, tokenize_expr
 from liresolr_spark.operators.wand import (MANY_SCHEMA, WAND_SCHEMA,
                                            _in_sorted, _merge_topk_per_qid,
                                            _restrict_rows, _run_shard_kernel,
-                                           postings_estimate, top_k)
+                                           postings_estimate, prune_blocks,
+                                           top_k)
 from liresolr_spark.plans.build import NATURAL_KEY, read_meta
 
 DOCSET_SCHEMA = "shard int, docID long"
 MATCH_SCHEMA = "shard int, docID long, tf long, doclen long"
 MATCH_MANY_SCHEMA = "qid string, " + MATCH_SCHEMA
+# block columns the positional match kernels read
+POSITIONAL_COLUMNS = ["shard", "term", "block_seq", "docids", "tfs",
+                      "doclens", "positions"]
 
 
 def _pre_intersect_blocks(bl: pd.DataFrame, n_required: int
@@ -114,11 +118,8 @@ def _conjunctive_docids(
     if not uniq:
         return empty_pdf(DOCSET_SCHEMA)
     meta = meta or read_meta(index_dir)
-    src = (blocks_df if blocks_df is not None
-           else spark.read.parquet(f"{index_dir}/blocks"))
-    blocks = src.filter(
-        (F.col("field") == field) & F.col("term").isin(uniq)
-    ).select("shard", "term", "block_seq", "docids")
+    blocks = prune_blocks(spark, index_dir, blocks_df, field, uniq,
+                          ["shard", "term", "block_seq", "docids"])
     n_required = len(uniq)
 
     def kernel(bl: pd.DataFrame) -> pd.DataFrame:
@@ -268,12 +269,8 @@ def _positional_matches(
             "positional phrase path needs the positions stream; use the "
             "corpus-verify path (phrase_topk mode='verify') or rebuild")
     uniq = sorted(set(terms))
-    src = (blocks_df if blocks_df is not None
-           else spark.read.parquet(f"{index_dir}/blocks"))
-    blocks = src.filter(
-        (F.col("field") == field) & F.col("term").isin(uniq)
-    ).select("shard", "term", "block_seq", "docids", "tfs", "doclens",
-             "positions")
+    blocks = prune_blocks(spark, index_dir, blocks_df, field, uniq,
+                          POSITIONAL_COLUMNS)
     n_required = len(uniq)
     seq = list(terms)
 
@@ -334,12 +331,8 @@ def _positional_matches_many(
             f"index {index_dir} was built with_positions=False — batched "
             "phrase matching needs the positions stream")
     all_terms = sorted({t for ts in phrases.values() for t in ts})
-    src = (blocks_df if blocks_df is not None
-           else spark.read.parquet(f"{index_dir}/blocks"))
-    blocks = src.filter(
-        (F.col("field") == field) & F.col("term").isin(all_terms)
-    ).select("shard", "term", "block_seq", "docids", "tfs", "doclens",
-             "positions")
+    blocks = prune_blocks(spark, index_dir, blocks_df, field, all_terms,
+                          POSITIONAL_COLUMNS)
     specs = sorted(phrases.items())
 
     def kernel(bl: pd.DataFrame) -> pd.DataFrame:

@@ -23,21 +23,24 @@ This is a SAFE optimization: results are exactly the exhaustive top-k
 (property-tested in tests/test_wand.py), unlike the reference's lossy
 candidate cap of 20000 (LireRequestHandler.java:59).
 
-Spark plan: blocks are partition-pruned to the query's terms (parquet
-row-group stats on `term`), then the per-shard kernel runs on one of two
-paths, chosen per request in `_run_shard_kernel` before any job runs:
+Spark plan: every operator prunes blocks to the query's terms through one
+helper, `prune_blocks` (shard-dir partition pruning, parquet row-group
+stats on `term`), then the per-shard kernel runs on one of two paths,
+chosen per request in `_run_shard_kernel` before any job runs:
 
   - driver: when the request's posting count (sum of df over its distinct
     terms, read from the pinned dictionary snapshot) is at most
-    DRIVER_MAX_POSTINGS, the pruned block rows are collected once and the
-    SAME kernel closure runs per shard in the driver process. A served
-    request moves KB of postings, so the pandas-UDF stage (shuffle, Python
-    worker round trip) would cost far more than the arithmetic. The kernel
-    rows stay a pandas frame and the global merge is a numpy sort;
+    DRIVER_MAX_POSTINGS, the SAME kernel closure runs per shard in the
+    driver process. A served request moves KB of postings, so the
+    pandas-UDF stage (shuffle, Python worker round trip) would cost far
+    more than the arithmetic. Its block rows come from a `BlockSnapshot`
+    when the caller holds one (a driver-resident index: no Spark job),
+    else from one collect of the pruned scan. The kernel rows stay a
+    pandas frame and the global merge is a numpy sort;
   - spark: otherwise (or with no dictionary snapshot) the kernel runs as
-    applyInPandas grouped by shard — one Arrow batch per shard, no
-    driver-side posting materialization, no shuffle of raw postings — and
-    the merge is a Spark top-k.
+    applyInPandas grouped by shard over the lazy pruned scan — one Arrow
+    batch per shard, no driver-side posting materialization, no shuffle of
+    raw postings — and the merge is a Spark top-k.
 
 The public operators always return a DataFrame: a driver-side result is
 wrapped as an Arrow local relation (liresolr_spark.frames), which collects
@@ -57,8 +60,8 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from liresolr_spark.frames import (as_frame, empty_pdf, local_frame,
-                                   struct_of)
+from liresolr_spark.frames import (as_frame, driver_table, empty_pdf,
+                                   local_frame, struct_of)
 from liresolr_spark.functions.codec import decode_block
 from liresolr_spark.operators.bm25 import idf_lucene
 from liresolr_spark.plans.build import read_meta
@@ -89,6 +92,68 @@ def kernel_dispatch(postings: int | None) -> str:
     if postings is not None and postings <= DRIVER_MAX_POSTINGS:
         return "driver"
     return "spark"
+
+
+class BlockSnapshot:
+    """The posting blocks of a driver-resident index (api.LireQueryEngine:
+    Σ df of the whole dictionary within DRIVER_MAX_POSTINGS), read into
+    driver memory once from exactly the files of `df`, the lazy, uncached
+    Spark reader kept beside it for the Spark path (frames.driver_table).
+
+    Rows are held in (field, shard, term, block_seq) order — for one field
+    the order of a collected pruned scan, since the build writes each
+    (shard, field) group sorted by (term, block_seq) — with a (field, term)
+    -> row positions lookup, so a request's blocks are a take, not a
+    scan."""
+
+    COLUMNS = ["shard", "field", "term", "block_seq", "first_docid",
+               "last_docid", "docids", "tfs", "doclens", "positions",
+               "max_tf", "min_dl"]
+
+    def __init__(self, df: DataFrame):
+        self.df = df
+        table = driver_table(df, self.COLUMNS).sort_by(
+            [(c, "ascending") for c in ("field", "shard", "term",
+                                        "block_seq")])
+        self.rows = table.to_pandas()
+        self._at = self.rows.groupby(["field", "term"], sort=False).indices
+
+    def take(self, field: str, terms, columns: list[str]) -> pd.DataFrame:
+        """The block rows of `terms` in `field`, in snapshot order."""
+        at = [self._at[(field, t)] for t in set(terms)
+              if (field, t) in self._at]
+        idx = np.sort(np.concatenate(at)) if at else np.empty(0, np.int64)
+        return self.rows.take(idx)[columns].reset_index(drop=True)
+
+    def covering(self, shard: int, field: str, doc_id: int) -> pd.DataFrame:
+        """The `field` block rows of `shard` whose [first_docid,
+        last_docid] range covers doc_id."""
+        r = self.rows
+        return r[(r["shard"] == shard) & (r["field"] == field)
+                 & (r["first_docid"] <= doc_id) & (r["last_docid"] >= doc_id)]
+
+
+def prune_blocks(spark, index_dir: str, blocks_df, field: str, terms,
+                 columns: list[str]):
+    """A request's pruned block scan, as `_run_shard_kernel` takes it: the
+    (scan, rows) pair for the blocks of `terms` in `field`, projected to
+    `columns`. scan is the lazy Spark plan (shard dirs partition-pruned,
+    row-group stats prune term) over `blocks_df` — a pre-loaded reader, a
+    BlockSnapshot's reader, or a fresh one when None; rows are the same
+    rows from driver memory when `blocks_df` is a BlockSnapshot, else
+    None."""
+    terms = list(terms)
+    snap = blocks_df if isinstance(blocks_df, BlockSnapshot) else None
+    if snap is not None:
+        src = snap.df
+    elif blocks_df is not None:
+        src = blocks_df
+    else:
+        src = spark.read.parquet(f"{index_dir}/blocks")
+    scan = src.filter(
+        (F.col("field") == field) & F.col("term").isin(terms)
+    ).select(*columns)
+    return scan, None if snap is None else snap.take(field, terms, columns)
 
 
 def _mask_from_pdf(mask_pdf: pd.DataFrame | None, allow_mode: bool):
@@ -488,16 +553,18 @@ def top_k(hits: pd.DataFrame, k: int, group: str | None = None
 
 def _run_shard_kernel(spark, blocks, kernel, schema, meta, allow=None,
                       deny=None, postings=None):
-    """Run the per-shard kernel over the pruned `blocks`, optionally
-    cogrouped with the `allow`/`deny` docID restriction (sides as in
-    _restrict_df), and return the kernel rows with `schema`: a pandas
-    frame on the driver path, a lazy DataFrame on the Spark path.
-    `postings` is the request's posting estimate (postings_estimate);
-    kernel_dispatch picks the path.
+    """Run the per-shard kernel over the pruned `blocks` (prune_blocks'
+    (scan, rows) pair), optionally cogrouped with the `allow`/`deny` docID
+    restriction (sides as in _restrict_df), and return the kernel rows
+    with `schema`: a pandas frame on the driver path, a lazy DataFrame on
+    the Spark path. `postings` is the request's posting estimate
+    (postings_estimate); kernel_dispatch picks the path.
 
-    Driver path (small requests): one collect of the block rows, plus one
-    of the restriction rows that fall in the collected blocks' aligned
-    docID ranges (_mask_rows). The same kernel closure then runs once per
+    Driver path (small requests): the block rows are the snapshot rows
+    when there are any, else one collect of the scan; the restriction
+    rows are those that fall in the blocks' aligned docID ranges
+    (_mask_rows: no job when every side is a pandas frame, else one
+    collect). The same kernel closure then runs once per
     shard, under the cogroup contract: a shard with blocks but no mask
     rows gets an EMPTY mask frame (under allow-mode it matches nothing); a
     shard with mask rows but no blocks is skipped (every kernel returns no
@@ -515,9 +582,10 @@ def _run_shard_kernel(spark, blocks, kernel, schema, meta, allow=None,
     satisfies the kernel's required distribution, so no second shuffle
     appears. The kernel's cost is CPU (decode + score), not data size —
     parallelism should follow shard count, not shuffle bytes."""
+    scan, rows = blocks
     restricted = bool(_sides(allow) or _sides(deny))
     if kernel_dispatch(postings) == "driver":
-        bl = blocks.toPandas()
+        bl = scan.toPandas() if rows is None else rows
         if restricted and len(bl):
             mk = _mask_rows(allow, deny, bl["block_seq"], meta.block_size)
             masks = dict(tuple(mk.groupby("shard")))
@@ -537,7 +605,7 @@ def _run_shard_kernel(spark, blocks, kernel, schema, meta, allow=None,
         return pd.concat(out, ignore_index=True)[struct.names]
     n_parts = max(1, min(int(meta.num_shards),
                          spark.sparkContext.defaultParallelism))
-    blocks = blocks.repartition(n_parts, "shard")
+    blocks = scan.repartition(n_parts, "shard")
     if not restricted:
         return blocks.groupBy("shard").applyInPandas(
             lambda bl: kernel(bl), schema=schema)
@@ -548,6 +616,9 @@ def _run_shard_kernel(spark, blocks, kernel, schema, meta, allow=None,
 
 
 MANY_SCHEMA = "qid string, docID long, score double"
+# block columns the WAND kernels read
+KERNEL_COLUMNS = ["shard", "term", "block_seq", "docids", "tfs", "doclens",
+                  "max_tf", "min_dl"]
 
 
 def wand_topk_many(spark: SparkSession, *args, **kwargs) -> DataFrame:
@@ -608,12 +679,8 @@ def _wand_topk_many(
         return empty_pdf(MANY_SCHEMA)
     union_terms = sorted({t for m in idfs.values() for t in m})
 
-    src = (blocks_df if blocks_df is not None
-           else spark.read.parquet(f"{index_dir}/blocks"))
-    blocks = src.filter(
-        (F.col("field") == field) & F.col("term").isin(union_terms)
-    ).select("shard", "term", "block_seq", "docids", "tfs", "doclens",
-             "max_tf", "min_dl")
+    blocks = prune_blocks(spark, index_dir, blocks_df, field, union_terms,
+                          KERNEL_COLUMNS)
 
     kernel = _shard_kernel_many(idfs, k, meta.k1, meta.b, meta.avgdl,
                                 allow_mode=bool(_sides(allow_docids)))
@@ -684,10 +751,11 @@ def _wand_topk(
 
     blocks_df / dictionary_df / meta: optional pre-loaded handles (a serving
     layer caches these once per index — repeated queries then skip file
-    listing and footer reads). dictionary_map, if given, is a driver-side
+    listing and footer reads); blocks_df may be a BlockSnapshot (see
+    prune_blocks). dictionary_map, if given, is a driver-side
     {field: {term: df}} snapshot: idf is then computed WITHOUT any Spark job,
-    leaving exactly ONE job per query (the pruned block scan) — the hot
-    serving path. stats_out, if given, receives 'ranges_total' /
+    leaving at most ONE job per query (the pruned block scan, none on a
+    BlockSnapshot) — the hot serving path. stats_out, if given, receives 'ranges_total' /
     'ranges_visited' accumulators, valid AFTER the returned DataFrame is
     acted on — the measured WAND pruning saving."""
     from collections import Counter
@@ -713,13 +781,8 @@ def _wand_topk(
     if not idf:
         return empty_pdf(WAND_SCHEMA)
 
-    # partition pruning on shard dirs is automatic; row-group stats prune term
-    src = (blocks_df if blocks_df is not None
-           else spark.read.parquet(f"{index_dir}/blocks"))
-    blocks = src.filter(
-        (F.col("field") == field) & F.col("term").isin(list(idf))
-    ).select("shard", "term", "block_seq", "docids", "tfs", "doclens",
-             "max_tf", "min_dl")
+    blocks = prune_blocks(spark, index_dir, blocks_df, field, idf,
+                          KERNEL_COLUMNS)
 
     acc_total = acc_visited = None
     if stats_out is not None:

@@ -7,7 +7,9 @@ identical counts — on both paths, and so must every engine handler, whose
 requests finish in the driver on either path (api.LireQueryEngine's one
 response tail). The bound is monkeypatched to 0 (force the Spark path) and to
 a huge value (force the driver path), so the small fixtures here cover
-both."""
+both. The engine handlers run a third leg: a driver-RESIDENT engine (Σ df
+of its index within the bound when it opened) serves its driver path from
+an in-memory snapshot instead of collecting blocks, masks and payload."""
 
 from __future__ import annotations
 
@@ -28,6 +30,10 @@ from liresolr_spark.operators.phrase import (
 from liresolr_spark.operators.wand import wand_topk, wand_topk_many
 
 BOUNDS = {"spark": 0, "driver": 10**12}
+# engine legs: (engine opened resident?, request-time bound); the driver
+# leg's engine was opened with the bound below its index's postings
+LEGS = {"resident": (True, 10**12), "driver": (False, 10**12),
+        "spark": (True, 0)}
 
 
 def _dict_map(spark, index_dir):
@@ -37,6 +43,21 @@ def _dict_map(spark, index_dir):
               .collect()):
         dmap.setdefault(r["field"], {})[r["term"]] = int(r["df"])
     return dmap
+
+
+def _engines(spark, index_dir, dmap):
+    """{resident: engine}: one engine opened under the dispatch bound (the
+    index is driver-resident) and one opened with the bound just below the
+    index's total postings (not resident)."""
+    from liresolr_spark.api import LireQueryEngine
+
+    total = sum(sum(m.values()) for m in dmap.values())
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(wand, "DRIVER_MAX_POSTINGS", total - 1)
+        collect = LireQueryEngine(spark, index_dir)
+    engines = {True: LireQueryEngine(spark, index_dir), False: collect}
+    assert [e.resident for e in engines.values()] == [True, False]
+    return engines
 
 
 def _uses_pandas_udf(df) -> bool:
@@ -224,25 +245,43 @@ def test_unpinned_dictionary_takes_spark_path(spark, pos_index, vocab,
 
 
 def test_engine_records_dispatch(spark, pos_index, vocab, monkeypatch):
-    from liresolr_spark.api import LireQueryEngine
-
     d, dmap = pos_index
-    eng = LireQueryEngine(spark, d)
+    engines = _engines(spark, d, dmap)
     est = dmap["text"][vocab[0]] + dmap["text"][vocab[9]]
-    for path, bound in BOUNDS.items():
+    for leg, (resident, bound) in LEGS.items():
+        path = "spark" if leg == "spark" else "driver"
+        eng = engines[resident]
         monkeypatch.setattr(wand, "DRIVER_MAX_POSTINGS", bound)
         eng.search(text=f"{vocab[0]} {vocab[9]} {vocab[0]}", rows=3).collect()
         assert eng.last_metrics["dispatch"] == path
         assert eng.last_metrics["postings_est"] == est
+        assert eng.last_metrics["resident"] is resident
         eng.similar(vocab[0], rows=3).collect()
         assert eng.last_metrics["dispatch"] == path
     # one dispatch over the bound puts the whole request on Spark: the
     # MUST clause alone fits, the scored SHOULD+MUST set does not
+    eng = engines[True]
     monkeypatch.setattr(wand, "DRIVER_MAX_POSTINGS", dmap["text"][vocab[0]])
     eng.search(text=vocab[0], rows=3).collect()
     assert eng.last_metrics["dispatch"] == "driver"
     eng.search(text=vocab[0], must=[vocab[9]], rows=3).collect()
     assert eng.last_metrics["dispatch"] == "spark"
+
+
+def test_request_time_metrics(spark, pos_index, vocab):
+    """Every request names the whole timed span RawDocsSearchTime_ms,
+    keeps RawDocsSearchTime_planning_ms as an alias of it, and records
+    whether its engine serves from a driver-resident snapshot."""
+    d, dmap = pos_index
+    for resident, eng in _engines(spark, d, dmap).items():
+        for call in (lambda: eng.search(text=vocab[3], rows=3),
+                     lambda: eng.function_sort("doclen", rows=3)):
+            call().collect()
+            m = eng.last_metrics
+            assert m["RawDocsSearchTime_ms"] >= 0
+            assert m["RawDocsSearchTime_planning_ms"] \
+                == m["RawDocsSearchTime_ms"]
+            assert m["resident"] is resident
 
 
 # -- engine handlers: driver vs Spark dispatch -----------------------------
@@ -266,16 +305,17 @@ def tomb_index(spark, corpus200, tmp_path_factory):
 
 @pytest.fixture(scope="module", params=["plain", "tombstoned"])
 def served(request, spark, corpus200, pos_index, tomb_index):
-    """(engine, vocab by df desc, two indexed phrases) per index."""
-    from liresolr_spark.api import LireQueryEngine
+    """({resident: engine} (_engines), vocab by df desc, two indexed
+    phrases) per index."""
     from liresolr_spark.functions.tokenizer import py_tokenize
 
     d, dmap = pos_index if request.param == "plain" else tomb_index
-    eng = LireQueryEngine(spark, d)
-    assert (eng._deny is not None) == (request.param == "tombstoned")
+    engines = _engines(spark, d, dmap)
+    for eng in engines.values():
+        assert (eng._deny is not None) == (request.param == "tombstoned")
     vocab = sorted(dmap["text"], key=lambda t: (-dmap["text"][t], t))
     toks = [py_tokenize(r["content"]) for r in corpus200.limit(2).collect()]
-    return eng, vocab, [" ".join(t[2:4]) for t in toks]
+    return engines, vocab, [" ".join(t[2:4]) for t in toks]
 
 
 HANDLERS = {
@@ -322,12 +362,14 @@ HANDLERS = {
 @pytest.mark.parametrize("case", list(HANDLERS))
 def test_engine_handlers_two_paths(served, monkeypatch, case):
     """Every kernel-backed handler returns identical full rows (payload,
-    qid, dist, fval) on the driver and the Spark dispatch. Phrase scores
-    are compared at 9 decimals (Spark's log is StrictMath, the driver's is
-    libm) with an identical docID order."""
-    eng, vocab, phrases = served
+    qid, dist, fval) on the three legs (LEGS): a resident engine's driver
+    path, a non-resident engine's driver path and the Spark dispatch.
+    Phrase scores are compared at 9 decimals (Spark's log is StrictMath,
+    the driver's is libm) with an identical docID order."""
+    engines, vocab, phrases = served
     got = {}
-    for path, bound in BOUNDS.items():
+    for leg, (resident, bound) in LEGS.items():
+        eng = engines[resident]
         monkeypatch.setattr(wand, "DRIVER_MAX_POSTINGS", bound)
         rows = [tuple(r) for r in HANDLERS[case](eng, vocab, phrases)
                 .collect()]
@@ -335,9 +377,11 @@ def test_engine_handlers_two_paths(served, monkeypatch, case):
             rows = [tuple(round(x, 9) if isinstance(x, float) else x
                           for x in r) for r in rows]
         if not case.startswith("empty"):  # an empty request is 0 postings
-            assert eng.last_metrics["dispatch"] == path, case
-        got[path] = rows
-    assert got["spark"] == got["driver"]
+            want = "spark" if leg == "spark" else "driver"
+            assert eng.last_metrics["dispatch"] == want, case
+        assert eng.last_metrics["resident"] is resident
+        got[leg] = rows
+    assert got["spark"] == got["driver"] == got["resident"]
     assert bool(got["driver"]) != case.startswith("empty"), got["driver"]
 
 
@@ -357,30 +401,97 @@ def _jobs_run(spark, fn):
 def test_driver_dispatched_job_counts(spark, pos_index, vocab, corpus200,
                                       monkeypatch):
     """Every engine handler returns an executed local relation: collecting
-    the page runs no Spark job on either dispatch path. On a pinned
-    engine, a driver-dispatched search() or phrase_search() runs at most 2
-    Spark jobs for call + collect — the pruned block collect and the
-    page's payload fetch. With every kernel on the Spark path, search()
-    runs at most 3 and identity() with verify_threshold at most 5: the
-    top-k is collected once, then one payload fetch."""
-    from liresolr_spark.api import LireQueryEngine
+    the page runs no Spark job on any leg. A driver-resident engine runs
+    NO Spark job for call + collect of a search, phrase_search,
+    identity(verify_threshold=), similar, warm-fq search or
+    search(doc_id=). On an engine that is not resident, a
+    driver-dispatched search() or phrase_search() runs at most 2 — the
+    pruned block collect and the page's payload fetch. With every kernel
+    on the Spark path, search() runs at most 3 and identity() with
+    verify_threshold at most 5: the top-k is collected once, then one
+    payload fetch."""
     from liresolr_spark.functions.tokenizer import py_tokenize
 
-    eng = LireQueryEngine(spark, pos_index[0])
+    engines = _engines(spark, *pos_index)
     phrase = " ".join(py_tokenize(corpus200.first()["content"])[2:4])
-    search = lambda: eng.search(text=f"{vocab[0]} {vocab[5]}", rows=5)
-    calls = {
-        "driver": [(search, 2), (lambda: eng.phrase_search(phrase, rows=5), 2)],
-        "spark": [(search, 3), (lambda: eng.identity(
+    fq = "lang != 'go'"
+
+    def calls(eng):
+        search = lambda: eng.search(text=f"{vocab[0]} {vocab[5]}", rows=5)
+        identity = lambda: eng.identity(
             f"{vocab[0]} {vocab[4]} {vocab[12]}", threshold=0.99,
-            verify_threshold=0.99, rows=5), 5)],
+            verify_threshold=0.99, rows=5)
+        return {
+            "search": search,
+            "phrase_search": lambda: eng.phrase_search(phrase, rows=5),
+            "identity": identity,
+            "similar": lambda: eng.similar(f"{vocab[1]} {vocab[6]}", rows=5),
+            "search_fq": lambda: eng.search(text=vocab[2], fq=fq, rows=5),
+            "search_doc_id": lambda: eng.search(doc_id=5, rows=4),
+        }
+
+    resident = calls(engines[True])
+    resident["search_fq"]().collect()  # warm the fq cache entry
+    legs = {
+        "resident": (resident, dict.fromkeys(resident, 0)),
+        "driver": (calls(engines[False]), {"search": 2, "phrase_search": 2}),
+        "spark": (calls(engines[False]), {"search": 3, "identity": 5}),
     }
-    for path, bounded in calls.items():
+    for leg, (handlers, bounded) in legs.items():
+        eng = engines[leg == "resident"]
+        path = "spark" if leg == "spark" else "driver"
         monkeypatch.setattr(wand, "DRIVER_MAX_POSTINGS", BOUNDS[path])
-        for call, most in bounded:
-            page, n_call = _jobs_run(spark, call)
+        for name, most in bounded.items():
+            page, n_call = _jobs_run(spark, handlers[name])
             rows, n_collect = _jobs_run(spark, page.collect)
             assert eng.last_metrics["dispatch"] == path
             assert rows and n_call + n_collect <= most, (
-                path, n_call, n_collect)
+                leg, name, n_call, n_collect)
             assert n_collect == 0
+
+
+def test_refresh_keeps_resident_snapshot_exact(spark, corpus200,
+                                               tmp_path_factory):
+    """A resident engine refreshed after an append with overwrites serves
+    exactly what a fresh, non-resident engine on the same directory
+    serves: the new tombstones, df/N and docs are all in the rebuilt
+    snapshot, and an fq allow-list cached before the refresh is not
+    served after it."""
+    from liresolr_spark.api import LireQueryEngine
+    from liresolr_spark.streaming.ingest import append_segment
+
+    d = str(tmp_path_factory.mktemp("dispatch_refresh_index"))
+    append_segment(corpus200.limit(120), d, epoch_id=0, num_shards=4,
+                   block_size=32, with_positions=True)
+    eng = LireQueryEngine(spark, d)
+    assert eng.resident and eng._deny is None
+    fq = "lang != 'zz'"
+    marker = "zebraquux"
+    assert not eng.search(text=marker, fq=fq, rows=5).collect()
+    assert fq in eng._fq_cache
+
+    # overwrites of 30 indexed docs (each now holding the marker) plus 40
+    # docs the index has not seen
+    over = (corpus200.limit(30)
+            .withColumn("commit", F.concat("commit", F.lit("-v2")))
+            .withColumn("content", F.concat(
+                "content", F.lit(f" {marker} revised"))))
+    fresh = corpus200.subtract(corpus200.limit(120)).limit(40)
+    append_segment(over.unionByName(fresh), d, epoch_id=1)
+    eng.refresh()
+    assert eng.resident and eng._deny is not None
+
+    collect = _engines(spark, d, eng._dict_map)[False]
+    vocab = sorted(eng._dict_map["text"],
+                   key=lambda t: (-eng._dict_map["text"][t], t))
+    requests = [
+        lambda e: e.search(text=f"{vocab[0]} {vocab[7]} {marker}", rows=10),
+        lambda e: e.search(text=marker, fq=fq, rows=10),
+        lambda e: e.phrase_search(f"{marker} revised", rows=10),
+    ]
+    for request in requests:
+        got = [tuple(r) for r in request(eng).collect()]
+        assert got == [tuple(r) for r in request(collect).collect()]
+        # only docs of the new segment hold the marker: the fq search
+        # finds them only through an allow-list computed after the refresh
+        assert got
