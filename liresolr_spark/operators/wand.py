@@ -137,22 +137,27 @@ def prune_blocks(spark, index_dir: str, blocks_df, field: str, terms,
                  columns: list[str]):
     """A request's pruned block scan, as `_run_shard_kernel` takes it: the
     (scan, rows) pair for the blocks of `terms` in `field`, projected to
-    `columns`. scan is the lazy Spark plan (shard dirs partition-pruned,
-    row-group stats prune term) over `blocks_df` — a pre-loaded reader, a
-    BlockSnapshot's reader, or a fresh one when None; rows are the same
-    rows from driver memory when `blocks_df` is a BlockSnapshot, else
-    None."""
+    `columns`. scan() returns the lazy Spark plan (shard dirs
+    partition-pruned, row-group stats prune term) over `blocks_df` — a
+    pre-loaded reader, a BlockSnapshot's reader, or a fresh one when None;
+    it is built only when called, because building it analyzes a plan in
+    the JVM, which a request served from the snapshot never needs. rows
+    are the same rows from driver memory when `blocks_df` is a
+    BlockSnapshot, else None."""
     terms = list(terms)
     snap = blocks_df if isinstance(blocks_df, BlockSnapshot) else None
-    if snap is not None:
-        src = snap.df
-    elif blocks_df is not None:
-        src = blocks_df
-    else:
-        src = spark.read.parquet(f"{index_dir}/blocks")
-    scan = src.filter(
-        (F.col("field") == field) & F.col("term").isin(terms)
-    ).select(*columns)
+
+    def scan() -> DataFrame:
+        if snap is not None:
+            src = snap.df
+        elif blocks_df is not None:
+            src = blocks_df
+        else:
+            src = spark.read.parquet(f"{index_dir}/blocks")
+        return src.filter(
+            (F.col("field") == field) & F.col("term").isin(terms)
+        ).select(*columns)
+
     return scan, None if snap is None else snap.take(field, terms, columns)
 
 
@@ -585,7 +590,7 @@ def _run_shard_kernel(spark, blocks, kernel, schema, meta, allow=None,
     scan, rows = blocks
     restricted = bool(_sides(allow) or _sides(deny))
     if kernel_dispatch(postings) == "driver":
-        bl = scan.toPandas() if rows is None else rows
+        bl = scan().toPandas() if rows is None else rows
         if restricted and len(bl):
             mk = _mask_rows(allow, deny, bl["block_seq"], meta.block_size)
             masks = dict(tuple(mk.groupby("shard")))
@@ -605,7 +610,7 @@ def _run_shard_kernel(spark, blocks, kernel, schema, meta, allow=None,
         return pd.concat(out, ignore_index=True)[struct.names]
     n_parts = max(1, min(int(meta.num_shards),
                          spark.sparkContext.defaultParallelism))
-    blocks = scan.repartition(n_parts, "shard")
+    blocks = scan().repartition(n_parts, "shard")
     if not restricted:
         return blocks.groupBy("shard").applyInPandas(
             lambda bl: kernel(bl), schema=schema)

@@ -35,6 +35,16 @@ from-scratch build over the surviving docs (pytest-gated) — statistics are
 recomputed from live docs only, so the Lucene deleted-docs df drift ends
 here, just like a real merge.
 
+`compact_segments` (the tiered partial merge, below) writes a small merged
+segment from the driver: when Σ df over the merged segments' dictionary
+fragments is within `operators.wand.DRIVER_MAX_POSTINGS`, `_DriverMerge`
+reads the merged docstats, blocks and tombstones with pyarrow, decodes the
+blocks with `decode_postings` (the function the Spark path's mapInPandas
+stage runs), rebuilds them with the same `_block_builder` closure and
+writes through `plans.local_write` — no Spark job. A larger merge runs
+`_SparkMerge`. Both keep the two-phase commit: marker -> new dirs ->
+delete old dirs -> meta -> marker removed.
+
 Scale shape: everything is DataFrame + the existing Arrow kernels; the
 decode pass reads only the block streams (no content — compaction never
 needs the original corpus), the docID remap is an equi-join, and block
@@ -50,10 +60,15 @@ import os
 import shutil
 
 import numpy as np
+import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as ds
 import pyspark.sql.functions as F
 from pyspark.sql import SparkSession
 
 from liresolr_spark import BM25_B, BM25_K1, INDEX_FORMAT_VERSION
+from liresolr_spark.operators import wand
 from liresolr_spark.plans.build import (
     BLOCK_SCHEMA,
     TARGET_GROUP_ROWS,
@@ -64,14 +79,17 @@ from liresolr_spark.plans.build import (
     read_meta,
     write_meta,
 )
+from liresolr_spark.plans.local_write import (build_blocks, read_table,
+                                              segment_bytes, write_partitions,
+                                              write_segment)
 
 
-def _decoded_postings(blocks_df, with_positions: bool = False):
-    """blocks -> (field, term, docID, tf, doclen[, positions]) rows,
-    vectorized decode.
-
-    One Arrow batch of block rows expands to its postings with numpy
-    concatenation + np.repeat for the term column — no per-posting Python.
+def decode_postings(pdf, with_positions: bool = False):
+    """One batch of block rows (field, term, docids, tfs, doclens[,
+    positions]) -> its postings (field, term, docID, tf, doclen[,
+    positions]) as a pandas frame: numpy concatenation + np.repeat for the
+    term column, no per-posting Python. The one decode loop of both merge
+    paths: `_decoded_postings`' mapInPandas stage and the driver merge.
 
     with_positions=True carries each posting's positions as its PRE-ENCODED
     byte slice (codec.positions_byte_slices): positions are delta-gapped
@@ -82,48 +100,50 @@ def _decoded_postings(blocks_df, with_positions: bool = False):
 
     from liresolr_spark.functions.codec import decode_block, positions_byte_slices
 
+    ids_l, tfs_l, dls_l, terms_l, fields_l, pos_l = [], [], [], [], [], []
+    for i, (field, term, d, t, ln) in enumerate(zip(
+        pdf["field"], pdf["term"], pdf["docids"], pdf["tfs"], pdf["doclens"],
+    )):
+        ids, tfs, dls = decode_block(bytes(d), bytes(t), bytes(ln))
+        n = len(ids)
+        ids_l.append(ids.astype(np.int64))
+        tfs_l.append(tfs.astype(np.int64))
+        dls_l.append(dls.astype(np.int64))
+        terms_l.append(np.repeat(term, n))
+        fields_l.append(np.repeat(field, n))
+        if with_positions:
+            pb = bytes(pdf["positions"].iloc[i])
+            pos_l.append(positions_byte_slices(pb, tfs) if pb else [b""] * n)
+    if not ids_l:
+        cols = {
+            "field": pd.Series(dtype="object"),
+            "term": pd.Series(dtype="object"),
+            "docID": pd.Series(dtype="int64"),
+            "tf": pd.Series(dtype="int64"),
+            "doclen": pd.Series(dtype="int64")}
+        if with_positions:
+            cols["positions"] = pd.Series(dtype="object")
+        return pd.DataFrame(cols)
+    out = {
+        "field": np.concatenate(fields_l),
+        "term": np.concatenate(terms_l),
+        "docID": np.concatenate(ids_l),
+        "tf": np.concatenate(tfs_l),
+        "doclen": np.concatenate(dls_l),
+    }
+    if with_positions:
+        out["positions"] = np.asarray(
+            [b for blk in pos_l for b in blk], dtype=object)
+    return pd.DataFrame(out)
+
+
+def _decoded_postings(blocks_df, with_positions: bool = False):
+    """blocks -> (field, term, docID, tf, doclen[, positions]) rows: a
+    mapInPandas of `decode_postings` over each Arrow batch of block rows."""
+
     def explode(batches):
         for pdf in batches:
-            ids_l, tfs_l, dls_l, terms_l, fields_l, pos_l = \
-                [], [], [], [], [], []
-            for i, (field, term, d, t, ln) in enumerate(zip(
-                pdf["field"], pdf["term"], pdf["docids"], pdf["tfs"],
-                pdf["doclens"],
-            )):
-                ids, tfs, dls = decode_block(bytes(d), bytes(t), bytes(ln))
-                n = len(ids)
-                ids_l.append(ids.astype(np.int64))
-                tfs_l.append(tfs.astype(np.int64))
-                dls_l.append(dls.astype(np.int64))
-                terms_l.append(np.repeat(term, n))
-                fields_l.append(np.repeat(field, n))
-                if with_positions:
-                    pb = bytes(pdf["positions"].iloc[i])
-                    pos_l.append(
-                        positions_byte_slices(pb, tfs) if pb
-                        else [b""] * n)
-            cols = {
-                "field": pd.Series(dtype="object"),
-                "term": pd.Series(dtype="object"),
-                "docID": pd.Series(dtype="int64"),
-                "tf": pd.Series(dtype="int64"),
-                "doclen": pd.Series(dtype="int64")}
-            if with_positions:
-                cols["positions"] = pd.Series(dtype="object")
-            if not ids_l:
-                yield pd.DataFrame(cols)
-                continue
-            out = {
-                "field": np.concatenate(fields_l),
-                "term": np.concatenate(terms_l),
-                "docID": np.concatenate(ids_l),
-                "tf": np.concatenate(tfs_l),
-                "doclen": np.concatenate(dls_l),
-            }
-            if with_positions:
-                out["positions"] = np.asarray(
-                    [b for blk in pos_l for b in blk], dtype=object)
-            yield pd.DataFrame(out)
+            yield decode_postings(pdf, with_positions)
 
     schema = ("field string, term string, docID long, tf long, doclen long"
               + (", positions binary" if with_positions else ""))
@@ -377,13 +397,12 @@ def compact_segments(
     segs = _segments(spark, index_dir)
     appended = [s for s in segs if s[0] != segs[0][0]]
 
-    docstats = spark.read.parquet(p["docstats"])
     if max_segment_docs is None:
         merge = list(appended)  # ungated: skip the per-segment size job
     else:
         # live docs per appended segment, aggregated from per-shard counts
         per_seg: dict[int, int] = {}
-        for r in docstats.groupBy("shard").agg(
+        for r in spark.read.parquet(p["docstats"]).groupBy("shard").agg(
                 F.count("*").alias("n")).collect():
             for seg_lo, lo, hi in appended:
                 if lo <= int(r["shard"]) < hi:
@@ -393,44 +412,27 @@ def compact_segments(
     merge_shards = [sh for _, lo, hi in merge for sh in range(lo, hi)]
     merge_seg_ids = [s[0] for s in merge]
 
-    tombs = load_tombstones(spark, index_dir)
-    if len(merge) < min_segments:
-        # too few candidates: merge anyway only if tombstones inside them
-        # need physical application (the count job runs ONLY on this path)
-        n_drop_inside = 0
-        if tombs is not None:
-            n_drop_inside = (tombs.filter(F.col("shard").isin(merge_shards))
-                             .select("docID").distinct().count())
-        if n_drop_inside == 0:
-            return {"merged_segments": 0, "reason": "nothing to merge"}
+    # where the merged segment is written: Σ df of the merged segments'
+    # dictionary fragments (a pyarrow read, no job) against the driver
+    # bound, read at call time like the request dispatch
+    frags = read_table(p["dictionary"], ["df"],
+                       ds.field("seg").isin(merge_seg_ids))
+    postings = (int(pc.sum(frags["df"]).as_py() or 0)
+                if frags is not None else 0)
+    write_path = "driver" if postings <= wand.DRIVER_MAX_POSTINGS else "spark"
+    merger = (_DriverMerge if write_path == "driver" else _SparkMerge)(
+        spark, index_dir, merge_shards)
 
-    mstats = docstats.filter(F.col("shard").isin(merge_shards))
-    drop = (tombs.filter(F.col("shard").isin(merge_shards))
-            .select("docID").distinct() if tombs is not None else None)
-    live = mstats if drop is None else mstats.join(drop, "docID", "left_anti")
+    # too few candidates: merge anyway only if tombstones inside them
+    # need physical application (the count runs ONLY on this path)
+    if len(merge) < min_segments and merger.tombstoned_inside() == 0:
+        return {"merged_segments": 0, "reason": "nothing to merge"}
 
     # fresh shard ids above every existing one; survivors keep their docIDs
     new_base = meta.num_shards
-    from liresolr_spark.sources.corpus import assign_doc_ids
-
-    ranked = assign_doc_ids(
-        live.withColumnRenamed("docID", "old_docID")
-        .withColumnRenamed("shard", "old_shard"),
-        keys=["old_docID"], cache=True)
-    cache_handle = ranked._lsr_cached_part
-    agg = ranked.agg(F.count("*").alias("n"), F.sum("doclen").alias("s"),
-                     F.max("docID").alias("mx")).first()
-    n_live, live_doclen = int(agg["n"]), float(agg["s"] or 0.0)
-    # ONE pass over the merged segments' stats for count + doclen (each
-    # extra action here is a whole fixed-cost Spark job — at the frequent-
-    # small-merge cadence this function exists for, job count IS the cost)
-    magg = mstats.agg(F.count("*").alias("n"),
-                      F.sum("doclen").alias("s")).first()
-    n_merged_total = int(magg["n"])
-    merged_doclen = float(magg["s"] or 0.0)
+    n_live, live_doclen, n_merged_total, merged_doclen = merger.live_stats()
     n_dropped = n_merged_total - n_live
-    new_shards = ((int(agg["mx"]) // meta.docs_per_shard + 1)
-                  if n_live else 0)
+    new_shards = -(-n_live // meta.docs_per_shard)
     new_total_doclen = meta.total_doclen - (merged_doclen - live_doclen)
 
     new_meta = IndexMeta(
@@ -474,65 +476,7 @@ def compact_segments(
     os.replace(tmp, p["segmarker"])
 
     # ---- phase 2: write the merged segment under NEW shard/seg ids --------
-    new_map = ranked.select(
-        F.col("old_docID").alias("docID"),
-        (F.lit(new_base) + (F.col("docID") / F.lit(meta.docs_per_shard))
-         .cast("int")).alias("shard"),
-        "repo", "path", "commit", "lang", "doclen", "sha256")
-    new_map.write.mode("append").partitionBy("shard").parquet(p["docstats"])
-
-    shard_of = new_map.select("docID", "shard")
-    merged_blocks = spark.read.parquet(p["blocks"]).filter(
-        F.col("shard").isin(merge_shards))
-    pos_cols = ["positions"] if meta.with_positions else []
-    postings = _decoded_postings(merged_blocks,
-                                 with_positions=meta.with_positions)
-    remapped = postings.join(shard_of, "docID").select(
-        "shard", "field", "term", "docID", "tf", "doclen", *pos_cols)
-
-    group_salts = max(1, int(-(-(live_doclen / max(new_shards, 1))
-                               // TARGET_GROUP_ROWS)))
-    builder = _block_builder(meta.block_size, BM25_K1, BM25_B, new_meta.avgdl)
-    if group_salts > 1:
-        salted = remapped.withColumn(
-            "gsalt", F.pmod(F.xxhash64("term"), F.lit(group_salts)).cast("int"))
-        blocks = salted.groupBy("shard", "field", "gsalt").applyInArrow(
-            builder, schema=BLOCK_SCHEMA)
-    else:
-        blocks = remapped.groupBy("shard", "field").applyInArrow(
-            builder, schema=BLOCK_SCHEMA)
-    (blocks.sortWithinPartitions("field", "term", "block_seq")
-     .write.partitionBy("shard").mode("append").parquet(p["blocks"]))
-
-    # the fresh segment's blocks feed BOTH the manifest and the dictionary
-    # fragment: persist across the two scans (tiny — just-written segment)
-    seg_blocks = spark.read.parquet(p["blocks"]).filter(
-        F.col("shard") >= new_base).persist()
-    (seg_blocks.groupBy("shard").agg(
-        F.min("term").alias("term_lo"), F.max("term").alias("term_hi"),
-        F.sum(F.length("docids") + F.length("tfs")
-              + F.length("doclens")).alias("bytes_written"))
-     .join(new_map.groupBy("shard").agg(F.count("*").alias("docs_indexed")),
-           "shard", "full")
-     .withColumn("status", F.lit("done"))
-     .write.mode("append").partitionBy("shard").parquet(p["manifest"]))
-    (seg_blocks.groupBy("field", "term")
-     .agg(F.sum("count").alias("df"), F.max("max_tf_norm").alias("max_tf_norm"))
-     .withColumn("seg", F.lit(new_base))
-     .write.mode("append").partitionBy("seg").parquet(p["dictionary"]))
-    seg_blocks.unpersist()
-
-    # tombstones recorded by merged segments but targeting docs we did NOT
-    # rebuild (base / kept segments) must survive under the new seg dir
-    if tombs is not None:
-        surviving = tombs.filter(
-            F.col("seg").isin(merge_seg_ids)
-            & ~F.col("shard").isin(merge_shards))
-        (surviving.select("docID", "shard").withColumn("seg", F.lit(new_base))
-         .write.mode("append").partitionBy("seg").parquet(p["tombstones"]))
-
-    if cache_handle is not None:
-        cache_handle.unpersist()
+    merger.write(new_base, meta, new_meta.avgdl, merge_seg_ids)
 
     # ---- phase 3: drop the old merged artifacts ----------------------------
     for key, prefix, ids in (
@@ -555,8 +499,195 @@ def compact_segments(
         "merged_segments": len(merge), "merged_docs": n_merged_total,
         "dropped_docs": n_dropped, "new_seg": new_base,
         "new_shards": new_shards, "n_docs": new_meta.n_docs,
+        "write_path": write_path, "postings": postings,
+        "bytes_written": segment_bytes(p["manifest"], new_base),
         "wall_sec": round(time.time() - t0, 3),
     }
+
+
+class _SparkMerge:
+    """compact_segments' reads and merged-segment writes as Spark plans."""
+
+    def __init__(self, spark: SparkSession, index_dir: str,
+                 merge_shards: list[int]):
+        self.spark, self.p, self.merge_shards = \
+            spark, _paths(index_dir), merge_shards
+        self.tombs = load_tombstones(spark, index_dir)
+        self.inside = (self.tombs.filter(F.col("shard").isin(merge_shards))
+                       .select("docID").distinct()
+                       if self.tombs is not None else None)
+
+    def tombstoned_inside(self) -> int:
+        return self.inside.count() if self.inside is not None else 0
+
+    def live_stats(self) -> tuple[int, float, int, float]:
+        """(live docs, their Σ doclen, merged docs, their Σ doclen)."""
+        from liresolr_spark.sources.corpus import assign_doc_ids
+
+        mstats = self.spark.read.parquet(self.p["docstats"]).filter(
+            F.col("shard").isin(self.merge_shards))
+        live = (mstats if self.inside is None
+                else mstats.join(self.inside, "docID", "left_anti"))
+        self.ranked = assign_doc_ids(
+            live.withColumnRenamed("docID", "old_docID")
+            .withColumnRenamed("shard", "old_shard"),
+            keys=["old_docID"], cache=True)
+        agg = self.ranked.agg(F.count("*").alias("n"),
+                              F.sum("doclen").alias("s")).first()
+        # ONE pass over the merged segments' stats for count + doclen (each
+        # extra action here is a whole fixed-cost Spark job — at the
+        # frequent-small-merge cadence this function exists for, job count
+        # IS the cost)
+        magg = mstats.agg(F.count("*").alias("n"),
+                          F.sum("doclen").alias("s")).first()
+        self.n_live, self.live_doclen = int(agg["n"]), float(agg["s"] or 0.0)
+        return (self.n_live, self.live_doclen,
+                int(magg["n"]), float(magg["s"] or 0.0))
+
+    def write(self, new_base: int, meta: IndexMeta, avgdl: float,
+              merge_seg_ids: list[int]) -> None:
+        spark, p = self.spark, self.p
+        new_map = self.ranked.select(
+            F.col("old_docID").alias("docID"),
+            (F.lit(new_base) + (F.col("docID") / F.lit(meta.docs_per_shard))
+             .cast("int")).alias("shard"),
+            "repo", "path", "commit", "lang", "doclen", "sha256")
+        new_map.write.mode("append").partitionBy("shard").parquet(
+            p["docstats"])
+
+        shard_of = new_map.select("docID", "shard")
+        merged_blocks = spark.read.parquet(p["blocks"]).filter(
+            F.col("shard").isin(self.merge_shards))
+        pos_cols = ["positions"] if meta.with_positions else []
+        postings = _decoded_postings(merged_blocks,
+                                     with_positions=meta.with_positions)
+        remapped = postings.join(shard_of, "docID").select(
+            "shard", "field", "term", "docID", "tf", "doclen", *pos_cols)
+
+        new_shards = -(-self.n_live // meta.docs_per_shard)
+        group_salts = max(1, int(-(-(self.live_doclen / max(new_shards, 1))
+                                   // TARGET_GROUP_ROWS)))
+        builder = _block_builder(meta.block_size, BM25_K1, BM25_B, avgdl)
+        if group_salts > 1:
+            salted = remapped.withColumn(
+                "gsalt",
+                F.pmod(F.xxhash64("term"), F.lit(group_salts)).cast("int"))
+            blocks = salted.groupBy("shard", "field", "gsalt").applyInArrow(
+                builder, schema=BLOCK_SCHEMA)
+        else:
+            blocks = remapped.groupBy("shard", "field").applyInArrow(
+                builder, schema=BLOCK_SCHEMA)
+        (blocks.sortWithinPartitions("field", "term", "block_seq")
+         .write.partitionBy("shard").mode("append").parquet(p["blocks"]))
+
+        # the fresh segment's blocks feed BOTH the manifest and the
+        # dictionary fragment: persist across the two scans (tiny —
+        # just-written segment)
+        seg_blocks = spark.read.parquet(p["blocks"]).filter(
+            F.col("shard") >= new_base).persist()
+        (seg_blocks.groupBy("shard").agg(
+            F.min("term").alias("term_lo"), F.max("term").alias("term_hi"),
+            F.sum(F.length("docids") + F.length("tfs")
+                  + F.length("doclens")).alias("bytes_written"))
+         .join(new_map.groupBy("shard").agg(
+             F.count("*").alias("docs_indexed")), "shard", "full")
+         .withColumn("status", F.lit("done"))
+         .write.mode("append").partitionBy("shard").parquet(p["manifest"]))
+        (seg_blocks.groupBy("field", "term")
+         .agg(F.sum("count").alias("df"),
+              F.max("max_tf_norm").alias("max_tf_norm"))
+         .withColumn("seg", F.lit(new_base))
+         .write.mode("append").partitionBy("seg").parquet(p["dictionary"]))
+        seg_blocks.unpersist()
+
+        # tombstones recorded by merged segments but targeting docs we did
+        # NOT rebuild (base / kept segments) must survive under the new
+        # seg dir
+        if self.tombs is not None:
+            surviving = self.tombs.filter(
+                F.col("seg").isin(merge_seg_ids)
+                & ~F.col("shard").isin(self.merge_shards))
+            (surviving.select("docID", "shard")
+             .withColumn("seg", F.lit(new_base))
+             .write.mode("append").partitionBy("seg").parquet(
+                 p["tombstones"]))
+
+        if self.ranked._lsr_cached_part is not None:
+            self.ranked._lsr_cached_part.unpersist()
+
+
+class _DriverMerge:
+    """The same reads and writes in the driver with pyarrow: no Spark job.
+    Blocks are decoded by `decode_postings` and rebuilt by the same
+    `_block_builder` closure, once per (shard, field) group."""
+
+    def __init__(self, spark: SparkSession, index_dir: str,
+                 merge_shards: list[int]):
+        self.p, self.merge_shards = _paths(index_dir), merge_shards
+        self.tombs = read_table(self.p["tombstones"],
+                                ["docID", "shard", "seg"])
+        self.inside = pa.array([], pa.int64())
+        if self.tombs is not None:
+            self.inside = pc.unique(self.tombs.filter(
+                pc.is_in(self.tombs["shard"],
+                         pa.array(merge_shards, pa.int32())))["docID"])
+
+    def tombstoned_inside(self) -> int:
+        return len(self.inside)
+
+    def live_stats(self) -> tuple[int, float, int, float]:
+        """(live docs, their Σ doclen, merged docs, their Σ doclen)."""
+        mstats = read_table(self.p["docstats"],
+                            filter=ds.field("shard").isin(self.merge_shards))
+        self.live = mstats.filter(
+            pc.invert(pc.is_in(mstats["docID"], self.inside))
+        ).sort_by("docID")
+
+        def doclen(t):
+            return float(pc.sum(t["doclen"]).as_py() or 0.0)
+
+        return (self.live.num_rows, doclen(self.live),
+                mstats.num_rows, doclen(mstats))
+
+    def write(self, new_base: int, meta: IndexMeta, avgdl: float,
+              merge_seg_ids: list[int]) -> None:
+        p, live = self.p, self.live
+        rank = np.arange(live.num_rows, dtype=np.int64)
+        shards = (new_base + rank // meta.docs_per_shard).astype(np.int32)
+        docs = live.set_column(live.schema.get_field_index("shard"), "shard",
+                               pa.array(shards))
+        write_partitions(docs, p["docstats"], "docstats", "shard", ["docID"])
+
+        cols = ["field", "term", "docids", "tfs", "doclens"] \
+            + (["positions"] if meta.with_positions else [])
+        merged_blocks = read_table(
+            p["blocks"], cols, ds.field("shard").isin(self.merge_shards))
+        postings = decode_postings(
+            merged_blocks.to_pandas() if merged_blocks is not None
+            else pa.table({c: [] for c in cols}).to_pandas(),
+            meta.with_positions)
+        # inner join with the new shard map drops tombstoned postings
+        shard_of = pd.Series(shards, index=live["docID"].to_numpy())
+        postings = postings[postings["docID"].isin(shard_of.index)]
+        postings = postings.assign(
+            shard=shard_of.loc[postings["docID"]].to_numpy())
+        builder = _block_builder(meta.block_size, BM25_K1, BM25_B, avgdl)
+        write_segment(
+            build_blocks(pa.Table.from_pandas(postings, preserve_index=False),
+                         builder),
+            docs, p, seg=new_base)
+
+        if self.tombs is not None:
+            t = self.tombs
+            surviving = t.filter(pc.and_(
+                pc.is_in(t["seg"], pa.array(merge_seg_ids, pa.int32())),
+                pc.invert(pc.is_in(t["shard"], pa.array(self.merge_shards,
+                                                        pa.int32())))))
+            write_partitions(
+                surviving.set_column(
+                    2, "seg", pa.array(np.full(surviving.num_rows, new_base,
+                                               np.int32))),
+                p["tombstones"], "tombstones", "seg", ["docID"])
 
 
 def repair_segment_compaction(index_dir: str, force: bool = False) -> str:

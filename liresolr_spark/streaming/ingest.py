@@ -25,6 +25,19 @@ exactly that shape on Spark:
   the segment's partition dirs (docstats/blocks shard=, manifest shard=,
   dictionary seg=) before re-writing.
 
+Small appends are written from the driver. `append_segment` first sums
+the batch's lexical tokens in one scalar job. A batch within
+`operators.wand.DRIVER_MAX_POSTINGS` (read at call time, the bound of the
+request dispatch) is collected once — tokens, sha256 and md5 still come
+from the JVM — and `_append_in_driver` derives the within-batch winners,
+docIDs, hash tokens, kernel input and tombstones in the driver, runs the
+same `plans.build._block_builder` closure once per (shard, field) group
+and writes every artifact with pyarrow (`plans.local_write`): 2 Spark jobs
+in all. A larger batch keeps the Spark plans (`_append_in_spark`). Both
+paths write the same rows under the same cleanup -> write -> meta-commit
+order (tests/test_write_paths.py), and the result's `write_path` says
+which one ran.
+
 Live query engines cache index handles; after a committed append, call
 `LireQueryEngine.refresh()` (the Solr searcher-reopen analog) to pick up
 the new segments and updated global statistics.
@@ -48,9 +61,10 @@ import os
 import shutil
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 
 from liresolr_spark import BM25_B, BM25_K1
+from liresolr_spark.operators import wand
 from liresolr_spark.plans.build import (
     NATURAL_KEY,
     _block_builder,
@@ -60,6 +74,7 @@ from liresolr_spark.plans.build import (
     write_meta,
 )
 from liresolr_spark.plans.build import BLOCK_SCHEMA
+from liresolr_spark.plans.local_write import segment_bytes
 from liresolr_spark.functions.tokenizer import tokenize_expr
 from liresolr_spark.sources.corpus import assign_doc_ids
 
@@ -99,22 +114,16 @@ def append_segment(
     with_positions applies to the FIRST build only; appended segments
     always follow the existing meta flag so every segment agrees (a mixed
     index would silently lose phrase coverage on some segments).
+
+    Where the segment is written: one scalar job sums the batch's lexical
+    tokens (before the within-batch dedup, so an upper bound on the rows
+    the text block kernel receives and on the segment's postings in
+    either field). Within `operators.wand.DRIVER_MAX_POSTINGS`, read at
+    call time, the driver writes it (`_append_in_driver`, one more job to
+    collect the batch); above it the Spark plans do (`_append_in_spark`).
+    The result's `write_path`, `tokens` and `bytes_written` say which path
+    ran, on what estimate, and how many block stream bytes it wrote.
     """
-    # WITHIN-batch overwrite: two versions of the same UNIQUE_KEY (repo,
-    # path) arriving in one micro-batch resolve to a single winner BEFORE
-    # indexing — Solr overwrite=true is last-write-wins, and without this
-    # both versions stayed live indefinitely (the cross-segment tombstones
-    # below only supersede EARLIER segments; round-3 advice). The reference's
-    # arrival order is racy (parallel indexer), so the winner is made
-    # deterministic: highest commit, ties broken by content hash. One
-    # shuffle keyed by UNIQUE_KEY, bounded by the batch size.
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy(*UNIQUE_KEY).orderBy(
-        F.desc("commit"), F.desc(F.md5("content")))
-    batch = (batch.withColumn("_ver", F.row_number().over(w))
-             .filter(F.col("_ver") == 1).drop("_ver"))
-
     p = _paths(index_dir)
     if not os.path.exists(p["meta"]):
         # first build: the epoch ledger rides INSIDE build_index's single
@@ -122,7 +131,7 @@ def append_segment(
         # crash can't leave meta committed but the epoch unrecorded (the
         # retry would then re-append this same batch)
         return build_index(
-            batch, index_dir,
+            _batch_winners(batch), index_dir,
             num_shards=num_shards or 8,
             block_size=block_size or 128,
             with_positions=with_positions,
@@ -131,7 +140,6 @@ def append_segment(
     if epoch_id is not None and epoch_id in _applied_epochs(index_dir):
         return {"skipped_epoch": epoch_id}
 
-    spark = batch.sparkSession
     meta = read_meta(index_dir)
     from liresolr_spark import INDEX_FORMAT_VERSION
 
@@ -145,36 +153,19 @@ def append_segment(
     base_docid = meta.next_docid if meta.next_docid is not None else meta.n_docs
     base_shard = meta.num_shards
 
-    # cache=True: the per-partition count job and the docID-materializing
-    # jobs must share ONE materialization of the repartitionByRange output —
-    # re-executing the lineage could re-sample range bounds and mis-align
-    # the cumulative offsets (duplicate/skipped docIDs). Same hardening as
-    # the batch build path.
-    docs = assign_doc_ids(batch, NATURAL_KEY, dedup=True, cache=True)
-    ranged_part = docs._lsr_cached_part
-    docs = (
-        docs.withColumn("docID", F.col("docID") + F.lit(base_docid))
-        .withColumn("tokens", tokenize_expr(F.col("content")))
-        .withColumn("doclen", F.size("tokens"))
-        .withColumn(
-            "shard",
-            (F.lit(base_shard)
-             + ((F.col("docID") - base_docid) / F.lit(meta.docs_per_shard))
-             .cast("int")),
-        )
-    )
-    row = docs.agg(F.count("*").alias("n"),
-                   F.sum("doclen").alias("s")).first()
-    n_new, dl_new = int(row["n"]), float(row["s"] or 0.0)
-    if n_new == 0:
-        if ranged_part is not None:
-            ranged_part.unpersist()
-        return {"appended_docs": 0}
-
-    new_total = meta.total_doclen + dl_new
-    new_n = meta.n_docs + n_new
-    new_avgdl = new_total / new_n
-    new_shard_hi = base_shard + (n_new - 1) // meta.docs_per_shard + 1
+    # ONE scalar job: rows and lexical tokens of the raw batch. An observed
+    # no-op write, because a global agg runs its shuffle map stage as a
+    # second job under AQE.
+    size = Observation()
+    (batch.select(F.size(tokenize_expr(F.col("content"))).alias("n"))
+     .observe(size, F.count(F.lit(1)).alias("rows"),
+              F.sum("n").alias("tokens"))
+     .write.format("noop").mode("overwrite").save())
+    tokens = int(size.get["tokens"] or 0)
+    write_path = "driver" if tokens <= wand.DRIVER_MAX_POSTINGS else "spark"
+    if size.get["rows"] == 0:
+        return {"appended_docs": 0, "tombstoned_docs": 0,
+                "write_path": write_path, "tokens": 0, "bytes_written": 0}
 
     # clean any half-written attempt of this segment (crash between data
     # write and the meta commit), then write. EVERY pre-commit artifact of
@@ -191,6 +182,83 @@ def append_segment(
             for d in os.listdir(base):
                 if d.startswith(prefix) and int(d.split("=", 1)[1]) >= base_shard:
                     shutil.rmtree(os.path.join(base, d), ignore_errors=True)
+
+    write = _append_in_driver if write_path == "driver" else _append_in_spark
+    n_new, dl_new, n_tombs = write(batch, index_dir, meta, base_docid,
+                                   base_shard)
+
+    # commit point: meta + epoch ledger in ONE atomic rename, written last
+    new_shard_hi = base_shard + (n_new - 1) // meta.docs_per_shard + 1
+    meta.total_doclen += dl_new
+    meta.n_docs += n_new
+    meta.avgdl = meta.total_doclen / meta.n_docs
+    meta.num_shards = new_shard_hi
+    meta.next_docid = base_docid + n_new
+    if epoch_id is not None:
+        applied = set(meta.applied_epochs or [])
+        applied.add(epoch_id)
+        meta.applied_epochs = sorted(applied)
+    write_meta(index_dir, meta)
+    return {"appended_docs": n_new, "new_shards": new_shard_hi - base_shard,
+            "n_docs": meta.n_docs, "avgdl": meta.avgdl,
+            "tombstoned_docs": n_tombs, "write_path": write_path,
+            "tokens": tokens,
+            "bytes_written": segment_bytes(p["manifest"], base_shard)}
+
+
+def _batch_winners(batch: DataFrame) -> DataFrame:
+    """One row per UNIQUE_KEY: highest commit, ties broken by content md5.
+
+    WITHIN-batch overwrite: two versions of the same (repo, path) arriving
+    in one micro-batch resolve to a single winner BEFORE indexing — Solr
+    overwrite=true is last-write-wins, and without this both versions
+    stayed live indefinitely (the cross-segment tombstones only supersede
+    EARLIER segments; round-3 advice). The reference's arrival order is
+    racy (parallel indexer), so the winner is made deterministic. One
+    shuffle keyed by UNIQUE_KEY, bounded by the batch size;
+    `_append_in_driver` applies the same order in pyarrow."""
+    from pyspark.sql.window import Window
+
+    w = Window.partitionBy(*UNIQUE_KEY).orderBy(
+        F.desc("commit"), F.desc(F.md5("content")))
+    return (batch.withColumn("_ver", F.row_number().over(w))
+            .filter(F.col("_ver") == 1).drop("_ver"))
+
+
+def _segment_avgdl(meta, n_new: int, dl_new: float) -> float:
+    """The index avgdl once the segment commits — the one the blocks'
+    max_tf_norm is built under."""
+    return (meta.total_doclen + dl_new) / (meta.n_docs + n_new)
+
+
+def _append_in_spark(batch: DataFrame, index_dir: str, meta,
+                     base_docid: int, base_shard: int) -> tuple[int, float, int]:
+    """Write the segment with Spark stages -> (docs, Σ doclen, tombstones)."""
+    spark = batch.sparkSession
+    p = _paths(index_dir)
+    # cache=True: the per-partition count job and the docID-materializing
+    # jobs must share ONE materialization of the repartitionByRange output —
+    # re-executing the lineage could re-sample range bounds and mis-align
+    # the cumulative offsets (duplicate/skipped docIDs). Same hardening as
+    # the batch build path.
+    docs = assign_doc_ids(_batch_winners(batch), NATURAL_KEY, dedup=True,
+                          cache=True)
+    ranged_part = docs._lsr_cached_part
+    docs = (
+        docs.withColumn("docID", F.col("docID") + F.lit(base_docid))
+        .withColumn("tokens", tokenize_expr(F.col("content")))
+        .withColumn("doclen", F.size("tokens"))
+        .withColumn(
+            "shard",
+            (F.lit(base_shard)
+             + ((F.col("docID") - base_docid) / F.lit(meta.docs_per_shard))
+             .cast("int")),
+        )
+    )
+    row = docs.agg(F.count("*").alias("n"),
+                   F.sum("doclen").alias("s")).first()
+    n_new, dl_new = int(row["n"]), float(row["s"] or 0.0)
+    new_shard_hi = base_shard + (n_new - 1) // meta.docs_per_shard + 1
 
     docstats = docs.select(
         "docID", "shard", "repo", "path", "commit", "lang", "doclen",
@@ -227,7 +295,8 @@ def append_segment(
     # pre-aggregated (see plans.build.positional_postings_input)
     tf = (positional_postings_input(exploded) if meta.with_positions
           else tf_aggregate(exploded))
-    builder = _block_builder(meta.block_size, BM25_K1, BM25_B, new_avgdl)
+    builder = _block_builder(meta.block_size, BM25_K1, BM25_B,
+                             _segment_avgdl(meta, n_new, dl_new))
     # same adaptive within-shard term-hash salt as the batch build: bounds
     # one Arrow group's postings regardless of segment size (see
     # build_index group_salts / TARGET_GROUP_ROWS)
@@ -273,20 +342,118 @@ def append_segment(
 
     if ranged_part is not None:
         ranged_part.unpersist()
+    return n_new, dl_new, n_tombs
 
-    # commit point: meta + epoch ledger in ONE atomic rename, written last
-    meta.n_docs = new_n
-    meta.avgdl = new_avgdl
-    meta.total_doclen = new_total
-    meta.num_shards = new_shard_hi
-    meta.next_docid = base_docid + n_new
-    if epoch_id is not None:
-        applied = set(meta.applied_epochs or [])
-        applied.add(epoch_id)
-        meta.applied_epochs = sorted(applied)
-    write_meta(index_dir, meta)
-    return {"appended_docs": n_new, "new_shards": new_shard_hi - base_shard,
-            "n_docs": new_n, "avgdl": new_avgdl, "tombstoned_docs": n_tombs}
+
+def _append_in_driver(batch: DataFrame, index_dir: str, meta,
+                      base_docid: int, base_shard: int
+                      ) -> tuple[int, float, int]:
+    """Write the segment from the driver with pyarrow -> (docs, Σ doclen,
+    tombstones). The same rows as `_append_in_spark`, from one collect:
+    the tokenizer, sha256 and md5 still run in the JVM."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.dataset as ds
+
+    from liresolr_spark.functions.tokenizer import py_hash_token
+    from liresolr_spark.plans.local_write import (build_blocks, read_table,
+                                                  write_partitions,
+                                                  write_segment)
+
+    p = _paths(index_dir)
+    tbl = batch.select(
+        "repo", "path", "commit", "lang",
+        tokenize_expr(F.col("content")).alias("tokens"),
+        F.sha2(F.col("content"), 256).alias("sha256"),
+        F.md5(F.col("content")).alias("md5")).toArrow()
+
+    # within-batch winner per UNIQUE_KEY (highest commit, then md5, as
+    # _batch_winners), then docIDs by rank of NATURAL_KEY. Arrow and Spark
+    # both order strings by their UTF-8 bytes.
+    tbl = tbl.sort_by([("repo", "ascending"), ("path", "ascending"),
+                       ("commit", "descending"), ("md5", "descending")])
+    repo = np.asarray(tbl["repo"].to_pylist(), dtype=object)
+    path = np.asarray(tbl["path"].to_pylist(), dtype=object)
+    first = np.ones(len(repo), dtype=bool)
+    first[1:] = (repo[1:] != repo[:-1]) | (path[1:] != path[:-1])
+    docs = tbl.filter(pa.array(first)).sort_by(
+        [(k, "ascending") for k in NATURAL_KEY])
+    n_new = docs.num_rows
+    rank = np.arange(n_new, dtype=np.int64)
+    doc_ids = base_docid + rank
+    shards = (base_shard + rank // meta.docs_per_shard).astype(np.int32)
+    tokens = docs["tokens"].combine_chunks()
+    doclens = pc.fill_null(pc.list_value_length(tokens), 0) \
+        .to_numpy().astype(np.int32)
+    dl_new = float(doclens.sum())
+
+    docstats = pa.table({
+        "docID": doc_ids, "shard": shards, "repo": docs["repo"],
+        "path": docs["path"], "commit": docs["commit"],
+        "lang": docs["lang"], "doclen": doclens, "sha256": docs["sha256"]})
+    write_partitions(docstats, p["docstats"], "docstats", "shard", ["docID"])
+
+    # cross-segment overwrite: earlier docs with a (repo, path) of this
+    # batch, found by a docstats scan pushed down to the batch's repos and
+    # paths, then matched on exact pairs
+    existing = read_table(
+        p["docstats"], ["docID", "shard", "repo", "path"],
+        (ds.field("shard") < base_shard)
+        & ds.field("repo").isin(pc.unique(docs["repo"]))
+        & ds.field("path").isin(pc.unique(docs["path"])))
+    tombs = pa.table({"docID": pa.array([], pa.int64()),
+                      "shard": pa.array([], pa.int32())})
+    if existing is not None and existing.num_rows:
+        keys = set(zip(docs["repo"].to_pylist(), docs["path"].to_pylist()))
+        hit = [k in keys for k in zip(existing["repo"].to_pylist(),
+                                      existing["path"].to_pylist())]
+        tombs = existing.filter(pa.array(hit, pa.bool_())) \
+            .select(["docID", "shard"])
+    write_partitions(
+        tombs.append_column("seg", pa.array(
+            np.full(tombs.num_rows, base_shard, np.int32))),
+        p["tombstones"], "tombstones", "seg", ["docID"])
+
+    # kernel input, as positional_postings_input / tf_aggregate shape it:
+    # lexical occurrence rows (with pos) on a positional index, else (term,
+    # doc) tf rows; hash-family rows always pre-aggregated
+    flat = pc.list_flatten(tokens)
+    parent = pc.list_parent_indices(tokens).to_numpy()
+    starts = np.cumsum(doclens, dtype=np.int64) - doclens
+    uniq = pc.dictionary_encode(flat)
+    hashed = np.asarray([py_hash_token(t) for t in
+                         uniq.dictionary.to_pylist()], dtype=object)
+    ha_flat = pa.array(hashed[uniq.indices.to_numpy()], pa.string())
+
+    def rows(field, doc_idx, terms, tf=None, pos=None):
+        n = len(doc_idx)
+        out = {"docID": doc_ids[doc_idx], "shard": shards[doc_idx],
+               "doclen": doclens[doc_idx],
+               "field": pa.array([field] * n, pa.string()), "term": terms}
+        if meta.with_positions:
+            out["pos"] = pos if pos is not None else pa.nulls(n, pa.int32())
+        out["tf"] = tf if tf is not None else pa.nulls(n, pa.int64())
+        return pa.table(out)
+
+    def tf_rows(field, terms):
+        agg = pa.table({"doc": parent, "term": terms}).group_by(
+            ["doc", "term"]).aggregate([("doc", "count")])
+        return rows(field, agg["doc"].to_numpy(), agg["term"],
+                    tf=agg["doc_count"])
+
+    if meta.with_positions:
+        pos = np.arange(len(flat), dtype=np.int64) - starts[parent]
+        text = rows("text", parent, flat, pos=pa.array(pos.astype(np.int32)))
+    else:
+        text = tf_rows("text", flat)
+    kernel_rows = pa.concat_tables([text, tf_rows("ha", ha_flat)])
+
+    builder = _block_builder(meta.block_size, BM25_K1, BM25_B,
+                             _segment_avgdl(meta, n_new, dl_new))
+    write_segment(build_blocks(kernel_rows, builder), docstats, p,
+                  seg=base_shard)
+    return n_new, dl_new, tombs.num_rows
 
 
 def maintain_index(

@@ -21,3 +21,15 @@ def corpus200(spark):
     df.persist()
     df.count()
     return df
+
+
+@pytest.fixture(params=["driver", "spark"])
+def write_leg(request, monkeypatch):
+    """Runs a write test on both segment-write paths: 'driver' keeps the
+    default DRIVER_MAX_POSTINGS (small appends and merges are written from
+    the driver), 'spark' sets it to 0 (every write runs Spark stages)."""
+    import liresolr_spark.operators.wand as wand
+
+    if request.param == "spark":
+        monkeypatch.setattr(wand, "DRIVER_MAX_POSTINGS", 0)
+    return request.param

@@ -212,7 +212,8 @@ def test_append_after_partial_compaction_no_docid_collision(spark, tiered,
     assert eng.search(text="read file", rows=5).count() == 5
 
 
-def test_partial_compaction_crash_rolls_back(spark, tiered, monkeypatch):
+def test_partial_compaction_crash_rolls_back(spark, write_leg, tiered,
+                                             monkeypatch):
     """Crash BEFORE the delete phase (old artifacts intact): read_meta must
     refuse the ambiguous index; repair rolls back to the pre-merge state."""
     import liresolr_spark.plans.compact as pc
@@ -254,8 +255,8 @@ def test_partial_compaction_crash_rolls_back(spark, tiered, monkeypatch):
     assert _hits_keyed(spark, d, QUERY) == before
 
 
-def test_partial_compaction_crash_rolls_forward(spark, tiered, tmp_path,
-                                                monkeypatch):
+def test_partial_compaction_crash_rolls_forward(spark, write_leg, tiered,
+                                                tmp_path, monkeypatch):
     """Crash AFTER the delete phase but before the meta commit: repair must
     finish the merge (commit the marker's meta) and results must equal a
     completed merge's."""

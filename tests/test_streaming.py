@@ -102,7 +102,8 @@ def test_epoch_retry_skipped(spark, streamed_index):
         f"{idx}/docstats").count()
 
 
-def test_uncommitted_append_retry_does_not_double_df(spark, streamed_index):
+def test_uncommitted_append_retry_does_not_double_df(spark, write_leg,
+                                                     streamed_index):
     """Crash-before-commit simulation: restore the pre-append meta.json
     (data files already on disk, commit point not yet written) and re-run
     the same epoch. The retry must clean the orphaned segment artifacts —
@@ -116,7 +117,8 @@ def test_uncommitted_append_retry_does_not_double_df(spark, streamed_index):
     shutil.copy(f"{idx}/meta.json", f"{idx}/meta.json.save")
 
     batch = corpus.limit(25)
-    out1 = append_segment(batch, idx, epoch_id=777)
+    epoch = {"driver": 777, "spark": 778}[write_leg]
+    out1 = append_segment(batch, idx, epoch_id=epoch)
     assert out1["appended_docs"] > 0
     df_after_clean = {
         (r["field"], r["term"]): r["df"]
@@ -129,7 +131,7 @@ def test_uncommitted_append_retry_does_not_double_df(spark, streamed_index):
     shutil.move(f"{idx}/meta.json.save", f"{idx}/meta.json")
     assert read_meta(idx).n_docs == meta_before.n_docs
 
-    out2 = append_segment(batch, idx, epoch_id=777)  # foreachBatch retry
+    out2 = append_segment(batch, idx, epoch_id=epoch)  # foreachBatch retry
     assert out2["appended_docs"] == out1["appended_docs"]
     df_after_retry = {
         (r["field"], r["term"]): r["df"]

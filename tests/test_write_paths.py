@@ -1,0 +1,161 @@
+"""Two-path identity of segment writes (SCALE.md §3, "Driver-local segment
+writes"): `append_segment` and `compact_segments` write a segment whose
+size estimate fits DRIVER_MAX_POSTINGS from the driver with pyarrow, and a
+larger one through Spark stages. The same base index gets the same writes
+on two copies — once under the default bound (driver) and once with the
+bound monkeypatched to 0 (Spark) — and every artifact must hold the same
+rows, binary block streams included, under the same Spark-read schema,
+with the same meta.json. Both a positional and a positionless index are
+covered; the batch carries overwrites of base keys, two versions of one
+key (and a commit tie broken by the content md5), non-ASCII keys and
+content, and one empty-content doc."""
+
+from __future__ import annotations
+
+import glob
+import json
+import shutil
+
+import pandas as pd
+import pyspark.sql.functions as F
+import pytest
+
+import liresolr_spark.operators.wand as wand
+from liresolr_spark.plans.build import build_index
+from liresolr_spark.plans.compact import compact_segments
+from liresolr_spark.sources.corpus import CORPUS_SCHEMA
+from liresolr_spark.streaming.ingest import append_segment
+from test_dispatch import _jobs_run
+
+ARTIFACTS = ["docstats", "blocks", "dictionary", "manifest", "tombstones"]
+LEGS = ["driver", "spark"]
+
+
+def _snapshot(spark, d: str) -> dict:
+    """meta.json, and per artifact that has files its Spark-read schema
+    and sorted rows."""
+    with open(f"{d}/meta.json") as f:
+        out = {"meta": json.load(f)}
+    for art in ARTIFACTS:
+        if not glob.glob(f"{d}/{art}/*/*.parquet"):
+            continue
+        df = spark.read.parquet(f"{d}/{art}")
+        out[art] = (df.schema, sorted(map(tuple, df.collect()), key=repr))
+    return out
+
+
+def _batches(spark, corpus200):
+    """Two appends: the first overwrites base keys and carries the edge
+    cases, the second overwrites some of the first's keys (so the merge
+    drops docs) and adds fresh ones."""
+    g = F.crc32(F.col("path")) % 10
+    base_rows = corpus200.filter(g < 3).orderBy("repo", "path", "commit") \
+        .limit(6).collect()
+    fresh = corpus200.filter(g == 5).orderBy("repo", "path", "commit") \
+        .limit(14).collect()
+    fresh2 = corpus200.filter(g == 6).orderBy("repo", "path", "commit") \
+        .limit(8).collect()
+    rows = [(r["repo"], r["path"], r["commit"] + "_v2", r["lang"],
+             r["content"] + "\nrewritten readFile") for r in base_rows]
+    rows += [tuple(r) for r in fresh]
+    rows += [
+        ("zz/dup", "two.py", "c1", "python", "def old_version(): return 1"),
+        ("zz/dup", "two.py", "c2", "python", "def newVersion(): return 2"),
+        ("zz/tie", "tie.py", "c9", "python", "import alpha"),
+        ("zz/tie", "tie.py", "c9", "python", "import beta"),
+        ("zz/ünï", "src/ünïcode.py", "c1", "python",
+         "déjà vu 🚀 naïveCamelCase ΣigmaTest 数据 readFile"),
+        ("zz/ünï", "src/😀.py", "c1", "python", "emoji 😀 only parseHTTPResponse"),
+        ("zz/empty", "empty.py", "c1", "python", ""),
+    ]
+    rows2 = [(r[0], r[1], r[2] + "_v3", r[3], r[4] + " again")
+             for r in rows[:3] + rows[6:9]]
+    rows2 += [tuple(r) for r in fresh2]
+
+    def frame(rs):
+        return spark.createDataFrame(
+            pd.DataFrame(rs, columns=CORPUS_SCHEMA.names), CORPUS_SCHEMA)
+
+    return frame(rows), frame(rows2)
+
+
+@pytest.fixture(scope="module", params=[True, False],
+                ids=["positional", "positionless"])
+def legs(request, spark, corpus200, tmp_path_factory):
+    """Per leg: the snapshot after each write, each write's result and its
+    Spark job count."""
+    root = tmp_path_factory.mktemp("write_paths")
+    base = str(root / "base")
+    build_index(corpus200.filter(F.crc32(F.col("path")) % 10 < 3), base,
+                num_shards=3, block_size=32, with_positions=request.param)
+    b1, b2 = _batches(spark, corpus200)
+    out = {"base": _snapshot(spark, base)}
+    for leg in LEGS:
+        d = str(root / leg)
+        shutil.copytree(base, d)
+        with pytest.MonkeyPatch.context() as mp:
+            if leg == "spark":
+                mp.setattr(wand, "DRIVER_MAX_POSTINGS", 0)
+            a1, j1 = _jobs_run(spark, lambda: append_segment(b1, d))
+            s1 = _snapshot(spark, d)
+            a2, j2 = _jobs_run(spark, lambda: append_segment(b2, d))
+            m, jm = _jobs_run(spark, lambda: compact_segments(spark, d))
+        out[leg] = {"append": a1, "append2": a2, "merge": m,
+                    "jobs": (j1, j2, jm), "after_append": s1,
+                    "after_merge": _snapshot(spark, d)}
+    return out
+
+
+@pytest.mark.parametrize("stage", ["after_append", "after_merge"])
+def test_driver_and_spark_segments_row_identical(legs, stage):
+    drv, spk = legs["driver"][stage], legs["spark"][stage]
+    assert drv["meta"] == spk["meta"]
+    assert set(drv) == set(spk) == {"meta", *ARTIFACTS}
+    for art in ARTIFACTS:
+        assert drv[art][0] == spk[art][0], art
+        assert drv[art][1] == spk[art][1], art
+        if art in legs["base"]:
+            assert drv[art][0] == legs["base"][art][0], art
+
+
+def test_write_results_say_where_they_ran(legs):
+    drv, spk = legs["driver"], legs["spark"]
+    for step, size in (("append", "tokens"), ("append2", "tokens"),
+                       ("merge", "postings")):
+        assert drv[step]["write_path"] == "driver", step
+        assert spk[step]["write_path"] == "spark", step
+        assert 0 < drv[step][size] <= wand.DRIVER_MAX_POSTINGS, step
+        assert drv[step][size] == spk[step][size], step
+        assert drv[step]["bytes_written"] > 0, step
+        assert ({k: v for k, v in drv[step].items()
+                 if k not in ("write_path", "wall_sec")}
+                == {k: v for k, v in spk[step].items()
+                    if k not in ("write_path", "wall_sec")}), step
+    assert drv["append"]["tombstoned_docs"] > 0
+    assert drv["merge"]["dropped_docs"] > 0
+    manifest = legs["driver"]["after_append"]["manifest"][1]
+    assert drv["append"]["bytes_written"] + sum(
+        r[2] or 0 for r in legs["base"]["manifest"][1]) \
+        == sum(r[2] or 0 for r in manifest)
+
+
+def test_driver_writes_job_counts(legs):
+    """A driver-path append runs at most 2 Spark jobs (the token-sum
+    scalar, the batch collect); a driver-path merge, with no size gate,
+    runs none."""
+    j1, j2, jm = legs["driver"]["jobs"]
+    assert j1 <= 2 and j2 <= 2, (j1, j2)
+    assert jm == 0
+
+
+@pytest.mark.parametrize("leg", LEGS)
+def test_empty_append_result_keys(spark, tmp_path, leg, monkeypatch):
+    d = str(tmp_path / "ix")
+    rows = [("r", "a.py", "c", "python", "alpha beta")]
+    append_segment(spark.createDataFrame(rows, CORPUS_SCHEMA), d,
+                   num_shards=2, block_size=32)
+    if leg == "spark":
+        monkeypatch.setattr(wand, "DRIVER_MAX_POSTINGS", -1)
+    out = append_segment(spark.createDataFrame([], CORPUS_SCHEMA), d)
+    assert out["appended_docs"] == 0 and out["tombstoned_docs"] == 0
+    assert out["write_path"] == leg
