@@ -294,10 +294,13 @@ class LireQueryEngine:
         (field, terms) pair per kernel, by posting estimate (operators.wand.
         postings_estimate over the same pinned snapshot the operators size
         them with). The operators pick each kernel's path themselves; the
-        response is an executed local relation on either path."""
+        response is an executed local relation on either path. A pinned
+        estimate of 0 is not logged: none of the kernel's terms is in the
+        dictionary, so the operator returns before calling it."""
         for field, terms in kernels:
-            self._dispatch_log.append(
-                postings_estimate(self._dict_map, field, terms))
+            est = postings_estimate(self._dict_map, field, terms)
+            if est != 0:
+                self._dispatch_log.append(est)
 
     def _dispatch_metrics(self) -> dict:
         """last_metrics fields naming the path that served the request:

@@ -17,12 +17,20 @@ producer/consumer/XML/Solr pipeline, ref: ParallelSolrIndexer.java:124-182,
     -> shard = docID // docs_per_shard       # document-sharded layout =
                                              # Solr collection shards
                                              # (ref: AddImages.java:46)
-    -> groupBy(shard,field) applyInArrow -> delta-gap+varint blocks of
-       <=block_size docs with per-block (max_tf, min_dl) WAND bounds
-    -> parquet partitioned by shard, sorted by (field,term) for row-group
-       stat pruning
-    + dictionary(field,term,df), meta.json (N, avgdl, versions), manifest
-      (per-shard lineage: docs_indexed, bytes_written, status) + metrics.
+    -> write_blocks: groupBy(shard,field[,gsalt]) applyInArrow ->
+       delta-gap+varint blocks of <=block_size docs with per-block
+       (max_tf, min_dl) WAND bounds, parquet partitioned by shard, sorted
+       by (field,term) for row-group stat pruning
+    -> write_manifest (per-shard lineage: term range, bytes_written,
+       docs_indexed, status) and write_dictionary (field,term,df) over the
+       written files
+    + meta.json (N, avgdl, versions) + metrics.
+
+write_blocks, write_manifest and write_dictionary are the one Spark write
+stage of every segment: this build, a Spark-path segment append
+(streaming.ingest) and both compactions (plans.compact) call them with
+their own docID/shard columns. plans.local_write is their pyarrow twin for
+writes small enough to run in the driver.
 
 Skew: hot terms ('import', 'return') appear in EVERY shard, so their
 posting-list build is split across shards by construction — the grouping key
@@ -46,7 +54,6 @@ import time
 from dataclasses import asdict, dataclass
 
 import numpy as np
-import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
@@ -55,7 +62,7 @@ from liresolr_spark.functions.codec import (
     delta_encode_blocked,
     varint_encode_slices,
 )
-from liresolr_spark.functions.tokenizer import hash_tokens_expr, tokenize_expr
+from liresolr_spark.functions.tokenizer import tokenize_expr
 from liresolr_spark.sources.corpus import assign_doc_ids
 
 BLOCK_SCHEMA = (
@@ -67,10 +74,9 @@ BLOCK_SCHEMA = (
 
 NATURAL_KEY = ["repo", "path", "commit"]
 
-# Blocks-stage Arrow groups are salted (see build_index group_salts) so one
-# group's posting rows stay near this bound regardless of shard size —
-# ~3 u64 numpy streams per row, so ~200 MB working set per task at the
-# default. Tuneable per deployment via the group_salts argument.
+# Blocks-stage Arrow groups are salted (see write_blocks) so one group's
+# posting rows stay near this bound regardless of shard size — ~3 u64
+# numpy streams per row, so ~200 MB working set per task at the default.
 TARGET_GROUP_ROWS = 8_000_000
 
 
@@ -412,6 +418,83 @@ def positional_postings_input(exploded: DataFrame) -> DataFrame:
     return text.unionByName(ha)
 
 
+def kernel_input(docs: DataFrame, with_hash_tokens: bool,
+                 with_positions: bool) -> DataFrame:
+    """docs(docID, shard, doclen, tokens) -> the block kernel's input:
+    lexical occurrence rows plus pre-aggregated hash rows on a positional
+    write (positional_postings_input), else tf rows (tf_aggregate)."""
+    exploded = exploded_terms(docs, with_hash_tokens, with_positions)
+    return (positional_postings_input(exploded) if with_positions
+            else tf_aggregate(exploded))
+
+
+def write_blocks(rows: DataFrame, blocks_dir: str, builder, postings: float,
+                 n_shards: int, mode: str = "append") -> int:
+    """Kernel-input `rows` (shard, field, term, docID, ...) -> encoded
+    blocks under `blocks_dir`, partitioned by shard and sorted by (field,
+    term, block_seq). Returns the number of term-hash salts per group.
+
+    One Arrow group is (shard, field, gsalt): each holds ~1/salts of one
+    shard's postings — balanced by construction (shard = docID range; the
+    term hash is uniform), and term-level grouping happens vectorized
+    inside the kernel. Grouping by (shard, field, term) instead would
+    create millions of tiny Arrow groups (per-group overhead dominates);
+    grouping by (shard, field) alone puts a whole shard in one task — the
+    memory ceiling at 100x scale. The salt count follows the group
+    estimate: ceil(postings per shard / TARGET_GROUP_ROWS), where
+    `postings` is the segment's Σ doclen (positional writes feed one row
+    per lexical token occurrence, positionless ones at most that many
+    aggregated postings) — 1 at small scale, no gsalt column. Blocks stay
+    term-contiguous (a term maps to one salt) and docID alignment is
+    untouched, so the output rows do not depend on the salt count."""
+    per_group = postings / max(n_shards, 1)
+    salts = max(1, int(-(-per_group // TARGET_GROUP_ROWS)))
+    keys = ["shard", "field"]
+    if salts > 1:
+        rows = rows.withColumn(
+            "gsalt", F.pmod(F.xxhash64("term"), F.lit(salts)).cast("int"))
+        keys.append("gsalt")
+    (rows.groupBy(*keys).applyInArrow(builder, schema=BLOCK_SCHEMA)
+     .sortWithinPartitions("field", "term", "block_seq")
+     .write.partitionBy("shard").mode(mode).parquet(blocks_dir))
+    return salts
+
+
+def write_manifest(spark: SparkSession, paths: dict, shards,
+                   mode: str = "append") -> None:
+    """Manifest rows (term range, block stream bytes, docs_indexed,
+    status='done') of the written shards the Column predicate `shards`
+    selects, from their blocks and docstats files. Partitioned by shard,
+    so a retried segment write drops its own rows (shard=N dirs) without
+    touching earlier ones."""
+    def read(key):
+        return spark.read.parquet(paths[key]).filter(shards).groupBy("shard")
+
+    (read("blocks").agg(
+        F.min("term").alias("term_lo"), F.max("term").alias("term_hi"),
+        F.sum(F.length("docids") + F.length("tfs")
+              + F.length("doclens")).alias("bytes_written"))
+     .join(read("docstats").agg(F.count("*").alias("docs_indexed")),
+           "shard", "full")
+     .withColumn("status", F.lit("done"))
+     .write.mode(mode).partitionBy("shard").parquet(paths["manifest"]))
+
+
+def write_dictionary(spark: SparkSession, paths: dict, shards, seg: int,
+                     mode: str = "append") -> None:
+    """The `seg=<seg>` dictionary fragment — df and max tf-norm per (field,
+    term) — over the written blocks of the shards `shards` selects. The
+    base build is segment 0; an appended or merged segment is its first
+    shard id, so a retried write deletes exactly its own fragment, and
+    queries sum df over fragments."""
+    (spark.read.parquet(paths["blocks"]).filter(shards)
+     .groupBy("field", "term")
+     .agg(F.sum("count").alias("df"),
+          F.max("max_tf_norm").alias("max_tf_norm"))
+     .withColumn("seg", F.lit(seg))
+     .write.mode(mode).partitionBy("seg").parquet(paths["dictionary"]))
+
+
 def build_index(
     corpus: DataFrame,
     index_dir: str,
@@ -422,25 +505,12 @@ def build_index(
     with_positions: bool = False,
     shard_waves: int = 1,
     max_waves: int | None = None,
-    group_salts: int | None = None,
     applied_epochs: list | None = None,
 ) -> dict:
     """Build (or resume) the index. Returns the per-stage metrics dict.
 
     shard_waves > 1 commits lineage incrementally (resume granularity);
     max_waves (tests only) stops early to simulate a killed build.
-
-    group_salts: within-shard term-hash salt on the blocks-stage group key —
-    one Arrow group then holds ~1/group_salts of a shard's postings instead
-    of ALL of them, so the per-task memory ceiling no longer forces
-    num_shards to grow with the data. Blocks stay term-contiguous (a term
-    maps to exactly one salt) and docID alignment is untouched, so the
-    output bytes are identical modulo file packing. Default None = ADAPTIVE:
-    salts = ceil(estimated postings per (shard, field) group /
-    TARGET_GROUP_ROWS), i.e. 1 at small scale (no overhead) and growing
-    automatically with data volume so a group's numpy working set stays
-    bounded (~TARGET_GROUP_ROWS * 3 u64 streams ~ a few hundred MB) no
-    matter how large a shard gets.
 
     applied_epochs: streaming-epoch ledger entries to commit WITH the meta —
     a foreachBatch first build passes its epoch so the ledger and the index
@@ -450,7 +520,9 @@ def build_index(
     spark = corpus.sparkSession
     p = _paths(index_dir)
     os.makedirs(index_dir, exist_ok=True)
-    metrics: dict = {"stages": {}, "hash_version": HASH_VERSION}
+    # group_salts: write_blocks' salt count (None when no wave ran)
+    metrics: dict = {"stages": {}, "hash_version": HASH_VERSION,
+                     "group_salts": None}
     t_all = time.time()
 
     def stage(name):
@@ -513,14 +585,6 @@ def build_index(
         "shard", (F.col("docID") / F.lit(docs_per_shard)).cast("int")
     )
     avgdl = total_doclen / n_docs if n_docs else 0.0
-    if group_salts is None:
-        # adaptive: tf rows per (shard, field) group <= tokens per shard
-        # positional builds feed one kernel row per LEXICAL token
-        # occurrence (~total_doclen rows), positionless ones at most that
-        # many aggregated postings — the same bound either way
-        per_group = total_doclen / max(num_shards, 1)
-        group_salts = max(1, int(-(-per_group // TARGET_GROUP_ROWS)))
-    metrics["group_salts"] = group_salts
 
     all_shards = list(range(num_shards))
     todo = [s for s in all_shards if s not in done_shards]
@@ -542,67 +606,20 @@ def build_index(
             docstats.write.mode("append").partitionBy("shard").parquet(p["docstats"])
 
         with stage("postings_tf"):
-            exploded = exploded_terms(wave, with_hash_tokens, with_positions)
-            # positional: lexical occurrence rows straight to the kernel,
-            # ha pre-aggregated (see positional_postings_input)
-            tf = (positional_postings_input(exploded) if with_positions
-                  else tf_aggregate(exploded))
+            tf = kernel_input(wave, with_hash_tokens, with_positions)
 
         with stage("blocks"):
-            # group per (shard, field, term-hash salt): bounded groups, each
-            # ~1/group_salts of one shard's postings — balanced by
-            # construction (shard = docID range; term hash is uniform),
-            # term-level grouping happens vectorized inside the kernel.
-            # Grouping by (shard,field,term) instead would create millions
-            # of tiny Arrow groups (per-group overhead dominates); grouping
-            # by (shard,field) alone puts a whole shard in one task — the
-            # build's memory ceiling at 100x scale.
-            if group_salts > 1:
-                salted = tf.withColumn(
-                    "gsalt",
-                    F.pmod(F.xxhash64("term"), F.lit(group_salts)).cast("int"))
-                blocks = salted.groupBy("shard", "field", "gsalt").applyInArrow(
-                    builder, schema=BLOCK_SCHEMA)
-            else:
-                blocks = tf.groupBy("shard", "field").applyInArrow(
-                    builder, schema=BLOCK_SCHEMA)
-            (blocks.sortWithinPartitions("field", "term", "block_seq")
-             .write.partitionBy("shard").mode("append").parquet(p["blocks"]))
+            metrics["group_salts"] = write_blocks(
+                tf, p["blocks"], builder, total_doclen, num_shards)
 
         with stage("manifest"):
-            all_blocks = spark.read.parquet(p["blocks"]).filter(
-                F.col("shard").isin(wave_shards))
-            shard_stats = all_blocks.groupBy("shard").agg(
-                F.min("term").alias("term_lo"),
-                F.max("term").alias("term_hi"),
-                F.sum(F.length("docids") + F.length("tfs")
-                      + F.length("doclens")).alias("bytes_written"),
-            )
-            shard_docs = (
-                spark.read.parquet(p["docstats"])
-                .filter(F.col("shard").isin(wave_shards))
-                .groupBy("shard").agg(F.count("*").alias("docs_indexed"))
-            )
-            manifest = shard_stats.join(shard_docs, "shard", "full").withColumn(
-                "status", F.lit("done"))
-            # partitioned by shard so a segment append's retry can drop its
-            # own manifest rows (shard=N dirs) without touching earlier ones
-            manifest.write.mode("append").partitionBy("shard").parquet(p["manifest"])
+            write_manifest(spark, p, F.col("shard").isin(wave_shards))
 
     finished = (max_waves is None) or (len(wave_lists) == waves)
     if finished:
         # ---- dictionary: df per (field, term) across ALL shards --------------
         with stage("dictionary"):
-            all_blocks = spark.read.parquet(p["blocks"])
-            dictionary = all_blocks.groupBy("field", "term").agg(
-                F.sum("count").alias("df"),
-                F.max("max_tf_norm").alias("max_tf_norm"),
-            )
-            # seg= partition layout: the base build is segment 0; appended
-            # segments add seg=<base_shard> fragment dirs, so a retried
-            # append can delete exactly its own fragment (idempotency)
-            (dictionary.withColumn("seg", F.lit(0))
-             .write.mode("overwrite").partitionBy("seg").parquet(p["dictionary"]))
+            write_dictionary(spark, p, F.lit(True), 0, mode="overwrite")
 
         meta = IndexMeta(
             n_docs=n_docs, avgdl=avgdl, num_shards=num_shards,
@@ -618,8 +635,11 @@ def build_index(
 
     if ranged_part is not None:
         ranged_part.unpersist()
+    from liresolr_spark.plans.local_write import segment_bytes
+
     metrics["n_docs"] = n_docs
     metrics["finished"] = finished
+    metrics["bytes_written"] = segment_bytes(p["manifest"], 0)
     metrics["wall_sec"] = round(time.time() - t_all, 3)
     metrics["files_per_sec"] = round(n_docs / max(metrics["wall_sec"], 1e-9), 2)
     with open(p["metrics"], "w") as f:

@@ -45,13 +45,14 @@ writes through `plans.local_write` — no Spark job. A larger merge runs
 `_SparkMerge`. Both keep the two-phase commit: marker -> new dirs ->
 delete old dirs -> meta -> marker removed.
 
-Scale shape: everything is DataFrame + the existing Arrow kernels; the
-decode pass reads only the block streams (no content — compaction never
-needs the original corpus), the docID remap is an equi-join, and block
-rebuild reuses the adaptive group-salt bound. Output lands in `out_dir`
-(a complete new index); `in_place=True` swaps directories afterwards —
-atomic enough for the single-writer local layout, and on a real deployment
-the swap is an Iceberg snapshot commit / HDFS dir rename.
+Scale shape: `compact_index` and `_SparkMerge` share one Spark body,
+`_rewrite`, and the build's write stage (`plans.build.write_blocks`,
+`write_manifest`, `write_dictionary`); the decode reads only the block
+streams (never the corpus) and the docID remap is an equi-join. Output
+lands in `out_dir` (a complete new index); `in_place=True` swaps
+directories afterwards — atomic enough for the single-writer local layout,
+and on a real deployment the swap is an Iceberg snapshot commit / HDFS dir
+rename.
 """
 
 from __future__ import annotations
@@ -70,13 +71,14 @@ from pyspark.sql import SparkSession
 from liresolr_spark import BM25_B, BM25_K1, INDEX_FORMAT_VERSION
 from liresolr_spark.operators import wand
 from liresolr_spark.plans.build import (
-    BLOCK_SCHEMA,
-    TARGET_GROUP_ROWS,
     IndexMeta,
     _block_builder,
     _paths,
     load_tombstones,
     read_meta,
+    write_blocks,
+    write_dictionary,
+    write_manifest,
     write_meta,
 )
 from liresolr_spark.plans.local_write import (build_blocks, read_table,
@@ -152,6 +154,27 @@ def _decoded_postings(blocks_df, with_positions: bool = False):
     return blocks_df.select(*cols).mapInPandas(explode, schema=schema)
 
 
+def _rewrite(ranked, blocks, paths: dict, docid, shard, builder,
+             with_positions: bool, doclen: float, n_shards: int,
+             mode: str) -> None:
+    """The Spark body of both compactions: write the live docs `ranked`
+    (assign_doc_ids over old_docID) under the new `docid`/`shard` columns,
+    then decode `blocks`, move each posting to its doc's new docID and
+    shard — the inner join drops tombstoned postings — and rebuild the
+    blocks with `builder` (positions ride as pre-encoded per-posting byte
+    slices, so the remap never recodes them)."""
+    stats = ["repo", "path", "commit", "lang", "doclen", "sha256"]
+    (ranked.select(docid.alias("docID"), shard.alias("shard"), *stats)
+     .write.mode(mode).partitionBy("shard").parquet(paths["docstats"]))
+    id_map = ranked.select(F.col("old_docID").alias("docID"),
+                           docid.alias("new_docID"), shard.alias("shard"))
+    remapped = (
+        _decoded_postings(blocks, with_positions).join(id_map, "docID")
+        .select("shard", "field", "term", F.col("new_docID").alias("docID"),
+                "tf", "doclen", *(["positions"] if with_positions else [])))
+    write_blocks(remapped, paths["blocks"], builder, doclen, n_shards, mode)
+
+
 def compact_index(
     spark: SparkSession,
     index_dir: str,
@@ -159,7 +182,6 @@ def compact_index(
     num_shards: int | None = None,
     block_size: int | None = None,
     in_place: bool = False,
-    group_salts: int | None = None,
 ) -> dict:
     """Merge all segments of `index_dir` into a fresh index at `out_dir`
     (default `<index_dir>.compact`), dropping tombstoned docs and
@@ -208,64 +230,13 @@ def compact_index(
     blk = block_size or meta.block_size
     docs_per_shard = max(1, -(-n_docs // n_shards))
 
-    mapped = mapped.withColumn(
-        "shard", (F.col("docID") / F.lit(docs_per_shard)).cast("int"))
-
-    new_docstats = mapped.select(
-        "docID", "shard", "repo", "path", "commit", "lang", "doclen",
-        "sha256")
-    new_docstats.write.mode("overwrite").partitionBy("shard") \
-        .parquet(p_out["docstats"])
-
-    # postings: decode -> remap docIDs -> rebuild blocks under the new avgdl
-    # (positions ride as pre-encoded per-posting byte slices — see
-    # _decoded_postings — so the remap never recodes them)
-    pos_cols = ["positions"] if meta.with_positions else []
-    postings = _decoded_postings(spark.read.parquet(p_in["blocks"]),
-                                 with_positions=meta.with_positions)
-    id_map = mapped.select(
-        F.col("old_docID").alias("docID"),
-        F.col("docID").alias("new_docID"), "shard")
-    remapped = (
-        postings.join(id_map, "docID")  # inner join drops tombstoned postings
-        .select("shard", "field", "term",
-                F.col("new_docID").alias("docID"), "tf", "doclen", *pos_cols)
-    )
-
-    if group_salts is None:
-        per_group = total_doclen / max(n_shards, 1)
-        group_salts = max(1, int(-(-per_group // TARGET_GROUP_ROWS)))
-    builder = _block_builder(blk, BM25_K1, BM25_B, avgdl)
-    if group_salts > 1:
-        salted = remapped.withColumn(
-            "gsalt", F.pmod(F.xxhash64("term"), F.lit(group_salts)).cast("int"))
-        blocks = salted.groupBy("shard", "field", "gsalt").applyInArrow(
-            builder, schema=BLOCK_SCHEMA)
-    else:
-        blocks = remapped.groupBy("shard", "field").applyInArrow(
-            builder, schema=BLOCK_SCHEMA)
-    (blocks.sortWithinPartitions("field", "term", "block_seq")
-     .write.partitionBy("shard").mode("overwrite").parquet(p_out["blocks"]))
-
-    all_blocks = spark.read.parquet(p_out["blocks"])
-    manifest = (
-        all_blocks.groupBy("shard").agg(
-            F.min("term").alias("term_lo"),
-            F.max("term").alias("term_hi"),
-            F.sum(F.length("docids") + F.length("tfs")
-                  + F.length("doclens")).alias("bytes_written"))
-        .join(new_docstats.groupBy("shard")
-              .agg(F.count("*").alias("docs_indexed")), "shard", "full")
-        .withColumn("status", F.lit("done"))
-    )
-    manifest.write.mode("overwrite").partitionBy("shard") \
-        .parquet(p_out["manifest"])
-
-    (all_blocks.groupBy("field", "term")
-     .agg(F.sum("count").alias("df"), F.max("max_tf_norm").alias("max_tf_norm"))
-     .withColumn("seg", F.lit(0))
-     .write.mode("overwrite").partitionBy("seg").parquet(p_out["dictionary"]))
-
+    _rewrite(mapped, spark.read.parquet(p_in["blocks"]), p_out,
+             F.col("docID"),
+             (F.col("docID") / F.lit(docs_per_shard)).cast("int"),
+             _block_builder(blk, BM25_K1, BM25_B, avgdl),
+             meta.with_positions, total_doclen, n_shards, "overwrite")
+    write_manifest(spark, p_out, F.lit(True), mode="overwrite")
+    write_dictionary(spark, p_out, F.lit(True), 0, mode="overwrite")
     cache_handle and cache_handle.unpersist()
 
     new_meta = IndexMeta(
@@ -290,6 +261,7 @@ def compact_index(
         "dropped_docs": int(docstats.count()) - n_docs,
         "num_shards": n_shards,
         "avgdl": avgdl,
+        "bytes_written": segment_bytes(p_out["manifest"], 0),
         "wall_sec": round(time.time() - t0, 3),
         "out_dir": out,
     }
@@ -547,58 +519,17 @@ class _SparkMerge:
     def write(self, new_base: int, meta: IndexMeta, avgdl: float,
               merge_seg_ids: list[int]) -> None:
         spark, p = self.spark, self.p
-        new_map = self.ranked.select(
-            F.col("old_docID").alias("docID"),
-            (F.lit(new_base) + (F.col("docID") / F.lit(meta.docs_per_shard))
-             .cast("int")).alias("shard"),
-            "repo", "path", "commit", "lang", "doclen", "sha256")
-        new_map.write.mode("append").partitionBy("shard").parquet(
-            p["docstats"])
-
-        shard_of = new_map.select("docID", "shard")
-        merged_blocks = spark.read.parquet(p["blocks"]).filter(
+        merged = spark.read.parquet(p["blocks"]).filter(
             F.col("shard").isin(self.merge_shards))
-        pos_cols = ["positions"] if meta.with_positions else []
-        postings = _decoded_postings(merged_blocks,
-                                     with_positions=meta.with_positions)
-        remapped = postings.join(shard_of, "docID").select(
-            "shard", "field", "term", "docID", "tf", "doclen", *pos_cols)
-
-        new_shards = -(-self.n_live // meta.docs_per_shard)
-        group_salts = max(1, int(-(-(self.live_doclen / max(new_shards, 1))
-                                   // TARGET_GROUP_ROWS)))
-        builder = _block_builder(meta.block_size, BM25_K1, BM25_B, avgdl)
-        if group_salts > 1:
-            salted = remapped.withColumn(
-                "gsalt",
-                F.pmod(F.xxhash64("term"), F.lit(group_salts)).cast("int"))
-            blocks = salted.groupBy("shard", "field", "gsalt").applyInArrow(
-                builder, schema=BLOCK_SCHEMA)
-        else:
-            blocks = remapped.groupBy("shard", "field").applyInArrow(
-                builder, schema=BLOCK_SCHEMA)
-        (blocks.sortWithinPartitions("field", "term", "block_seq")
-         .write.partitionBy("shard").mode("append").parquet(p["blocks"]))
-
-        # the fresh segment's blocks feed BOTH the manifest and the
-        # dictionary fragment: persist across the two scans (tiny —
-        # just-written segment)
-        seg_blocks = spark.read.parquet(p["blocks"]).filter(
-            F.col("shard") >= new_base).persist()
-        (seg_blocks.groupBy("shard").agg(
-            F.min("term").alias("term_lo"), F.max("term").alias("term_hi"),
-            F.sum(F.length("docids") + F.length("tfs")
-                  + F.length("doclens")).alias("bytes_written"))
-         .join(new_map.groupBy("shard").agg(
-             F.count("*").alias("docs_indexed")), "shard", "full")
-         .withColumn("status", F.lit("done"))
-         .write.mode("append").partitionBy("shard").parquet(p["manifest"]))
-        (seg_blocks.groupBy("field", "term")
-         .agg(F.sum("count").alias("df"),
-              F.max("max_tf_norm").alias("max_tf_norm"))
-         .withColumn("seg", F.lit(new_base))
-         .write.mode("append").partitionBy("seg").parquet(p["dictionary"]))
-        seg_blocks.unpersist()
+        shard = F.lit(new_base) + (F.col("docID")
+                                   / F.lit(meta.docs_per_shard)).cast("int")
+        _rewrite(self.ranked, merged, p, F.col("old_docID"), shard,
+                 _block_builder(meta.block_size, BM25_K1, BM25_B, avgdl),
+                 meta.with_positions, self.live_doclen,
+                 -(-self.n_live // meta.docs_per_shard), "append")
+        segment = F.col("shard") >= new_base
+        write_manifest(spark, p, segment)
+        write_dictionary(spark, p, segment, new_base)
 
         # tombstones recorded by merged segments but targeting docs we did
         # NOT rebuild (base / kept segments) must survive under the new

@@ -102,8 +102,8 @@ def write_segment(blocks: pa.Table, docs: pa.Table, paths: dict,
                   seg: int) -> None:
     """Write a segment's blocks, then the manifest and the dictionary
     fragment (`seg=<seg>`) derived from the in-memory `blocks` and the
-    segment's docstats rows `docs` — the rows the Spark plans aggregate
-    from the just-written files."""
+    segment's docstats rows `docs` — the rows `plans.build.write_manifest`
+    and `write_dictionary` aggregate from the just-written files."""
     write_partitions(blocks, paths["blocks"], "blocks", "shard",
                      ["field", "term", "block_seq"])
 

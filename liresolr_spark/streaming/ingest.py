@@ -33,10 +33,11 @@ from the JVM — and `_append_in_driver` derives the within-batch winners,
 docIDs, hash tokens, kernel input and tombstones in the driver, runs the
 same `plans.build._block_builder` closure once per (shard, field) group
 and writes every artifact with pyarrow (`plans.local_write`): 2 Spark jobs
-in all. A larger batch keeps the Spark plans (`_append_in_spark`). Both
-paths write the same rows under the same cleanup -> write -> meta-commit
-order (tests/test_write_paths.py), and the result's `write_path` says
-which one ran.
+in all. A larger batch runs `_append_in_spark`, which writes through the
+build's Spark write stage (`plans.build.write_blocks`, `write_manifest`,
+`write_dictionary`). Both paths write the same rows under the same
+cleanup -> write -> meta-commit order (tests/test_write_paths.py), and
+the result's `write_path` says which one ran.
 
 Live query engines cache index handles; after a committed append, call
 `LireQueryEngine.refresh()` (the Solr searcher-reopen analog) to pick up
@@ -70,10 +71,14 @@ from liresolr_spark.plans.build import (
     _block_builder,
     _paths,
     build_index,
+    kernel_input,
+    load_tombstones,
     read_meta,
+    write_blocks,
+    write_dictionary,
+    write_manifest,
     write_meta,
 )
-from liresolr_spark.plans.build import BLOCK_SCHEMA
 from liresolr_spark.plans.local_write import segment_bytes
 from liresolr_spark.functions.tokenizer import tokenize_expr
 from liresolr_spark.sources.corpus import assign_doc_ids
@@ -281,64 +286,16 @@ def _append_in_spark(batch: DataFrame, index_dir: str, meta,
      .select("docID", F.col("shard").cast("int").alias("shard"))
      .withColumn("seg", F.lit(base_shard))
      .write.mode("append").partitionBy("seg").parquet(p["tombstones"]))
-    from liresolr_spark.plans.build import load_tombstones
-
     n_tombs = load_tombstones(spark, index_dir).filter(
         F.col("seg") == base_shard).count()
 
-    from liresolr_spark.plans.build import (
-        exploded_terms, positional_postings_input, tf_aggregate)
-
-    exploded = exploded_terms(docs, with_hash_tokens=True,
-                              with_positions=meta.with_positions)
-    # positional: lexical occurrence rows straight to the kernel, ha
-    # pre-aggregated (see plans.build.positional_postings_input)
-    tf = (positional_postings_input(exploded) if meta.with_positions
-          else tf_aggregate(exploded))
     builder = _block_builder(meta.block_size, BM25_K1, BM25_B,
                              _segment_avgdl(meta, n_new, dl_new))
-    # same adaptive within-shard term-hash salt as the batch build: bounds
-    # one Arrow group's postings regardless of segment size (see
-    # build_index group_salts / TARGET_GROUP_ROWS)
-    from liresolr_spark.plans.build import TARGET_GROUP_ROWS
-
-    n_seg_shards = max(new_shard_hi - base_shard, 1)
-    group_salts = max(1, int(-(-(dl_new / n_seg_shards) // TARGET_GROUP_ROWS)))
-    if group_salts > 1:
-        salted = tf.withColumn(
-            "gsalt", F.pmod(F.xxhash64("term"), F.lit(group_salts)).cast("int"))
-        blocks = salted.groupBy("shard", "field", "gsalt").applyInArrow(
-            builder, schema=BLOCK_SCHEMA)
-    else:
-        blocks = tf.groupBy("shard", "field").applyInArrow(
-            builder, schema=BLOCK_SCHEMA)
-    (blocks.sortWithinPartitions("field", "term", "block_seq")
-     .write.partitionBy("shard").mode("append").parquet(p["blocks"]))
-
-    seg_blocks = spark.read.parquet(p["blocks"]).filter(
-        F.col("shard") >= base_shard)
-    manifest = (
-        seg_blocks.groupBy("shard").agg(
-            F.min("term").alias("term_lo"),
-            F.max("term").alias("term_hi"),
-            F.sum(F.length("docids") + F.length("tfs")
-                  + F.length("doclens")).alias("bytes_written"))
-        .join(
-            spark.read.parquet(p["docstats"])
-            .filter(F.col("shard") >= base_shard)
-            .groupBy("shard").agg(F.count("*").alias("docs_indexed")),
-            "shard", "full")
-        .withColumn("status", F.lit("done"))
-    )
-    manifest.write.mode("append").partitionBy("shard").parquet(p["manifest"])
-
-    # segment dictionary fragment: df per term for THIS segment only, under
-    # its own seg=<base_shard> partition dir (idempotent retry unit);
-    # queries merge fragments by summing df per (field, term)
-    (seg_blocks.groupBy("field", "term")
-     .agg(F.sum("count").alias("df"), F.max("max_tf_norm").alias("max_tf_norm"))
-     .withColumn("seg", F.lit(base_shard))
-     .write.mode("append").partitionBy("seg").parquet(p["dictionary"]))
+    write_blocks(kernel_input(docs, True, meta.with_positions), p["blocks"],
+                 builder, dl_new, new_shard_hi - base_shard)
+    segment = F.col("shard") >= base_shard
+    write_manifest(spark, p, segment)
+    write_dictionary(spark, p, segment, base_shard)
 
     if ranged_part is not None:
         ranged_part.unpersist()
@@ -495,8 +452,6 @@ def maintain_index(
         # merge itself drops them, so counting them would keep a mostly-
         # superseded merged segment above its tier forever): one
         # O(#shards)-row agg
-        from liresolr_spark.plans.build import load_tombstones
-
         stats = spark.read.parquet(f"{index_dir}/docstats")
         tombs = load_tombstones(spark, index_dir)
         if tombs is not None:

@@ -117,16 +117,23 @@ def test_group_salt_is_query_invariant(spark, corpus200, tmp_path_factory):
     """The blocks-stage term-hash salt (the 100x-scale memory bound) must
     not change ANY observable: same dictionary df, same WAND top-k ids and
     scores — only the grouping of work differs."""
+    import math
+
     import pyspark.sql.functions as F
 
+    import liresolr_spark.plans.build as build
     from liresolr_spark.functions.tokenizer import py_tokenize
     from liresolr_spark.operators.wand import wand_topk
     from liresolr_spark.plans.build import build_index
 
     d1 = str(tmp_path_factory.mktemp("salt1"))
     d4 = str(tmp_path_factory.mktemp("salt4"))
-    m1 = build_index(corpus200, d1, num_shards=4, block_size=64, group_salts=1)
-    m4 = build_index(corpus200, d4, num_shards=4, block_size=64, group_salts=4)
+    m1 = build_index(corpus200, d1, num_shards=4, block_size=64)
+    # 4 salts: TARGET_GROUP_ROWS at a quarter of one shard's tokens
+    total = build.read_meta(d1).total_doclen
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(build, "TARGET_GROUP_ROWS", math.ceil(total / 4 / 4))
+        m4 = build_index(corpus200, d4, num_shards=4, block_size=64)
     assert m1["group_salts"] == 1 and m4["group_salts"] == 4
 
     dict1 = {(r["field"], r["term"]): r["df"]

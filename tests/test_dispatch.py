@@ -258,6 +258,10 @@ def test_engine_records_dispatch(spark, pos_index, vocab, monkeypatch):
         assert eng.last_metrics["resident"] is resident
         eng.similar(vocab[0], rows=3).collect()
         assert eng.last_metrics["dispatch"] == path
+        # no query term is in the dictionary: no kernel runs on any leg
+        eng.search(text="qqqnotaterm zzzalsonot", rows=3).collect()
+        assert eng.last_metrics["dispatch"] is None
+        assert eng.last_metrics["postings_est"] == 0
     # one dispatch over the bound puts the whole request on Spark: the
     # MUST clause alone fits, the scored SHOULD+MUST set does not
     eng = engines[True]

@@ -8,7 +8,9 @@ rows, binary block streams included, under the same Spark-read schema,
 with the same meta.json. Both a positional and a positionless index are
 covered; the batch carries overwrites of base keys, two versions of one
 key (and a commit tie broken by the content md5), non-ASCII keys and
-content, and one empty-content doc."""
+content, and one empty-content doc. A third leg, `spark_salted`, runs the
+Spark stages with TARGET_GROUP_ROWS monkeypatched to 50, so every block
+write groups by a term-hash salt; its rows must not change either."""
 
 from __future__ import annotations
 
@@ -21,14 +23,32 @@ import pyspark.sql.functions as F
 import pytest
 
 import liresolr_spark.operators.wand as wand
+import liresolr_spark.plans.build as build
+import liresolr_spark.plans.compact as compact
+import liresolr_spark.streaming.ingest as ingest
 from liresolr_spark.plans.build import build_index
-from liresolr_spark.plans.compact import compact_segments
+from liresolr_spark.plans.compact import compact_index, compact_segments
 from liresolr_spark.sources.corpus import CORPUS_SCHEMA
 from liresolr_spark.streaming.ingest import append_segment
 from test_dispatch import _jobs_run
 
 ARTIFACTS = ["docstats", "blocks", "dictionary", "manifest", "tombstones"]
 LEGS = ["driver", "spark"]
+SALTED = "spark_salted"
+
+
+def _salted(mp, salts: list) -> None:
+    """Force salted Spark block writes (TARGET_GROUP_ROWS = 50) and record
+    the salt count of every write_blocks call in `salts`."""
+    write_blocks = build.write_blocks
+
+    def record(*a, **kw):
+        salts.append(write_blocks(*a, **kw))
+        return salts[-1]
+
+    mp.setattr(build, "TARGET_GROUP_ROWS", 50)
+    for mod in (build, compact, ingest):
+        mp.setattr(mod, "write_blocks", record)
 
 
 def _snapshot(spark, d: str) -> dict:
@@ -86,16 +106,19 @@ def legs(request, spark, corpus200, tmp_path_factory):
     Spark job count."""
     root = tmp_path_factory.mktemp("write_paths")
     base = str(root / "base")
-    build_index(corpus200.filter(F.crc32(F.col("path")) % 10 < 3), base,
-                num_shards=3, block_size=32, with_positions=request.param)
+    built = build_index(corpus200.filter(F.crc32(F.col("path")) % 10 < 3),
+                        base, num_shards=3, block_size=32,
+                        with_positions=request.param)
     b1, b2 = _batches(spark, corpus200)
-    out = {"base": _snapshot(spark, base)}
-    for leg in LEGS:
+    out = {"base": _snapshot(spark, base), "build": built, "root": root}
+    for leg in LEGS + [SALTED]:
         d = str(root / leg)
         shutil.copytree(base, d)
         with pytest.MonkeyPatch.context() as mp:
-            if leg == "spark":
+            if leg != "driver":
                 mp.setattr(wand, "DRIVER_MAX_POSTINGS", 0)
+            if leg == SALTED:
+                _salted(mp, out.setdefault("salts", []))
             a1, j1 = _jobs_run(spark, lambda: append_segment(b1, d))
             s1 = _snapshot(spark, d)
             a2, j2 = _jobs_run(spark, lambda: append_segment(b2, d))
@@ -116,6 +139,35 @@ def test_driver_and_spark_segments_row_identical(legs, stage):
         assert drv[art][1] == spk[art][1], art
         if art in legs["base"]:
             assert drv[art][0] == legs["base"][art][0], art
+
+
+@pytest.mark.parametrize("stage", ["after_append", "after_merge"])
+def test_salted_spark_segments_row_identical(legs, stage):
+    """Salted Spark writes (append, append, merge) hold the driver's rows."""
+    assert len(legs["salts"]) == 3 and min(legs["salts"]) >= 2, legs["salts"]
+    drv, salted = legs["driver"][stage], legs[SALTED][stage]
+    assert drv["meta"] == salted["meta"]
+    assert set(drv) == set(salted)
+    for art in ARTIFACTS:
+        assert drv[art] == salted[art], art
+
+
+def test_compact_index_salted_rows_identical(spark, legs):
+    """compact_index writes the same rows with and without a group salt,
+    and returns the manifest's Σ bytes_written, as build_index does."""
+    src, root = str(legs["root"] / "spark"), legs["root"]
+    plain = compact_index(spark, src, out_dir=str(root / "full_plain"))
+    salts: list = []
+    with pytest.MonkeyPatch.context() as mp:
+        _salted(mp, salts)
+        compact_index(spark, src, out_dir=str(root / "full_salted"))
+    assert salts and min(salts) >= 2, salts
+    snaps = [_snapshot(spark, str(root / d))
+             for d in ("full_plain", "full_salted")]
+    assert snaps[0] == snaps[1]
+    for m, snap in ((plain, snaps[0]), (legs["build"], legs["base"])):
+        assert m["bytes_written"] == sum(r[2] or 0 for r in snap["manifest"][1])
+        assert m["bytes_written"] > 0
 
 
 def test_write_results_say_where_they_ran(legs):
