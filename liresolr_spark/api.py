@@ -12,7 +12,9 @@ become driver rows at one point (_collect) whichever path its shard kernels
 took (operators.wand.kernel_dispatch); pagination, the identity/similar
 steps and the payload merge run in pandas, so the caller's collect() runs
 no job. The non-kernel handlers (function_sort, random_sample) return a
-lazy plan.
+lazy plan. The term-query handlers (search, search_many and the
+multi-term rewrites) share one step, _serve: a single query is served as
+the batch of one.
 
 A small index is DRIVER-RESIDENT (see _open): its posting blocks, the
 docstats payload and the tombstones are read into driver memory once per
@@ -23,7 +25,8 @@ local relation touches Spark. A larger index reads its blocks, masks and
 payload through Spark jobs.
 Per-request metrics are returned alongside via `last_metrics` — the analog
 of RawDocsSearchTime / ReRankSearchTime in the reference's responses
-(ref: LireRequestHandler.java:460-461,493-494).
+(ref: LireRequestHandler.java:460-461,493-494); its dispatch path is
+recorded by each shard kernel where the path is picked (_counted).
 """
 
 from __future__ import annotations
@@ -42,11 +45,9 @@ from liresolr_spark import DEFAULT_CANDIDATES, DEFAULT_ROWS, MAX_QUERY_TERMS
 from liresolr_spark.frames import driver_table, empty_pdf, local_frame
 from liresolr_spark.functions.codec import decode_block
 from liresolr_spark.functions.tokenizer import py_hash_token, py_tokenize
-from liresolr_spark.operators.wand import (MANY_SCHEMA, WAND_SCHEMA,
-                                           BlockSnapshot, _spark_side,
-                                           _wand_topk, _wand_topk_many,
-                                           kernel_dispatch, postings_estimate,
-                                           top_k)
+from liresolr_spark.operators.wand import (MANY_SCHEMA, BlockSnapshot,
+                                           _kernel_log, _spark_side,
+                                           _wand_topk, kernel_dispatch, top_k)
 # unused here; perfbench's layer tracer hooks it by name as api.wand_topk
 from liresolr_spark.operators.wand import wand_topk  # noqa: F401
 from liresolr_spark.plans.build import load_tombstones, read_meta
@@ -58,17 +59,19 @@ def _counted(fn):
     (ref: LireRequestHandler.java:51-53, reported at :568-574). Timed span
     is the handler call: the whole execution for a kernel-backed handler
     (see the module docstring), plan construction for function_sort and
-    random_sample. Also resets the request's `last_metrics` and
-    shard-kernel dispatch log (_dispatch), and fills in the keys every
-    request has: RawDocsSearchTime_ms (the timed span) and its older name
-    RawDocsSearchTime_planning_ms (same value), resident (the engine
-    serves from a driver-resident snapshot, see _open), dispatch and
-    postings_est (_dispatch_metrics). Handlers add their own fields."""
+    random_sample. Also resets the request's `last_metrics`, sets the
+    request's shard-kernel log (operators.wand._kernel_log: the posting
+    estimate of every kernel it runs, appended where its path is picked)
+    and fills in the keys every request has: RawDocsSearchTime_ms (the
+    timed span) and its older name RawDocsSearchTime_planning_ms (same
+    value), resident (the engine serves from a driver-resident snapshot,
+    see _open), dispatch and postings_est (_dispatch_metrics). Handlers
+    add their own fields."""
 
     @functools.wraps(fn)
     def wrapper(self, *a, **kw):
         t0 = time.time()
-        self._dispatch_log = []
+        log = _kernel_log.set([])
         self.last_metrics = {}
         self.request_stats["numRequests"] += 1
         try:
@@ -79,13 +82,28 @@ def _counted(fn):
         finally:
             ms = (time.time() - t0) * 1000.0
             self.request_stats["totalTime_ms"] += ms
+            kernels = _kernel_log.get()
+            _kernel_log.reset(log)
         ms = round(ms, 1)
         self.last_metrics.update(
             RawDocsSearchTime_ms=ms, RawDocsSearchTime_planning_ms=ms,
-            resident=self.resident, **self._dispatch_metrics())
+            resident=self.resident, **_dispatch_metrics(kernels))
         return out
 
     return wrapper
+
+
+def _dispatch_metrics(kernels: list) -> dict:
+    """last_metrics fields naming the path that served a request, from the
+    posting estimates of the shard kernels it ran: dispatch = 'driver'
+    when every kernel ran in the driver process, 'spark' when at least one
+    ran as a pandas-UDF stage, None when no kernel ran; postings_est = the
+    summed estimate (None when the dictionary is not pinned)."""
+    if not kernels:
+        return {"dispatch": None, "postings_est": 0}
+    paths = {kernel_dispatch(p) for p in kernels}
+    return {"dispatch": "spark" if "spark" in paths else "driver",
+            "postings_est": None if None in kernels else sum(kernels)}
 
 
 def _unpersist(sides) -> None:
@@ -146,7 +164,6 @@ class LireQueryEngine:
         self.index_dir = index_dir
         self.pin_blocks = pin_blocks
         self.last_metrics: dict = {}
-        self._dispatch_log: list[int | None] = []
         self.request_stats: dict = {
             "numRequests": 0, "numErrors": 0, "totalTime_ms": 0.0}
         from collections import OrderedDict
@@ -289,43 +306,19 @@ class LireQueryEngine:
 
     # -- internals ----------------------------------------------------------
 
-    def _dispatch(self, *kernels) -> None:
-        """Log the request's shard-kernel dispatches for last_metrics, one
-        (field, terms) pair per kernel, by posting estimate (operators.wand.
-        postings_estimate over the same pinned snapshot the operators size
-        them with). The operators pick each kernel's path themselves; the
-        response is an executed local relation on either path. A pinned
-        estimate of 0 is not logged: none of the kernel's terms is in the
-        dictionary, so the operator returns before calling it."""
-        for field, terms in kernels:
-            est = postings_estimate(self._dict_map, field, terms)
-            if est != 0:
-                self._dispatch_log.append(est)
-
-    def _dispatch_metrics(self) -> dict:
-        """last_metrics fields naming the path that served the request:
-        dispatch = 'driver' when every shard kernel of the request ran in
-        the driver process, 'spark' when at least one ran as a pandas-UDF
-        stage, None when no kernel ran; postings_est = the summed posting
-        estimate (None when the dictionary is not pinned)."""
-        log = self._dispatch_log
-        if not log:
-            return {"dispatch": None, "postings_est": 0}
-        paths = {kernel_dispatch(p) for p in log}
-        return {"dispatch": "spark" if "spark" in paths else "driver",
-                "postings_est": (None if None in log else sum(log))}
-
-    def _wand(self, terms, k, field, restriction) -> pd.DataFrame:
-        """WAND top-k of `terms` — or of every query of a {qid: terms}
-        batch — under `restriction` (_restriction), as driver rows in
-        response order (_collect)."""
+    def _wand(self, queries, k, field, restriction) -> pd.DataFrame:
+        """WAND top-k of every query of a {qid: terms} batch — or of one
+        term list, the batch of one returned without its qid column —
+        under `restriction` (_restriction), as driver rows in response
+        order (_collect)."""
         allow, deny = restriction
-        op = _wand_topk_many if isinstance(terms, dict) else _wand_topk
-        return _collect(op(
-            self.spark, self.index_dir, terms, k=k, field=field,
+        batch = queries if isinstance(queries, dict) else {"": queries}
+        hits = _collect(_wand_topk(
+            self.spark, self.index_dir, batch, k=k, field=field,
             blocks_df=self._blocks, dictionary_df=self._dictionary,
             dictionary_map=self._dict_map, meta=self.meta,
             allow_docids=allow, deny_docids=deny))
+        return hits if batch is queries else hits.drop(columns="qid")
 
     def _docstats(self) -> DataFrame:
         if self._deny is None:
@@ -464,6 +457,30 @@ class LireQueryEngine:
             page = page.merge(payload, on="docID")
         return local_frame(self.spark, page, struct)
 
+    def _serve(self, queries, field, pool, fq=None, must_terms=(),
+               not_terms=(), start=0, rows=None, fl_expr=None, **label
+               ) -> DataFrame:
+        """The one served term-query step behind search, search_many and
+        the multi-term rewrites (prefix/wildcard/fuzzy, prefix_search_many):
+        clause guard per query, the request's restriction (fq, MUST,
+        MUST_NOT, tombstones; _restriction), the top-`pool` WAND hits of
+        `queries` — a {qid: terms} batch, or one term list (_wand) —
+        the response page [start, start+rows) (_respond), the fl_expr
+        projection and the request's metrics (field, pool, `label`). No
+        query term at all: no restriction, no kernel, an empty page."""
+        batch = queries if isinstance(queries, dict) else {"": queries}
+        for terms in batch.values():
+            self._check_clauses(terms)
+        restriction = ([], [])
+        if any(batch.values()):
+            restriction = self._restriction(fq, must_terms, not_terms, field)
+        out = self._respond(self._wand(queries, pool, field, restriction),
+                            start, rows)
+        if fl_expr is not None:
+            out = out.withColumn("fval", F.expr(fl_expr))
+        self.last_metrics.update(field=field, pool=pool, **label)
+        return out
+
     # -- /lireq analog ------------------------------------------------------
 
     @_counted
@@ -551,18 +568,10 @@ class LireQueryEngine:
         # (see _fq_allow), so repeated filters skip the docstats scan.
         # Boolean clauses compose with fq through the same mask seam.
         must_terms, not_terms = self._clause_terms(must, must_not, field)
-        if must_terms:
-            # MUST clauses also score (Lucene Occur.MUST)
-            terms = self._check_clauses(terms + must_terms)
-        self._dispatch(*[(field, c) for c in (must_terms, not_terms) if c],
-                       (field, terms))
-        hits = self._wand(terms, pool, field, self._restriction(
-            fq, must_terms, not_terms, field))
-        out = self._respond(hits, start, rows)
-        if fl_expr is not None:
-            out = out.withColumn("fval", F.expr(fl_expr))
-        self.last_metrics.update(field=field, n_terms=len(terms), pool=pool)
-        return out
+        # MUST clauses also score (Lucene Occur.MUST)
+        terms = terms + must_terms
+        return self._serve(terms, field, pool, fq, must_terms, not_terms,
+                           start, rows, fl_expr, n_terms=len(terms))
 
     @_counted
     def search_many(self, texts: dict[str, str], rows: int = DEFAULT_ROWS,
@@ -589,15 +598,9 @@ class LireQueryEngine:
             terms = py_tokenize(text)
             if field == "ha":
                 terms = [py_hash_token(t) for t in terms]
-            queries[qid] = self._check_clauses(terms + must_terms)
-        self._dispatch(*[(field, c) for c in (must_terms, not_terms) if c],
-                       (field, [t for ts in queries.values() for t in ts]))
-        out = self._respond(self._wand(
-            queries, rows, field,
-            self._restriction(fq, must_terms, not_terms, field)))
-        self.last_metrics.update(field=field, n_queries=len(queries),
-                                 pool=rows)
-        return out
+            queries[qid] = terms + must_terms
+        return self._serve(queries, field, rows, fq, must_terms, not_terms,
+                           n_queries=len(queries))
 
     @_counted
     def prefix_search_many(self, prefixes: dict[str, str],
@@ -620,15 +623,9 @@ class LireQueryEngine:
                 max_expansions=cap, dictionary_df=self._dictionary,
                 dictionary_map=self._dict_map)
             if terms:
-                queries[qid] = self._check_clauses(terms)
-        if queries:
-            self._dispatch((field, [t for ts in queries.values() for t in ts]))
-            hits = self._wand(queries, rows, field, self._restriction(fq))
-        else:
-            hits = empty_pdf(MANY_SCHEMA)
-        self.last_metrics.update(field=field, n_queries=len(prefixes),
-                                 n_expanded=len(queries), pool=rows)
-        return self._respond(hits)
+                queries[qid] = terms
+        return self._serve(queries, field, rows, fq, n_queries=len(prefixes),
+                           n_expanded=len(queries))
 
     def _search_by_example(self, doc_id: int, start: int, rows: int) -> DataFrame:
         """Query-by-example: point-lookup the doc, re-generate its hash tokens
@@ -649,7 +646,6 @@ class LireQueryEngine:
                 int(docs["shard"].iloc[0]), "ha", doc_id), doc_id)
         else:
             hit_terms = self._example_terms(doc_id)
-        self._dispatch(("ha", hit_terms))
         hits = self._wand(hit_terms, start + rows + 1, "ha",
                           self._restriction())
         self.last_metrics.update(field="ha", n_terms=len(hit_terms),
@@ -707,8 +703,9 @@ class LireQueryEngine:
             self.spark, self.index_dir, prefix, field=field,
             max_expansions=self._expansion_cap(max_expansions),
             dictionary_df=self._dictionary, dictionary_map=self._dict_map)
-        return self._serve_expansion(terms, start, rows, fq, field, fl_expr,
-                                     prefix=prefix)
+        return self._serve(terms, field, start + rows, fq, start=start,
+                           rows=rows, fl_expr=fl_expr, n_terms=len(terms),
+                           prefix=prefix)
 
     @_counted
     def wildcard_search(
@@ -735,8 +732,9 @@ class LireQueryEngine:
             self.spark, self.index_dir, pattern, field=field,
             max_expansions=self._expansion_cap(max_expansions),
             dictionary_df=self._dictionary, dictionary_map=self._dict_map)
-        return self._serve_expansion(terms, start, rows, fq, field, fl_expr,
-                                     pattern=pattern)
+        return self._serve(terms, field, start + rows, fq, start=start,
+                           rows=rows, fl_expr=fl_expr, n_terms=len(terms),
+                           pattern=pattern)
 
     @_counted
     def fuzzy_search(
@@ -765,8 +763,9 @@ class LireQueryEngine:
             prefix_length=prefix_length, field=field,
             max_expansions=self._expansion_cap(max_expansions),
             dictionary_df=self._dictionary, dictionary_map=self._dict_map)
-        return self._serve_expansion(terms, start, rows, fq, field, fl_expr,
-                                     term=term, max_edits=max_edits)
+        return self._serve(terms, field, start + rows, fq, start=start,
+                           rows=rows, fl_expr=fl_expr, n_terms=len(terms),
+                           term=term, max_edits=max_edits)
 
     @staticmethod
     def _expansion_cap(max_expansions: int | None) -> int:
@@ -774,25 +773,6 @@ class LireQueryEngine:
 
         return (DEFAULT_MAX_EXPANSIONS if max_expansions is None
                 else max_expansions)
-
-    def _serve_expansion(self, terms, start, rows, fq, field, fl_expr,
-                         **query_label) -> DataFrame:
-        """Shared tail of the multi-term rewrites (prefix/wildcard/fuzzy):
-        clause guard, empty-expansion short-circuit, fq pushdown, WAND,
-        pagination, projection, fl_expr, metrics."""
-        self._check_clauses(terms)
-        pool = start + rows if terms else 0
-        if terms:
-            self._dispatch((field, terms))
-            hits = self._wand(terms, pool, field, self._restriction(fq))
-        else:
-            hits = empty_pdf(WAND_SCHEMA)
-        out = self._respond(hits, start, rows)
-        if fl_expr is not None:
-            out = out.withColumn("fval", F.expr(fl_expr))
-        self.last_metrics.update(field=field, n_terms=len(terms), pool=pool,
-                                 **query_label)
-        return out
 
     @_counted
     def phrase_search(
@@ -817,7 +797,6 @@ class LireQueryEngine:
         from liresolr_spark.operators.phrase import _phrase_topk
 
         positional = getattr(self.meta, "with_positions", False)
-        self._dispatch(("text", py_tokenize(text)))
         allow, deny = self._restriction(fq)
         cache: list = []
         hits = _phrase_topk(
@@ -860,8 +839,6 @@ class LireQueryEngine:
                     " stream (rebuild with with_positions=True for the"
                     " shared-decode fast path) or corpus= for the per-"
                     "phrase verify fallback")
-            self._dispatch(*[("text", py_tokenize(t))
-                             for t in texts.values()])
             deny = self._restriction()[1]
             per = [
                 phrase.phrase_topk(
@@ -874,8 +851,6 @@ class LireQueryEngine:
             ]
             hits = functools.reduce(DataFrame.unionByName, per)
         else:
-            self._dispatch(
-                ("text", [t for x in texts.values() for t in py_tokenize(x)]))
             hits = phrase._phrase_topk_many(
                 self.spark, self.index_dir, texts, k=rows,
                 blocks_df=self._blocks, meta=self.meta,
@@ -917,14 +892,12 @@ class LireQueryEngine:
             phase1 = ("ha", [py_hash_token(t) for t in terms])
         else:
             phase1 = ("text", terms)
-        phase2 = [("text", terms)] if verify_threshold is not None else []
-        self._dispatch(phase1, *phase2)
         restriction = self._restriction()
         cand = self._wand(phase1[1], candidates, phase1[0], restriction)
         self.last_metrics.update(n_terms=len(terms))
         passed = cand.assign(dist=1.0 / (1.0 + cand["score"]))
         passed = passed[passed["dist"] < threshold]
-        if phase2:
+        if verify_threshold is not None:
             # phase 2: exact verification on the lexical field, restricted
             # to the phase-1 survivors; the anti-predicate then drops those
             # failing the second threshold
@@ -950,7 +923,6 @@ class LireQueryEngine:
         union + dropDuplicates + re-rank by combined score (SURVEY U1/J4)."""
         terms = py_tokenize(text)
         ha_terms = [py_hash_token(t) for t in terms]
-        self._dispatch(("text", terms), ("ha", ha_terms))
         restriction = self._restriction()
         c1 = self._wand(terms, pool_text, "text", restriction)
         c2 = self._wand(ha_terms, pool_ha, "ha", restriction)

@@ -2643,9 +2643,10 @@ def i02(spark, sf_dir):
 # entries in insertion order (round-4 verdict #1: the registry outgrew the
 # window and the newest operator families fell outside it). The window below
 # is one-or-more gated entries PER OPERATOR FAMILY: core retrieval, index
-# serving (WAND/hash/prefix/wildcard/fq/artifact), phrase (index-free twin +
-# verify + positional), boolean, streaming/compaction, served handlers,
-# dedup, embeddings/ANN, text pipeline, multimodal, sampling, relational.
+# serving (WAND/hash/prefix/wildcard/fuzzy/fq/artifact), phrase (index-free
+# twin + verify + positional), boolean, streaming/compaction, served
+# handlers, dedup, embeddings/ANN, text pipeline, multimodal, sampling,
+# relational.
 # Entries past the window are family-redundant twins (index-free mirrors of
 # served entries, per-stat constituents already inside every BM25 oracle,
 # by-design rows-only variants with exact/invariant twins in-window) — still
@@ -2660,7 +2661,7 @@ DRIVER_WINDOW = [
     # persisted-index serving
     "w01_wand_topk_index", "q16_bm25_fq_index", "q17_filter_artifact",
     "w02_hash_topk_index", "w03_prefix_topk_index",
-    "w06_wildcard_topk_index",
+    "w06_wildcard_topk_index", "w07_fuzzy_topk_index",
     # phrase (index-free twin + positionless verify + positional) + boolean
     "q18_phrase_bm25", "w04_phrase_topk_index", "w05_phrase_positional",
     "q19_boolean_query",
@@ -2671,7 +2672,7 @@ DRIVER_WINDOW = [
     "i01_identity_api", "i02_similar_api",
     # dedup family
     "d01_exact_dedup", "d03_minhash_lsh_pairs", "d04_simhash",
-    "d05_ngram_jaccard", "d06_dedup_keeplist", "d07_dedup_components",
+    "d06_dedup_keeplist", "d07_dedup_components",
     "d08_decontaminate", "d09_line_dedup",
     # embeddings / ANN / set-similarity / vocabulary
     "e02_lsh_bucket_ann", "e04_band_join_neardup", "e05b_ivf_exhaustive",

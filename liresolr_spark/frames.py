@@ -51,11 +51,12 @@ def local_frame(spark: SparkSession, pdf: pd.DataFrame,
 
 def as_frame(spark: SparkSession, result: pd.DataFrame | DataFrame,
              schema: str | StructType) -> DataFrame:
-    """An operator result as a DataFrame: a driver-side pandas frame
-    becomes a local relation, a Spark DataFrame passes through."""
+    """An operator result projected to the columns of `schema` as a
+    DataFrame: a driver-side pandas frame becomes a local relation, a
+    Spark DataFrame stays a lazy plan."""
     if isinstance(result, pd.DataFrame):
         return local_frame(spark, result, schema)
-    return result
+    return result.select(*struct_of(schema).names)
 
 
 def input_files(df: DataFrame) -> list[str]:

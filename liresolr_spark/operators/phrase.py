@@ -10,7 +10,9 @@ Lucene answers PhraseQuery from term POSITIONS stored in the postings
   and count sliding matches by intersecting (doc, position - offset) key
   sets across the terms — one term-pruned block scan, no corpus access,
   no shuffle of postings. tf = Lucene's phrase frequency (every match
-  position counts, including self-overlapping ones).
+  position counts, including self-overlapping ones). One matcher serves a
+  batch of phrases, decoding the union of their terms once per shard; a
+  single phrase is the batch of one (_positional_matches).
 
 - **Positionless index** (the default; per-doc payload is the content
   sha256, the north-rule invariant): the classic two-stage plan —
@@ -233,80 +235,26 @@ def _sliding_match(per: dict, seq: list[str]):
             dls0[dl_map_idx].astype(np.int64))
 
 
-def positional_matches(spark: SparkSession, *args, **kwargs) -> DataFrame:
-    """Sliding phrase matches as a DataFrame(shard, docID, tf, doclen): the
-    arguments and result of _positional_matches, a driver-side result
-    wrapped as a local relation."""
-    return as_frame(spark, _positional_matches(spark, *args, **kwargs),
-                    MATCH_SCHEMA)
-
-
-def _positional_matches(
-    spark: SparkSession,
-    index_dir: str,
-    terms: list[str],
-    field: str = "text",
-    blocks_df: DataFrame | None = None,
-    meta=None,
-    dictionary_map: dict | None = None,
-):
-    """(shard, docID, tf, doclen) rows of SLIDING phrase matches, answered
-    entirely from the positional index (no corpus access); a pandas frame
-    when the kernel ran in the driver, else a lazy DataFrame.
-
-    Per shard: decode the phrase terms' postings + position streams, AND
-    the docIDs, then intersect (doc, position - i) key sets across the
-    sequence — the vectorized form of Lucene's ExactPhraseMatcher advance
-    loop. tf counts every match position (self-overlapping included). All
-    numpy: the per-doc loop Lucene runs is replaced by one sorted-array
-    intersection per phrase term over composite int64 keys."""
-    if not terms:
-        return empty_pdf(MATCH_SCHEMA)
-    meta = meta or read_meta(index_dir)
-    if not getattr(meta, "with_positions", False):
-        raise ValueError(
-            f"index {index_dir} was built with_positions=False — the "
-            "positional phrase path needs the positions stream; use the "
-            "corpus-verify path (phrase_topk mode='verify') or rebuild")
-    uniq = sorted(set(terms))
-    blocks = prune_blocks(spark, index_dir, blocks_df, field, uniq,
-                          POSITIONAL_COLUMNS)
-    n_required = len(uniq)
-    seq = list(terms)
-
-    def kernel(bl: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({
-            "shard": pd.Series(dtype="int32"),
-            "docID": pd.Series(dtype="int64"),
-            "tf": pd.Series(dtype="int64"),
-            "doclen": pd.Series(dtype="int64")})
-        bl = _pre_intersect_blocks(bl, n_required)
-        if bl is None:
-            return empty
-        shard = int(bl["shard"].iloc[0])
-        m = _sliding_match(_decode_term_postings(bl), seq)
-        if m is None:
-            return empty
-        ids, tf, dls = m
-        return pd.DataFrame({
-            "shard": np.full(len(ids), shard, dtype="int32"),
-            "docID": ids, "tf": tf, "doclen": dls})
-
-    return _run_shard_kernel(
-        spark, blocks, kernel, MATCH_SCHEMA, meta,
-        postings=postings_estimate(dictionary_map, field, uniq))
+def positional_matches(spark: SparkSession, index_dir: str,
+                       terms: list[str], *args, **kwargs) -> DataFrame:
+    """Sliding phrase matches of one phrase as a DataFrame(shard, docID,
+    tf, doclen): _positional_matches over the batch of one `terms`,
+    projected to MATCH_SCHEMA, a driver-side result wrapped as a local
+    relation."""
+    return as_frame(spark, _positional_matches(
+        spark, index_dir, {"": terms}, *args, **kwargs), MATCH_SCHEMA)
 
 
 def positional_matches_many(spark: SparkSession, *args, **kwargs
                             ) -> DataFrame:
     """Batched sliding phrase matches as a DataFrame(qid, shard, docID, tf,
-    doclen): the arguments and result of _positional_matches_many, a
+    doclen): the arguments and result of _positional_matches, a
     driver-side result wrapped as a local relation."""
-    return as_frame(spark, _positional_matches_many(spark, *args, **kwargs),
+    return as_frame(spark, _positional_matches(spark, *args, **kwargs),
                     MATCH_MANY_SCHEMA)
 
 
-def _positional_matches_many(
+def _positional_matches(
     spark: SparkSession,
     index_dir: str,
     phrases: dict[str, list[str]],
@@ -315,21 +263,31 @@ def _positional_matches_many(
     meta=None,
     dictionary_map: dict | None = None,
 ):
-    """Batched positional phrase matching: (qid, shard, docID, tf, doclen)
-    rows — pandas or lazy, as _positional_matches — for ALL phrases in ONE
-    distributed job — the blocks of the
-    UNION of every phrase's terms are scanned and decoded once per shard,
-    then each phrase sliding-matches against the shared decoded postings
-    (the search_many amortization applied to phrases: a hot term's posting
-    list is decoded once no matter how many phrases use it)."""
+    """(qid, shard, docID, tf, doclen) rows of SLIDING phrase matches for
+    every phrase of `phrases` ({qid: [terms...]}), answered entirely from
+    the positional index (no corpus access) in ONE distributed job; a
+    pandas frame when the kernel ran in the driver, else a lazy DataFrame.
+    A single phrase is the batch of one.
+
+    Per shard: the blocks of the UNION of the phrases' terms are decoded
+    once — a hot term's posting list once no matter how many phrases use
+    it — then each phrase ANDs the docIDs of its terms and intersects
+    (doc, position - i) key sets across its sequence — the vectorized form
+    of Lucene's ExactPhraseMatcher advance loop. tf counts every match
+    position (self-overlapping included). All numpy: the per-doc loop
+    Lucene runs is replaced by one sorted-array intersection per phrase
+    term over composite int64 keys. A batch of one first drops the blocks
+    outside the docID ranges every one of its terms covers
+    (_pre_intersect_blocks)."""
     phrases = {q: list(t) for q, t in phrases.items() if t}
     if not phrases:
         return empty_pdf(MATCH_MANY_SCHEMA)
     meta = meta or read_meta(index_dir)
     if not getattr(meta, "with_positions", False):
         raise ValueError(
-            f"index {index_dir} was built with_positions=False — batched "
-            "phrase matching needs the positions stream")
+            f"index {index_dir} was built with_positions=False — the "
+            "positional phrase path needs the positions stream; use the "
+            "corpus-verify path (phrase_topk mode='verify') or rebuild")
     all_terms = sorted({t for ts in phrases.values() for t in ts})
     blocks = prune_blocks(spark, index_dir, blocks_df, field, all_terms,
                           POSITIONAL_COLUMNS)
@@ -342,11 +300,14 @@ def _positional_matches_many(
             "docID": pd.Series(dtype="int64"),
             "tf": pd.Series(dtype="int64"),
             "doclen": pd.Series(dtype="int64")})
-        if len(bl) == 0:
+        if len(specs) == 1:
+            bl = _pre_intersect_blocks(bl, len(all_terms))
+        elif len(bl):
+            bl = bl.sort_values("block_seq", kind="stable")
+        if bl is None or not len(bl):
             return empty
         shard = int(bl["shard"].iloc[0])
-        per = _decode_term_postings(bl.sort_values("block_seq",
-                                                   kind="stable"))
+        per = _decode_term_postings(bl)
         frames = []
         for qid, seq in specs:
             m = _sliding_match(per, seq)
@@ -394,48 +355,28 @@ def _phrase_topk_many(
     (operators.wand._merge_topk_per_qid)."""
     specs = {q: py_tokenize(p) for q, p in phrases.items()}
     meta = meta or read_meta(index_dir)
-    matched = _positional_matches_many(spark, index_dir, specs, field=field,
-                                       blocks_df=blocks_df, meta=meta,
-                                       dictionary_map=dictionary_map)
+    matched = _positional_matches(spark, index_dir, specs, field=field,
+                                  blocks_df=blocks_df, meta=meta,
+                                  dictionary_map=dictionary_map)
     matched = _restrict_rows(spark, matched, None, deny_docids,
                              meta.block_size)
     if isinstance(matched, pd.DataFrame):
-        scored = matched.assign(score=_phrase_bm25(matched, meta, "qid"))
+        scored = matched.assign(score=_phrase_bm25(matched, meta))
         return top_k(scored[["qid", "docID", "score"]], k, group="qid")
-    if cache_out is not None:
-        matched = matched.persist()
-        cache_out.append(matched)
-    dfc = matched.groupBy("qid").agg(F.count("*").alias("_df_phrase"))
-    idf = F.log(
-        F.lit(1.0) + (F.lit(float(meta.n_docs)) - F.col("_df_phrase") + 0.5)
-        / (F.col("_df_phrase") + 0.5))
-    tf = F.col("tf").cast("double")
-    k1, b = meta.k1, meta.b
-    scored = (
-        matched.join(F.broadcast(dfc), "qid")
-        .withColumn(
-            "score",
-            idf * tf * (k1 + 1.0)
-            / (tf + k1 * (1.0 - b
-                          + b * F.col("doclen").cast("double")
-                          / F.lit(float(meta.avgdl)))))
-        .select("qid", "docID", "score")
-    )
-    return _merge_topk_per_qid(scored, k)
+    scored = _score_phrase_matches(
+        matched.withColumn("_dl", F.col("doclen").cast("double")),
+        meta.n_docs, meta.avgdl, meta.k1, meta.b, cache_out)
+    return _merge_topk_per_qid(scored.select("qid", "docID", "score"), k)
 
 
-def _phrase_bm25(matched: pd.DataFrame, meta, group: str | None = None
-                 ) -> np.ndarray:
+def _phrase_bm25(matched: pd.DataFrame, meta) -> np.ndarray:
     """Driver twin of the Spark phrase scoring: the phrase is ONE BM25
-    clause whose df is the match count (per `group` value when given),
-    evaluated in the same operation order as the Spark expressions. Only
-    the logarithm differs (libm here, StrictMath in Spark): scores may
-    differ in the last ulp, never in rank order beyond exact ties."""
-    if group:
-        df = matched.groupby(group)["docID"].transform("size")
-    else:
-        df = pd.Series(len(matched), index=matched.index)
-    df = df.to_numpy(np.float64)
+    clause whose df is the match count of its qid (_positional_matches
+    rows), evaluated in the same operation order as the Spark expressions.
+    Only the logarithm differs (libm here, StrictMath in Spark): scores
+    may differ in the last ulp, never in rank order beyond exact ties."""
+    df = matched.groupby("qid")["docID"].transform("size").to_numpy(
+        np.float64)
     idf = np.log(1.0 + (float(meta.n_docs) - df + 0.5) / (df + 0.5))
     tf = matched["tf"].to_numpy(np.float64)
     dl = matched["doclen"].to_numpy(np.float64)
@@ -453,8 +394,9 @@ def _score_phrase_matches(
     cache_out: list | None = None,
 ) -> DataFrame:
     """BM25-score a phrase match set (needs `tf` and `_dl` columns): df is
-    the match count, computed INSIDE the plan (1-row aggregate cross-joined
-    back — no second action).
+    the match count, computed INSIDE the plan (no second action) — per qid
+    when the matches carry one (_positional_matches rows: a small keyed
+    aggregate broadcast back), else a 1-row aggregate cross-joined back.
 
     cache_out: the matched set has TWO consumers (scoring and the df
     aggregate) and Catalyst cannot reuse the subtree between them — without
@@ -465,12 +407,14 @@ def _score_phrase_matches(
     if cache_out is not None:
         matched = matched.persist()
         cache_out.append(matched)
-    dfc = matched.agg(F.count("*").alias("_df_phrase"))
+    keys = [c for c in ("qid",) if c in matched.columns]
+    dfc = matched.groupBy(*keys).agg(F.count("*").alias("_df_phrase"))
     idf = F.log(F.lit(1.0) + (F.lit(float(n_docs)) - F.col("_df_phrase") + 0.5)
                 / (F.col("_df_phrase") + 0.5))
     tf = F.col("tf").cast("double")
     return (
-        matched.crossJoin(dfc)
+        (matched.join(F.broadcast(dfc), keys) if keys
+         else matched.crossJoin(dfc))
         .withColumn(
             "score",
             idf * tf * (k1 + 1.0)
@@ -587,8 +531,9 @@ def _phrase_topk(
         if mode == "auto" else (mode == "positions")
 
     if positional:
-        matched = _positional_matches(spark, index_dir, terms, field=field,
-                                      blocks_df=blocks_df, meta=meta,
+        matched = _positional_matches(spark, index_dir, {"": terms},
+                                      field=field, blocks_df=blocks_df,
+                                      meta=meta,
                                       dictionary_map=dictionary_map)
         matched = _restrict_rows(spark, matched, allow_docids, deny_docids,
                                  meta.block_size)

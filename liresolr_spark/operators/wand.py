@@ -23,6 +23,11 @@ This is a SAFE optimization: results are exactly the exhaustive top-k
 (property-tested in tests/test_wand.py), unlike the reference's lossy
 candidate cap of 20000 (LireRequestHandler.java:59).
 
+A single query is a batch of one: `_wand_topk` answers {qid: terms} with
+one idf resolution, one block prune and one kernel run. It runs the
+kernel above for one query and a term-at-a-time kernel for a batch
+(_shard_kernel_many: each hot block decoded once for every query).
+
 Spark plan: every operator prunes blocks to the query's terms through one
 helper, `prune_blocks` (shard-dir partition pruning, parquet row-group
 stats on `term`), then the per-shard kernel runs on one of two paths,
@@ -40,7 +45,8 @@ chosen per request in `_run_shard_kernel` before any job runs:
   - spark: otherwise (or with no dictionary snapshot) the kernel runs as
     applyInPandas grouped by shard over the lazy pruned scan — one Arrow
     batch per shard, no driver-side posting materialization, no shuffle of
-    raw postings — and the merge is a Spark top-k.
+    raw postings — and the merge is a Spark top-k (TakeOrderedAndProject
+    for one query, a per-qid aggregate for a batch).
 
 The public operators always return a DataFrame: a driver-side result is
 wrapped as an Arrow local relation (liresolr_spark.frames), which collects
@@ -54,6 +60,8 @@ corpus-sized doc-stats table (critical at 10^12 docs).
 """
 
 from __future__ import annotations
+
+from contextvars import ContextVar
 
 import numpy as np
 import pandas as pd
@@ -73,6 +81,9 @@ from liresolr_spark.plans.build import read_meta
 # because the driver path is single-threaded and the Spark path gains
 # from every added core.
 DRIVER_MAX_POSTINGS = 100_000
+# the posting estimate of every shard kernel a request runs, in call order:
+# _run_shard_kernel appends to the list a served request (api._counted) set
+_kernel_log: ContextVar[list | None] = ContextVar("kernel_log", default=None)
 
 
 def postings_estimate(dictionary_map: dict | None, field: str,
@@ -563,7 +574,8 @@ def _run_shard_kernel(spark, blocks, kernel, schema, meta, allow=None,
     restriction (sides as in _restrict_df), and return the kernel rows
     with `schema`: a pandas frame on the driver path, a lazy DataFrame on
     the Spark path. `postings` is the request's posting estimate
-    (postings_estimate); kernel_dispatch picks the path.
+    (postings_estimate); kernel_dispatch picks the path, and the estimate
+    is appended to the request's kernel log (_kernel_log) when it has one.
 
     Driver path (small requests): the block rows are the snapshot rows
     when there are any, else one collect of the scan; the restriction
@@ -589,6 +601,8 @@ def _run_shard_kernel(spark, blocks, kernel, schema, meta, allow=None,
     parallelism should follow shard count, not shuffle bytes."""
     scan, rows = blocks
     restricted = bool(_sides(allow) or _sides(deny))
+    if (log := _kernel_log.get()) is not None:
+        log.append(postings)
     if kernel_dispatch(postings) == "driver":
         bl = scan().toPandas() if rows is None else rows
         if restricted and len(bl):
@@ -621,20 +635,30 @@ def _run_shard_kernel(spark, blocks, kernel, schema, meta, allow=None,
 
 
 MANY_SCHEMA = "qid string, docID long, score double"
+WAND_SCHEMA = "docID long, score double"
 # block columns the WAND kernels read
 KERNEL_COLUMNS = ["shard", "term", "block_seq", "docids", "tfs", "doclens",
                   "max_tf", "min_dl"]
 
 
+def wand_topk(spark: SparkSession, index_dir: str, query_terms: list[str],
+              *args, **kwargs) -> DataFrame:
+    """Block-max WAND top-k as a DataFrame(docID, score) ordered by (score
+    desc, docID asc): _wand_topk over the batch of one `query_terms`,
+    projected to (docID, score), a driver-side result wrapped as a local
+    relation. Further arguments as _wand_topk (stats_out included)."""
+    return as_frame(spark, _wand_topk(spark, index_dir, {"": query_terms},
+                                      *args, **kwargs), WAND_SCHEMA)
+
+
 def wand_topk_many(spark: SparkSession, *args, **kwargs) -> DataFrame:
     """Batched block-max WAND as a DataFrame(qid, docID, score): the
-    arguments and result of _wand_topk_many, a driver-side result wrapped
-    as a local relation."""
-    return as_frame(spark, _wand_topk_many(spark, *args, **kwargs),
-                    MANY_SCHEMA)
+    arguments and result of _wand_topk, a driver-side result wrapped as a
+    local relation."""
+    return as_frame(spark, _wand_topk(spark, *args, **kwargs), MANY_SCHEMA)
 
 
-def _wand_topk_many(
+def _wand_topk(
     spark: SparkSession,
     index_dir: str,
     queries: dict[str, list[str]],
@@ -644,27 +668,50 @@ def _wand_topk_many(
     dictionary_df: DataFrame | None = None,
     dictionary_map: dict | None = None,
     meta=None,
+    stats_out: dict | None = None,
     allow_docids: DataFrame | None = None,
     deny_docids: DataFrame | None = None,
 ):
-    """Batched block-max WAND: ALL queries answered in ONE distributed job.
+    """Exact BM25 top-k of every query of `queries` ({qid: [terms...]}),
+    answered in ONE distributed job: (qid, docID, score) rows, each qid's
+    rows its exact top-k under (score desc, docID asc) — a pandas frame
+    ordered by (qid, score desc, docID) when the shard kernels ran in the
+    driver, else a lazy DataFrame. A single query is the batch of one.
 
-    Returns (qid, docID, score) rows — each qid's rows are its exact top-k
-    under (score desc, docID asc) — as a pandas frame ordered by (qid,
-    score desc, docID) when the kernels ran in the driver, else as a lazy
-    DataFrame. Restriction sides as in _wand_topk. This is the
-    serving-throughput path: per-job overhead (scheduling, Python worker
-    round-trip, shuffle setup) is paid once for the whole batch instead of
-    per query, and the kernel decodes each hot block once for every query
-    that touches it.
-    queries: {query_id: [terms...]}."""
+    The number of queries that know at least one term picks the kernel and
+    the merge. One query runs the block-max WAND kernel (_shard_kernel)
+    and, on the Spark path, a TakeOrderedAndProject merge (orderBy + limit:
+    bounded heap per partition + driver merge). A batch runs the
+    term-at-a-time kernel (_shard_kernel_many), which decodes each hot
+    block once for every query that touches it, and the per-qid merge
+    (_merge_topk_per_qid): per-job overhead (scheduling, Python worker
+    round trip, shuffle setup) is paid once for the whole batch.
+
+    allow_docids / deny_docids: optional (shard, docID) restriction — one
+    frame, Spark or pandas, or a list of them (allow sides intersect, deny
+    sides union) — cogrouped into the shard kernel. allow = pushed-down fq
+    or MUST set (top-k is exact UNDER the filter — no candidate-pool recall
+    loss); deny = tombstoned docs (cross-segment overwrites) or MUST_NOT
+    set. See _shard_kernel.
+
+    blocks_df / dictionary_df / meta: optional pre-loaded handles (a serving
+    layer caches these once per index — repeated queries then skip file
+    listing and footer reads); blocks_df may be a BlockSnapshot (see
+    prune_blocks). dictionary_map, if given, is a driver-side
+    {field: {term: df}} snapshot: idf is then computed WITHOUT any Spark job,
+    leaving at most ONE job per request (the pruned block scan, none on a
+    BlockSnapshot) — the hot serving path. stats_out, if given, receives
+    'ranges_total' / 'ranges_visited' accumulators of the WAND kernel (one
+    query only), valid AFTER the returned DataFrame is acted on — the
+    measured WAND pruning saving."""
     from collections import Counter
 
     meta = meta or read_meta(index_dir)
-    if dictionary_map is not None:
-        dmap = dictionary_map.get(field, {})
-    else:
-        all_terms = sorted({t for ts in queries.values() for t in ts})
+    all_terms = sorted({t for ts in queries.values() for t in ts})
+    dmap = {} if dictionary_map is None else dictionary_map.get(field, {})
+    if dictionary_map is None and all_terms:
+        # sum df across dictionary fragments: appended segments each add one
+        # (the Lucene multi-segment term-dictionary merge)
         dictionary = (dictionary_df if dictionary_df is not None
                       else spark.read.parquet(f"{index_dir}/dictionary"))
         rows = (
@@ -675,9 +722,8 @@ def _wand_topk_many(
         dmap = {r["term"]: int(r["df"]) for r in rows}
     idfs = {}
     for qid, terms in queries.items():
-        qtf = Counter(terms)
         m = {t: idf_lucene(meta.n_docs, dmap[t]) * n
-             for t, n in qtf.items() if t in dmap}
+             for t, n in Counter(terms).items() if t in dmap}
         if m:
             idfs[qid] = m
     if not idfs:
@@ -686,14 +732,31 @@ def _wand_topk_many(
 
     blocks = prune_blocks(spark, index_dir, blocks_df, field, union_terms,
                           KERNEL_COLUMNS)
+    allow_mode = bool(_sides(allow_docids))
+    if len(idfs) == 1:
+        (qid, idf), = idfs.items()
+        acc_total = acc_visited = None
+        if stats_out is not None:
+            acc_total = spark.sparkContext.accumulator(0)
+            acc_visited = spark.sparkContext.accumulator(0)
+            stats_out["ranges_total"] = acc_total
+            stats_out["ranges_visited"] = acc_visited
+        wand = _shard_kernel(idf, k, meta.k1, meta.b, meta.avgdl,
+                             meta.block_size, acc_total, acc_visited,
+                             allow_mode=allow_mode)
 
-    kernel = _shard_kernel_many(idfs, k, meta.k1, meta.b, meta.avgdl,
-                                allow_mode=bool(_sides(allow_docids)))
+        def kernel(bl, mask_pdf=None):
+            return wand(bl, mask_pdf).assign(qid=qid)
+    else:
+        kernel = _shard_kernel_many(idfs, k, meta.k1, meta.b, meta.avgdl,
+                                    allow_mode=allow_mode)
     per_shard = _run_shard_kernel(
         spark, blocks, kernel, MANY_SCHEMA, meta, allow_docids, deny_docids,
         postings_estimate(dictionary_map, field, union_terms))
     if isinstance(per_shard, pd.DataFrame):
         return top_k(per_shard, k, group="qid")
+    if len(idfs) == 1:
+        return per_shard.orderBy(F.desc("score"), F.asc("docID")).limit(k)
     return _merge_topk_per_qid(per_shard, k)
 
 
@@ -717,92 +780,3 @@ def _merge_topk_per_qid(per_shard: DataFrame, k: int) -> DataFrame:
     ex = merged.select("qid", F.explode("_top").alias("_e"))
     return ex.select("qid", F.col("_e.docID").alias("docID"),
                      F.col("_e.score").alias("score"))
-
-
-WAND_SCHEMA = "docID long, score double"
-
-
-def wand_topk(spark: SparkSession, *args, **kwargs) -> DataFrame:
-    """Block-max WAND top-k as a DataFrame(docID, score): the arguments and
-    result of _wand_topk, a driver-side result wrapped as a local
-    relation."""
-    return as_frame(spark, _wand_topk(spark, *args, **kwargs), WAND_SCHEMA)
-
-
-def _wand_topk(
-    spark: SparkSession,
-    index_dir: str,
-    query_terms: list[str],
-    k: int = 60,
-    field: str = "text",
-    blocks_df: DataFrame | None = None,
-    dictionary_df: DataFrame | None = None,
-    dictionary_map: dict | None = None,
-    meta=None,
-    stats_out: dict | None = None,
-    allow_docids: DataFrame | None = None,
-    deny_docids: DataFrame | None = None,
-):
-    """Block-max WAND top-k, globally exact: (docID, score) rows ordered by
-    (score desc, docID asc) — a pandas frame when the shard kernels ran in
-    the driver, else a lazy DataFrame.
-
-    allow_docids / deny_docids: optional (shard, docID) restriction — one
-    frame, Spark or pandas, or a list of them (allow sides intersect, deny
-    sides union) — cogrouped into the shard kernel. allow = pushed-down fq
-    or MUST set (top-k is exact UNDER the filter — no candidate-pool recall
-    loss); deny = tombstoned docs (cross-segment overwrites) or MUST_NOT
-    set. See _shard_kernel.
-
-    blocks_df / dictionary_df / meta: optional pre-loaded handles (a serving
-    layer caches these once per index — repeated queries then skip file
-    listing and footer reads); blocks_df may be a BlockSnapshot (see
-    prune_blocks). dictionary_map, if given, is a driver-side
-    {field: {term: df}} snapshot: idf is then computed WITHOUT any Spark job,
-    leaving at most ONE job per query (the pruned block scan, none on a
-    BlockSnapshot) — the hot serving path. stats_out, if given, receives 'ranges_total' /
-    'ranges_visited' accumulators, valid AFTER the returned DataFrame is
-    acted on — the measured WAND pruning saving."""
-    from collections import Counter
-
-    meta = meta or read_meta(index_dir)
-    qtf = Counter(query_terms)
-    if dictionary_map is not None:
-        dmap = dictionary_map.get(field, {})
-        idf = {t: idf_lucene(meta.n_docs, dmap[t]) * n
-               for t, n in qtf.items() if t in dmap}
-    else:
-        # sum df across dictionary fragments: appended segments each add one
-        # (the Lucene multi-segment term-dictionary merge)
-        dictionary = (dictionary_df if dictionary_df is not None
-                      else spark.read.parquet(f"{index_dir}/dictionary"))
-        dstats = (
-            dictionary.filter((F.col("field") == field)
-                              & F.col("term").isin(list(qtf)))
-            .groupBy("term").agg(F.sum("df").alias("df")).collect()
-        )
-        idf = {r["term"]: idf_lucene(meta.n_docs, r["df"]) * qtf[r["term"]]
-               for r in dstats}
-    if not idf:
-        return empty_pdf(WAND_SCHEMA)
-
-    blocks = prune_blocks(spark, index_dir, blocks_df, field, idf,
-                          KERNEL_COLUMNS)
-
-    acc_total = acc_visited = None
-    if stats_out is not None:
-        acc_total = spark.sparkContext.accumulator(0)
-        acc_visited = spark.sparkContext.accumulator(0)
-        stats_out["ranges_total"] = acc_total
-        stats_out["ranges_visited"] = acc_visited
-
-    kernel = _shard_kernel(idf, k, meta.k1, meta.b, meta.avgdl,
-                           meta.block_size, acc_total, acc_visited,
-                           allow_mode=bool(_sides(allow_docids)))
-    per_shard = _run_shard_kernel(
-        spark, blocks, kernel, WAND_SCHEMA, meta, allow_docids, deny_docids,
-        postings_estimate(dictionary_map, field, idf))
-    if isinstance(per_shard, pd.DataFrame):
-        return top_k(per_shard, k)
-    # global merge: bounded heap per partition + driver merge (TakeOrderedAndProject)
-    return per_shard.orderBy(F.desc("score"), F.asc("docID")).limit(k)

@@ -125,6 +125,10 @@ def test_search_many_rank_identical(engine, docs_local):
         want = [(r["docID"], round(r["score"], 9))
                 for r in engine.search(text=text, rows=15).collect()]
         assert by_qid.get(qid, []) == want, qid
+        if qid == "q_a":  # a batch of one runs the WAND kernel
+            one = [(r["docID"], round(r["score"], 9)) for r in
+                   engine.search_many({qid: text}, rows=15).collect()]
+            assert one == want
 
 
 def test_search_many_fq_rank_identical(engine):

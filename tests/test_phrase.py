@@ -358,6 +358,11 @@ def test_phrase_many_rank_identical_to_single(spark, indexed_pos, bigrams):
                 phrase_topk(spark, indexed_pos, None, ph, k=20).collect()]
         assert by_qid.get(f"q{i}", []) == want, ph
         any_rows = any_rows or bool(want)
+        if i == 0:  # a batch of one
+            one = [(r["docID"], round(r["score"], 9)) for r in
+                   phrase_topk_many(spark, indexed_pos, {"q0": ph}, k=20)
+                   .collect()]
+            assert one == want
     assert any_rows
 
 

@@ -207,3 +207,8 @@ def test_batched_merge_rank_identical(spark, indexed, vocab):
         want = [(r["docID"], round(r["score"], 9))
                 for r in wand_topk(spark, indexed, terms, k=15).collect()]
         assert by_qid.get(qid, []) == want, qid
+        if qid == "qc":  # a batch of one
+            one = [(r["docID"], round(r["score"], 9)) for r in
+                   wand_topk_many(spark, indexed, {qid: terms}, k=15)
+                   .collect()]
+            assert one == want
