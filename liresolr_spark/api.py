@@ -43,7 +43,7 @@ from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
 from liresolr_spark import DEFAULT_CANDIDATES, DEFAULT_ROWS, MAX_QUERY_TERMS
 from liresolr_spark.frames import driver_table, empty_pdf, local_frame
-from liresolr_spark.functions.codec import decode_block
+from liresolr_spark.functions.codec import decode_blocks
 from liresolr_spark.functions.tokenizer import py_hash_token, py_tokenize
 from liresolr_spark.operators.wand import (MANY_SCHEMA, BlockSnapshot,
                                            _kernel_log, _spark_side,
@@ -115,15 +115,10 @@ def _unpersist(sides) -> None:
 
 def _terms_containing(blocks: pd.DataFrame, doc_id: int) -> list[str]:
     """Terms of the (term, docids) block rows whose docID stream holds
-    doc_id. Decoded docID runs are ascending (delta codec), so membership
-    is a searchsorted probe, not a linear scan."""
-    hits = []
-    for t, d in zip(blocks["term"], blocks["docids"]):
-        ids = decode_block(bytes(d), b"", b"")[0].astype(np.int64)
-        j = np.searchsorted(ids, doc_id)
-        if j < len(ids) and ids[j] == doc_id:
-            hits.append(t)
-    return hits
+    doc_id: one decode of every row, each hit mapped back to its row."""
+    ids, _, _, counts = decode_blocks(blocks["docids"])
+    rows = np.repeat(np.arange(len(counts)), counts)[ids == doc_id]
+    return blocks["term"].to_numpy()[rows].tolist()
 
 
 def _collect(hits, cache=()) -> pd.DataFrame:

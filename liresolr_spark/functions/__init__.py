@@ -9,6 +9,7 @@ from liresolr_spark.functions.tokenizer import (  # noqa: F401
 )
 from liresolr_spark.functions.codec import (  # noqa: F401
     decode_block,
+    decode_blocks,
     delta_decode,
     delta_encode,
     encode_block,

@@ -272,6 +272,9 @@ def bm25_topk_from_index(
     ).select("term", "docids", "tfs", "doclens")
     k1, b, avgdl = meta.k1, meta.b, meta.avgdl
 
+    # a per-row decode_block loop on purpose: this is the rank-identity
+    # tests' index-side reference, so it stays as written instead of being
+    # rewritten alongside the batched kernels (codec.decode_blocks) it checks
     def score_blocks(batches):
         for pdf in batches:
             outs = []

@@ -30,8 +30,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from liresolr_spark.frames import as_frame, empty_pdf
-from liresolr_spark.functions.codec import decode_block
-from liresolr_spark.operators.phrase import DOCSET_SCHEMA, _conjunctive_docids
+from liresolr_spark.functions.codec import decode_blocks
+from liresolr_spark.operators.phrase import (DOCSET_SCHEMA,
+                                             _conjunctive_docids, _lacks_term)
 from liresolr_spark.operators.wand import (_run_shard_kernel,
                                            postings_estimate, prune_blocks)
 from liresolr_spark.plans.build import read_meta
@@ -73,9 +74,7 @@ def _disjunctive_docids(
         if len(bl) == 0:
             return empty
         shard = int(bl["shard"].iloc[0])
-        ids = np.unique(np.concatenate([
-            decode_block(bytes(d), b"", b"")[0].astype(np.int64)
-            for d in bl["docids"].values]))
+        ids = np.unique(decode_blocks(bl["docids"])[0])
         return pd.DataFrame({"shard": np.full(len(ids), shard, dtype="int32"),
                              "docID": ids})
 
@@ -108,9 +107,12 @@ def _boolean_restriction(
     containing ALL `must` terms (None when no MUST clauses — no
     restriction), deny = docs containing ANY `must_not` term (None when
     empty); each a pandas frame when its kernel ran in the driver, else a
-    lazy DataFrame. dictionary_map: see _disjunctive_docids."""
+    lazy DataFrame. dictionary_map: see _disjunctive_docids; a MUST term
+    missing from it empties allow without a kernel."""
     allow = deny = None
-    if must:
+    if must and _lacks_term(dictionary_map, field, must):
+        allow = empty_pdf(DOCSET_SCHEMA)
+    elif must:
         allow = _conjunctive_docids(spark, index_dir, must, field=field,
                                     blocks_df=blocks_df, meta=meta,
                                     dictionary_map=dictionary_map)

@@ -53,7 +53,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession
 
 from liresolr_spark.frames import as_frame, empty_pdf
-from liresolr_spark.functions.codec import decode_block, decode_positions
+from liresolr_spark.functions.codec import decode_blocks, decode_positions
 from liresolr_spark.functions.tokenizer import py_tokenize, tokenize_expr
 from liresolr_spark.operators.wand import (MANY_SCHEMA, WAND_SCHEMA,
                                            _in_sorted, _merge_topk_per_qid,
@@ -77,15 +77,35 @@ def _pre_intersect_blocks(bl: pd.DataFrame, n_required: int
     block_seq present for EVERY term — decode nothing outside that range
     set. A rare+hot phrase then decodes only the hot term's blocks that
     overlap the rare term's, not its full posting list. Returns the pruned
-    frame sorted by block_seq, or None if the shard can't match."""
+    frame sorted by (term, block_seq), or None if the shard can't match."""
     if len(bl) == 0 or bl["term"].nunique() < n_required:
         return None
     seq_sets = [set(g["block_seq"]) for _, g in bl.groupby("term", sort=False)]
     live = set.intersection(*seq_sets)
     if not live:
         return None
-    return bl[bl["block_seq"].isin(live)].sort_values("block_seq",
+    return bl[bl["block_seq"].isin(live)].sort_values(["term", "block_seq"],
                                                       kind="stable")
+
+
+def _term_runs(bl: pd.DataFrame, counts: np.ndarray):
+    """(terms, cuts) of block rows sorted by (term, block_seq) that decoded
+    to `counts` postings each: np.split(stream, cuts) splits a decoded
+    per-posting stream into the terms' runs, each docID-sorted, in `terms`
+    order."""
+    terms = bl["term"].to_numpy()
+    first = np.flatnonzero(terms[1:] != terms[:-1]) + 1
+    return terms[np.append(0, first)], np.cumsum(counts)[first - 1]
+
+
+def _lacks_term(dictionary_map: dict | None, field: str, terms) -> bool:
+    """True when the pinned {field: {term: df}} snapshot holds one of
+    `terms` in no doc: a served AND or phrase over them matches nothing,
+    so it reads no block and runs no kernel. The match operators
+    themselves (_conjunctive_docids, _positional_matches) do not look: they
+    run their kernel on whichever path the dispatch picks."""
+    return dictionary_map is not None and not all(
+        dictionary_map.get(field, {}).get(t, 0) for t in terms)
 
 
 def conjunctive_docids(spark: SparkSession, *args, **kwargs) -> DataFrame:
@@ -112,10 +132,10 @@ def _conjunctive_docids(
     the request for the kernel dispatch (operators.wand._run_shard_kernel).
 
     Per shard (one Arrow batch, same dispatch as the WAND kernel): decode
-    each term's docID stream (blocks are docID-sorted and block_seq-ordered,
-    so per-term concatenation is already sorted), then intersect smallest
-    list first so the working set only shrinks. A term absent from a shard
-    empties that shard; absent from every shard -> empty result."""
+    the shard's docID streams at once, split them into per-term runs (each
+    already sorted), then intersect smallest list first so the working set
+    only shrinks. A term absent from a shard empties that shard; absent
+    from every shard -> empty result."""
     uniq = sorted(set(terms))
     if not uniq:
         return empty_pdf(DOCSET_SCHEMA)
@@ -131,13 +151,8 @@ def _conjunctive_docids(
         if bl is None:
             return empty
         shard = int(bl["shard"].iloc[0])
-        per_term = []
-        for _, grp in bl.groupby("term", sort=False):
-            ids = np.concatenate([
-                decode_block(bytes(d), b"", b"")[0].astype(np.int64)
-                for d in grp["docids"].values])
-            per_term.append(ids)
-        per_term.sort(key=len)
+        ids, _, _, counts = decode_blocks(bl["docids"])
+        per_term = sorted(np.split(ids, _term_runs(bl, counts)[1]), key=len)
         cur = per_term[0]
         for ids in per_term[1:]:
             if not len(cur):
@@ -156,27 +171,15 @@ def _conjunctive_docids(
 
 def _decode_term_postings(bl: pd.DataFrame) -> dict:
     """{term: (docIDs, doclens, tfs, flat_positions)} for one shard's block
-    rows — block streams concatenate in block_seq order, so every stream
-    stays docID-sorted."""
-    per = {}
-    for term, grp in bl.groupby("term", sort=False):
-        ids_l, dls_l, tfs_l, flat_l = [], [], [], []
-        for d, t, ln, pz in zip(grp["docids"], grp["tfs"],
-                                grp["doclens"], grp["positions"]):
-            ids, tfs, dls = decode_block(bytes(d), bytes(t), bytes(ln))
-            flat, _ = decode_positions(bytes(pz), tfs)
-            if len(flat) != int(tfs.sum()):
-                raise ValueError(
-                    "positions stream inconsistent with tfs — index "
-                    "corrupt or built without positions")
-            ids_l.append(ids.astype(np.int64))
-            dls_l.append(dls.astype(np.int64))
-            tfs_l.append(tfs.astype(np.int64))
-            flat_l.append(flat.astype(np.int64))
-        per[term] = (
-            np.concatenate(ids_l), np.concatenate(dls_l),
-            np.concatenate(tfs_l), np.concatenate(flat_l))
-    return per
+    rows sorted by (term, block_seq): one decode of the blocks and one of
+    their joined positions streams, split into the terms' runs."""
+    ids, tfs, dls, counts = decode_blocks(bl["docids"], bl["tfs"],
+                                          bl["doclens"])
+    flat, offsets = decode_positions(b"".join(bl["positions"]), tfs)
+    terms, cuts = _term_runs(bl, counts)
+    return dict(zip(terms, zip(
+        np.split(ids, cuts), np.split(dls, cuts), np.split(tfs, cuts),
+        np.split(flat, offsets[cuts]))))
 
 
 def _sliding_match(per: dict, seq: list[str]):
@@ -204,20 +207,11 @@ def _sliding_match(per: dict, seq: list[str]):
     running = None
     for i, t in enumerate(seq):
         ids, _, tfs, flat = per[t]
-        sel = np.flatnonzero(_in_sorted(ids, cand))
-        lens = tfs[sel]
-        offs = np.concatenate(([0], np.cumsum(tfs)))[sel]
-        total = int(lens.sum())
-        out_starts = np.concatenate(([0], np.cumsum(lens)[:-1])) \
-            if len(lens) else np.array([], dtype=np.int64)
-        gidx = (np.repeat(offs - out_starts, lens)
-                + np.arange(total)) if total else \
-            np.array([], dtype=np.int64)
-        pos = flat[gidx] - i
-        ranks = np.searchsorted(cand, ids[sel])
+        hit = _in_sorted(ids, cand)
+        pos = flat[np.repeat(hit, tfs)] - i
+        ranks = np.repeat(np.searchsorted(cand, ids[hit]), tfs[hit])
         valid = pos >= 0  # a slot-i term before position i can't match
-        keys = ((np.repeat(ranks, lens)[valid] << np.int64(32))
-                | pos[valid])
+        keys = (ranks[valid] << np.int64(32)) | pos[valid]
         # already sorted: ranks are non-decreasing (ids sorted), and
         # within a doc a term has ONE posting with ascending positions
         running = keys if running is None else \
@@ -303,7 +297,7 @@ def _positional_matches(
         if len(specs) == 1:
             bl = _pre_intersect_blocks(bl, len(all_terms))
         elif len(bl):
-            bl = bl.sort_values("block_seq", kind="stable")
+            bl = bl.sort_values(["term", "block_seq"], kind="stable")
         if bl is None or not len(bl):
             return empty
         shard = int(bl["shard"].iloc[0])
@@ -354,6 +348,8 @@ def _phrase_topk_many(
     the merge is the batched serving merge
     (operators.wand._merge_topk_per_qid)."""
     specs = {q: py_tokenize(p) for q, p in phrases.items()}
+    specs = {q: t for q, t in specs.items()
+             if not _lacks_term(dictionary_map, field, t)}
     meta = meta or read_meta(index_dir)
     matched = _positional_matches(spark, index_dir, specs, field=field,
                                   blocks_df=blocks_df, meta=meta,
@@ -524,7 +520,7 @@ def _phrase_topk(
     dictionary_map: the driver-side {field: {term: df}} snapshot that sizes
     the match kernel's dispatch (operators.wand._run_shard_kernel)."""
     terms = py_tokenize(phrase)
-    if not terms:
+    if not terms or _lacks_term(dictionary_map, field, terms):
         return empty_pdf(WAND_SCHEMA)
     meta = meta or read_meta(index_dir)
     positional = getattr(meta, "with_positions", False) \

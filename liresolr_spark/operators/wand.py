@@ -70,7 +70,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from liresolr_spark.frames import (as_frame, driver_table, empty_pdf,
                                    local_frame, struct_of)
-from liresolr_spark.functions.codec import decode_block
+from liresolr_spark.functions.codec import decode_blocks
 from liresolr_spark.operators.bm25 import idf_lucene
 from liresolr_spark.plans.build import read_meta
 
@@ -282,19 +282,11 @@ def _shard_kernel(idf: dict, k: int, k1: float, b: float, avgdl: float,
                 break  # no remaining range can beat the k-th result
             visited += 1
             members = grp[offsets[ri]:offsets[ri + 1]]
-            ids_all, sc_all = [], []
-            for m in members:
-                ids, tfs, dls_u = decode_block(
-                    bytes(docid_col[m]), bytes(tf_col[m]), bytes(dl_col[m]))
-                ids = ids.astype(np.int64)
-                tf_f = tfs.astype(np.float64)
-                dls = dls_u.astype(np.float64)
-                sc = w[m] * tf_f * (k1 + 1.0) / (
-                    tf_f + k1 * (1.0 - b + b * dls / avgdl))
-                ids_all.append(ids)
-                sc_all.append(sc)
-            ids_cat = np.concatenate(ids_all)
-            sc_cat = np.concatenate(sc_all)
+            ids_cat, tfs, dls, n = decode_blocks(
+                docid_col[members], tf_col[members], dl_col[members])
+            tf_f = tfs.astype(np.float64)
+            sc_cat = np.repeat(w[members], n) * tf_f * (k1 + 1.0) / (
+                tf_f + k1 * (1.0 - b + b * dls.astype(np.float64) / avgdl))
             # restriction BEFORE the heap/theta update: a filtered doc must
             # never occupy a top-k slot or raise theta
             ids_cat, sc_cat = _apply_mask(ids_cat, sc_cat, allow, deny)
@@ -354,39 +346,26 @@ def _shard_kernel_many(idfs: dict, k: int, k1: float, b: float, avgdl: float,
         empty = pd.DataFrame({"qid": pd.Series(dtype="object"),
                               "docID": pd.Series(dtype="int64"),
                               "score": pd.Series(dtype="float64")})
-        if len(blocks) == 0:
-            return empty
-        terms = blocks["term"].values
-        docid_col = blocks["docids"].values
-        tf_col = blocks["tfs"].values
-        dl_col = blocks["doclens"].values
-
         # decode every block once; group postings per unique term
-        uniq_terms, term_codes = np.unique(terms, return_inverse=True)
-        ids_by_term: list[np.ndarray] = [None] * len(uniq_terms)
-        part_by_term: list[np.ndarray] = [None] * len(uniq_terms)
-        for t in range(len(uniq_terms)):
-            rows = np.flatnonzero(term_codes == t)
-            ids_l, part_l = [], []
-            for m in rows:
-                ids, tfs, dls_u = decode_block(
-                    bytes(docid_col[m]), bytes(tf_col[m]), bytes(dl_col[m]))
-                tf_f = tfs.astype(np.float64)
-                dls = dls_u.astype(np.float64)
-                part = tf_f * (k1 + 1.0) / (
-                    tf_f + k1 * (1.0 - b + b * dls / avgdl))
-                ids_m, part_m = _apply_mask(
-                    ids.astype(np.int64), part, allow, deny)
-                ids_l.append(ids_m)
-                part_l.append(part_m)
-            ids_by_term[t] = np.concatenate(ids_l)
-            part_by_term[t] = np.concatenate(part_l)
-
-        lo = min((int(a.min()) for a in ids_by_term if len(a)), default=0)
-        hi = max((int(a.max()) for a in ids_by_term if len(a)), default=-1)
-        span = hi - lo + 1
-        if span <= 0:
+        uniq_terms, term_codes = np.unique(blocks["term"].values,
+                                           return_inverse=True)
+        ids, tfs, dls, n = decode_blocks(blocks["docids"].values,
+                                         blocks["tfs"].values,
+                                         blocks["doclens"].values)
+        tf_f = tfs.astype(np.float64)
+        part = tf_f * (k1 + 1.0) / (
+            tf_f + k1 * (1.0 - b + b * dls.astype(np.float64) / avgdl))
+        # mask once; `kept` indexes the surviving postings
+        ids, kept = _apply_mask(ids, np.arange(len(ids)), allow, deny)
+        if not len(ids):
             return empty
+        codes = np.repeat(term_codes, n)[kept]
+        by_term = np.argsort(codes, kind="stable")
+        cuts = np.cumsum(np.bincount(codes, minlength=len(uniq_terms)))[:-1]
+        ids_by_term = np.split(ids[by_term], cuts)
+        part_by_term = np.split(part[kept][by_term], cuts)
+        lo = int(ids.min())
+        span = int(ids.max()) - lo + 1
 
         qids = list(idfs)
         # per-query weight over the shard's unique terms (0 = not queried)
@@ -726,7 +705,10 @@ def _wand_topk(
              for t, n in Counter(terms).items() if t in dmap}
         if m:
             idfs[qid] = m
-    if not idfs:
+    # an empty driver allow side (an fq or MUST set no doc is in) admits
+    # no doc: no block is read
+    if not idfs or any(isinstance(s, pd.DataFrame) and s.empty
+                       for s in _sides(allow_docids)):
         return empty_pdf(MANY_SCHEMA)
     union_terms = sorted({t for m in idfs.values() for t in m})
 

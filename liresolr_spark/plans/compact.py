@@ -69,6 +69,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import SparkSession
 
 from liresolr_spark import BM25_B, BM25_K1, INDEX_FORMAT_VERSION
+from liresolr_spark.functions.codec import decode_blocks, positions_byte_slices
 from liresolr_spark.operators import wand
 from liresolr_spark.plans.build import (
     IndexMeta,
@@ -89,53 +90,25 @@ from liresolr_spark.plans.local_write import (build_blocks, read_table,
 def decode_postings(pdf, with_positions: bool = False):
     """One batch of block rows (field, term, docids, tfs, doclens[,
     positions]) -> its postings (field, term, docID, tf, doclen[,
-    positions]) as a pandas frame: numpy concatenation + np.repeat for the
-    term column, no per-posting Python. The one decode loop of both merge
-    paths: `_decoded_postings`' mapInPandas stage and the driver merge.
+    positions]) as a pandas frame: one codec.decode_blocks call, field and
+    term repeated per posting. The one decode of both merge paths:
+    `_decoded_postings`' mapInPandas stage and the driver merge.
 
     with_positions=True carries each posting's positions as its PRE-ENCODED
-    byte slice (codec.positions_byte_slices): positions are delta-gapped
-    within the posting, so the slice is docID-independent and the rebuild
-    kernel re-concatenates slices into valid blocks with zero recoding —
-    a docID remap never touches position bytes."""
-    import pandas as pd
-
-    from liresolr_spark.functions.codec import decode_block, positions_byte_slices
-
-    ids_l, tfs_l, dls_l, terms_l, fields_l, pos_l = [], [], [], [], [], []
-    for i, (field, term, d, t, ln) in enumerate(zip(
-        pdf["field"], pdf["term"], pdf["docids"], pdf["tfs"], pdf["doclens"],
-    )):
-        ids, tfs, dls = decode_block(bytes(d), bytes(t), bytes(ln))
-        n = len(ids)
-        ids_l.append(ids.astype(np.int64))
-        tfs_l.append(tfs.astype(np.int64))
-        dls_l.append(dls.astype(np.int64))
-        terms_l.append(np.repeat(term, n))
-        fields_l.append(np.repeat(field, n))
-        if with_positions:
-            pb = bytes(pdf["positions"].iloc[i])
-            pos_l.append(positions_byte_slices(pb, tfs) if pb else [b""] * n)
-    if not ids_l:
-        cols = {
-            "field": pd.Series(dtype="object"),
-            "term": pd.Series(dtype="object"),
-            "docID": pd.Series(dtype="int64"),
-            "tf": pd.Series(dtype="int64"),
-            "doclen": pd.Series(dtype="int64")}
-        if with_positions:
-            cols["positions"] = pd.Series(dtype="object")
-        return pd.DataFrame(cols)
-    out = {
-        "field": np.concatenate(fields_l),
-        "term": np.concatenate(terms_l),
-        "docID": np.concatenate(ids_l),
-        "tf": np.concatenate(tfs_l),
-        "doclen": np.concatenate(dls_l),
-    }
+    byte slice (codec.positions_byte_slices over the joined streams; the
+    hash family's blocks carry none): positions are delta-gapped within
+    the posting, so the slice is docID-independent and the rebuild kernel
+    re-concatenates slices into valid blocks with zero recoding — a docID
+    remap never touches position bytes."""
+    ids, tfs, dls, counts = decode_blocks(pdf["docids"], pdf["tfs"],
+                                          pdf["doclens"])
+    out = {"field": np.repeat(pdf["field"].to_numpy(), counts),
+           "term": np.repeat(pdf["term"].to_numpy(), counts),
+           "docID": ids, "tf": tfs, "doclen": dls}
     if with_positions:
-        out["positions"] = np.asarray(
-            [b for blk in pos_l for b in blk], dtype=object)
+        has = np.repeat(pdf["positions"].map(len).to_numpy() > 0, counts)
+        out["positions"] = np.asarray(positions_byte_slices(
+            b"".join(pdf["positions"]), np.where(has, tfs, 0)), dtype=object)
     return pd.DataFrame(out)
 
 

@@ -5,11 +5,12 @@ Generalizes the reference's only test category — payload round-trip decodes
 
 import numpy as np
 import pytest
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from liresolr_spark.functions.codec import (
     decode_block,
+    decode_blocks,
     delta_decode,
     delta_encode,
     encode_block,
@@ -49,17 +50,35 @@ def test_varint_roundtrip_property(vals):
     assert np.array_equal(varint_decode(varint_encode(a)), a)
 
 
-@given(st.sets(st.integers(min_value=0, max_value=2**40), min_size=1, max_size=400))
-@settings(max_examples=50, deadline=None)
-def test_block_roundtrip_property(ids):
-    doc_ids = np.array(sorted(ids), dtype=np.uint64)
-    tfs = (doc_ids % np.uint64(37)) + np.uint64(1)
-    dls = (doc_ids % np.uint64(991)) + np.uint64(1)
-    d, t, l = encode_block(doc_ids, tfs, dls)
-    ids2, tfs2, dls2 = decode_block(d, t, l)
-    assert np.array_equal(ids2, doc_ids)
-    assert np.array_equal(tfs2, tfs)
-    assert np.array_equal(dls2, dls)
+@given(st.lists(st.sets(st.integers(min_value=0, max_value=2**40),
+                        max_size=120), max_size=8))
+@example([])
+@example([set(), {2**40}, set(), {0, 1, 2**40}])
+@settings(max_examples=60, deadline=None)
+def test_block_roundtrip_property(blocks):
+    """encode_block per block; decode_block of each block and decode_blocks
+    over the column return the encoder's input, the latter concatenated
+    with the true per-block counts — no blocks, empty streams, one-posting
+    blocks and docIDs up to 2^40 included."""
+    runs, cols = [], []
+    for ids in blocks:
+        doc_ids = np.array(sorted(ids), dtype=np.uint64)
+        run = (doc_ids, doc_ids % np.uint64(37) + np.uint64(1),
+               doc_ids % np.uint64(991) + np.uint64(1))
+        enc = encode_block(*run)
+        for got, want in zip(decode_block(*enc), run):
+            assert np.array_equal(got, want)
+        runs.append(run)
+        cols.append(enc)
+    docids, tfs, dls = (list(c) for c in zip(*cols)) if cols else ([],) * 3
+    got = decode_blocks(docids, np.array(tfs, dtype=object), dls)
+    for i in range(3):
+        want = np.concatenate([r[i] for r in runs] + [np.zeros(0, np.uint64)])
+        assert got[i].dtype == np.int64 and got[i].tolist() == want.tolist()
+    assert got[3].tolist() == [len(ids) for ids in blocks]
+    ids_only = decode_blocks(docids)
+    assert ids_only[1] is None and ids_only[2] is None
+    assert ids_only[0].tolist() == got[0].tolist()
 
 
 @given(
@@ -130,6 +149,7 @@ def test_positions_roundtrip_and_byte_slices():
     )
 
     rng = random.Random(7)
+    streams, all_tfs, all_flat = [], [], []
     for trial in range(100):
         n_post = rng.randint(1, 12)
         pos_lists = [sorted(rng.sample(range(0, 5000), rng.randint(1, 9)))
@@ -147,6 +167,20 @@ def test_positions_roundtrip_and_byte_slices():
         dec2, _ = decode_positions(b"".join(slices[i] for i in perm),
                                    tfs[perm])
         assert dec2.tolist() == [x for i in perm for x in pos_lists[i]], trial
+        streams.append(stream)
+        all_tfs.append(tfs)
+        all_flat += flat.tolist()
+    # the joined streams of several blocks decode with their joined tfs
+    dec, offs = decode_positions(b"".join(streams), np.concatenate(all_tfs))
+    assert dec.tolist() == all_flat
+    assert offs[-1] == len(all_flat)
+    with pytest.raises(ValueError):
+        decode_positions(b"".join(streams), np.concatenate(all_tfs)[1:])
+    # a posting with tf 0 (a block without positions) slices to b""
+    tfs = np.concatenate(([0], all_tfs[0], [0], all_tfs[1], [0]))
+    slices = positions_byte_slices(streams[0] + streams[1], tfs)
+    assert slices[0] == slices[len(all_tfs[0]) + 1] == slices[-1] == b""
+    assert b"".join(slices) == streams[0] + streams[1]
     # empty stream (ha family / positionless blocks)
     d, o = decode_positions(b"", np.array([0, 0], dtype=np.int64))
     assert len(d) == 0 and o.tolist() == [0, 0, 0]

@@ -454,6 +454,20 @@ def test_driver_dispatched_job_counts(spark, pos_index, vocab, corpus200,
             assert n_collect == 0
 
 
+def test_unknown_term_reads_no_block(spark, pos_index, vocab, monkeypatch):
+    """A phrase, or a MUST clause, with a term missing from the pinned
+    dictionary cannot match: on an engine that is not resident it runs no
+    kernel and no Spark job, and returns no rows."""
+    eng = _engines(spark, *pos_index)[False]
+    monkeypatch.setattr(wand, "DRIVER_MAX_POSTINGS", BOUNDS["driver"])
+    for call in (lambda: eng.phrase_search(f"zz_nope {vocab[0]}", rows=5),
+                 lambda: eng.search(text=vocab[0], must=["zz_nope"], rows=5)):
+        page, n_call = _jobs_run(spark, call)
+        rows, n_collect = _jobs_run(spark, page.collect)
+        assert (rows, n_call + n_collect) == ([], 0)
+        assert eng.last_metrics["dispatch"] is None
+
+
 def test_refresh_keeps_resident_snapshot_exact(spark, corpus200,
                                                tmp_path_factory):
     """A resident engine refreshed after an append with overwrites serves

@@ -23,7 +23,12 @@ def test_oracle_sql_has_no_list_comprehension():
 def test_every_index_serving_entry_in_driver_window():
     """Every persisted-index serving entry (`w*`) is inside the 50-entry
     window the driver gates on; twins of other families may sit past it,
-    a served operator may not."""
+    a served operator may not. Every registry family (the name's first
+    letter) keeps at least one entry inside the window."""
     outside = sorted(n for n in REGISTRY
                      if n.startswith("w") and n not in DRIVER_WINDOW)
     assert not outside, outside
+    families = {n[0] for n in REGISTRY}
+    assert families >= set("qrdevtmwspi"), families
+    absent = sorted(families - {n[0] for n in DRIVER_WINDOW})
+    assert not absent, absent
