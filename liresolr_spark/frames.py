@@ -1,5 +1,4 @@
-"""Driver-resident rows as Spark local relations, and parquet tables read
-into the driver.
+"""Driver-side rows as Spark local relations.
 
 A non-empty pandas frame handed to `createDataFrame` over Arrow becomes a
 `LocalRelation`: collecting it, or any deterministic projection of it, runs
@@ -12,7 +11,6 @@ cut by `.limit(0)`, which the optimizer keeps a local relation.
 from __future__ import annotations
 
 import pandas as pd
-import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructField, StructType
@@ -57,35 +55,3 @@ def as_frame(spark: SparkSession, result: pd.DataFrame | DataFrame,
     if isinstance(result, pd.DataFrame):
         return local_frame(spark, result, schema)
     return result.select(*struct_of(schema).names)
-
-
-def input_files(df: DataFrame) -> list[str]:
-    """The files `df`, a Spark file-source reader, scans — its
-    `inputFiles()`, taken from the analyzed plan: `DataFrame.inputFiles()`
-    reads the optimized plan, in which a cached copy of the same relation
-    (another engine's pinned reader of the same directory) replaces the
-    file scan and hides its files."""
-    files = []
-    leaves = df._jdf.queryExecution().analyzed().collectLeaves().iterator()
-    while leaves.hasNext():
-        files += leaves.next().relation().inputFiles()
-    return files
-
-
-def driver_table(df: DataFrame, columns: list[str]) -> pa.Table:
-    """`columns` of the parquet files that the Spark reader `df` scans
-    (input_files), read into the driver with pyarrow and cast to `df`'s
-    types — the same file set as every plan over `df`, hive partition
-    columns (shard=, seg=) included, without a Spark job."""
-    import pyarrow.dataset as ds
-    from pyarrow.fs import FileSystem
-
-    schema = to_arrow_schema(df.select(*columns).schema)
-    files = input_files(df)
-    if not files:
-        return schema.empty_table()
-    fs = FileSystem.from_uri(files[0])[0]
-    paths = [FileSystem.from_uri(f)[1] for f in files]
-    return (ds.dataset(paths, filesystem=fs, format="parquet",
-                       partitioning="hive")
-            .to_table(columns=columns).cast(schema))

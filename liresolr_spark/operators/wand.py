@@ -68,11 +68,11 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from liresolr_spark.frames import (as_frame, driver_table, empty_pdf,
-                                   local_frame, struct_of)
+from liresolr_spark.frames import as_frame, empty_pdf, local_frame, struct_of
 from liresolr_spark.functions.codec import decode_blocks
 from liresolr_spark.operators.bm25 import idf_lucene
 from liresolr_spark.plans.build import read_meta
+from liresolr_spark.plans.local_write import serving_table
 
 # Postings (sum of df over a request's distinct terms) at or under which the
 # shard kernels run in the driver instead of a pandas-UDF stage. Both paths
@@ -108,8 +108,9 @@ def kernel_dispatch(postings: int | None) -> str:
 class BlockSnapshot:
     """The posting blocks of a driver-resident index (api.LireQueryEngine:
     Σ df of the whole dictionary within DRIVER_MAX_POSTINGS), read into
-    driver memory once from exactly the files of `df`, the lazy, uncached
-    Spark reader kept beside it for the Spark path (frames.driver_table).
+    driver memory once with pyarrow (local_write.serving_table); `reader`
+    returns the Spark reader of the same dir, built on first use, for the
+    Spark path (prune_blocks).
 
     Rows are held in (field, shard, term, block_seq) order — for one field
     the order of a collected pruned scan, since the build writes each
@@ -121,9 +122,10 @@ class BlockSnapshot:
                "last_docid", "docids", "tfs", "doclens", "positions",
                "max_tf", "min_dl"]
 
-    def __init__(self, df: DataFrame):
-        self.df = df
-        table = driver_table(df, self.COLUMNS).sort_by(
+    def __init__(self, index_dir: str, reader):
+        self.reader = reader
+        table = serving_table(f"{index_dir}/blocks", "blocks",
+                              self.COLUMNS).sort_by(
             [(c, "ascending") for c in ("field", "shard", "term",
                                         "block_seq")])
         self.rows = table.to_pandas()
@@ -159,11 +161,8 @@ def prune_blocks(spark, index_dir: str, blocks_df, field: str, terms,
     snap = blocks_df if isinstance(blocks_df, BlockSnapshot) else None
 
     def scan() -> DataFrame:
-        if snap is not None:
-            src = snap.df
-        elif blocks_df is not None:
-            src = blocks_df
-        else:
+        src = snap.reader() if snap is not None else blocks_df
+        if src is None:
             src = spark.read.parquet(f"{index_dir}/blocks")
         return src.filter(
             (F.col("field") == field) & F.col("term").isin(terms)

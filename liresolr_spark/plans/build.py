@@ -140,17 +140,17 @@ def _pid_alive(pid: int) -> bool:
     return True
 
 
-TOMBSTONE_SCHEMA = "docID long, shard int, seg int"
-
-
 def load_tombstones(spark: SparkSession, index_dir: str) -> DataFrame | None:
     """(docID, shard, seg) rows for docs superseded by a cross-segment
     overwrite (see streaming.ingest). None if the index has none. Schema is
-    explicit so a dir holding only empty segments reads cleanly."""
+    explicit (local_write.reader_schema) so a dir holding only empty
+    segments reads cleanly."""
+    from liresolr_spark.plans.local_write import reader_schema
+
     p = _paths(index_dir)["tombstones"]
     if not os.path.exists(p):
         return None
-    return spark.read.schema(TOMBSTONE_SCHEMA).parquet(p)
+    return spark.read.schema(reader_schema("tombstones")).parquet(p)
 
 
 def read_meta(index_dir: str) -> IndexMeta:

@@ -30,7 +30,7 @@ from pyspark.sql.types import StructType
 from liresolr_spark.plans.build import BLOCK_SCHEMA
 
 # File columns (partition column excluded) of each artifact, as the Spark
-# plans write them; used only for a directory that holds no file yet.
+# plans write them, and the hive partition column of each one read back.
 _FILE_DDL = {
     "docstats": "docID long, repo string, path string, commit string, "
                 "lang string, doclen int, sha256 string",
@@ -40,18 +40,41 @@ _FILE_DDL = {
                 "docs_indexed long, status string",
     "tombstones": "docID long, shard int",
 }
+_PART_COL = {"docstats": "shard", "blocks": "shard", "dictionary": "seg",
+             "tombstones": "seg"}
 
 
 def read_table(base_dir: str, columns: list[str] | None = None,
-               filter=None) -> pa.Table | None:
+               filter=None, schema: pa.Schema | None = None
+               ) -> pa.Table | None:
     """Rows of a hive-partitioned artifact dir, partition columns
-    included; None when the dir holds no parquet file."""
+    included, typed as `schema` when given (columns=[]: the footers' row
+    counts only); None when the dir holds no parquet file. pyarrow's
+    default ignore_prefixes ('.', '_') skip, in every path component, what
+    Spark's file index hides: `_SUCCESS`, `.crc` sidecars, `_temporary`."""
     if not os.path.isdir(base_dir):
         return None
-    dset = ds.dataset(base_dir, format="parquet", partitioning="hive")
+    dset = ds.dataset(base_dir, schema=schema, format="parquet",
+                      partitioning="hive")
     if not dset.files:
         return None
     return dset.to_table(columns=columns, filter=filter)
+
+
+def reader_schema(artifact: str) -> StructType:
+    """The schema of a Spark reader of an artifact dir, in the order
+    Spark's inference gives: the file columns, then the partition column."""
+    return StructType.fromDDL(
+        f"{_FILE_DDL[artifact]}, {_PART_COL[artifact]} int")
+
+
+def serving_table(base_dir: str, artifact: str,
+                  columns: list[str]) -> pa.Table:
+    """`columns` of an artifact dir read with pyarrow, typed as its Spark
+    reader (reader_schema); empty when the dir holds no parquet file."""
+    schema = to_arrow_schema(reader_schema(artifact))
+    tbl = read_table(base_dir, columns, schema=schema)
+    return schema.empty_table().select(columns) if tbl is None else tbl
 
 
 def file_schema(base_dir: str, artifact: str) -> pa.Schema:

@@ -513,3 +513,41 @@ def test_refresh_keeps_resident_snapshot_exact(spark, corpus200,
         # only docs of the new segment hold the marker: the fq search
         # finds them only through an allow-list computed after the refresh
         assert got
+
+
+def test_resident_open_and_refresh_run_no_job(spark, corpus200,
+                                              tmp_path_factory):
+    """Opening and refreshing a driver-resident engine run no Spark job —
+    after a driver append with overwrites (tombstones) and after a segment
+    merge — and its first fq miss runs one job, two on an index that holds
+    tombstones (the docstats anti-join)."""
+    from liresolr_spark.api import LireQueryEngine
+    from liresolr_spark.plans.compact import compact_segments
+    from liresolr_spark.streaming.ingest import append_segment
+
+    d = str(tmp_path_factory.mktemp("dispatch_open_index"))
+    append_segment(corpus200.limit(100), d, epoch_id=0, num_shards=4,
+                   block_size=32, with_positions=True)
+    eng, n_open = _jobs_run(spark, lambda: LireQueryEngine(spark, d))
+    assert eng.resident and eng._deny is None and n_open == 0
+
+    def fq_miss_jobs(fq):
+        return _jobs_run(spark, lambda: eng.search(
+            text="import return", fq=fq, rows=5).collect())[1]
+
+    assert fq_miss_jobs("lang != 'zz'") == 1
+    for rnd, n in ((1, 10), (2, 15)):
+        over = (corpus200.limit(n)
+                .withColumn("commit", F.concat("commit", F.lit(f"-v{rnd}"))))
+        fresh = corpus200.subtract(corpus200.limit(100)).orderBy(
+            "repo", "path").limit(n)
+        res = append_segment(over.unionByName(fresh), d, epoch_id=rnd)
+        assert res["write_path"] == "driver" and res["tombstoned_docs"]
+        assert _jobs_run(spark, eng.refresh)[1] == 0
+        assert eng.resident and eng._deny is not None
+        assert fq_miss_jobs(f"lang != 'zz{rnd}'") == 2
+    assert compact_segments(spark, d)["merged_docs"]
+    assert _jobs_run(spark, eng.refresh)[1] == 0
+    eng, n_open = _jobs_run(spark, lambda: LireQueryEngine(spark, d))
+    assert eng.resident and n_open == 0
+    assert fq_miss_jobs("lang != 'zz'") == (1 if eng._deny is None else 2)

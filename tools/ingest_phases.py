@@ -4,9 +4,11 @@ Runs `perfbench/run.py --workload ingest --trace 0` through its public
 `main`, with `append_segment`, `LireQueryEngine.refresh` and
 `compact_segments` wrapped so that each call records its tree CPU seconds
 (`perfbench/hostenv.tree_cpu_s`: this process, the Spark JVM and its
-Python workers) and its wall time. Prints the benchmark's own lines, then
-one line per wrapped call, the per-phase totals, and the same as one JSON
-object. perfbench/ is imported, never modified.
+Python workers), its wall time and the Spark jobs it ran (counted in a job
+group of its own, as `tests/test_dispatch._jobs_run` counts them). Prints
+the benchmark's own lines, then one line per wrapped call, the per-phase
+totals, and the same as one JSON object. perfbench/ is imported, never
+modified.
 
 Usage:
   python tools/ingest_phases.py --seed 1
@@ -20,6 +22,7 @@ import json
 import os
 import sys
 import time
+import uuid
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path[:0] = [REPO, os.path.join(REPO, "perfbench")]
@@ -34,20 +37,28 @@ def main(argv=None) -> int:
     import hostenv
     import run
 
+    from pyspark import SparkContext
+
     import liresolr_spark.plans.compact as compact
     import liresolr_spark.streaming.ingest as ingest
     from liresolr_spark.api import LireQueryEngine
 
-    calls: list[tuple[str, float, float]] = []
+    calls: list[tuple[str, float, float, int]] = []
 
     def timed(phase, fn):
         def wrapper(*a, **k):
+            sc = SparkContext._active_spark_context
+            group = f"ingest-phase-{uuid.uuid4()}"
+            sc.setJobGroup(group, phase)
             c0, t0 = hostenv.tree_cpu_s(), time.time()
             try:
                 return fn(*a, **k)
             finally:
-                calls.append((phase, hostenv.tree_cpu_s() - c0,
-                              time.time() - t0))
+                cpu, wall = hostenv.tree_cpu_s() - c0, time.time() - t0
+                sc.setLocalProperty("spark.jobGroup.id", None)
+                sc._jsc.sc().listenerBus().waitUntilEmpty()
+                calls.append((phase, cpu, wall, len(
+                    sc.statusTracker().getJobIdsForGroup(group))))
         return wrapper
 
     # the workload imports these names at call time, so module attributes
@@ -61,17 +72,19 @@ def main(argv=None) -> int:
                    "--seconds", str(args.seconds), "--trace", "0"])
 
     totals: dict = {}
-    print(f"{'call':<18}{'cpu_s':>9}{'wall_s':>9}")
-    for phase, cpu, wall in calls:
-        print(f"{phase:<18}{cpu:9.2f}{wall:9.2f}")
-        t = totals.setdefault(phase, {"calls": 0, "cpu_s": 0.0, "wall_s": 0.0})
+    print(f"{'call':<18}{'cpu_s':>9}{'wall_s':>9}{'jobs':>6}")
+    for phase, cpu, wall, jobs in calls:
+        print(f"{phase:<18}{cpu:9.2f}{wall:9.2f}{jobs:6d}")
+        t = totals.setdefault(phase, {"calls": 0, "cpu_s": 0.0, "wall_s": 0.0,
+                                      "jobs": 0})
         t["calls"] += 1
         t["cpu_s"] += cpu
         t["wall_s"] += wall
-    print(f"{'phase total':<18}{'cpu_s':>9}{'wall_s':>9}")
+        t["jobs"] += jobs
+    print(f"{'phase total':<18}{'cpu_s':>9}{'wall_s':>9}{'jobs':>6}")
     for phase, t in totals.items():
         print(f"{phase + ' x' + str(t['calls']):<18}"
-              f"{t['cpu_s']:9.2f}{t['wall_s']:9.2f}")
+              f"{t['cpu_s']:9.2f}{t['wall_s']:9.2f}{t['jobs']:6d}")
     print(json.dumps({"seed": args.seed, "phases": {
         k: {kk: round(vv, 3) for kk, vv in v.items()}
         for k, v in totals.items()}}))
