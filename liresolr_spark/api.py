@@ -109,8 +109,7 @@ def _dispatch_metrics(kernels: list) -> dict:
 
 
 def _unpersist(sides) -> None:
-    """Release the Spark-cached frames among `sides` (fq restriction
-    sides, an engine's readers)."""
+    """Release the Spark-cached frames among fq sides or readers."""
     for side in sides:
         if isinstance(side, DataFrame) and side.is_cached:
             side.unpersist()
@@ -168,8 +167,7 @@ class LireQueryEngine:
 
         # fq -> (allow, deny) pair; exactly one side non-None (see _fq_allow)
         self._fq_cache: OrderedDict[str, tuple] = OrderedDict()
-        # response payload columns: docID + the stored fields, the first
-        # five docstats columns
+        # response payload columns: docID + the stored fields (docstats' 1st 5)
         self._payload = StructType(reader_schema("docstats").fields[:5])
         self._open()
 
@@ -177,28 +175,31 @@ class LireQueryEngine:
         """Open the serving state of the current commit (the Solr
         searcher-reuse analog): meta first (read_meta refuses a live
         compaction marker, so no torn state is read), the fresh filter
-        artifacts, and the dictionary, pinned driver-side (_pin_dictionary)
-        — idf for a query is then pure arithmetic.
+        artifacts, the Spark readers of blocks, docstats and the dictionary
+        — given their files' schema (reader_schema), so building one runs
+        no job, and each keeps this commit's file list until the next open
+        — and the dictionary pinned driver-side (_pin_dictionary): idf for
+        a query is then pure arithmetic.
 
         The index is DRIVER-RESIDENT when the dictionary is pinned and its
         total posting count (Σ df over every field) is within the kernel
         dispatch bound (operators.wand.DRIVER_MAX_POSTINGS). No request
         can then exceed it, so every shard kernel runs in the driver, and
-        the rest of the serving state is read into driver memory too, with
-        pyarrow, typed as the Spark readers type it (serving_table): the
-        posting blocks (wand.BlockSnapshot), the docstats payload sorted by
-        docID, and the distinct tombstones as a pandas (shard, docID)
-        frame. Such an open runs no Spark job; the Spark readers (_reader)
-        serve only its fallbacks. Otherwise blocks and docstats are those
-        readers (cached when pin_blocks) and the tombstones a cached Spark
-        frame."""
+        the posting blocks (wand.BlockSnapshot), the docstats payload
+        sorted by docID and the distinct tombstones, a pandas (shard,
+        docID) frame, are read into driver memory with pyarrow, typed as
+        the readers (serving_table). Such an open runs no Spark job; only
+        its fallbacks scan the readers. Otherwise blocks and docstats are
+        the readers (cached when pin_blocks), tombstones a cached frame."""
         self.meta = read_meta(self.index_dir)
         # persisted filter artifacts (plans/filters.py — the warmed tier
         # under the in-memory fq cache), indexed by predicate string for
         # transparent use by _fq_allow
         self._load_fresh_filters()
-        self._readers: dict[str, DataFrame] = {}
-        self._dictionary: DataFrame | None = None
+        blocks, self._docstats_df, self._dictionary = (
+            self.spark.read.schema(reader_schema(a)).parquet(
+                f"{self.index_dir}/{a}")
+            for a in ("blocks", "docstats", "dictionary"))
         self._dict_map = self._pin_dictionary()
         postings = (None if self._dict_map is None else
                     sum(sum(m.values()) for m in self._dict_map.values()))
@@ -208,20 +209,19 @@ class LireQueryEngine:
         # keep counting them until compaction, exactly Lucene's deleted-docs
         # statistics behavior (see streaming.ingest / plans.compact)
         if self.resident:
-            self._blocks = BlockSnapshot(
-                self.index_dir, functools.partial(self._reader, "blocks"))
+            self._blocks = BlockSnapshot(blocks, self.index_dir)
             self._docs = serving_table(
-                f"{self.index_dir}/docstats", "docstats",
+                self.index_dir, "docstats",
                 ["shard", *self._payload.names]).sort_by("docID").to_pandas()
-            deny = serving_table(f"{self.index_dir}/tombstones",
-                                 "tombstones", ["shard", "docID"]).to_pandas()
+            deny = serving_table(self.index_dir, "tombstones",
+                                 ["shard", "docID"]).to_pandas()
             self._deny = (deny.drop_duplicates(ignore_index=True)
                           if len(deny) else None)
             return
-        self._blocks, self._docs = self._reader("blocks"), None
+        self._blocks, self._docs = blocks, None
         if self.pin_blocks:
             self._blocks.cache()
-            self._reader("docstats").cache()
+            self._docstats_df.cache()
         tombs = load_tombstones(self.spark, self.index_dir)
         self._deny = (tombs.select("shard", "docID").distinct().cache()
                       if tombs is not None and tombs.head(1) else None)
@@ -229,33 +229,25 @@ class LireQueryEngine:
     def _pin_dictionary(self) -> dict | None:
         """The dictionary as {field: {term: Σ df over its fragments}}, read
         with pyarrow, or None over MAX_DRIVER_DICT_TERMS (field, term)
-        entries: idf is then a cluster lookup over the cached `_dictionary`
-        reader. The fragments' footer row counts bound the entry count, so
+        entries: idf is then a cluster lookup over the `_dictionary` reader,
+        cached. The fragments' footer row counts bound the entry count, so
         only a sum over the cap takes the exact scalar Spark count."""
-        d = f"{self.index_dir}/dictionary"
         cap = self.MAX_DRIVER_DICT_TERMS
-        frags = read_table(d, [])  # footers only
+        frags = read_table(f"{self.index_dir}/dictionary", [])  # footers
         if frags is not None and frags.num_rows > cap:
-            reader = self._reader("dictionary")
-            merged = reader.groupBy("field", "term").agg(F.sum("df"))
+            merged = self._dictionary.groupBy("field", "term").agg(
+                F.sum("df"))
             if merged.limit(cap + 1).count() > cap:
-                self._dictionary = reader.cache()
+                self._dictionary.cache()
                 return None
-        tbl = serving_table(d, "dictionary", ["field", "term", "df"])
+        tbl = serving_table(self.index_dir, "dictionary",
+                            ["field", "term", "df"])
         merged = tbl.group_by(["field", "term"]).aggregate([("df", "sum")])
         dmap: dict = {}
         for field, term, df in zip(*(merged[c].to_pylist()
                                      for c in ("field", "term", "df_sum"))):
             dmap.setdefault(field, {})[term] = df
         return dmap
-
-    def _reader(self, artifact: str) -> DataFrame:
-        """The Spark reader of an artifact dir, built on first use with its
-        files' schema (no inference job) and kept until the next open."""
-        if artifact not in self._readers:
-            self._readers[artifact] = self.spark.read.schema(reader_schema(
-                artifact)).parquet(f"{self.index_dir}/{artifact}")
-        return self._readers[artifact]
 
     def refresh(self, rebuild_filters: bool = False) -> None:
         """Reopen the index after a committed segment append (the Solr
@@ -277,7 +269,8 @@ class LireQueryEngine:
             refresh_filter_artifacts(self.spark, self.index_dir)
         self._drop_fq_cache()
         if not self.resident:
-            _unpersist([self._deny, *self._readers.values()])
+            _unpersist([self._deny, self._blocks, self._docstats_df,
+                        self._dictionary])
         self._open()
 
     def _drop_fq_cache(self) -> None:
@@ -327,8 +320,8 @@ class LireQueryEngine:
 
     def _docstats(self) -> DataFrame:
         if self._deny is None:
-            return self._reader("docstats")
-        return self._reader("docstats").join(
+            return self._docstats_df
+        return self._docstats_df.join(
             _spark_side(self.spark, self._deny).select("docID"), "docID",
             "left_anti")
 
@@ -421,8 +414,7 @@ class LireQueryEngine:
         built with with_hash_tokens=False has no 'ha' field)."""
         if self._dict_map is not None:
             return bool(self._dict_map.get(field))
-        return bool(
-            self._dictionary.filter(F.col("field") == field).head(1))
+        return bool(self._dictionary.filter(F.col("field") == field).head(1))
 
     def _check_clauses(self, terms: list[str]) -> list[str]:
         # ref: BooleanQuery.setMaxClauseCount(10000), SimilarRequestHandler.java:101
@@ -457,8 +449,7 @@ class LireQueryEngine:
                 payload = self._docs.loc[self._docs["docID"].isin(ids),
                                          self._payload.names]
             else:
-                payload = (self._reader("docstats")
-                           .filter(F.col("docID").isin(ids))
+                payload = (self._docstats_df.filter(F.col("docID").isin(ids))
                            .select(*self._payload.names).toPandas())
             page = page.merge(payload, on="docID")
         return local_frame(self.spark, page, struct)

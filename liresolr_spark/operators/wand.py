@@ -108,9 +108,8 @@ def kernel_dispatch(postings: int | None) -> str:
 class BlockSnapshot:
     """The posting blocks of a driver-resident index (api.LireQueryEngine:
     Σ df of the whole dictionary within DRIVER_MAX_POSTINGS), read into
-    driver memory once with pyarrow (local_write.serving_table); `reader`
-    returns the Spark reader of the same dir, built on first use, for the
-    Spark path (prune_blocks).
+    driver memory once with pyarrow (serving_table), typed as `df`, the
+    lazy, uncached Spark reader kept beside it for the Spark path.
 
     Rows are held in (field, shard, term, block_seq) order — for one field
     the order of a collected pruned scan, since the build writes each
@@ -122,10 +121,9 @@ class BlockSnapshot:
                "last_docid", "docids", "tfs", "doclens", "positions",
                "max_tf", "min_dl"]
 
-    def __init__(self, index_dir: str, reader):
-        self.reader = reader
-        table = serving_table(f"{index_dir}/blocks", "blocks",
-                              self.COLUMNS).sort_by(
+    def __init__(self, df: DataFrame, index_dir: str):
+        self.df = df
+        table = serving_table(index_dir, "blocks", self.COLUMNS).sort_by(
             [(c, "ascending") for c in ("field", "shard", "term",
                                         "block_seq")])
         self.rows = table.to_pandas()
@@ -161,7 +159,7 @@ def prune_blocks(spark, index_dir: str, blocks_df, field: str, terms,
     snap = blocks_df if isinstance(blocks_df, BlockSnapshot) else None
 
     def scan() -> DataFrame:
-        src = snap.reader() if snap is not None else blocks_df
+        src = snap.df if snap is not None else blocks_df
         if src is None:
             src = spark.read.parquet(f"{index_dir}/blocks")
         return src.filter(

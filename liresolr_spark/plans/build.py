@@ -142,9 +142,8 @@ def _pid_alive(pid: int) -> bool:
 
 def load_tombstones(spark: SparkSession, index_dir: str) -> DataFrame | None:
     """(docID, shard, seg) rows for docs superseded by a cross-segment
-    overwrite (see streaming.ingest). None if the index has none. Schema is
-    explicit (local_write.reader_schema) so a dir holding only empty
-    segments reads cleanly."""
+    overwrite (see streaming.ingest), None if the index has none; read with
+    local_write.reader_schema, so a dir of empty segments reads cleanly."""
     from liresolr_spark.plans.local_write import reader_schema
 
     p = _paths(index_dir)["tombstones"]

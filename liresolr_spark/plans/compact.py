@@ -560,7 +560,7 @@ class _DriverMerge:
         shards = (new_base + rank // meta.docs_per_shard).astype(np.int32)
         docs = live.set_column(live.schema.get_field_index("shard"), "shard",
                                pa.array(shards))
-        write_partitions(docs, p["docstats"], "docstats", "shard", ["docID"])
+        write_partitions(docs, p["docstats"], "docstats", ["docID"])
 
         cols = ["field", "term", "docids", "tfs", "doclens"] \
             + (["positions"] if meta.with_positions else [])
@@ -591,7 +591,7 @@ class _DriverMerge:
                 surviving.set_column(
                     2, "seg", pa.array(np.full(surviving.num_rows, new_base,
                                                np.int32))),
-                p["tombstones"], "tombstones", "seg", ["docID"])
+                p["tombstones"], "tombstones", ["docID"])
 
 
 def repair_segment_compaction(index_dir: str, force: bool = False) -> str:

@@ -30,7 +30,7 @@ from pyspark.sql.types import StructType
 from liresolr_spark.plans.build import BLOCK_SCHEMA
 
 # File columns (partition column excluded) of each artifact, as the Spark
-# plans write them, and the hive partition column of each one read back.
+# plans write them, and the hive partition column each is written under.
 _FILE_DDL = {
     "docstats": "docID long, repo string, path string, commit string, "
                 "lang string, doclen int, sha256 string",
@@ -41,17 +41,16 @@ _FILE_DDL = {
     "tombstones": "docID long, shard int",
 }
 _PART_COL = {"docstats": "shard", "blocks": "shard", "dictionary": "seg",
-             "tombstones": "seg"}
+             "manifest": "shard", "tombstones": "seg"}
 
 
 def read_table(base_dir: str, columns: list[str] | None = None,
                filter=None, schema: pa.Schema | None = None
                ) -> pa.Table | None:
     """Rows of a hive-partitioned artifact dir, partition columns
-    included, typed as `schema` when given (columns=[]: the footers' row
-    counts only); None when the dir holds no parquet file. pyarrow's
-    default ignore_prefixes ('.', '_') skip, in every path component, what
-    Spark's file index hides: `_SUCCESS`, `.crc` sidecars, `_temporary`."""
+    included, typed as `schema` when given (columns=[]: footer row counts
+    only); None when the dir holds no parquet file. pyarrow's default
+    ignore_prefixes ('.', '_') skip what Spark's file index hides."""
     if not os.path.isdir(base_dir):
         return None
     dset = ds.dataset(base_dir, schema=schema, format="parquet",
@@ -68,12 +67,12 @@ def reader_schema(artifact: str) -> StructType:
         f"{_FILE_DDL[artifact]}, {_PART_COL[artifact]} int")
 
 
-def serving_table(base_dir: str, artifact: str,
+def serving_table(index_dir: str, artifact: str,
                   columns: list[str]) -> pa.Table:
-    """`columns` of an artifact dir read with pyarrow, typed as its Spark
-    reader (reader_schema); empty when the dir holds no parquet file."""
+    """`columns` of an index's artifact dir read with pyarrow, typed as its
+    Spark reader (reader_schema); empty when the dir holds no parquet file."""
     schema = to_arrow_schema(reader_schema(artifact))
-    tbl = read_table(base_dir, columns, schema=schema)
+    tbl = read_table(f"{index_dir}/{artifact}", columns, schema=schema)
     return schema.empty_table().select(columns) if tbl is None else tbl
 
 
@@ -92,10 +91,11 @@ def _arrow_schema(ddl: str) -> pa.Schema:
 
 
 def write_partitions(tbl: pa.Table, base_dir: str, artifact: str,
-                     part_col: str, sort_keys: list[str]) -> None:
-    """One file per `part_col` value under `<base_dir>/<part_col>=<v>/`,
+                     sort_keys: list[str]) -> None:
+    """One file per value of the artifact's partition column (_PART_COL),
     rows sorted by `sort_keys`, cast to the artifact dir's schema."""
     schema = file_schema(base_dir, artifact)
+    part_col = _PART_COL[artifact]
     os.makedirs(base_dir, exist_ok=True)
     for value in sorted(set(tbl.column(part_col).to_pylist())):
         part = tbl.filter(pc.equal(tbl[part_col], value)).sort_by(
@@ -127,7 +127,7 @@ def write_segment(blocks: pa.Table, docs: pa.Table, paths: dict,
     fragment (`seg=<seg>`) derived from the in-memory `blocks` and the
     segment's docstats rows `docs` — the rows `plans.build.write_manifest`
     and `write_dictionary` aggregate from the just-written files."""
-    write_partitions(blocks, paths["blocks"], "blocks", "shard",
+    write_partitions(blocks, paths["blocks"], "blocks",
                      ["field", "term", "block_seq"])
 
     # manifest: a full join of per-shard block and doc aggregates
@@ -146,8 +146,7 @@ def write_segment(blocks: pa.Table, docs: pa.Table, paths: dict,
     manifest = per_shard.join(counts, "shard", join_type="full outer")
     manifest = manifest.append_column(
         "status", pa.array(["done"] * manifest.num_rows, pa.string()))
-    write_partitions(manifest, paths["manifest"], "manifest", "shard",
-                     ["shard"])
+    write_partitions(manifest, paths["manifest"], "manifest", ["shard"])
 
     terms = blocks.group_by(["field", "term"]).aggregate(
         [("count", "sum"), ("max_tf_norm", "max")])
@@ -155,7 +154,7 @@ def write_segment(blocks: pa.Table, docs: pa.Table, paths: dict,
         "field": terms["field"], "term": terms["term"],
         "df": terms["count_sum"], "max_tf_norm": terms["max_tf_norm_max"],
         "seg": pa.array(np.full(terms.num_rows, seg, np.int32))})
-    write_partitions(dictionary, paths["dictionary"], "dictionary", "seg",
+    write_partitions(dictionary, paths["dictionary"], "dictionary",
                      ["field", "term"])
 
 

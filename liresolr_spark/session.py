@@ -9,6 +9,7 @@ comparable.
 from __future__ import annotations
 
 import os
+import uuid
 
 from pyspark.sql import SparkSession
 
@@ -53,3 +54,15 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+def jobs_run(spark: SparkSession, fn):
+    """(fn(), the number of Spark jobs fn ran in a job group of its own)."""
+    sc, group = spark.sparkContext, f"job-count-{uuid.uuid4()}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # every job's end event
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

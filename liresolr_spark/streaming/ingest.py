@@ -349,7 +349,7 @@ def _append_in_driver(batch: DataFrame, index_dir: str, meta,
         "docID": doc_ids, "shard": shards, "repo": docs["repo"],
         "path": docs["path"], "commit": docs["commit"],
         "lang": docs["lang"], "doclen": doclens, "sha256": docs["sha256"]})
-    write_partitions(docstats, p["docstats"], "docstats", "shard", ["docID"])
+    write_partitions(docstats, p["docstats"], "docstats", ["docID"])
 
     # cross-segment overwrite: earlier docs with a (repo, path) of this
     # batch, found by a docstats scan pushed down to the batch's repos and
@@ -370,7 +370,7 @@ def _append_in_driver(batch: DataFrame, index_dir: str, meta,
     write_partitions(
         tombs.append_column("seg", pa.array(
             np.full(tombs.num_rows, base_shard, np.int32))),
-        p["tombstones"], "tombstones", "seg", ["docID"])
+        p["tombstones"], "tombstones", ["docID"])
 
     # kernel input, as positional_postings_input / tf_aggregate shape it:
     # lexical occurrence rows (with pos) on a positional index, else (term,

@@ -28,6 +28,7 @@ from liresolr_spark.operators.phrase import (
     positional_matches_many,
 )
 from liresolr_spark.operators.wand import wand_topk, wand_topk_many
+from liresolr_spark.session import jobs_run as _jobs_run
 
 BOUNDS = {"spark": 0, "driver": 10**12}
 # engine legs: (engine opened resident?, request-time bound); the driver
@@ -387,19 +388,6 @@ def test_engine_handlers_two_paths(served, monkeypatch, case):
         got[leg] = rows
     assert got["spark"] == got["driver"] == got["resident"]
     assert bool(got["driver"]) != case.startswith("empty"), got["driver"]
-
-
-def _jobs_run(spark, fn):
-    """(fn(), number of Spark jobs fn ran)."""
-    sc = spark.sparkContext
-    group = f"job-count-{random.random()}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_driver_dispatched_job_counts(spark, pos_index, vocab, corpus200,

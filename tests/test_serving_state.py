@@ -1,8 +1,9 @@
 """The serving state a driver-resident engine reads with pyarrow
 (api.LireQueryEngine._open) against what Spark reads from the same index
 dir: the same rows (the file-set rule: pyarrow's '.'/'_' ignore prefixes
-hide what Spark's file index hides), the lazily built Spark readers'
-given schemas against the inferred ones, the compaction-marker gate, and
+hide what Spark's file index hides), the Spark readers' given schemas
+against the inferred ones, an engine that skips refresh() keeping its
+snapshot, the compaction-marker gate, and
 the MAX_DRIVER_DICT_TERMS pin rule with its exact Spark fallback."""
 
 from __future__ import annotations
@@ -108,14 +109,17 @@ def test_pyarrow_state_matches_spark_readers(spark, corpus200,
 
 
 def test_reader_schemas_match_inferred(spark, corpus200, tmp_path_factory):
-    """Each lazily built Spark reader carries the schema Spark would infer
+    """Each Spark reader an engine opens carries the schema Spark would infer
     from its dir, on a built, an appended and a compacted index."""
     d = str(tmp_path_factory.mktemp("reader_schema_index"))
 
     def check():
         eng = LireQueryEngine(spark, d)
-        for artifact in ("blocks", "docstats", "dictionary"):
-            assert (eng._reader(artifact).schema
+        assert eng.resident
+        readers = {"blocks": eng._blocks.df, "docstats": eng._docstats_df,
+                   "dictionary": eng._dictionary}
+        for artifact, reader in readers.items():
+            assert (reader.schema
                     == spark.read.parquet(f"{d}/{artifact}").schema), artifact
         tombs = load_tombstones(spark, d)
         if tombs is not None and tombs.head(1):
@@ -130,6 +134,40 @@ def test_reader_schemas_match_inferred(spark, corpus200, tmp_path_factory):
     check()
     assert compact_segments(spark, d)["merged_docs"]
     check()
+
+
+def test_unrefreshed_engine_keeps_its_snapshot(spark, corpus200,
+                                               tmp_path_factory):
+    """An engine that skips refresh() answers from the commit it opened:
+    after an append, its first Spark fallbacks (an fq miss, random_sample,
+    function_sort) return what an engine opened at that commit returns,
+    and after compact_segments, which deletes the merged files, they
+    raise — never rows of a later commit."""
+    d = str(tmp_path_factory.mktemp("stale_engine_index"))
+    build_index(corpus200.limit(100), d, num_shards=4, block_size=32,
+                with_positions=True)
+    append_segment(_overwrites(corpus200, 10), d)
+
+    def answers(eng):
+        return [[tuple(r) for r in df.collect()] for df in (
+            eng.search(text="import return", fq="lang != 'zz'", rows=50),
+            eng.random_sample(rows=500),
+            eng.function_sort("doclen", rows=500))]
+
+    before = answers(LireQueryEngine(spark, d))
+    stale = LireQueryEngine(spark, d)
+    assert stale.resident and stale._deny is not None
+    fresh = corpus200.subtract(corpus200.limit(100)).orderBy(
+        "repo", "path").limit(20)
+    res = append_segment(_overwrites(corpus200, 15).withColumn(
+        "commit", F.concat("commit", F.lit("-v3"))).unionByName(fresh), d)
+    assert res["tombstoned_docs"]
+    staler = LireQueryEngine(spark, d)
+    assert answers(stale) == before
+    assert compact_segments(spark, d)["merged_docs"]
+    for eng in (stale, staler):
+        with pytest.raises(Exception, match="FILE_NOT_EXIST"):
+            answers(eng)
 
 
 @pytest.fixture(scope="module")

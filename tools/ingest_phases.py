@@ -4,8 +4,8 @@ Runs `perfbench/run.py --workload ingest --trace 0` through its public
 `main`, with `append_segment`, `LireQueryEngine.refresh` and
 `compact_segments` wrapped so that each call records its tree CPU seconds
 (`perfbench/hostenv.tree_cpu_s`: this process, the Spark JVM and its
-Python workers), its wall time and the Spark jobs it ran (counted in a job
-group of its own, as `tests/test_dispatch._jobs_run` counts them). Prints
+Python workers), its wall time and the Spark jobs it ran
+(`liresolr_spark.session.jobs_run`, which the tests count with too). Prints
 the benchmark's own lines, then one line per wrapped call, the per-phase
 totals, and the same as one JSON object. perfbench/ is imported, never
 modified.
@@ -22,7 +22,6 @@ import json
 import os
 import sys
 import time
-import uuid
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path[:0] = [REPO, os.path.join(REPO, "perfbench")]
@@ -37,28 +36,23 @@ def main(argv=None) -> int:
     import hostenv
     import run
 
-    from pyspark import SparkContext
+    from pyspark.sql import SparkSession
 
     import liresolr_spark.plans.compact as compact
     import liresolr_spark.streaming.ingest as ingest
     from liresolr_spark.api import LireQueryEngine
+    from liresolr_spark.session import jobs_run
 
     calls: list[tuple[str, float, float, int]] = []
 
     def timed(phase, fn):
         def wrapper(*a, **k):
-            sc = SparkContext._active_spark_context
-            group = f"ingest-phase-{uuid.uuid4()}"
-            sc.setJobGroup(group, phase)
+            spark = SparkSession.getActiveSession()
             c0, t0 = hostenv.tree_cpu_s(), time.time()
-            try:
-                return fn(*a, **k)
-            finally:
-                cpu, wall = hostenv.tree_cpu_s() - c0, time.time() - t0
-                sc.setLocalProperty("spark.jobGroup.id", None)
-                sc._jsc.sc().listenerBus().waitUntilEmpty()
-                calls.append((phase, cpu, wall, len(
-                    sc.statusTracker().getJobIdsForGroup(group))))
+            out, jobs = jobs_run(spark, lambda: fn(*a, **k))
+            calls.append((phase, hostenv.tree_cpu_s() - c0,
+                          time.time() - t0, jobs))
+            return out
         return wrapper
 
     # the workload imports these names at call time, so module attributes
