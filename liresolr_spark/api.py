@@ -20,9 +20,10 @@ A small index is DRIVER-RESIDENT (see _open): its posting blocks, the
 docstats payload and the tombstones are read into driver memory once per
 open, and a request takes its block rows, masks and payload from there —
 the Solr searcher holding its segments in-process. Such a request runs
-no Spark job unless an fq misses the filter cache; only the returned
-local relation touches Spark. A larger index reads its blocks, masks and
-payload through Spark jobs.
+no Spark job, an fq that misses the filter cache included (it filters a
+local relation of the open commit's docstats rows, see _fq_allow); only
+the returned local relation touches Spark. A larger index reads its
+blocks, masks and payload through Spark jobs.
 Per-request metrics are returned alongside via `last_metrics` — the analog
 of RawDocsSearchTime / ReRankSearchTime in the reference's responses
 (ref: LireRequestHandler.java:460-461,493-494); its dispatch path is
@@ -52,7 +53,7 @@ from liresolr_spark.operators.wand import (MANY_SCHEMA, BlockSnapshot,
 from liresolr_spark.operators.wand import wand_topk  # noqa: F401
 from liresolr_spark.plans.build import load_tombstones, read_meta
 from liresolr_spark.plans.local_write import (read_table, reader_schema,
-                                              serving_table)
+                                              serving_table, spark_reader)
 
 
 def _counted(fn):
@@ -67,8 +68,9 @@ def _counted(fn):
     and fills in the keys every request has: RawDocsSearchTime_ms (the
     timed span) and its older name RawDocsSearchTime_planning_ms (same
     value), resident (the engine serves from a driver-resident snapshot,
-    see _open), dispatch and postings_est (_dispatch_metrics). Handlers
-    add their own fields."""
+    see _open), fq_tier (the tier that resolved the request's fq, see
+    _fq_allow; None without an fq), dispatch and postings_est
+    (_dispatch_metrics). Handlers add their own fields."""
 
     @functools.wraps(fn)
     def wrapper(self, *a, **kw):
@@ -89,7 +91,9 @@ def _counted(fn):
         ms = round(ms, 1)
         self.last_metrics.update(
             RawDocsSearchTime_ms=ms, RawDocsSearchTime_planning_ms=ms,
-            resident=self.resident, **_dispatch_metrics(kernels))
+            resident=self.resident,
+            fq_tier=self.last_metrics.get("fq_tier"),
+            **_dispatch_metrics(kernels))
         return out
 
     return wrapper
@@ -176,7 +180,7 @@ class LireQueryEngine:
         searcher-reuse analog): meta first (read_meta refuses a live
         compaction marker, so no torn state is read), the fresh filter
         artifacts, the Spark readers of blocks, docstats and the dictionary
-        — given their files' schema (reader_schema), so building one runs
+        — given their files' schema (spark_reader), so building one runs
         no job, and each keeps this commit's file list until the next open
         — and the dictionary pinned driver-side (_pin_dictionary): idf for
         a query is then pure arithmetic.
@@ -185,21 +189,24 @@ class LireQueryEngine:
         total posting count (Σ df over every field) is within the kernel
         dispatch bound (operators.wand.DRIVER_MAX_POSTINGS). No request
         can then exceed it, so every shard kernel runs in the driver, and
-        the posting blocks (wand.BlockSnapshot), the docstats payload
+        the posting blocks (wand.BlockSnapshot), every docstats column
         sorted by docID and the distinct tombstones, a pandas (shard,
         docID) frame, are read into driver memory with pyarrow, typed as
-        the readers (serving_table). Such an open runs no Spark job; only
-        its fallbacks scan the readers. Otherwise blocks and docstats are
-        the readers (cached when pin_blocks), tombstones a cached frame."""
+        the readers (serving_table). Such an open runs no Spark job, and
+        neither does its fq miss, which filters a local relation of these
+        rows (_snapshot_docstats, built at the first miss); only
+        random_sample and function_sort scan the readers. Otherwise blocks
+        and docstats are the readers (cached when pin_blocks), tombstones a
+        cached frame."""
         self.meta = read_meta(self.index_dir)
         # persisted filter artifacts (plans/filters.py — the warmed tier
         # under the in-memory fq cache), indexed by predicate string for
         # transparent use by _fq_allow
         self._load_fresh_filters()
         blocks, self._docstats_df, self._dictionary = (
-            self.spark.read.schema(reader_schema(a)).parquet(
-                f"{self.index_dir}/{a}")
+            spark_reader(self.spark, self.index_dir, a)
             for a in ("blocks", "docstats", "dictionary"))
+        self._docs_rel = None
         self._dict_map = self._pin_dictionary()
         postings = (None if self._dict_map is None else
                     sum(sum(m.values()) for m in self._dict_map.values()))
@@ -212,7 +219,7 @@ class LireQueryEngine:
             self._blocks = BlockSnapshot(blocks, self.index_dir)
             self._docs = serving_table(
                 self.index_dir, "docstats",
-                ["shard", *self._payload.names]).sort_by("docID").to_pandas()
+                reader_schema("docstats").names).sort_by("docID").to_pandas()
             deny = serving_table(self.index_dir, "tombstones",
                                  ["shard", "docID"]).to_pandas()
             self._deny = (deny.drop_duplicates(ignore_index=True)
@@ -325,6 +332,21 @@ class LireQueryEngine:
             _spark_side(self.spark, self._deny).select("docID"), "docID",
             "left_anti")
 
+    def _snapshot_docstats(self) -> DataFrame:
+        """The live docstats rows of the commit a driver-resident engine
+        opened — `_docs` minus the tombstoned docIDs, anti-joined on docID
+        as _docstats() does — as a local relation typed as the docstats
+        reader. Built at the first fq miss after an open, from the rows
+        read at open, never from disk: the files may since have been
+        merged away or renumbered by a compaction."""
+        if self._docs_rel is None:
+            docs = self._docs
+            if self._deny is not None:
+                docs = docs[~docs["docID"].isin(self._deny["docID"])]
+            self._docs_rel = local_frame(self.spark, docs,
+                                         reader_schema("docstats"))
+        return self._docs_rel
+
     def _fq_allow(self, fq: str) -> tuple:
         """(allow, deny) docID restriction for an fq, cached per fq string —
         the CachingWrapperFilter analog (Solr computes a filter query's
@@ -336,27 +358,44 @@ class LireQueryEngine:
         segment changes every allow-list (the searcher-reopen analog —
         Solr's filterCache is likewise per-searcher).
 
-        Resolution order, exactly Solr's warming tiers:
-        1. in-memory cache hit (this searcher already computed it);
-        2. a FRESH persisted artifact whose predicate string matches
-           (plans/filters.py): a pruned parquet read, no corpus scan —
+        Resolution order, exactly Solr's warming tiers, each named in the
+        request's last_metrics["fq_tier"]:
+        1. "cache": an in-memory cache hit (this searcher already computed
+           it);
+        2. "artifact": a FRESH persisted artifact whose predicate string
+           matches (plans/filters.py): a parquet read, no corpus scan —
            allow-mode fills the allow side, deny-mode the deny side;
-        3. compute from docstats (and cache).
+        3. compute from docstats (and cache): "snapshot" on a
+           driver-resident engine, the fq filtered over a local relation
+           of the docstats rows read at open (_snapshot_docstats) — Spark
+           SQL's own semantics (LIKE, NULLs, ANSI errors) — or "spark", a
+           scan of the docstats reader.
         Exactly one side of the returned tuple is non-None: a (shard,
-        docID) pandas frame on a driver-resident engine — collected once
-        per cache entry, the one Spark job of an fq-missing request — else
-        a cached Spark frame."""
+        docID) pandas frame on a driver-resident engine, which resolves
+        every tier with no Spark job (the artifact is read with pyarrow,
+        the snapshot collect()ed, see frames.py) — else a cached Spark
+        frame."""
         cached = self._fq_cache.get(fq)
         if cached is not None:
             self._fq_cache.move_to_end(fq)
+            self.last_metrics["fq_tier"] = "cache"
             return cached
         art = self._filter_by_predicate.get(fq)
-        if art is not None:
-            side = self.spark.read.parquet(art["data_path"])
+        if not self.resident:
+            side = (self._docstats().filter(F.expr(fq)) if art is None
+                    else self.spark.read.parquet(art["data_path"]))
+            side = side.select("shard", "docID").cache()
+        elif art is not None:
+            side = read_table(art["data_path"], ["shard", "docID"]).to_pandas()
         else:
-            side = self._docstats().filter(F.expr(fq))
-        side = side.select("shard", "docID")
-        side = side.toPandas() if self.resident else side.cache()
+            side = pd.DataFrame(
+                self._snapshot_docstats().filter(F.expr(fq))
+                .select("shard", "docID").collect(),
+                columns=["shard", "docID"]).astype(
+                    {"shard": "int32", "docID": "int64"})
+        self.last_metrics["fq_tier"] = (
+            "artifact" if art is not None
+            else "snapshot" if self.resident else "spark")
         allow = art is None or art["mode"] == "allow"
         pair = (side, None) if allow else (None, side)
         self._fq_cache[fq] = pair
@@ -660,7 +699,7 @@ class LireQueryEngine:
         from liresolr_spark.ship import ship_package
 
         ship_package(self.spark)
-        blocks = self.spark.read.parquet(f"{self.index_dir}/blocks").filter(
+        blocks = spark_reader(self.spark, self.index_dir, "blocks").filter(
             (F.col("shard") == int(row["shard"])) & (F.col("field") == "ha")
             & (F.col("first_docid") <= doc_id) & (F.col("last_docid") >= doc_id)
         )

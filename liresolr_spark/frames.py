@@ -6,6 +6,13 @@ no Spark job. pyspark 4.1 turns an EMPTY pandas frame, and
 `createDataFrame([], ddl)`, into a `LogicalRDD` instead, whose collect runs
 one job of Python tasks; an empty result is therefore a typed one-row frame
 cut by `.limit(0)`, which the optimizer keeps a local relation.
+
+Only `collect()` keeps that promise: the optimizer folds a deterministic
+Filter/Project into the `LocalRelation` and the rows come back with no job,
+while `toPandas()` and `toArrow()` of the same plan each run one job (the
+Arrow collect path submits one even over a local relation). Collect a
+filtered local relation with `collect()` and build the pandas frame from its
+rows.
 """
 
 from __future__ import annotations

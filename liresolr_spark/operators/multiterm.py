@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from liresolr_spark.frames import empty_frame
 from liresolr_spark.operators.wand import WAND_SCHEMA, wand_topk
+from liresolr_spark.plans.local_write import spark_reader
 
 # the tokenizer's output alphabet (functions/tokenizer.py spec step d):
 # a prefix outside it can never match a dictionary term
@@ -77,7 +78,7 @@ def expand_prefix(
         matched.sort(key=lambda p: (-p[1], p[0]))
         return [t for t, _ in matched[:max_expansions]]
     dictionary = (dictionary_df if dictionary_df is not None
-                  else spark.read.parquet(f"{index_dir}/dictionary"))
+                  else spark_reader(spark, index_dir, "dictionary"))
     rows = (
         dictionary
         .filter((F.col("field") == field) & F.col("term").startswith(prefix))
@@ -169,7 +170,7 @@ def expand_wildcard(
         matched.sort(key=lambda p: (-p[1], p[0]))
         return [t for t, _ in matched[:max_expansions]]
     dictionary = (dictionary_df if dictionary_df is not None
-                  else spark.read.parquet(f"{index_dir}/dictionary"))
+                  else spark_reader(spark, index_dir, "dictionary"))
     rows = (
         dictionary
         .filter((F.col("field") == field) & F.col("term").startswith(lit)
@@ -275,7 +276,7 @@ def expand_fuzzy(
         matched.sort(key=lambda p: (-p[1], p[0]))
         return [t for t, _ in matched[:max_expansions]]
     dictionary = (dictionary_df if dictionary_df is not None
-                  else spark.read.parquet(f"{index_dir}/dictionary"))
+                  else spark_reader(spark, index_dir, "dictionary"))
     cond = (
         (F.col("field") == field)
         # length window: a cheap pushdown-able prune before the DP

@@ -72,7 +72,7 @@ from liresolr_spark.frames import as_frame, empty_pdf, local_frame, struct_of
 from liresolr_spark.functions.codec import decode_blocks
 from liresolr_spark.operators.bm25 import idf_lucene
 from liresolr_spark.plans.build import read_meta
-from liresolr_spark.plans.local_write import serving_table
+from liresolr_spark.plans.local_write import serving_table, spark_reader
 
 # Postings (sum of df over a request's distinct terms) at or under which the
 # shard kernels run in the driver instead of a pandas-UDF stage. Both paths
@@ -150,10 +150,10 @@ def prune_blocks(spark, index_dir: str, blocks_df, field: str, terms,
     (scan, rows) pair for the blocks of `terms` in `field`, projected to
     `columns`. scan() returns the lazy Spark plan (shard dirs
     partition-pruned, row-group stats prune term) over `blocks_df` — a
-    pre-loaded reader, a BlockSnapshot's reader, or a fresh one when None;
-    it is built only when called, because building it analyzes a plan in
-    the JVM, which a request served from the snapshot never needs. rows
-    are the same rows from driver memory when `blocks_df` is a
+    pre-loaded reader, a BlockSnapshot's reader, or a fresh spark_reader
+    when None; it is built only when called, because building it analyzes
+    a plan in the JVM, which a request served from the snapshot never
+    needs. rows are the same rows from driver memory when `blocks_df` is a
     BlockSnapshot, else None."""
     terms = list(terms)
     snap = blocks_df if isinstance(blocks_df, BlockSnapshot) else None
@@ -161,7 +161,7 @@ def prune_blocks(spark, index_dir: str, blocks_df, field: str, terms,
     def scan() -> DataFrame:
         src = snap.df if snap is not None else blocks_df
         if src is None:
-            src = spark.read.parquet(f"{index_dir}/blocks")
+            src = spark_reader(spark, index_dir, "blocks")
         return src.filter(
             (F.col("field") == field) & F.col("term").isin(terms)
         ).select(*columns)
@@ -689,7 +689,7 @@ def _wand_topk(
         # sum df across dictionary fragments: appended segments each add one
         # (the Lucene multi-segment term-dictionary merge)
         dictionary = (dictionary_df if dictionary_df is not None
-                      else spark.read.parquet(f"{index_dir}/dictionary"))
+                      else spark_reader(spark, index_dir, "dictionary"))
         rows = (
             dictionary.filter((F.col("field") == field)
                               & F.col("term").isin(all_terms))

@@ -143,13 +143,13 @@ def _pid_alive(pid: int) -> bool:
 def load_tombstones(spark: SparkSession, index_dir: str) -> DataFrame | None:
     """(docID, shard, seg) rows for docs superseded by a cross-segment
     overwrite (see streaming.ingest), None if the index has none; read with
-    local_write.reader_schema, so a dir of empty segments reads cleanly."""
-    from liresolr_spark.plans.local_write import reader_schema
+    local_write.spark_reader (the files' schema given), so a dir of empty
+    segments reads cleanly."""
+    from liresolr_spark.plans.local_write import spark_reader
 
-    p = _paths(index_dir)["tombstones"]
-    if not os.path.exists(p):
+    if not os.path.exists(_paths(index_dir)["tombstones"]):
         return None
-    return spark.read.schema(reader_schema("tombstones")).parquet(p)
+    return spark_reader(spark, index_dir, "tombstones")
 
 
 def read_meta(index_dir: str) -> IndexMeta:

@@ -24,6 +24,7 @@ import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.dataset as ds
 import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
@@ -65,6 +66,14 @@ def reader_schema(artifact: str) -> StructType:
     Spark's inference gives: the file columns, then the partition column."""
     return StructType.fromDDL(
         f"{_FILE_DDL[artifact]}, {_PART_COL[artifact]} int")
+
+
+def spark_reader(spark: SparkSession, index_dir: str,
+                 artifact: str) -> DataFrame:
+    """A Spark reader of an index's artifact dir given its files' schema
+    (reader_schema), so building it runs no schema-inference job."""
+    return spark.read.schema(reader_schema(artifact)).parquet(
+        f"{index_dir}/{artifact}")
 
 
 def serving_table(index_dir: str, artifact: str,

@@ -136,6 +136,31 @@ def test_wand_topk_two_paths(spark, pos_index, vocab, monkeypatch):
         assert [r[0] for r in got["driver"][0]] == [w[0] for w in want]
 
 
+def test_unloaded_readers_run_no_inference_job(spark, pos_index, vocab):
+    """A public operator handed no pre-loaded reader builds its own with the
+    files' schema (local_write.spark_reader), so it runs no
+    schema-inference job: wand_topk with neither blocks nor a dictionary
+    runs at most 4 jobs (6 with inferred readers), and a prefix, wildcard
+    or fuzzy expansion over an unpinned dictionary at most 2 (3 with an
+    inferred reader), each returning the pinned dictionary's expansion."""
+    from liresolr_spark.operators.multiterm import (expand_fuzzy,
+                                                    expand_prefix,
+                                                    expand_wildcard)
+
+    d, dmap = pos_index
+    hits, n = _jobs_run(spark, lambda: wand_topk(
+        spark, d, [vocab[0], vocab[3]], k=5).collect())
+    assert hits and n <= 4, n
+    term = next(t for t in vocab if t.isalnum() and t.islower()
+                and len(t) >= 3)
+    for expand, arg in ((expand_prefix, term[:2]),
+                        (expand_wildcard, term[:2] + "*"),
+                        (expand_fuzzy, term)):
+        terms, n = _jobs_run(spark, lambda: expand(spark, d, arg))
+        assert terms == expand(spark, d, arg, dictionary_map=dmap)
+        assert terms and n <= 2, (expand.__name__, n)
+
+
 def test_wand_pruning_two_paths(spark, prune_index, monkeypatch):
     d, dmap = prune_index
     terms = sorted(dmap["text"], key=lambda t: (-dmap["text"][t], t))
@@ -398,7 +423,9 @@ def test_driver_dispatched_job_counts(spark, pos_index, vocab, corpus200,
     identity(verify_threshold=), similar, warm-fq search or
     search(doc_id=). On an engine that is not resident, a
     driver-dispatched search() or phrase_search() runs at most 2 — the
-    pruned block collect and the page's payload fetch. With every kernel
+    pruned block collect and the page's payload fetch — and
+    search(doc_id=) at most 6 (7 before its blocks probe was given the
+    files' schema). With every kernel
     on the Spark path, search() runs at most 3 and identity() with
     verify_threshold at most 5: the top-k is collected once, then one
     payload fetch."""
@@ -426,7 +453,8 @@ def test_driver_dispatched_job_counts(spark, pos_index, vocab, corpus200,
     resident["search_fq"]().collect()  # warm the fq cache entry
     legs = {
         "resident": (resident, dict.fromkeys(resident, 0)),
-        "driver": (calls(engines[False]), {"search": 2, "phrase_search": 2}),
+        "driver": (calls(engines[False]), {"search": 2, "phrase_search": 2,
+                                           "search_doc_id": 6}),
         "spark": (calls(engines[False]), {"search": 3, "identity": 5}),
     }
     for leg, (handlers, bounded) in legs.items():
@@ -507,8 +535,8 @@ def test_resident_open_and_refresh_run_no_job(spark, corpus200,
                                               tmp_path_factory):
     """Opening and refreshing a driver-resident engine run no Spark job —
     after a driver append with overwrites (tombstones) and after a segment
-    merge — and its first fq miss runs one job, two on an index that holds
-    tombstones (the docstats anti-join)."""
+    merge — and neither does its fq miss, with or without tombstones: it
+    filters a local relation of the docstats rows read at open."""
     from liresolr_spark.api import LireQueryEngine
     from liresolr_spark.plans.compact import compact_segments
     from liresolr_spark.streaming.ingest import append_segment
@@ -520,10 +548,12 @@ def test_resident_open_and_refresh_run_no_job(spark, corpus200,
     assert eng.resident and eng._deny is None and n_open == 0
 
     def fq_miss_jobs(fq):
-        return _jobs_run(spark, lambda: eng.search(
+        n = _jobs_run(spark, lambda: eng.search(
             text="import return", fq=fq, rows=5).collect())[1]
+        assert eng.last_metrics["fq_tier"] == "snapshot"
+        return n
 
-    assert fq_miss_jobs("lang != 'zz'") == 1
+    assert fq_miss_jobs("lang != 'zz'") == 0
     for rnd, n in ((1, 10), (2, 15)):
         over = (corpus200.limit(n)
                 .withColumn("commit", F.concat("commit", F.lit(f"-v{rnd}"))))
@@ -533,9 +563,9 @@ def test_resident_open_and_refresh_run_no_job(spark, corpus200,
         assert res["write_path"] == "driver" and res["tombstoned_docs"]
         assert _jobs_run(spark, eng.refresh)[1] == 0
         assert eng.resident and eng._deny is not None
-        assert fq_miss_jobs(f"lang != 'zz{rnd}'") == 2
+        assert fq_miss_jobs(f"lang != 'zz{rnd}'") == 0
     assert compact_segments(spark, d)["merged_docs"]
     assert _jobs_run(spark, eng.refresh)[1] == 0
     eng, n_open = _jobs_run(spark, lambda: LireQueryEngine(spark, d))
     assert eng.resident and n_open == 0
-    assert fq_miss_jobs("lang != 'zz'") == (1 if eng._deny is None else 2)
+    assert fq_miss_jobs("lang != 'zz'") == 0

@@ -11,6 +11,7 @@ import os
 import pyspark.sql.functions as F
 import pytest
 
+import liresolr_spark.operators.wand as wand
 from liresolr_spark.api import LireQueryEngine
 from liresolr_spark.plans.build import build_index
 from liresolr_spark.plans.filters import (
@@ -20,6 +21,7 @@ from liresolr_spark.plans.filters import (
     meta_fingerprint,
     read_filter_artifact,
 )
+from liresolr_spark.session import jobs_run
 from liresolr_spark.sources.corpus import synthetic_code_corpus
 
 
@@ -51,14 +53,32 @@ def test_modes_pick_the_smaller_side(spark, idx):
         assert df.count() == m["rows_stored"]
 
 
-def test_artifact_serving_matches_scan_both_modes(spark, idx):
+def _served(spark, eng, q, fq):
+    """(ranked page, Spark jobs run, fq tier) of one fq search."""
+    rows, n = jobs_run(spark, lambda: eng.search(text=q, fq=fq,
+                                                 rows=10).collect())
+    return _ranked(rows), n, eng.last_metrics["fq_tier"]
+
+
+def test_artifact_serving_matches_scan_both_modes(spark, idx, monkeypatch):
+    """Artifact-served pages equal the docstats-computed ones, allow- and
+    deny-mode. The driver-resident engine resolves both the fq miss and
+    the artifact with no Spark job; an engine that is not resident serves
+    the same pages through its Spark tiers. last_metrics["fq_tier"] names
+    the tier each time."""
     q = "readFile tokenBlock sortMerge"
     fq_allow = "lang = 'python'"
     fq_deny = "doclen >= 10"  # matches nearly everything -> deny mode
     eng = LireQueryEngine(spark, idx)  # no artifacts yet
-    want_allow = _ranked(eng.search(text=q, fq=fq_allow, rows=10).collect())
-    want_deny = _ranked(eng.search(text=q, fq=fq_deny, rows=10).collect())
+    assert eng.resident
+    want_allow, n, tier = _served(spark, eng, q, fq_allow)
+    assert (n, tier) == (0, "snapshot")
+    want_deny, n, tier = _served(spark, eng, q, fq_deny)
+    assert (n, tier) == (0, "snapshot")
     assert want_allow and want_deny
+    assert _served(spark, eng, q, fq_allow) == (want_allow, 0, "cache")
+    eng.search(text=q, rows=10)
+    assert eng.last_metrics["fq_tier"] is None
 
     ma = build_filter_artifact(spark, idx, "flt-allow", fq_allow)
     md = build_filter_artifact(spark, idx, "flt-deny", fq_deny)
@@ -66,15 +86,21 @@ def test_artifact_serving_matches_scan_both_modes(spark, idx):
     eng2 = LireQueryEngine(spark, idx, pin_blocks=False)
     assert fq_allow in eng2._filter_by_predicate
     assert fq_deny in eng2._filter_by_predicate
-    got_allow = _ranked(eng2.search(text=q, fq=fq_allow, rows=10).collect())
-    got_deny = _ranked(eng2.search(text=q, fq=fq_deny, rows=10).collect())
-    assert got_allow == want_allow
-    assert got_deny == want_deny
+    assert _served(spark, eng2, q, fq_allow) == (want_allow, 0, "artifact")
+    assert _served(spark, eng2, q, fq_deny) == (want_deny, 0, "artifact")
     # the artifact side landed in the fq cache (no docstats scan next time)
     allow_df, deny_df = eng2._fq_cache[fq_allow]
     assert allow_df is not None and deny_df is None
     allow_df, deny_df = eng2._fq_cache[fq_deny]
     assert allow_df is None and deny_df is not None
+
+    with monkeypatch.context() as mp:
+        mp.setattr(wand, "DRIVER_MAX_POSTINGS", 0)
+        spark_eng = LireQueryEngine(spark, idx)
+    assert not spark_eng.resident
+    for fq, want in ((fq_allow, want_allow), (fq_deny, want_deny)):
+        assert _served(spark, spark_eng, q, fq)[::2] == (want, "artifact")
+    assert _served(spark, spark_eng, q, "lang = 'go'")[2] == "spark"
 
 
 def test_stale_artifact_ignored_after_index_mutation(spark, idx, corpus200,

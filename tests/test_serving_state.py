@@ -22,7 +22,7 @@ import liresolr_spark.operators.wand as wand
 from liresolr_spark.api import LireQueryEngine
 from liresolr_spark.plans.build import build_index, load_tombstones
 from liresolr_spark.plans.compact import compact_segments
-from liresolr_spark.plans.local_write import read_table
+from liresolr_spark.plans.local_write import read_table, reader_schema
 from liresolr_spark.streaming.ingest import append_segment
 
 
@@ -44,10 +44,11 @@ def _assert_state_matches_spark(spark, d, eng):
     blocks = spark.read.parquet(f"{d}/blocks")
     assert sorted(eng._blocks.rows[cols].itertuples(index=False, name=None)
                   ) == _rows(blocks, cols)
-    docs = ["shard", *eng._payload.names]
+    docs = reader_schema("docstats").names
+    assert list(eng._docs.columns) == docs
     assert list(eng._docs.itertuples(index=False, name=None)) == sorted(
         _rows(spark.read.parquet(f"{d}/docstats"), docs),
-        key=lambda r: r[1])
+        key=lambda r: r[docs.index("docID")])
     merged = (spark.read.parquet(f"{d}/dictionary").groupBy("field", "term")
               .agg(F.sum("df")).collect())
     assert eng._dict_map == {
@@ -139,20 +140,27 @@ def test_reader_schemas_match_inferred(spark, corpus200, tmp_path_factory):
 def test_unrefreshed_engine_keeps_its_snapshot(spark, corpus200,
                                                tmp_path_factory):
     """An engine that skips refresh() answers from the commit it opened:
-    after an append, its first Spark fallbacks (an fq miss, random_sample,
-    function_sort) return what an engine opened at that commit returns,
-    and after compact_segments, which deletes the merged files, they
-    raise — never rows of a later commit."""
+    after an append, an fq miss and its Spark fallbacks (random_sample,
+    function_sort) return what an engine opened at that commit returns.
+    After compact_segments, which deletes the merged files, an fq miss
+    still does — it filters the docstats rows read at open — while the
+    fallbacks raise: never rows of a later commit."""
     d = str(tmp_path_factory.mktemp("stale_engine_index"))
     build_index(corpus200.limit(100), d, num_shards=4, block_size=32,
                 with_positions=True)
     append_segment(_overwrites(corpus200, 10), d)
 
+    def fq_leg(eng, fq):
+        rows = [tuple(r) for r in eng.search(
+            text="import return", fq=fq, rows=50).collect()]
+        assert eng.last_metrics["fq_tier"] == "snapshot"
+        return rows
+
     def answers(eng):
-        return [[tuple(r) for r in df.collect()] for df in (
-            eng.search(text="import return", fq="lang != 'zz'", rows=50),
-            eng.random_sample(rows=500),
-            eng.function_sort("doclen", rows=500))]
+        return [fq_leg(eng, "lang != 'zz'")] + [
+            [tuple(r) for r in df.collect()] for df in (
+                eng.random_sample(rows=500),
+                eng.function_sort("doclen", rows=500))]
 
     before = answers(LireQueryEngine(spark, d))
     stale = LireQueryEngine(spark, d)
@@ -163,11 +171,60 @@ def test_unrefreshed_engine_keeps_its_snapshot(spark, corpus200,
         "commit", F.concat("commit", F.lit("-v3"))).unionByName(fresh), d)
     assert res["tombstoned_docs"]
     staler = LireQueryEngine(spark, d)
-    assert answers(stale) == before
+    between = answers(LireQueryEngine(spark, d))
+    assert answers(stale) == before and between != before
     assert compact_segments(spark, d)["merged_docs"]
-    for eng in (stale, staler):
-        with pytest.raises(Exception, match="FILE_NOT_EXIST"):
-            answers(eng)
+    for eng, want in ((stale, before), (staler, between)):
+        # an fq string neither engine has cached, matching every doc as
+        # the one `want` was answered under
+        assert fq_leg(eng, "lang != 'zy'") == want[0]
+        for fallback in (lambda: eng.random_sample(rows=500),
+                         lambda: eng.function_sort("doclen", rows=500)):
+            with pytest.raises(Exception, match="FILE_NOT_EXIST"):
+                fallback().collect()
+
+
+def test_fq_snapshot_matches_spark_scan(spark, corpus200, tmp_path_factory,
+                                       monkeypatch):
+    """On a tombstoned index, a resident engine's fq misses (filtered over
+    its docstats snapshot, no Spark job) resolve to the allow-lists and
+    pages of a non-resident engine's docstats scan, for predicates over
+    every docstats column, a NULL-yielding one included; an invalid fq
+    raises on both engines, every time, and never yields a page."""
+    d = str(tmp_path_factory.mktemp("fq_snapshot_index"))
+    build_index(corpus200.limit(100), d, num_shards=4, block_size=32)
+    assert append_segment(_overwrites(corpus200, 20), d)["tombstoned_docs"]
+    with monkeypatch.context() as mp:
+        mp.setattr(wand, "DRIVER_MAX_POSTINGS", 0)
+        scan = LireQueryEngine(spark, d)
+    snap = LireQueryEngine(spark, d)
+    assert snap.resident and snap._deny is not None and not scan.resident
+    langs = sorted(snap._docs["lang"].unique())
+    repo, path = snap._docs[["repo", "path"]].iloc[0]
+    fqs = ["doclen >= 10", "sha256 LIKE 'a%'", "commit != ''",
+           f"lang IN ('{langs[0]}', '{langs[-1]}')",
+           f"repo LIKE '{repo.split('/')[0]}/%'",
+           f"path LIKE '{path.rsplit('/', 1)[0]}/%'",
+           f"nullif(lang, '{langs[0]}') = '{langs[-1]}'",
+           "shard = 1 AND docID % 2 = 0"]
+    for fq in fqs:
+        pages = []
+        for eng in (snap, scan):
+            page, n = _jobs_run(spark, lambda: eng.search(
+                text="import return", fq=fq, rows=50).collect())
+            assert n == 0 or eng is scan
+            pages.append([tuple(r) for r in page])
+        assert snap.last_metrics["fq_tier"] == "snapshot"
+        assert scan.last_metrics["fq_tier"] == "spark"
+        assert pages[0] == pages[1], fq
+        allow = (sorted(snap._fq_allow(fq)[0].itertuples(index=False,
+                                                         name=None)),
+                 _rows(scan._fq_allow(fq)[0], ["shard", "docID"]))
+        assert allow[0] == allow[1] and allow[0], fq
+    for fq in ("no_such_col = 1", "CAST(repo AS INT) = 1"):
+        for eng in (snap, scan, snap):
+            with pytest.raises(Exception):
+                eng.search(text="import return", fq=fq, rows=5).collect()
 
 
 @pytest.fixture(scope="module")
