@@ -43,15 +43,18 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
 from liresolr_spark import DEFAULT_CANDIDATES, DEFAULT_ROWS, MAX_QUERY_TERMS
-from liresolr_spark.frames import empty_pdf, local_frame
+from liresolr_spark.frames import local_frame
 from liresolr_spark.functions.codec import decode_blocks
 from liresolr_spark.functions.tokenizer import py_hash_token, py_tokenize
-from liresolr_spark.operators.wand import (MANY_SCHEMA, BlockSnapshot,
-                                           _kernel_log, _spark_side,
-                                           _wand_topk, kernel_dispatch, top_k)
+from liresolr_spark.operators.wand import (BlockSnapshot, _kernel_log,
+                                           _spark_side, _wand_topk,
+                                           kernel_dispatch, top_k)
 # unused here; perfbench's layer tracer hooks it by name as api.wand_topk
 from liresolr_spark.operators.wand import wand_topk  # noqa: F401
 from liresolr_spark.plans.build import load_tombstones, read_meta
+from liresolr_spark.plans.filters import (artifact_side,
+                                          load_filter_manifests,
+                                          refresh_filter_artifacts)
 from liresolr_spark.plans.local_write import (read_table, reader_schema,
                                               serving_table, spark_reader)
 
@@ -271,8 +274,6 @@ class LireQueryEngine:
         are then warm for the first request instead of falling back to the
         docstats scan."""
         if rebuild_filters:
-            from liresolr_spark.plans.filters import refresh_filter_artifacts
-
             refresh_filter_artifacts(self.spark, self.index_dir)
         self._drop_fq_cache()
         if not self.resident:
@@ -291,8 +292,6 @@ class LireQueryEngine:
         """(Re)index FRESH persisted-artifact manifests by predicate string
         — shared by _open() and reload_filters(); stale ones (index mutated
         since build) are ignored, never served."""
-        from liresolr_spark.plans.filters import load_filter_manifests
-
         self._filter_by_predicate = {
             m["predicate"]: m
             for m in load_filter_manifests(self.index_dir).values()
@@ -324,6 +323,25 @@ class LireQueryEngine:
             dictionary_map=self._dict_map, meta=self.meta,
             allow_docids=allow, deny_docids=deny))
         return hits if batch is queries else hits.drop(columns="qid")
+
+    def _phrases(self, texts, k, restriction, corpus) -> pd.DataFrame:
+        """The phrase analog of _wand: exact phrase top-k of every phrase
+        of a {qid: phrase} batch — or of one phrase, the batch of one
+        returned without its qid column — under `restriction`
+        (_restriction), as driver rows in response order (_collect).
+        Matches scored in Spark are cached for the one collect (scores and
+        phrase df both read them) and released right after it."""
+        from liresolr_spark.operators.phrase import _phrase_topk
+
+        allow, deny = restriction
+        batch = texts if isinstance(texts, dict) else {"": texts}
+        cache: list = []
+        hits = _collect(_phrase_topk(
+            self.spark, self.index_dir, corpus, batch, k=k,
+            blocks_df=self._blocks, meta=self.meta, allow_docids=allow,
+            deny_docids=deny, cache_out=cache,
+            dictionary_map=self._dict_map), cache)
+        return hits if batch is texts else hits.drop(columns="qid")
 
     def _docstats(self) -> DataFrame:
         if self._deny is None:
@@ -383,7 +401,7 @@ class LireQueryEngine:
         art = self._filter_by_predicate.get(fq)
         if not self.resident:
             side = (self._docstats().filter(F.expr(fq)) if art is None
-                    else self.spark.read.parquet(art["data_path"]))
+                    else artifact_side(self.spark, art["data_path"]))
             side = side.select("shard", "docID").cache()
         elif art is not None:
             side = read_table(art["data_path"], ["shard", "docID"]).to_pandas()
@@ -690,17 +708,21 @@ class LireQueryEngine:
 
     def _example_terms(self, doc_id: int) -> list[str]:
         """_search_by_example's term lookup through Spark: a docstats point
-        lookup for the doc's shard, then a distributed probe that decodes
-        only that shard's 'ha' blocks (partition pruned) whose range covers
-        the doc (row-group stat pruned)."""
-        row = self._docstats().filter(F.col("docID") == doc_id).first()
-        if row is None:
+        lookup for the doc's shard (one collect of the filtered shard
+        column: a docID is unique among live docs, and `first()` would
+        scan the partitions a few at a time), then a distributed probe
+        that decodes only that shard's 'ha' blocks (partition pruned)
+        whose range covers the doc (row-group stat pruned)."""
+        shards = self._docstats().filter(
+            F.col("docID") == doc_id).select("shard").collect()
+        if not shards:
             raise KeyError(f"docID {doc_id} not in index")
         from liresolr_spark.ship import ship_package
 
         ship_package(self.spark)
         blocks = spark_reader(self.spark, self.index_dir, "blocks").filter(
-            (F.col("shard") == int(row["shard"])) & (F.col("field") == "ha")
+            (F.col("shard") == int(shards[0]["shard"]))
+            & (F.col("field") == "ha")
             & (F.col("first_docid") <= doc_id) & (F.col("last_docid") >= doc_id)
         )
 
@@ -820,81 +842,47 @@ class LireQueryEngine:
         corpus: DataFrame | None = None,
     ) -> DataFrame:
         """Exact phrase query (Solr `"..."` syntax) served through the same
-        pipeline as search() — fq pushdown, pagination, projection.
+        pipeline as search() — fq pushdown, pagination, projection — as the
+        batch of one of the phrase step (_phrases).
 
         On a positional index (build_index(with_positions=True)) the phrase
         is answered entirely from the posting blocks (Lucene PhraseQuery
         semantics, operators/phrase.py); otherwise the two-stage verify
         path runs and needs `corpus` (the index stores sha256, not
-        content). When the matches are scored in Spark they have two
-        consumers (scores + phrase df): the match relation is cached for
-        the one collect and released right after it (_collect), so the
-        pipeline runs once and nothing persisted outlives the request."""
-        from liresolr_spark.operators.phrase import _phrase_topk
-
+        content): without it the request raises. The fq and the
+        tombstones restrict the match kernel's docIDs, so the phrase df
+        counts only the docs the request can return."""
         positional = getattr(self.meta, "with_positions", False)
-        allow, deny = self._restriction(fq)
-        cache: list = []
-        hits = _phrase_topk(
-            self.spark, self.index_dir, corpus, text, k=start + rows,
-            blocks_df=self._blocks, meta=self.meta, allow_docids=allow,
-            deny_docids=deny, cache_out=cache, dictionary_map=self._dict_map)
+        hits = self._phrases(text, start + rows, self._restriction(fq),
+                             corpus)
         self.last_metrics.update(
             field="text", phrase=text,
             path="positions" if positional else "verify")
-        return self._respond(_collect(hits, cache), start, rows)
+        return self._respond(hits, start, rows)
 
     @_counted
     def phrase_search_many(self, texts: dict[str, str],
                            rows: int = DEFAULT_ROWS,
                            corpus: DataFrame | None = None) -> DataFrame:
-        """Batched phrase serving: ALL phrases in ONE distributed job — on
-        a positional index the union of the phrases' terms is scanned and
-        decoded once per shard (the search_many amortization). Returns
-        DataFrame(qid, docID, repo, path, commit, lang, score), each qid's
-        exact top-`rows`, rank-identical to per-phrase phrase_search().
-        The match relation is cached and released as in phrase_search.
+        """Batched phrase serving through the phrase step (_phrases): ALL
+        phrases in ONE distributed job — on a positional index the union
+        of the phrases' terms is scanned and decoded once per shard (the
+        search_many amortization). Returns DataFrame(qid, docID, repo,
+        path, commit, lang, score), each qid's exact top-`rows`,
+        rank-identical to per-phrase phrase_search(); the tombstones
+        restrict the match kernel's docIDs.
 
-        On a POSITIONLESS index the batch degrades to the two-stage verify
-        path per phrase (needs `corpus` — the index stores sha256, not
-        content), unioned under one action: results stay rank-identical to
-        phrase_search, but the per-shard decode is NOT shared across
-        phrases, so throughput is the single-query rate times parallel
-        subtree overlap — build with with_positions=True for the batched
-        fast path (the error below steers there when corpus is absent)."""
-        from liresolr_spark.operators import phrase
-
-        cache: list = []
-        if not texts:
-            hits = empty_pdf(MANY_SCHEMA)
-        elif not getattr(self.meta, "with_positions", False):
-            if corpus is None:
-                raise ValueError(
-                    f"index {self.index_dir} was built with_positions=False"
-                    " — batched phrase serving needs either the positions"
-                    " stream (rebuild with with_positions=True for the"
-                    " shared-decode fast path) or corpus= for the per-"
-                    "phrase verify fallback")
-            deny = self._restriction()[1]
-            per = [
-                phrase.phrase_topk(
-                    self.spark, self.index_dir, corpus, text, k=rows,
-                    blocks_df=self._blocks, meta=self.meta,
-                    deny_docids=deny, cache_out=cache,
-                    dictionary_map=self._dict_map)
-                .select(F.lit(qid).alias("qid"), "docID", "score")
-                for qid, text in sorted(texts.items())
-            ]
-            hits = functools.reduce(DataFrame.unionByName, per)
-        else:
-            hits = phrase._phrase_topk_many(
-                self.spark, self.index_dir, texts, k=rows,
-                blocks_df=self._blocks, meta=self.meta,
-                deny_docids=self._restriction()[1], cache_out=cache,
-                dictionary_map=self._dict_map)
+        On a POSITIONLESS index the batch runs the two-stage verify path
+        per phrase (needs `corpus` — the index stores sha256, not content;
+        a non-empty batch without it raises), unioned under one merge:
+        results stay rank-identical to phrase_search, but the per-shard
+        decode is NOT shared across phrases, so throughput is the
+        single-query rate times parallel subtree overlap — build with
+        with_positions=True for the batched fast path."""
+        hits = self._phrases(texts, rows, self._restriction(), corpus)
         self.last_metrics.update(field="text", n_queries=len(texts),
                                  pool=rows)
-        return self._respond(_collect(hits, cache))
+        return self._respond(hits)
 
     # -- /lireId analog -----------------------------------------------------
 

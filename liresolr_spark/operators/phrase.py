@@ -33,6 +33,11 @@ set is a strict superset and BOTH paths are exact — including the phrase
 df (count of matching docs), which makes the scores identical to an
 index-free recompute (gated by the q18/w04/w05 DuckDB oracles).
 
+One body serves both paths, `_phrase_topk` over {qid: phrase}: a single
+phrase is the batch of one. A restriction (fq, tombstones) is the match
+or candidate kernel's docID mask, as for WAND, so the phrase df counts
+only the matches inside it; the final merge is WAND's too.
+
 Scoring: the phrase is ONE BM25 clause whose tf is the phrase frequency
 (PhraseQuery feeding the standard similarity).
 
@@ -47,6 +52,8 @@ are as big as its rarest term's postings — the optimizer decides by size).
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
@@ -56,11 +63,11 @@ from liresolr_spark.frames import as_frame, empty_pdf
 from liresolr_spark.functions.codec import decode_blocks, decode_positions
 from liresolr_spark.functions.tokenizer import py_tokenize, tokenize_expr
 from liresolr_spark.operators.wand import (MANY_SCHEMA, WAND_SCHEMA,
-                                           _in_sorted, _merge_topk_per_qid,
-                                           _restrict_rows, _run_shard_kernel,
-                                           postings_estimate, prune_blocks,
-                                           top_k)
+                                           _apply_mask, _in_sorted,
+                                           _merge_topk, _run_shard_kernel,
+                                           postings_estimate, prune_blocks)
 from liresolr_spark.plans.build import NATURAL_KEY, read_meta
+from liresolr_spark.plans.local_write import spark_reader
 
 DOCSET_SCHEMA = "shard int, docID long"
 MATCH_SCHEMA = "shard int, docID long, tf long, doclen long"
@@ -124,12 +131,16 @@ def _conjunctive_docids(
     blocks_df: DataFrame | None = None,
     meta=None,
     dictionary_map: dict | None = None,
+    allow_docids=None,
+    deny_docids=None,
 ):
     """(shard, docID) rows of docs whose `field` contains EVERY term — the
     boolean-AND candidate set, from posting-list intersection; a pandas
     frame when the kernel ran in the driver, else a lazy DataFrame.
     dictionary_map: the driver-side {field: {term: df}} snapshot; it sizes
     the request for the kernel dispatch (operators.wand._run_shard_kernel).
+    allow_docids / deny_docids: the (shard, docID) restriction sides of
+    operators.wand._wand_topk, the kernel's docID mask.
 
     Per shard (one Arrow batch, same dispatch as the WAND kernel): decode
     the shard's docID streams at once, split them into per-term runs (each
@@ -144,7 +155,7 @@ def _conjunctive_docids(
                           ["shard", "term", "block_seq", "docids"])
     n_required = len(uniq)
 
-    def kernel(bl: pd.DataFrame) -> pd.DataFrame:
+    def kernel(bl: pd.DataFrame, allow=None, deny=None) -> pd.DataFrame:
         empty = pd.DataFrame({"shard": pd.Series(dtype="int32"),
                               "docID": pd.Series(dtype="int64")})
         bl = _pre_intersect_blocks(bl, n_required)
@@ -153,7 +164,7 @@ def _conjunctive_docids(
         shard = int(bl["shard"].iloc[0])
         ids, _, _, counts = decode_blocks(bl["docids"])
         per_term = sorted(np.split(ids, _term_runs(bl, counts)[1]), key=len)
-        cur = per_term[0]
+        cur = _apply_mask(allow, deny, per_term[0])[0]
         for ids in per_term[1:]:
             if not len(cur):
                 return empty
@@ -165,8 +176,8 @@ def _conjunctive_docids(
                              "docID": cur})
 
     return _run_shard_kernel(
-        spark, blocks, kernel, DOCSET_SCHEMA, meta,
-        postings=postings_estimate(dictionary_map, field, uniq))
+        spark, blocks, kernel, DOCSET_SCHEMA, meta, allow_docids,
+        deny_docids, postings_estimate(dictionary_map, field, uniq))
 
 
 def _decode_term_postings(bl: pd.DataFrame) -> dict:
@@ -182,11 +193,12 @@ def _decode_term_postings(bl: pd.DataFrame) -> dict:
         np.split(flat, offsets[cuts]))))
 
 
-def _sliding_match(per: dict, seq: list[str]):
+def _sliding_match(per: dict, seq: list[str], allow=None, deny=None):
     """SLIDING phrase matches against decoded per-term postings: returns
     (docIDs, tf, doclen) numpy arrays, or None when nothing matches.
 
-    docID AND across the unique terms (smallest posting list first), then
+    docID AND across the unique terms (smallest posting list first, cut to
+    the shard's sorted `allow`/`deny` docID mask), then
     per sequence slot i intersect (doc_rank << 32) | (pos - i) key sets —
     the vectorized ExactPhraseMatcher advance loop; tf counts every match
     position (self-overlapping included); doc_rank (dense index into the
@@ -196,7 +208,7 @@ def _sliding_match(per: dict, seq: list[str]):
     if any(t not in per for t in uniq):
         return None
     ordered = sorted(uniq, key=lambda t: len(per[t][0]))
-    cand = per[ordered[0]][0]
+    cand = _apply_mask(allow, deny, per[ordered[0]][0])[0]
     for t in ordered[1:]:
         if not len(cand):
             return None
@@ -256,12 +268,16 @@ def _positional_matches(
     blocks_df: DataFrame | None = None,
     meta=None,
     dictionary_map: dict | None = None,
+    allow_docids=None,
+    deny_docids=None,
 ):
     """(qid, shard, docID, tf, doclen) rows of SLIDING phrase matches for
     every phrase of `phrases` ({qid: [terms...]}), answered entirely from
     the positional index (no corpus access) in ONE distributed job; a
     pandas frame when the kernel ran in the driver, else a lazy DataFrame.
-    A single phrase is the batch of one.
+    A single phrase is the batch of one. allow_docids / deny_docids: the
+    restriction sides of operators.wand._wand_topk, the kernel's docID
+    mask: only docs inside it match.
 
     Per shard: the blocks of the UNION of the phrases' terms are decoded
     once — a hot term's posting list once no matter how many phrases use
@@ -287,7 +303,7 @@ def _positional_matches(
                           POSITIONAL_COLUMNS)
     specs = sorted(phrases.items())
 
-    def kernel(bl: pd.DataFrame) -> pd.DataFrame:
+    def kernel(bl: pd.DataFrame, allow=None, deny=None) -> pd.DataFrame:
         empty = pd.DataFrame({
             "qid": pd.Series(dtype="object"),
             "shard": pd.Series(dtype="int32"),
@@ -304,7 +320,7 @@ def _positional_matches(
         per = _decode_term_postings(bl)
         frames = []
         for qid, seq in specs:
-            m = _sliding_match(per, seq)
+            m = _sliding_match(per, seq, allow, deny)
             if m is None:
                 continue
             ids, tf, dls = m
@@ -315,54 +331,8 @@ def _positional_matches(
         return pd.concat(frames, ignore_index=True) if frames else empty
 
     return _run_shard_kernel(
-        spark, blocks, kernel, MATCH_MANY_SCHEMA, meta,
-        postings=postings_estimate(dictionary_map, field, all_terms))
-
-
-def phrase_topk_many(spark: SparkSession, *args, **kwargs) -> DataFrame:
-    """Batched exact phrase top-k as a DataFrame(qid, docID, score): the
-    arguments and result of _phrase_topk_many, a driver-side result wrapped
-    as a local relation."""
-    return as_frame(spark, _phrase_topk_many(spark, *args, **kwargs),
-                    MANY_SCHEMA)
-
-
-def _phrase_topk_many(
-    spark: SparkSession,
-    index_dir: str,
-    phrases: dict[str, str],
-    k: int = 60,
-    field: str = "text",
-    blocks_df: DataFrame | None = None,
-    meta=None,
-    deny_docids: DataFrame | None = None,
-    cache_out: list | None = None,
-    dictionary_map: dict | None = None,
-):
-    """Batched exact phrase top-k (positional indexes only): (qid, docID,
-    score) rows with each qid's matches ranked by its own phrase-BM25.
-    Rank-identical per qid to phrase_topk. When the match kernel ran in the
-    driver, scoring (per-qid df = match count) and the merge are pandas and
-    the result is a pandas frame ordered by (qid, score desc, docID);
-    otherwise the per-qid df is a small keyed aggregate broadcast back and
-    the merge is the batched serving merge
-    (operators.wand._merge_topk_per_qid)."""
-    specs = {q: py_tokenize(p) for q, p in phrases.items()}
-    specs = {q: t for q, t in specs.items()
-             if not _lacks_term(dictionary_map, field, t)}
-    meta = meta or read_meta(index_dir)
-    matched = _positional_matches(spark, index_dir, specs, field=field,
-                                  blocks_df=blocks_df, meta=meta,
-                                  dictionary_map=dictionary_map)
-    matched = _restrict_rows(spark, matched, None, deny_docids,
-                             meta.block_size)
-    if isinstance(matched, pd.DataFrame):
-        scored = matched.assign(score=_phrase_bm25(matched, meta))
-        return top_k(scored[["qid", "docID", "score"]], k, group="qid")
-    scored = _score_phrase_matches(
-        matched.withColumn("_dl", F.col("doclen").cast("double")),
-        meta.n_docs, meta.avgdl, meta.k1, meta.b, cache_out)
-    return _merge_topk_per_qid(scored.select("qid", "docID", "score"), k)
+        spark, blocks, kernel, MATCH_MANY_SCHEMA, meta, allow_docids,
+        deny_docids, postings_estimate(dictionary_map, field, all_terms))
 
 
 def _phrase_bm25(matched: pd.DataFrame, meta) -> np.ndarray:
@@ -479,100 +449,117 @@ def phrase_scores(
     return _score_phrase_matches(matched, n_docs, avgdl, k1, b, cache_out)
 
 
-def phrase_topk(spark: SparkSession, *args, **kwargs) -> DataFrame:
-    """Exact phrase top-k as a DataFrame(docID, score): the arguments and
-    result of _phrase_topk, a driver-side result wrapped as a local
-    relation."""
-    return as_frame(spark, _phrase_topk(spark, *args, **kwargs), WAND_SCHEMA)
+def phrase_topk(spark: SparkSession, index_dir: str,
+                corpus: DataFrame | None, phrase: str, *args, **kwargs
+                ) -> DataFrame:
+    """Exact phrase top-k as a DataFrame(docID, score): _phrase_topk over
+    the batch of one `phrase`, projected to (docID, score), a driver-side
+    result wrapped as a local relation."""
+    return as_frame(spark, _phrase_topk(spark, index_dir, corpus,
+                                        {"": phrase}, *args, **kwargs),
+                    WAND_SCHEMA)
+
+
+def phrase_topk_many(spark: SparkSession, index_dir: str,
+                     phrases: dict[str, str], *args, **kwargs) -> DataFrame:
+    """Batched exact phrase top-k on a positional index as a
+    DataFrame(qid, docID, score): _phrase_topk over `phrases` with no
+    corpus (further arguments as _phrase_topk), a driver-side result
+    wrapped as a local relation."""
+    return as_frame(spark, _phrase_topk(spark, index_dir, None, phrases,
+                                        *args, **kwargs), MANY_SCHEMA)
 
 
 def _phrase_topk(
     spark: SparkSession,
     index_dir: str,
     corpus: DataFrame | None,
-    phrase: str,
+    phrases: dict[str, str],
     k: int = 60,
     field: str = "text",
     content_col: str = "content",
     blocks_df: DataFrame | None = None,
     meta=None,
-    allow_docids: DataFrame | None = None,
-    deny_docids: DataFrame | None = None,
+    allow_docids=None,
+    deny_docids=None,
     cache_out: list | None = None,
     mode: str = "auto",
     dictionary_map: dict | None = None,
 ):
-    """Exact phrase top-k through the index: (docID, score) rows, the
-    phrase matches ranked by phrase-BM25 (score DESC, docID ASC) — a pandas
-    frame when the positional match kernel ran in the driver (restriction,
-    scoring and top-k then run in pandas), else a lazy DataFrame.
+    """Exact phrase top-k of every phrase of `phrases` ({qid: phrase})
+    through the index: (qid, docID, score) rows, each qid's matches ranked
+    by its own phrase-BM25 — a pandas frame when the positional match
+    kernel ran in the driver, else a lazy DataFrame, merged by
+    operators.wand._merge_topk. A single phrase is the batch of one.
 
     mode: 'auto' uses the positional path when the index carries positions
-    (corpus may then be None), else the two-stage verify; 'positions' /
-    'verify' force one path ('verify' requires `corpus`; the two differ
-    only on self-overlapping phrases — see module docstring).
+    (corpus may then be None), else the two-stage verify, run per phrase;
+    'positions' / 'verify' force one path ('verify' requires `corpus`, and
+    a non-empty batch without it raises; the two differ only on
+    self-overlapping phrases — see module docstring).
 
-    allow_docids / deny_docids: the same (shard, docID) restriction sides
-    as wand_topk (fq pushdown / tombstones), applied to the match/candidate
-    set BEFORE the df aggregate (a filtered phrase query scores under the
-    filter, consistent across both paths). cache_out: see
-    _score_phrase_matches — without it the match pipeline runs twice.
-    dictionary_map: the driver-side {field: {term: df}} snapshot that sizes
-    the match kernel's dispatch (operators.wand._run_shard_kernel)."""
-    terms = py_tokenize(phrase)
-    if not terms or _lacks_term(dictionary_map, field, terms):
-        return empty_pdf(WAND_SCHEMA)
+    allow_docids / deny_docids: the (shard, docID) restriction sides of
+    operators.wand._wand_topk (fq pushdown, tombstones), the match or
+    candidate kernel's docID mask, so the phrase df counts only docs
+    inside the restriction. A phrase with a term the pinned
+    `dictionary_map` lacks matches nothing and reads no block; the map
+    also sizes the kernels' dispatch (operators.wand._run_shard_kernel).
+    cache_out: see _score_phrase_matches — without it the match pipeline
+    runs twice."""
     meta = meta or read_meta(index_dir)
     positional = getattr(meta, "with_positions", False) \
         if mode == "auto" else (mode == "positions")
+    if phrases and not positional and corpus is None:
+        raise ValueError(
+            f"index {index_dir} was built with_positions=False — the "
+            "phrase verify path needs the corpus DataFrame (the index "
+            "stores sha256, not content); pass corpus= or rebuild "
+            "with_positions=True for corpus-free phrase queries")
+    specs = {q: py_tokenize(p) for q, p in phrases.items()}
+    specs = {q: t for q, t in specs.items()
+             if t and not _lacks_term(dictionary_map, field, t)}
+    if not specs:
+        return empty_pdf(MANY_SCHEMA)
+    kw = dict(field=field, blocks_df=blocks_df, meta=meta,
+              dictionary_map=dictionary_map, allow_docids=allow_docids,
+              deny_docids=deny_docids)
 
     if positional:
-        matched = _positional_matches(spark, index_dir, {"": terms},
-                                      field=field, blocks_df=blocks_df,
-                                      meta=meta,
-                                      dictionary_map=dictionary_map)
-        matched = _restrict_rows(spark, matched, allow_docids, deny_docids,
-                                 meta.block_size)
+        matched = _positional_matches(spark, index_dir, specs, **kw)
         if isinstance(matched, pd.DataFrame):
-            scored = matched.assign(score=_phrase_bm25(matched, meta))
-            return top_k(scored[["docID", "score"]], k)
-        scored = _score_phrase_matches(
-            matched.withColumn("_dl", F.col("doclen").cast("double")),
-            meta.n_docs, meta.avgdl, meta.k1, meta.b, cache_out)
+            scored = matched.assign(score=_phrase_bm25(matched, meta))[
+                ["qid", "docID", "score"]]
+        else:
+            scored = _score_phrase_matches(
+                matched.withColumn("_dl", F.col("doclen").cast("double")),
+                meta.n_docs, meta.avgdl, meta.k1, meta.b, cache_out
+            ).select("qid", "docID", "score")
     else:
-        if corpus is None:
-            raise ValueError(
-                "phrase_topk verify path needs the corpus DataFrame (the "
-                "index stores sha256, not content); build the index "
-                "with_positions=True for corpus-free phrase queries")
-        cand = conjunctive_docids(spark, index_dir, terms, field=field,
-                                  blocks_df=blocks_df, meta=meta,
-                                  dictionary_map=dictionary_map)
-        cand = _restrict_rows(spark, cand, allow_docids, deny_docids,
-                              meta.block_size)
-        stats = spark.read.parquet(f"{index_dir}/docstats").select(
+        stats = spark_reader(spark, index_dir, "docstats").select(
             "shard", "docID", "doclen", "sha256", *NATURAL_KEY)
-        # the sha256 equality pin (the north-rule per-row invariant, stored
-        # in docstats at build time) keeps the verify honest under duplicate
-        # natural keys in the corpus: the build keeps one winner per key
-        # (assign_doc_ids dedup), and without the pin the content join could
-        # fan out to — and verify against — a LOSING duplicate's content
-        keyed = (
-            cand.join(stats, ["shard", "docID"])
-            .join(corpus.select(*NATURAL_KEY, content_col), NATURAL_KEY)
-            .filter(F.sha2(F.col(content_col), 256) == F.col("sha256"))
-            .drop("sha256")
-            # byte-identical duplicate corpus rows all pass the sha pin —
-            # without this dedup one indexed doc scores (and counts toward
-            # the phrase df) once per duplicate
-            .dropDuplicates(["docID"])
-        )
-        scored = phrase_scores(
-            keyed, phrase, meta.n_docs, meta.avgdl, meta.k1, meta.b,
-            content_col=content_col, doclen_col=F.col("doclen"),
-            cache_out=cache_out)
-    return (
-        scored.select("docID", "score")
-        .orderBy(F.desc("score"), F.asc("docID"))
-        .limit(k)
-    )
+        per = []
+        for qid, terms in sorted(specs.items()):
+            cand = conjunctive_docids(spark, index_dir, terms, **kw)
+            # the sha256 equality pin (the north-rule per-row invariant,
+            # stored in docstats at build time) keeps the verify honest
+            # under duplicate natural keys in the corpus: the build keeps
+            # one winner per key (assign_doc_ids dedup), and without the
+            # pin the content join could fan out to — and verify against —
+            # a LOSING duplicate's content
+            keyed = (
+                cand.join(stats, ["shard", "docID"])
+                .join(corpus.select(*NATURAL_KEY, content_col), NATURAL_KEY)
+                .filter(F.sha2(F.col(content_col), 256) == F.col("sha256"))
+                .drop("sha256")
+                # byte-identical duplicate corpus rows all pass the sha
+                # pin — without this dedup one indexed doc scores (and
+                # counts toward the phrase df) once per duplicate
+                .dropDuplicates(["docID"])
+            )
+            per.append(phrase_scores(
+                keyed, phrases[qid], meta.n_docs, meta.avgdl, meta.k1,
+                meta.b, content_col=content_col, doclen_col=F.col("doclen"),
+                cache_out=cache_out,
+            ).select(F.lit(qid).alias("qid"), "docID", "score"))
+        scored = functools.reduce(DataFrame.unionByName, per)
+    return _merge_topk(scored, k, batch=len(specs) > 1)

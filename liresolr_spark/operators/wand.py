@@ -170,7 +170,8 @@ def prune_blocks(spark, index_dir: str, blocks_df, field: str, terms,
 
 
 def _mask_from_pdf(mask_pdf: pd.DataFrame | None, allow_mode: bool):
-    """Per-shard docID restriction from a cogrouped (docID, allow) frame.
+    """Per-shard docID restriction from a cogrouped (docID, allow) frame,
+    as _run_shard_kernel hands it to a kernel.
 
     Returns (allow_sorted | None, deny_sorted | None). allow_mode=True means
     an allow-list is ACTIVE globally (fq pushdown): a shard with zero allow
@@ -200,40 +201,39 @@ def _in_sorted(ids: np.ndarray, sorted_arr: np.ndarray) -> np.ndarray:
     return hit
 
 
-def _apply_mask(ids, scores, allow, deny):
+def _apply_mask(allow, deny, ids, *cols):
+    """(ids, *cols) cut to the rows whose docID is in `allow` (when given)
+    and not in `deny` — the sorted mask sides of _mask_from_pdf."""
     if allow is None and deny is None:
-        return ids, scores
+        return (ids, *cols)
     keep = np.ones(len(ids), dtype=bool)
     if allow is not None:
         keep &= _in_sorted(ids, allow)
     if deny is not None:
         keep &= ~_in_sorted(ids, deny)
-    return ids[keep], scores[keep]
+    return (ids[keep], *(c[keep] for c in cols))
 
 
 def _shard_kernel(idf: dict, k: int, k1: float, b: float, avgdl: float,
-                  block_size: int, acc_total=None, acc_visited=None,
-                  allow_mode: bool = False):
+                  block_size: int, acc_total=None, acc_visited=None):
     """Returns the applyInPandas kernel: (shard's query-term blocks) -> topk.
 
     acc_total/acc_visited: optional Spark accumulators counting aligned
     docID ranges considered vs actually decoded — the observable WAND
     saving (ranges never visited are never decompressed).
 
-    The kernel optionally takes a second frame (docID, allow) — the
-    cogrouped per-shard docID restriction. allow=True rows form an fq
-    allow-list (pushed-down filter query: top-k is then exact UNDER the
-    filter, ref fq semantics LireRequestHandler.java:539-550); allow=False
-    rows are tombstones (docs superseded by a cross-segment overwrite,
-    excluded from results but still counted in df/avgdl until compaction —
-    exactly Lucene's deleted-docs statistics behavior). Masking happens
+    The kernel optionally takes the shard's docID restriction, the sorted
+    allow and deny arrays of _mask_from_pdf. allow forms an fq allow-list
+    (pushed-down filter query: top-k is then exact UNDER the filter, ref fq
+    semantics LireRequestHandler.java:539-550); deny holds tombstones (docs
+    superseded by a cross-segment overwrite, excluded from results but
+    still counted in df/avgdl until compaction — exactly Lucene's
+    deleted-docs statistics behavior). Masking happens
     BEFORE the running top-k/theta update, so a filtered doc can never
     displace an eligible one; the block upper bounds remain valid bounds
     for the masked subset, so WAND pruning stays safe."""
 
-    def kernel(blocks: pd.DataFrame, mask_pdf: pd.DataFrame | None = None
-               ) -> pd.DataFrame:
-        allow, deny = _mask_from_pdf(mask_pdf, allow_mode)
+    def kernel(blocks: pd.DataFrame, allow=None, deny=None) -> pd.DataFrame:
         if len(blocks) == 0:
             return pd.DataFrame({"docID": pd.Series(dtype="int64"),
                                  "score": pd.Series(dtype="float64")})
@@ -286,7 +286,7 @@ def _shard_kernel(idf: dict, k: int, k1: float, b: float, avgdl: float,
                 tf_f + k1 * (1.0 - b + b * dls.astype(np.float64) / avgdl))
             # restriction BEFORE the heap/theta update: a filtered doc must
             # never occupy a top-k slot or raise theta
-            ids_cat, sc_cat = _apply_mask(ids_cat, sc_cat, allow, deny)
+            ids_cat, sc_cat = _apply_mask(allow, deny, ids_cat, sc_cat)
             if not len(ids_cat):
                 continue
             # accumulate per docID within the range (range is small: <= block_size docs)
@@ -311,8 +311,7 @@ def _shard_kernel(idf: dict, k: int, k1: float, b: float, avgdl: float,
     return kernel
 
 
-def _shard_kernel_many(idfs: dict, k: int, k1: float, b: float, avgdl: float,
-                       allow_mode: bool = False):
+def _shard_kernel_many(idfs: dict, k: int, k1: float, b: float, avgdl: float):
     """Batched variant: Q queries against one shard's blocks in a single
     kernel invocation, fully vectorized TERM-AT-A-TIME exhaustive scoring.
 
@@ -332,14 +331,12 @@ def _shard_kernel_many(idfs: dict, k: int, k1: float, b: float, avgdl: float,
     never Q x docs). At 10^12 docs docs_per_shard is chosen by the build so
     a shard's dense row (~8 B x docs_per_shard) stays executor-sized.
 
-    Optional second frame = per-shard docID restriction (see _shard_kernel);
+    Optional allow/deny = per-shard docID restriction (see _shard_kernel);
     query-independent, applied once at decode."""
 
     DENSE_BUDGET = 64_000_000  # doubles: Q * span cap (~512 MB)
 
-    def kernel(blocks: pd.DataFrame, mask_pdf: pd.DataFrame | None = None
-               ) -> pd.DataFrame:
-        allow, deny = _mask_from_pdf(mask_pdf, allow_mode)
+    def kernel(blocks: pd.DataFrame, allow=None, deny=None) -> pd.DataFrame:
         empty = pd.DataFrame({"qid": pd.Series(dtype="object"),
                               "docID": pd.Series(dtype="int64"),
                               "score": pd.Series(dtype="float64")})
@@ -353,7 +350,7 @@ def _shard_kernel_many(idfs: dict, k: int, k1: float, b: float, avgdl: float,
         part = tf_f * (k1 + 1.0) / (
             tf_f + k1 * (1.0 - b + b * dls.astype(np.float64) / avgdl))
         # mask once; `kept` indexes the surviving postings
-        ids, kept = _apply_mask(ids, np.arange(len(ids)), allow, deny)
+        ids, kept = _apply_mask(allow, deny, ids, np.arange(len(ids)))
         if not len(ids):
             return empty
         codes = np.repeat(term_codes, n)[kept]
@@ -506,30 +503,6 @@ def _mask_rows(allow_docids, deny_docids, seqs, block_size: int
     return pd.concat(parts, ignore_index=True)
 
 
-def _restrict_rows(spark, df, allow_docids, deny_docids, block_size: int):
-    """Rows of a (shard, docID, ...) result inside the restriction: kept
-    when in every allow side and in no deny side. A pandas frame is
-    filtered in the driver (sides collected through _mask_rows over the
-    rows' aligned docID ranges), a Spark DataFrame by joins."""
-    allow, deny = _sides(allow_docids), _sides(deny_docids)
-    if not (allow or deny):
-        return df
-    if isinstance(df, pd.DataFrame):
-        if not len(df):
-            return df
-        mk = _mask_rows(allow, deny, df["docID"] // block_size, block_size)
-        ids = df["docID"].to_numpy()
-        keep = ~np.isin(ids, mk.loc[~mk["allow"], "docID"].to_numpy())
-        if allow:
-            keep &= np.isin(ids, mk.loc[mk["allow"], "docID"].to_numpy())
-        return df[keep].reset_index(drop=True)
-    for a in allow:
-        df = df.join(_spark_side(spark, a), ["shard", "docID"])
-    for d in deny:
-        df = df.join(_spark_side(spark, d), ["shard", "docID"], "left_anti")
-    return df
-
-
 def top_k(hits: pd.DataFrame, k: int, group: str | None = None
           ) -> pd.DataFrame:
     """Exact top-k of driver-side hits under (score desc, docID asc), per
@@ -553,15 +526,23 @@ def _run_shard_kernel(spark, blocks, kernel, schema, meta, allow=None,
     (postings_estimate); kernel_dispatch picks the path, and the estimate
     is appended to the request's kernel log (_kernel_log) when it has one.
 
+    Every operator restricts here, WAND and the phrase matches alike: a
+    restricted request calls `kernel(blocks, allow, deny)` with its shard's
+    sorted allow and deny docIDs (_mask_from_pdf; None for a side the
+    request lacks), and the kernel masks its candidate docIDs before it
+    scores or matches them; an unrestricted one calls `kernel(blocks)`. An
+    empty driver allow side (an fq or MUST set no doc is in) admits no
+    doc: no block is read, no kernel is logged, the result is empty.
+
     Driver path (small requests): the block rows are the snapshot rows
     when there are any, else one collect of the scan; the restriction
     rows are those that fall in the blocks' aligned docID ranges
     (_mask_rows: no job when every side is a pandas frame, else one
     collect). The same kernel closure then runs once per
     shard, under the cogroup contract: a shard with blocks but no mask
-    rows gets an EMPTY mask frame (under allow-mode it matches nothing); a
-    shard with mask rows but no blocks is skipped (every kernel returns no
-    rows for zero blocks). The rows stay in the driver: callers merge them
+    rows gets none (under an allow side it matches nothing); a shard with
+    mask rows but no blocks is skipped (every kernel returns no rows for
+    zero blocks). The rows stay in the driver: callers merge them
     with numpy, and the public operators wrap their result as a local
     relation.
 
@@ -576,22 +557,23 @@ def _run_shard_kernel(spark, blocks, kernel, schema, meta, allow=None,
     appears. The kernel's cost is CPU (decode + score), not data size —
     parallelism should follow shard count, not shuffle bytes."""
     scan, rows = blocks
-    restricted = bool(_sides(allow) or _sides(deny))
+    if any(isinstance(s, pd.DataFrame) and s.empty for s in _sides(allow)):
+        return empty_pdf(schema)
+    allow_mode = bool(_sides(allow))
+    restricted = allow_mode or bool(_sides(deny))
     if (log := _kernel_log.get()) is not None:
         log.append(postings)
     if kernel_dispatch(postings) == "driver":
         bl = scan().toPandas() if rows is None else rows
+        masks = {}
         if restricted and len(bl):
             mk = _mask_rows(allow, deny, bl["block_seq"], meta.block_size)
             masks = dict(tuple(mk.groupby("shard")))
         out = []
         for shard, grp in bl.groupby("shard"):
-            grp = grp.reset_index(drop=True)
-            if not restricted:
-                res = kernel(grp)
-            else:
-                res = kernel(grp, masks.get(shard, mk.iloc[:0])
-                             .reset_index(drop=True))
+            mask = (_mask_from_pdf(masks.get(shard), allow_mode)
+                    if restricted else ())
+            res = kernel(grp.reset_index(drop=True), *mask)
             if len(res):
                 out.append(res)
         struct = struct_of(schema)
@@ -607,7 +589,9 @@ def _run_shard_kernel(spark, blocks, kernel, schema, meta, allow=None,
     restrict = _restrict_df(spark, allow, deny).repartition(n_parts, "shard")
     return blocks.groupBy("shard").cogroup(
         restrict.groupBy("shard")
-    ).applyInPandas(lambda bl, mk: kernel(bl, mk), schema=schema)
+    ).applyInPandas(
+        lambda bl, mk: kernel(bl, *_mask_from_pdf(mk, allow_mode)),
+        schema=schema)
 
 
 MANY_SCHEMA = "qid string, docID long, score double"
@@ -655,13 +639,12 @@ def _wand_topk(
     driver, else a lazy DataFrame. A single query is the batch of one.
 
     The number of queries that know at least one term picks the kernel and
-    the merge. One query runs the block-max WAND kernel (_shard_kernel)
-    and, on the Spark path, a TakeOrderedAndProject merge (orderBy + limit:
-    bounded heap per partition + driver merge). A batch runs the
-    term-at-a-time kernel (_shard_kernel_many), which decodes each hot
-    block once for every query that touches it, and the per-qid merge
-    (_merge_topk_per_qid): per-job overhead (scheduling, Python worker
-    round trip, shuffle setup) is paid once for the whole batch.
+    the merge (_merge_topk). One query runs the block-max WAND kernel
+    (_shard_kernel). A batch runs the term-at-a-time kernel
+    (_shard_kernel_many), which decodes each hot block once for every query
+    that touches it, and on the Spark path the per-qid merge: per-job
+    overhead (scheduling, Python worker round trip, shuffle setup) is paid
+    once for the whole batch.
 
     allow_docids / deny_docids: optional (shard, docID) restriction — one
     frame, Spark or pandas, or a list of them (allow sides intersect, deny
@@ -702,16 +685,12 @@ def _wand_topk(
              for t, n in Counter(terms).items() if t in dmap}
         if m:
             idfs[qid] = m
-    # an empty driver allow side (an fq or MUST set no doc is in) admits
-    # no doc: no block is read
-    if not idfs or any(isinstance(s, pd.DataFrame) and s.empty
-                       for s in _sides(allow_docids)):
+    if not idfs:
         return empty_pdf(MANY_SCHEMA)
     union_terms = sorted({t for m in idfs.values() for t in m})
 
     blocks = prune_blocks(spark, index_dir, blocks_df, field, union_terms,
                           KERNEL_COLUMNS)
-    allow_mode = bool(_sides(allow_docids))
     if len(idfs) == 1:
         (qid, idf), = idfs.items()
         acc_total = acc_visited = None
@@ -721,22 +700,29 @@ def _wand_topk(
             stats_out["ranges_total"] = acc_total
             stats_out["ranges_visited"] = acc_visited
         wand = _shard_kernel(idf, k, meta.k1, meta.b, meta.avgdl,
-                             meta.block_size, acc_total, acc_visited,
-                             allow_mode=allow_mode)
+                             meta.block_size, acc_total, acc_visited)
 
-        def kernel(bl, mask_pdf=None):
-            return wand(bl, mask_pdf).assign(qid=qid)
+        def kernel(bl, allow=None, deny=None):
+            return wand(bl, allow, deny).assign(qid=qid)
     else:
-        kernel = _shard_kernel_many(idfs, k, meta.k1, meta.b, meta.avgdl,
-                                    allow_mode=allow_mode)
+        kernel = _shard_kernel_many(idfs, k, meta.k1, meta.b, meta.avgdl)
     per_shard = _run_shard_kernel(
         spark, blocks, kernel, MANY_SCHEMA, meta, allow_docids, deny_docids,
         postings_estimate(dictionary_map, field, union_terms))
-    if isinstance(per_shard, pd.DataFrame):
-        return top_k(per_shard, k, group="qid")
-    if len(idfs) == 1:
-        return per_shard.orderBy(F.desc("score"), F.asc("docID")).limit(k)
-    return _merge_topk_per_qid(per_shard, k)
+    return _merge_topk(per_shard, k, batch=len(idfs) > 1)
+
+
+def _merge_topk(hits, k: int, batch: bool):
+    """The final merge of ranked (qid, docID, score) rows into each qid's
+    exact top-k under (score desc, docID asc), shared by the WAND and
+    phrase bodies: driver rows go to top_k per qid; on Spark, one query
+    goes to a TakeOrderedAndProject (orderBy + limit: bounded heap per
+    partition + driver merge) and a batch to _merge_topk_per_qid."""
+    if isinstance(hits, pd.DataFrame):
+        return top_k(hits, k, group="qid")
+    if not batch:
+        return hits.orderBy(F.desc("score"), F.asc("docID")).limit(k)
+    return _merge_topk_per_qid(hits, k)
 
 
 def _merge_topk_per_qid(per_shard: DataFrame, k: int) -> DataFrame:

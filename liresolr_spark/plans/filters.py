@@ -159,7 +159,14 @@ def read_filter_artifact(spark: SparkSession, index_dir: str,
         raise ValueError(
             f"filter artifact {name!r} is stale (index changed since it was "
             "built); rebuild with build_filter_artifact")
-    return spark.read.parquet(m["data_path"]), m
+    return artifact_side(spark, m["data_path"]), m
+
+
+def artifact_side(spark: SparkSession, data_path: str) -> DataFrame:
+    """The (shard, docID) rows of an artifact's data dir, read with the
+    schema build_filter_artifact writes, so building the reader runs no
+    schema-inference job."""
+    return spark.read.schema("shard int, docID long").parquet(data_path)
 
 
 def refresh_filter_artifacts(spark: SparkSession, index_dir: str,

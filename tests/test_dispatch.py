@@ -424,8 +424,9 @@ def test_driver_dispatched_job_counts(spark, pos_index, vocab, corpus200,
     search(doc_id=). On an engine that is not resident, a
     driver-dispatched search() or phrase_search() runs at most 2 — the
     pruned block collect and the page's payload fetch — and
-    search(doc_id=) at most 6 (7 before its blocks probe was given the
-    files' schema). With every kernel
+    search(doc_id=) at most 4 (6 while its docstats shard lookup used
+    `first()`, 7 before its blocks probe was given the files' schema).
+    With every kernel
     on the Spark path, search() runs at most 3 and identity() with
     verify_threshold at most 5: the top-k is collected once, then one
     payload fetch."""
@@ -454,7 +455,7 @@ def test_driver_dispatched_job_counts(spark, pos_index, vocab, corpus200,
     legs = {
         "resident": (resident, dict.fromkeys(resident, 0)),
         "driver": (calls(engines[False]), {"search": 2, "phrase_search": 2,
-                                           "search_doc_id": 6}),
+                                           "search_doc_id": 4}),
         "spark": (calls(engines[False]), {"search": 3, "identity": 5}),
     }
     for leg, (handlers, bounded) in legs.items():

@@ -15,6 +15,7 @@ import liresolr_spark.operators.wand as wand
 from liresolr_spark.api import LireQueryEngine
 from liresolr_spark.plans.build import build_index
 from liresolr_spark.plans.filters import (
+    artifact_side,
     build_filter_artifact,
     drop_filter_artifact,
     load_filter_manifests,
@@ -101,6 +102,34 @@ def test_artifact_serving_matches_scan_both_modes(spark, idx, monkeypatch):
     for fq, want in ((fq_allow, want_allow), (fq_deny, want_deny)):
         assert _served(spark, spark_eng, q, fq)[::2] == (want, "artifact")
     assert _served(spark, spark_eng, q, "lang = 'go'")[2] == "spark"
+
+
+def test_artifact_fq_on_engine_not_resident_reads_with_schema(
+        spark, idx, monkeypatch):
+    """An engine that is not resident reads an fq's artifact with the
+    artifact's known schema (plans/filters.artifact_side), so resolving
+    the fq runs no schema-inference job: an artifact-backed fq search runs
+    at most 3 Spark jobs with its kernel in the driver and 5 with it on
+    Spark (4 and 6 with an inferring reader)."""
+    q, fq = "readFile tokenBlock sortMerge", "lang = 'python' AND doclen > 0"
+    build_filter_artifact(spark, idx, "flt-schema", fq)
+    side = artifact_side(spark, f"{idx}/filters/flt-schema/data")
+    assert side.schema.simpleString() == "struct<shard:int,docID:bigint>"
+    try:
+        with monkeypatch.context() as mp:
+            mp.setattr(wand, "DRIVER_MAX_POSTINGS", 0)
+            eng = LireQueryEngine(spark, idx, pin_blocks=False)
+        assert not eng.resident
+        want = None
+        for bound, most in ((10**12, 3), (0, 5)):
+            eng._drop_fq_cache()
+            monkeypatch.setattr(wand, "DRIVER_MAX_POSTINGS", bound)
+            page, n, tier = _served(spark, eng, q, fq)
+            assert tier == "artifact" and page and n <= most, (bound, n)
+            assert want in (None, page)
+            want = page
+    finally:
+        drop_filter_artifact(idx, "flt-schema")
 
 
 def test_stale_artifact_ignored_after_index_mutation(spark, idx, corpus200,

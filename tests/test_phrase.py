@@ -169,20 +169,57 @@ def test_phrase_overlap_semantics(spark):
     assert got == {"p1": 1, "p2": 2}
 
 
-def test_phrase_allow_deny(spark, indexed, corpus200, bigrams):
-    full = phrase_topk(spark, indexed, corpus200, bigrams[0], k=500).collect()
+@pytest.mark.parametrize("dispatch", ["spark", "driver"])
+@pytest.mark.parametrize("layout", ["verify", "positions"])
+def test_phrase_allow_deny(spark, request, corpus200, bigrams, monkeypatch,
+                           layout, dispatch):
+    """allow/deny restrict the match (positional) or candidate (verify)
+    kernel's docIDs on both index layouts — the positionless index with
+    the corpus, the positional one with corpus=None — and on both kernel
+    dispatch legs: bound 0 (pandas-UDF stage) and a huge bound with the
+    index's dictionary_map (driver)."""
+    import liresolr_spark.operators.wand as wand
+
+    if layout == "verify":
+        d, corpus = request.getfixturevalue("indexed"), corpus200
+    else:
+        d, corpus = request.getfixturevalue("indexed_pos"), None
+    dmap = None
+    if dispatch == "driver":
+        dmap = {"text": {r["term"]: int(r["df"]) for r in (
+            spark.read.parquet(f"{d}/dictionary")
+            .filter(F.col("field") == "text")
+            .groupBy("term").agg(F.sum("df").alias("df")).collect())}}
+    monkeypatch.setattr(wand, "DRIVER_MAX_POSTINGS",
+                        0 if dispatch == "spark" else 10**12)
+
+    def run(**restriction):
+        return phrase_topk(spark, d, corpus, bigrams[0], k=500,
+                           dictionary_map=dmap, **restriction).collect()
+
+    full = run()
     if len(full) < 2:
         pytest.skip("hot bigram unexpectedly rare")
-    stats = spark.read.parquet(f"{indexed}/docstats").select("shard", "docID")
+    stats = spark.read.parquet(f"{d}/docstats").select("shard", "docID")
     victim = full[0]["docID"]
     deny = stats.filter(F.col("docID") == victim)
-    got = phrase_topk(spark, indexed, corpus200, bigrams[0], k=500,
-                      deny_docids=deny).collect()
+    got = run(deny_docids=deny)
     assert {r["docID"] for r in got} == {r["docID"] for r in full} - {victim}
     allow = stats.filter(F.col("docID") == victim)
-    got2 = phrase_topk(spark, indexed, corpus200, bigrams[0], k=500,
-                       allow_docids=allow).collect()
+    got2 = run(allow_docids=allow)
     assert {r["docID"] for r in got2} == {victim}
+
+
+def test_verify_plan_runs_no_job(spark, indexed, corpus200, bigrams):
+    """Building a verify phrase_topk plan with no dictionary_map (every
+    kernel on the Spark path) runs no Spark job: the docstats side is read
+    with the files' schema (local_write.spark_reader), not inferred."""
+    from liresolr_spark.session import jobs_run
+
+    plan, n = jobs_run(spark, lambda: phrase_topk(
+        spark, indexed, corpus200, bigrams[0], k=10))
+    assert n == 0
+    assert plan.collect()
 
 
 def test_phrase_duplicate_natural_key_pins_to_indexed_content(spark, tmp_path):
