@@ -57,8 +57,9 @@ def _disjunctive_docids(
 ):
     """(shard, docID) rows of docs whose `field` contains ANY term — the
     boolean-OR doc set (the MUST_NOT exclusion input); a pandas frame when
-    the kernel ran in the driver, else a lazy DataFrame. Per shard: decode
-    each term's docID stream and take the sorted union.
+    the kernel ran in the driver, else a lazy DataFrame. One kernel over
+    the blocks of one shard or of all: decode every term's docID stream and
+    take the sorted union, each docID with its block's shard.
     dictionary_map: the driver-side {field: {term: df}} snapshot; it sizes
     the request for the kernel dispatch (operators.wand._run_shard_kernel)."""
     uniq = sorted(set(terms))
@@ -73,10 +74,10 @@ def _disjunctive_docids(
                               "docID": pd.Series(dtype="int64")})
         if len(bl) == 0:
             return empty
-        shard = int(bl["shard"].iloc[0])
-        ids = np.unique(decode_blocks(bl["docids"])[0])
-        return pd.DataFrame({"shard": np.full(len(ids), shard, dtype="int32"),
-                             "docID": ids})
+        ids, _, _, counts = decode_blocks(bl["docids"])
+        ids, first = np.unique(ids, return_index=True)
+        shards = np.repeat(bl["shard"].to_numpy(np.int32), counts)[first]
+        return pd.DataFrame({"shard": shards, "docID": ids})
 
     return _run_shard_kernel(
         spark, blocks, kernel, DOCSET_SCHEMA, meta,

@@ -11,12 +11,12 @@ Lucene answers PhraseQuery from term POSITIONS stored in the postings
   sets across the terms — one term-pruned block scan, no corpus access,
   no shuffle of postings. tf = Lucene's phrase frequency (every match
   position counts, including self-overlapping ones). One matcher serves a
-  batch of phrases, decoding the union of their terms once per shard; a
+  batch of phrases, decoding the union of their terms once per kernel; a
   single phrase is the batch of one (_positional_matches).
 
 - **Positionless index** (the default; per-doc payload is the content
   sha256, the north-rule invariant): the classic two-stage plan —
-  1. CANDIDATES: docs containing ALL phrase terms, per-shard posting-list
+  1. CANDIDATES: docs containing ALL phrase terms, posting-list
      intersection (same kernel dispatch as WAND);
   2. VERIFY + SCORE candidates only: join back to the corpus by natural
      key (content pinned to the indexed sha256) and count the phrase in
@@ -73,8 +73,8 @@ DOCSET_SCHEMA = "shard int, docID long"
 MATCH_SCHEMA = "shard int, docID long, tf long, doclen long"
 MATCH_MANY_SCHEMA = "qid string, " + MATCH_SCHEMA
 # block columns the positional match kernels read
-POSITIONAL_COLUMNS = ["shard", "term", "block_seq", "docids", "tfs",
-                      "doclens", "positions"]
+POSITIONAL_COLUMNS = ["shard", "term", "block_seq", "first_docid", "docids",
+                      "tfs", "doclens", "positions"]
 
 
 def _pre_intersect_blocks(bl: pd.DataFrame, n_required: int
@@ -84,22 +84,24 @@ def _pre_intersect_blocks(bl: pd.DataFrame, n_required: int
     block_seq present for EVERY term — decode nothing outside that range
     set. A rare+hot phrase then decodes only the hot term's blocks that
     overlap the rare term's, not its full posting list. Returns the pruned
-    frame sorted by (term, block_seq), or None if the shard can't match."""
+    frame sorted by (term, first_docid), or None if the blocks can't
+    match."""
     if len(bl) == 0 or bl["term"].nunique() < n_required:
         return None
     seq_sets = [set(g["block_seq"]) for _, g in bl.groupby("term", sort=False)]
     live = set.intersection(*seq_sets)
     if not live:
         return None
-    return bl[bl["block_seq"].isin(live)].sort_values(["term", "block_seq"],
-                                                      kind="stable")
+    return bl[bl["block_seq"].isin(live)].sort_values(
+        ["term", "first_docid"], kind="stable")
 
 
 def _term_runs(bl: pd.DataFrame, counts: np.ndarray):
-    """(terms, cuts) of block rows sorted by (term, block_seq) that decoded
-    to `counts` postings each: np.split(stream, cuts) splits a decoded
-    per-posting stream into the terms' runs, each docID-sorted, in `terms`
-    order."""
+    """(terms, cuts) of block rows sorted by (term, first_docid) — each
+    term's blocks in docID order across shards, which a snapshot or a scan
+    holds shard by shard — that decoded to `counts` postings each:
+    np.split(stream, cuts) splits a decoded per-posting stream into the
+    terms' runs, each docID-sorted, in `terms` order."""
     terms = bl["term"].to_numpy()
     first = np.flatnonzero(terms[1:] != terms[:-1]) + 1
     return terms[np.append(0, first)], np.cumsum(counts)[first - 1]
@@ -142,17 +144,18 @@ def _conjunctive_docids(
     allow_docids / deny_docids: the (shard, docID) restriction sides of
     operators.wand._wand_topk, the kernel's docID mask.
 
-    Per shard (one Arrow batch, same dispatch as the WAND kernel): decode
-    the shard's docID streams at once, split them into per-term runs (each
-    already sorted), then intersect smallest list first so the working set
-    only shrinks. A term absent from a shard empties that shard; absent
-    from every shard -> empty result."""
+    One kernel over the blocks of one shard or of all (same dispatch as
+    the WAND kernel): decode the docID streams at once, split them into
+    per-term runs (each already sorted), then intersect smallest list first
+    so the working set only shrinks; each posting carries its block's
+    shard. A term absent from every block -> empty result."""
     uniq = sorted(set(terms))
     if not uniq:
         return empty_pdf(DOCSET_SCHEMA)
     meta = meta or read_meta(index_dir)
     blocks = prune_blocks(spark, index_dir, blocks_df, field, uniq,
-                          ["shard", "term", "block_seq", "docids"])
+                          ["shard", "term", "block_seq", "first_docid",
+                           "docids"])
     n_required = len(uniq)
 
     def kernel(bl: pd.DataFrame, allow=None, deny=None) -> pd.DataFrame:
@@ -161,18 +164,22 @@ def _conjunctive_docids(
         bl = _pre_intersect_blocks(bl, n_required)
         if bl is None:
             return empty
-        shard = int(bl["shard"].iloc[0])
         ids, _, _, counts = decode_blocks(bl["docids"])
-        per_term = sorted(np.split(ids, _term_runs(bl, counts)[1]), key=len)
-        cur = _apply_mask(allow, deny, per_term[0])[0]
-        for ids in per_term[1:]:
+        cuts = _term_runs(bl, counts)[1]
+        shards = np.split(np.repeat(bl["shard"].to_numpy(np.int32), counts),
+                          cuts)
+        per_term = sorted(zip(np.split(ids, cuts), shards),
+                          key=lambda run: len(run[0]))
+        ids0, shards0 = per_term[0]
+        cur = _apply_mask(allow, deny, ids0)[0]
+        for ids, _ in per_term[1:]:
             if not len(cur):
                 return empty
             # both sides sorted & unique (docIDs unique within a term)
             cur = np.intersect1d(cur, ids, assume_unique=True)
         if not len(cur):
             return empty
-        return pd.DataFrame({"shard": np.full(len(cur), shard, dtype="int32"),
+        return pd.DataFrame({"shard": shards0[np.searchsorted(ids0, cur)],
                              "docID": cur})
 
     return _run_shard_kernel(
@@ -181,24 +188,25 @@ def _conjunctive_docids(
 
 
 def _decode_term_postings(bl: pd.DataFrame) -> dict:
-    """{term: (docIDs, doclens, tfs, flat_positions)} for one shard's block
-    rows sorted by (term, block_seq): one decode of the blocks and one of
-    their joined positions streams, split into the terms' runs."""
+    """{term: (docIDs, doclens, tfs, flat_positions, shards)} for block
+    rows sorted by (term, first_docid): one decode of the blocks and one
+    of their joined positions streams, split into the terms' runs."""
     ids, tfs, dls, counts = decode_blocks(bl["docids"], bl["tfs"],
                                           bl["doclens"])
     flat, offsets = decode_positions(b"".join(bl["positions"]), tfs)
+    shards = np.repeat(bl["shard"].to_numpy(np.int32), counts)
     terms, cuts = _term_runs(bl, counts)
     return dict(zip(terms, zip(
         np.split(ids, cuts), np.split(dls, cuts), np.split(tfs, cuts),
-        np.split(flat, offsets[cuts]))))
+        np.split(flat, offsets[cuts]), np.split(shards, cuts))))
 
 
 def _sliding_match(per: dict, seq: list[str], allow=None, deny=None):
     """SLIDING phrase matches against decoded per-term postings: returns
-    (docIDs, tf, doclen) numpy arrays, or None when nothing matches.
+    (docIDs, tf, doclen, shard) numpy arrays, or None when nothing matches.
 
     docID AND across the unique terms (smallest posting list first, cut to
-    the shard's sorted `allow`/`deny` docID mask), then
+    the sorted `allow`/`deny` docID mask), then
     per sequence slot i intersect (doc_rank << 32) | (pos - i) key sets —
     the vectorized ExactPhraseMatcher advance loop; tf counts every match
     position (self-overlapping included); doc_rank (dense index into the
@@ -218,7 +226,7 @@ def _sliding_match(per: dict, seq: list[str], allow=None, deny=None):
 
     running = None
     for i, t in enumerate(seq):
-        ids, _, tfs, flat = per[t]
+        ids, _, tfs, flat, _ = per[t]
         hit = _in_sorted(ids, cand)
         pos = flat[np.repeat(hit, tfs)] - i
         ranks = np.repeat(np.searchsorted(cand, ids[hit]), tfs[hit])
@@ -234,11 +242,12 @@ def _sliding_match(per: dict, seq: list[str], allow=None, deny=None):
     doc_rank = (running >> np.int64(32)).astype(np.int64)
     tf = np.bincount(doc_rank, minlength=len(cand))
     hit = np.flatnonzero(tf)
-    # doclen per doc from any term's postings (denormalized in-block)
-    ids0, dls0, _, _ = per[ordered[0]]
-    dl_map_idx = np.searchsorted(ids0, cand[hit])
-    return (cand[hit], tf[hit].astype(np.int64),
-            dls0[dl_map_idx].astype(np.int64))
+    # doclen and shard per doc from any term's postings (denormalized
+    # in-block)
+    ids0, dls0, _, _, shards0 = per[ordered[0]]
+    at = np.searchsorted(ids0, cand[hit])
+    return (cand[hit], tf[hit].astype(np.int64), dls0[at].astype(np.int64),
+            shards0[at])
 
 
 def positional_matches(spark: SparkSession, index_dir: str,
@@ -279,14 +288,15 @@ def _positional_matches(
     restriction sides of operators.wand._wand_topk, the kernel's docID
     mask: only docs inside it match.
 
-    Per shard: the blocks of the UNION of the phrases' terms are decoded
-    once — a hot term's posting list once no matter how many phrases use
-    it — then each phrase ANDs the docIDs of its terms and intersects
-    (doc, position - i) key sets across its sequence — the vectorized form
-    of Lucene's ExactPhraseMatcher advance loop. tf counts every match
-    position (self-overlapping included). All numpy: the per-doc loop
-    Lucene runs is replaced by one sorted-array intersection per phrase
-    term over composite int64 keys. A batch of one first drops the blocks
+    One kernel over the blocks of one shard or of all: the blocks of the
+    UNION of the phrases' terms are decoded once — a hot term's posting
+    list once no matter how many phrases use it — then each phrase ANDs
+    the docIDs of its terms and intersects (doc, position - i) key sets
+    across its sequence — the vectorized form of Lucene's
+    ExactPhraseMatcher advance loop. tf counts every match position
+    (self-overlapping included). All numpy: the per-doc loop Lucene runs
+    is replaced by one sorted-array intersection per phrase term over
+    composite int64 keys. A batch of one first drops the blocks
     outside the docID ranges every one of its terms covers
     (_pre_intersect_blocks)."""
     phrases = {q: list(t) for q, t in phrases.items() if t}
@@ -313,20 +323,18 @@ def _positional_matches(
         if len(specs) == 1:
             bl = _pre_intersect_blocks(bl, len(all_terms))
         elif len(bl):
-            bl = bl.sort_values(["term", "block_seq"], kind="stable")
+            bl = bl.sort_values(["term", "first_docid"], kind="stable")
         if bl is None or not len(bl):
             return empty
-        shard = int(bl["shard"].iloc[0])
         per = _decode_term_postings(bl)
         frames = []
         for qid, seq in specs:
             m = _sliding_match(per, seq, allow, deny)
             if m is None:
                 continue
-            ids, tf, dls = m
+            ids, tf, dls, shards = m
             frames.append(pd.DataFrame({
-                "qid": np.repeat(qid, len(ids)),
-                "shard": np.full(len(ids), shard, dtype="int32"),
+                "qid": np.repeat(qid, len(ids)), "shard": shards,
                 "docID": ids, "tf": tf, "doclen": dls}))
         return pd.concat(frames, ignore_index=True) if frames else empty
 

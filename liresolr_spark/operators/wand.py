@@ -5,19 +5,24 @@ Execution model = the Solr sharded collection (ref: AddImages.java:46
 each shard runs a block-max top-k kernel locally over its own posting
 blocks, and the per-shard top-k's merge to a global top-k — exactly how a
 SolrCloud query distributes LireRequestHandler's candidate search
-(ref: LireRequestHandler.java:458) across shards.
+(ref: LireRequestHandler.java:458) across shards. A request small enough
+for the driver runs the kernel once over every shard's blocks instead (see
+below).
 
-Within a shard the kernel exploits ALIGNED blocks (block_seq = docID //
-block_size for every term, see plans/build._block_builder):
+The kernel exploits ALIGNED blocks (block_seq = docID // block_size for
+every term, see plans/build._block_builder; one docID range r may hold a
+block of the same term in each of several shards):
 
-  1. upper bound per docID range r:  UB(r) = sum_t idf_t * max_tf_norm(t, r)
+  1. upper bound per docID range r:  UB(r) = sum_t idf_t * max_tf_norm(t, r),
+     max_tf_norm(t, r) the largest bound among t's blocks in r (a doc sits
+     in one block per term, so a sum over them would be looser);
   2. visit ranges in DESCENDING UB order, maintaining the running top-k
      threshold theta (k-th best exact score);
   3. stop as soon as UB(next) <= theta — no remaining range can beat the
      heap. Ranges never visited are never decoded (the WAND saving).
   4. visited ranges are scored exactly & vectorized: decode delta+varint,
      accumulate sum_t idf_t * tf*(k1+1)/(tf + k1*(1-b+b*dl/avgdl)) via
-     np.bincount on shard-local docIDs.
+     np.bincount on the range's docIDs.
 
 This is a SAFE optimization: results are exactly the exhaustive top-k
 (property-tested in tests/test_wand.py), unlike the reference's lossy
@@ -30,23 +35,27 @@ kernel above for one query and a term-at-a-time kernel for a batch
 
 Spark plan: every operator prunes blocks to the query's terms through one
 helper, `prune_blocks` (shard-dir partition pruning, parquet row-group
-stats on `term`), then the per-shard kernel runs on one of two paths,
-chosen per request in `_run_shard_kernel` before any job runs:
+stats on `term`), then the kernel runs on one of two paths, chosen per
+request in `_run_shard_kernel` before any job runs:
 
   - driver: when the request's posting count (sum of df over its distinct
     terms, read from the pinned dictionary snapshot) is at most
-    DRIVER_MAX_POSTINGS, the SAME kernel closure runs per shard in the
-    driver process. A served request moves KB of postings, so the
-    pandas-UDF stage (shuffle, Python worker round trip) would cost far
-    more than the arithmetic. Its block rows come from a `BlockSnapshot`
-    when the caller holds one (a driver-resident index: no Spark job),
-    else from one collect of the pruned scan. The kernel rows stay a
-    pandas frame and the global merge is a numpy sort;
-  - spark: otherwise (or with no dictionary snapshot) the kernel runs as
-    applyInPandas grouped by shard over the lazy pruned scan — one Arrow
+    DRIVER_MAX_POSTINGS, the kernel closure runs ONCE in the driver
+    process, over every shard's block rows and one global docID mask. A
+    served request moves KB of postings, so the pandas-UDF stage (shuffle,
+    Python worker round trip) would cost far more than the arithmetic, and
+    so would a kernel call per shard. block_seq is a global docID range,
+    so the one WAND run keeps one global theta over the union of the
+    shards' ranges. Its block rows come from a `BlockSnapshot` when the
+    caller holds one (a driver-resident index: no Spark job), else from
+    one collect of the pruned scan. The kernel rows stay a pandas frame
+    and the global merge is a numpy sort;
+  - spark: otherwise (or with no dictionary snapshot) the same closure runs
+    as applyInPandas grouped by shard over the lazy pruned scan — one Arrow
     batch per shard, no driver-side posting materialization, no shuffle of
     raw postings — and the merge is a Spark top-k (TakeOrderedAndProject
-    for one query, a per-qid aggregate for a batch).
+    for one query, a per-qid aggregate for a batch). So every kernel
+    takes the blocks of any set of shards, one or all of them.
 
 The public operators always return a DataFrame: a driver-side result is
 wrapped as an Arrow local relation (liresolr_spark.frames), which collects
@@ -170,12 +179,13 @@ def prune_blocks(spark, index_dir: str, blocks_df, field: str, terms,
 
 
 def _mask_from_pdf(mask_pdf: pd.DataFrame | None, allow_mode: bool):
-    """Per-shard docID restriction from a cogrouped (docID, allow) frame,
-    as _run_shard_kernel hands it to a kernel.
+    """The docID restriction a kernel takes, from (docID, allow) rows: one
+    shard's cogrouped rows on the Spark path, every shard's rows on the
+    driver path (docIDs are global, so one mask serves all shards).
 
     Returns (allow_sorted | None, deny_sorted | None). allow_mode=True means
-    an allow-list is ACTIVE globally (fq pushdown): a shard with zero allow
-    rows then matches nothing — an empty sorted array, not None."""
+    an allow-list is ACTIVE (fq pushdown): with zero allow rows the kernel
+    then matches nothing — an empty sorted array, not None."""
     allow = deny = None
     if mask_pdf is not None and len(mask_pdf):
         ids = mask_pdf["docID"].values.astype(np.int64)
@@ -216,13 +226,14 @@ def _apply_mask(allow, deny, ids, *cols):
 
 def _shard_kernel(idf: dict, k: int, k1: float, b: float, avgdl: float,
                   block_size: int, acc_total=None, acc_visited=None):
-    """Returns the applyInPandas kernel: (shard's query-term blocks) -> topk.
+    """Returns the WAND kernel: (query-term blocks of one shard or of
+    many) -> top-k (docID, score) rows.
 
     acc_total/acc_visited: optional Spark accumulators counting aligned
     docID ranges considered vs actually decoded — the observable WAND
     saving (ranges never visited are never decompressed).
 
-    The kernel optionally takes the shard's docID restriction, the sorted
+    The kernel optionally takes a docID restriction, the sorted
     allow and deny arrays of _mask_from_pdf. allow forms an fq allow-list
     (pushed-down filter query: top-k is then exact UNDER the filter, ref fq
     semantics LireRequestHandler.java:539-550); deny holds tombstones (docs
@@ -250,9 +261,16 @@ def _shard_kernel(idf: dict, k: int, k1: float, b: float, avgdl: float,
         ub_contrib = w * mtf * (k1 + 1.0) / (
             mtf + k1 * (1.0 - b + b * mdl / avgdl))
 
-        # UB per aligned range
+        # UB per aligned range: sum over terms of the term's largest block
+        # bound in the range (shards sharing a range each hold a block)
         uniq_seq, inv = np.unique(seqs, return_inverse=True)
-        ub = np.bincount(inv, weights=ub_contrib)
+        uniq_terms, tcode = np.unique(terms, return_inverse=True)
+        pairs, pinv = np.unique(inv * len(uniq_terms) + tcode,
+                                return_inverse=True)
+        pmax = np.full(len(pairs), -np.inf)
+        np.maximum.at(pmax, pinv, ub_contrib)
+        ub = np.bincount(pairs // len(uniq_terms), weights=pmax,
+                         minlength=len(uniq_seq))
         visit_order = np.argsort(-ub, kind="stable")
         # group block rows by range ONCE (argsort + offsets): members of
         # range ri are a contiguous slice — keeps the visit loop
@@ -289,7 +307,7 @@ def _shard_kernel(idf: dict, k: int, k1: float, b: float, avgdl: float,
             ids_cat, sc_cat = _apply_mask(allow, deny, ids_cat, sc_cat)
             if not len(ids_cat):
                 continue
-            # accumulate per docID within the range (range is small: <= block_size docs)
+            # accumulate per docID within the range (<= block_size docs)
             lo = ids_cat.min()
             acc = np.bincount(ids_cat - lo, weights=sc_cat)
             nz = np.nonzero(acc)[0]
@@ -312,17 +330,22 @@ def _shard_kernel(idf: dict, k: int, k1: float, b: float, avgdl: float,
 
 
 def _shard_kernel_many(idfs: dict, k: int, k1: float, b: float, avgdl: float):
-    """Batched variant: Q queries against one shard's blocks in a single
-    kernel invocation, fully vectorized TERM-AT-A-TIME exhaustive scoring.
+    """Batched variant: Q queries against the blocks of one shard or of
+    many in a single kernel invocation, fully vectorized TERM-AT-A-TIME
+    exhaustive scoring.
 
     Why not per-query WAND here: the scan is already restricted to the
     UNION of the batch's query terms (pruned at the parquet scan), every
     hot block is shared by many queries, and profiling showed the Python
     range-visit loop — not decompression or scoring — dominating batch
     latency. So each posting block is decoded exactly once, and scoring is
-    a scatter-add of per-term contributions into a dense (Q x shard-docs)
-    score matrix (shards are CONTIGUOUS docID ranges by construction, so
-    the dense axis is docs_per_shard, not the corpus). Exhaustive scoring
+    a scatter-add of per-term contributions into a dense (Q x docs) score
+    matrix whose axis spans the docIDs the blocks hold: one shard's range
+    on the Spark path (shards are CONTIGUOUS docID ranges by construction,
+    so at most docs_per_shard, not the corpus), and the request's docIDs
+    across every shard on the driver path, which stays small because only
+    a request of at most DRIVER_MAX_POSTINGS postings runs there.
+    Exhaustive scoring
     is trivially exact — same guarantee as WAND, no pruning proof needed.
     Result stays rank-identical to per-query `wand_topk` (pytest-gated).
 
@@ -331,7 +354,7 @@ def _shard_kernel_many(idfs: dict, k: int, k1: float, b: float, avgdl: float):
     never Q x docs). At 10^12 docs docs_per_shard is chosen by the build so
     a shard's dense row (~8 B x docs_per_shard) stays executor-sized.
 
-    Optional allow/deny = per-shard docID restriction (see _shard_kernel);
+    Optional allow/deny = docID restriction (see _shard_kernel);
     query-independent, applied once at decode."""
 
     DENSE_BUDGET = 64_000_000  # doubles: Q * span cap (~512 MB)
@@ -362,7 +385,7 @@ def _shard_kernel_many(idfs: dict, k: int, k1: float, b: float, avgdl: float):
         span = int(ids.max()) - lo + 1
 
         qids = list(idfs)
-        # per-query weight over the shard's unique terms (0 = not queried)
+        # per-query weight over the blocks' unique terms (0 = not queried)
         W = np.zeros((len(qids), len(uniq_terms)), dtype=np.float64)
         tindex = {t: i for i, t in enumerate(uniq_terms)}
         for qi, qid in enumerate(qids):
@@ -518,44 +541,42 @@ def top_k(hits: pd.DataFrame, k: int, group: str | None = None
 
 def _run_shard_kernel(spark, blocks, kernel, schema, meta, allow=None,
                       deny=None, postings=None):
-    """Run the per-shard kernel over the pruned `blocks` (prune_blocks'
-    (scan, rows) pair), optionally cogrouped with the `allow`/`deny` docID
-    restriction (sides as in _restrict_df), and return the kernel rows
-    with `schema`: a pandas frame on the driver path, a lazy DataFrame on
-    the Spark path. `postings` is the request's posting estimate
-    (postings_estimate); kernel_dispatch picks the path, and the estimate
-    is appended to the request's kernel log (_kernel_log) when it has one.
+    """Run the kernel over the pruned `blocks` (prune_blocks' (scan, rows)
+    pair), optionally restricted by the `allow`/`deny` docID sides (as in
+    _restrict_df), and return the kernel rows with `schema`: a pandas frame
+    on the driver path, a lazy DataFrame on the Spark path. `postings` is
+    the request's posting estimate (postings_estimate); kernel_dispatch
+    picks the path, and the estimate is appended to the request's kernel
+    log (_kernel_log) when it has one.
 
     Every operator restricts here, WAND and the phrase matches alike: a
-    restricted request calls `kernel(blocks, allow, deny)` with its shard's
-    sorted allow and deny docIDs (_mask_from_pdf; None for a side the
-    request lacks), and the kernel masks its candidate docIDs before it
-    scores or matches them; an unrestricted one calls `kernel(blocks)`. An
-    empty driver allow side (an fq or MUST set no doc is in) admits no
-    doc: no block is read, no kernel is logged, the result is empty.
+    restricted request calls `kernel(blocks, allow, deny)` with the sorted
+    allow and deny docIDs (_mask_from_pdf; None for a side the request
+    lacks), and the kernel masks its candidate docIDs before it scores or
+    matches them; an unrestricted one calls `kernel(blocks)`. An empty
+    driver allow side (an fq or MUST set no doc is in) admits no doc: no
+    block is read, no kernel is logged, the result is empty.
 
-    Driver path (small requests): the block rows are the snapshot rows
-    when there are any, else one collect of the scan; the restriction
-    rows are those that fall in the blocks' aligned docID ranges
-    (_mask_rows: no job when every side is a pandas frame, else one
-    collect). The same kernel closure then runs once per
-    shard, under the cogroup contract: a shard with blocks but no mask
-    rows gets none (under an allow side it matches nothing); a shard with
-    mask rows but no blocks is skipped (every kernel returns no rows for
-    zero blocks). The rows stay in the driver: callers merge them
-    with numpy, and the public operators wrap their result as a local
-    relation.
+    Driver path (small requests): the kernel is called ONCE, over every
+    shard's block rows — the snapshot rows when there are any, else one
+    collect of the scan — and one mask built from the restriction rows
+    that fall in the blocks' aligned docID ranges (_mask_rows: no job when
+    every side is a pandas frame, else one collect). The rows stay in the
+    driver: callers merge them with numpy, and the public operators wrap
+    their result as a local relation.
 
-    Spark path: applyInPandas (cogroup when restricted) after an EXPLICIT
-    hash repartition on shard, pinned to min(num_shards, default
-    parallelism). Why: the pruned block rows for a query batch are tiny
-    (KB-MB), so AQE's partition coalescing folds the pre-kernel shuffle
-    into ONE partition and the shard kernels run serially — measured 2x
-    batch latency at 32 cores. A user-specified repartition count is
-    exempt from AQE coalescing, and hashpartitioning(shard, P) already
-    satisfies the kernel's required distribution, so no second shuffle
-    appears. The kernel's cost is CPU (decode + score), not data size —
-    parallelism should follow shard count, not shuffle bytes."""
+    Spark path: applyInPandas, once per shard (cogroup when restricted: a
+    shard with blocks but no mask rows gets an empty mask, a shard with
+    mask rows but no blocks no call), after an EXPLICIT hash repartition
+    on shard, pinned to min(num_shards, default parallelism). Why: the
+    pruned block rows for a query batch are tiny (KB-MB), so AQE's
+    partition coalescing folds the pre-kernel shuffle into ONE partition
+    and the shard kernels run serially — measured 2x batch latency at 32
+    cores. A user-specified repartition count is exempt from AQE
+    coalescing, and hashpartitioning(shard, P) already satisfies the
+    kernel's required distribution, so no second shuffle appears. The
+    kernel's cost is CPU (decode + score), not data size — parallelism
+    should follow shard count, not shuffle bytes."""
     scan, rows = blocks
     if any(isinstance(s, pd.DataFrame) and s.empty for s in _sides(allow)):
         return empty_pdf(schema)
@@ -565,21 +586,12 @@ def _run_shard_kernel(spark, blocks, kernel, schema, meta, allow=None,
         log.append(postings)
     if kernel_dispatch(postings) == "driver":
         bl = scan().toPandas() if rows is None else rows
-        masks = {}
-        if restricted and len(bl):
-            mk = _mask_rows(allow, deny, bl["block_seq"], meta.block_size)
-            masks = dict(tuple(mk.groupby("shard")))
-        out = []
-        for shard, grp in bl.groupby("shard"):
-            mask = (_mask_from_pdf(masks.get(shard), allow_mode)
-                    if restricted else ())
-            res = kernel(grp.reset_index(drop=True), *mask)
-            if len(res):
-                out.append(res)
-        struct = struct_of(schema)
-        if not out:
-            return empty_pdf(struct)
-        return pd.concat(out, ignore_index=True)[struct.names]
+        mask = ()
+        if restricted:
+            mk = (_mask_rows(allow, deny, bl["block_seq"], meta.block_size)
+                  if len(bl) else None)
+            mask = _mask_from_pdf(mk, allow_mode)
+        return kernel(bl, *mask)[struct_of(schema).names]
     n_parts = max(1, min(int(meta.num_shards),
                          spark.sparkContext.defaultParallelism))
     blocks = scan().repartition(n_parts, "shard")

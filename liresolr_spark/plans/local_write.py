@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
+from liresolr_spark.frames import struct_of
 from liresolr_spark.plans.build import BLOCK_SCHEMA
 
 # File columns (partition column excluded) of each artifact, as the Spark
@@ -64,8 +65,7 @@ def read_table(base_dir: str, columns: list[str] | None = None,
 def reader_schema(artifact: str) -> StructType:
     """The schema of a Spark reader of an artifact dir, in the order
     Spark's inference gives: the file columns, then the partition column."""
-    return StructType.fromDDL(
-        f"{_FILE_DDL[artifact]}, {_PART_COL[artifact]} int")
+    return struct_of(f"{_FILE_DDL[artifact]}, {_PART_COL[artifact]} int")
 
 
 def spark_reader(spark: SparkSession, index_dir: str,
@@ -96,7 +96,7 @@ def file_schema(base_dir: str, artifact: str) -> pa.Schema:
 
 def _arrow_schema(ddl: str) -> pa.Schema:
     # DDL parsing goes through the active Spark session's JVM (no job)
-    return to_arrow_schema(StructType.fromDDL(ddl))
+    return to_arrow_schema(struct_of(ddl))
 
 
 def write_partitions(tbl: pa.Table, base_dir: str, artifact: str,

@@ -1,15 +1,17 @@
 """Two-path identity of the shard-kernel dispatch (operators/wand.py
 `_run_shard_kernel`): the same kernel closures run either as a pandas-UDF
-stage (applyInPandas / cogroup) or in the driver process, chosen by the
-request's posting estimate against DRIVER_MAX_POSTINGS. Every served
-kernel must return identical rows — and the WAND range accumulators
-identical counts — on both paths, and so must every engine handler, whose
-requests finish in the driver on either path (api.LireQueryEngine's one
-response tail). The bound is monkeypatched to 0 (force the Spark path) and to
-a huge value (force the driver path), so the small fixtures here cover
-both. The engine handlers run a third leg: a driver-RESIDENT engine (Σ df
-of its index within the bound when it opened) serves its driver path from
-an in-memory snapshot instead of collecting blocks, masks and payload."""
+stage (applyInPandas / cogroup, once per shard) or once in the driver
+process over every shard's blocks, chosen by the request's posting
+estimate against DRIVER_MAX_POSTINGS. Every served kernel must return
+identical rows on both paths — and the driver's one WAND run no more
+range counts than the per-shard runs together — and so must every engine
+handler, whose requests finish in the driver on either path
+(api.LireQueryEngine's one response tail). The bound is monkeypatched to 0
+(force the Spark path) and to a huge value (force the driver path), so the
+small fixtures here cover both. The engine handlers run a third leg: a
+driver-RESIDENT engine (Σ df of its index within the bound when it opened)
+serves its driver path from an in-memory snapshot instead of collecting
+blocks, masks and payload."""
 
 from __future__ import annotations
 
@@ -123,6 +125,16 @@ def _wand_with_stats(spark, d, dmap, q, k, **kw):
     return run
 
 
+def _no_more_ranges(got):
+    """The driver's one WAND run over every shard's blocks counts its
+    docID ranges globally and keeps one theta, so it considers and visits
+    no more ranges than the Spark path's per-shard runs together."""
+    (d_total, d_visited), (s_total, s_visited) = (got["driver"][1],
+                                                  got["spark"][1])
+    assert d_total <= s_total and d_visited <= s_visited, (got["driver"][1],
+                                                           got["spark"][1])
+
+
 def test_wand_topk_two_paths(spark, pos_index, vocab, monkeypatch):
     d, dmap = pos_index
     rng = random.Random(7)
@@ -130,7 +142,8 @@ def test_wand_topk_two_paths(spark, pos_index, vocab, monkeypatch):
                  ([vocab[-3], vocab[-3], vocab[-1], "zz_nope"], 20),
                  ([rng.choice(vocab) for _ in range(5)], 60)):
         got = _both_paths(monkeypatch, _wand_with_stats(spark, d, dmap, q, k))
-        assert got["spark"] == got["driver"], q
+        assert got["spark"][0] == got["driver"][0], q
+        _no_more_ranges(got)
         want = [(r["docID"], r["score"]) for r in
                 bm25_topk_from_index(spark, d, q, k=k).collect()]
         assert [r[0] for r in got["driver"][0]] == [w[0] for w in want]
@@ -166,7 +179,8 @@ def test_wand_pruning_two_paths(spark, prune_index, monkeypatch):
     terms = sorted(dmap["text"], key=lambda t: (-dmap["text"][t], t))
     q = ["zebraquux", terms[len(terms) // 2]]
     got = _both_paths(monkeypatch, _wand_with_stats(spark, d, dmap, q, 2))
-    assert got["spark"] == got["driver"]
+    assert got["spark"][0] == got["driver"][0]
+    _no_more_ranges(got)
     total, visited = got["driver"][1]
     assert 0 < visited < total, (visited, total)
 
@@ -232,7 +246,8 @@ def test_fq_allow_shard_without_allow_rows(spark, pos_index, vocab,
     q = [vocab[0], vocab[8], vocab[-4]]
     got = _both_paths(monkeypatch, _wand_with_stats(
         spark, d, dmap, q, 10, allow_docids=allow))
-    assert got["spark"] == got["driver"]
+    assert got["spark"][0] == got["driver"][0]
+    _no_more_ranges(got)
     full = bm25_topk_from_index(spark, d, q, k=500).collect()
     want = [r["docID"] for r in full if r["docID"] in allowed][:10]
     assert [r[0] for r in got["driver"][0]] == want
@@ -248,7 +263,8 @@ def test_tombstone_deny_two_paths(spark, pos_index, vocab, monkeypatch):
             .filter(F.col("docID").isin(denied)).select("shard", "docID"))
     got = _both_paths(monkeypatch, _wand_with_stats(
         spark, d, dmap, q, 8, deny_docids=deny))
-    assert got["spark"] == got["driver"]
+    assert got["spark"][0] == got["driver"][0]
+    _no_more_ranges(got)
     want = [r["docID"] for r in full if r["docID"] not in denied][:8]
     assert [r[0] for r in got["driver"][0]] == want
 
@@ -413,6 +429,72 @@ def test_engine_handlers_two_paths(served, monkeypatch, case):
         got[leg] = rows
     assert got["spark"] == got["driver"] == got["resident"]
     assert bool(got["driver"]) != case.startswith("empty"), got["driver"]
+
+
+KERNEL_CALLS = {
+    "search": lambda e, v, p: e.search(text=f"{v[0]} {v[5]} {v[-3]}",
+                                       fq="lang != 'go'", rows=5),
+    "search_many": lambda e, v, p: e.search_many(
+        {"a": v[0], "b": f"{v[3]} {v[-2]}"}, rows=4),
+    "phrase_search": lambda e, v, p: e.phrase_search(p[0], rows=4),
+    "search_must": lambda e, v, p: e.search(text=v[2], must=[v[4]], rows=6),
+}
+
+
+@pytest.mark.parametrize("case", list(KERNEL_CALLS))
+def test_resident_request_calls_kernel_once(served, monkeypatch, case):
+    """On a driver-resident engine a request calls each of its kernels
+    ONCE, over every shard's blocks: one WAND (or phrase match) call, plus
+    one AND call for a MUST clause. Its rows equal the forced-Spark leg's,
+    which calls the same closures once per shard."""
+    import liresolr_spark.operators.boolean as boolean
+    import liresolr_spark.operators.phrase as phrase
+
+    engines, vocab, phrases = served
+    eng = engines[True]
+    calls = []
+    run = wand._run_shard_kernel
+
+    def counting(spark, blocks, kernel, *args, **kwargs):
+        def counted(*kargs):
+            calls.append(kernel.__qualname__.split(".")[0])
+            return kernel(*kargs)
+        return run(spark, blocks, counted, *args, **kwargs)
+
+    for mod in (wand, phrase, boolean):
+        monkeypatch.setattr(mod, "_run_shard_kernel", counting)
+    got = {}
+    for leg in ("resident", "spark"):
+        monkeypatch.setattr(wand, "DRIVER_MAX_POSTINGS", LEGS[leg][1])
+        calls.clear()
+        rows = [tuple(round(x, 9) if isinstance(x, float) else x for x in r)
+                for r in KERNEL_CALLS[case](eng, vocab, phrases).collect()]
+        got[leg] = (rows, list(calls))
+    want = {"search_many": ["_shard_kernel_many"],
+            "phrase_search": ["_positional_matches"],
+            "search_must": ["_conjunctive_docids", "_wand_topk"]}
+    assert got["resident"][1] == want.get(case, ["_wand_topk"])
+    assert got["spark"][0] == got["resident"][0] and got["resident"][0]
+
+
+@pytest.mark.parametrize("n", [0, 10])
+def test_local_frame_runs_no_job(spark, n):
+    """An Arrow local relation, empty or not, is built and collected
+    without a Spark job and keeps the schema it was given."""
+    import pandas as pd
+
+    from liresolr_spark.frames import local_frame
+
+    pdf = pd.DataFrame({"qid": [f"q{i}" for i in range(n)],
+                        "docID": range(n),
+                        "score": [0.5 * i for i in range(n)]})
+    schema = "qid string, docID long, score double"
+    rows, jobs = _jobs_run(
+        spark, lambda: local_frame(spark, pdf, schema).collect())
+    assert jobs == 0
+    assert [tuple(r) for r in rows] == list(pdf.itertuples(index=False))
+    assert local_frame(spark, pdf, schema).schema.simpleString() == \
+        "struct<qid:string,docID:bigint,score:double>"
 
 
 def test_driver_dispatched_job_counts(spark, pos_index, vocab, corpus200,
