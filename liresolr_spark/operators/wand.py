@@ -340,19 +340,17 @@ def _shard_kernel_many(idfs: dict, k: int, k1: float, b: float, avgdl: float):
     range-visit loop — not decompression or scoring — dominating batch
     latency. So each posting block is decoded exactly once, and scoring is
     a scatter-add of per-term contributions into a dense (Q x docs) score
-    matrix whose axis spans the docIDs the blocks hold: one shard's range
-    on the Spark path (shards are CONTIGUOUS docID ranges by construction,
-    so at most docs_per_shard, not the corpus), and the request's docIDs
-    across every shard on the driver path, which stays small because only
-    a request of at most DRIVER_MAX_POSTINGS postings runs there.
-    Exhaustive scoring
+    matrix whose axis is the DISTINCT docIDs the surviving postings hold,
+    in ascending order. Its width is at most the posting count, however
+    far apart those docIDs lie: one shard's postings on the Spark path,
+    and every shard's on the driver path, where the request holds at most
+    DRIVER_MAX_POSTINGS postings. Exhaustive scoring
     is trivially exact — same guarantee as WAND, no pruning proof needed.
     Result stays rank-identical to per-query `wand_topk` (pytest-gated).
 
     Memory guard: the dense matrix is capped at ~512 MB; a batch too large
     for it falls back to per-query bincount accumulation (vector per query,
-    never Q x docs). At 10^12 docs docs_per_shard is chosen by the build so
-    a shard's dense row (~8 B x docs_per_shard) stays executor-sized.
+    never Q x docs); each such vector is as wide as the posting count.
 
     Optional allow/deny = docID restriction (see _shard_kernel);
     query-independent, applied once at decode."""
@@ -377,12 +375,15 @@ def _shard_kernel_many(idfs: dict, k: int, k1: float, b: float, avgdl: float):
         if not len(ids):
             return empty
         codes = np.repeat(term_codes, n)[kept]
+        # dense axis = the distinct docIDs the postings hold (ascending, so
+        # column order is docID order): bounded by the posting count, never
+        # by how far apart the docIDs lie
+        doc_axis, cols = np.unique(ids, return_inverse=True)
+        span = len(doc_axis)
         by_term = np.argsort(codes, kind="stable")
         cuts = np.cumsum(np.bincount(codes, minlength=len(uniq_terms)))[:-1]
-        ids_by_term = np.split(ids[by_term], cuts)
+        cols_by_term = np.split(cols[by_term], cuts)
         part_by_term = np.split(part[kept][by_term], cuts)
-        lo = int(ids.min())
-        span = int(ids.max()) - lo + 1
 
         qids = list(idfs)
         # per-query weight over the blocks' unique terms (0 = not queried)
@@ -412,19 +413,18 @@ def _shard_kernel_many(idfs: dict, k: int, k1: float, b: float, avgdl: float):
                 nz, sc = nz[sel], sc[sel]
             order = np.lexsort((nz, -sc))[:k]
             out.append(pd.DataFrame({
-                "qid": qid, "docID": (nz[order] + lo).astype(np.int64),
+                "qid": qid, "docID": doc_axis[nz[order]].astype(np.int64),
                 "score": sc[order]}))
 
         if len(qids) * span <= DENSE_BUDGET:
             scores = np.zeros((len(qids), span), dtype=np.float64)
             for t in range(len(uniq_terms)):
                 qs = np.flatnonzero(W[:, t])
-                if not len(qs) or not len(ids_by_term[t]):
+                if not len(qs) or not len(cols_by_term[t]):
                     continue
-                cols = ids_by_term[t] - lo
                 # (|qs| x n_t) outer contribution scattered into the dense
                 # matrix — one vectorized op per (term, querying-subset)
-                scores[np.ix_(qs, cols)] += (
+                scores[np.ix_(qs, cols_by_term[t])] += (
                     W[qs, t][:, None] * part_by_term[t][None, :])
             for qi, qid in enumerate(qids):
                 topk_rows(qid, scores[qi])
@@ -433,13 +433,13 @@ def _shard_kernel_many(idfs: dict, k: int, k1: float, b: float, avgdl: float):
                 ts = np.flatnonzero(W[qi])
                 if not len(ts):
                     continue
-                ids_cat = np.concatenate([ids_by_term[t] for t in ts])
+                cols_cat = np.concatenate([cols_by_term[t] for t in ts])
                 sc_cat = np.concatenate(
                     [W[qi, t] * part_by_term[t] for t in ts])
-                if not len(ids_cat):
+                if not len(cols_cat):
                     continue
                 dense = np.zeros(span, dtype=np.float64)
-                np.add.at(dense, ids_cat - lo, sc_cat)
+                np.add.at(dense, cols_cat, sc_cat)
                 topk_rows(qid, dense)
         return pd.concat(out, ignore_index=True) if out else empty
 

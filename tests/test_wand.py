@@ -212,3 +212,52 @@ def test_batched_merge_rank_identical(spark, indexed, vocab):
                    wand_topk_many(spark, indexed, {qid: terms}, k=15)
                    .collect()]
             assert one == want
+
+
+def test_batched_kernel_axis_bounded_by_postings():
+    """The batched kernel's dense axis is the postings' distinct docIDs,
+    not their docID span: blocks whose docIDs lie ~1e9 apart (one request
+    over every shard of a large index) score exactly and allocate no more
+    than a few MB."""
+    import tracemalloc
+
+    import numpy as np
+    import pandas as pd
+
+    from liresolr_spark.functions.codec import encode_block
+    from liresolr_spark.operators.wand import _shard_kernel_many
+
+    k1, b, avgdl = 1.2, 0.75, 10.0
+    postings = {  # term -> blocks of (docIDs, tfs, doclens), one per shard
+        "a": [([5, 9], [1, 3], [8, 12]), ([1_000_000_005], [2], [10]),
+              ([2_000_000_005], [1], [7])],
+        "b": [([5], [4], [8]), ([2_000_000_005, 2_000_000_006], [2, 1],
+                                [7, 20])],
+    }
+    rows = [(t, *encode_block(*(np.array(c, dtype=np.int64) for c in blk)))
+            for t, blks in postings.items() for blk in blks]
+    blocks = pd.DataFrame(rows, columns=["term", "docids", "tfs", "doclens"])
+    idfs = {"q1": {"a": 1.0, "b": 2.0}, "q2": {"b": 1.5}, "q3": {"a": 0.5}}
+
+    want = {}
+    for qid, ws in idfs.items():
+        acc = {}
+        for t, w in ws.items():
+            for ids, tfs, dls in postings[t]:
+                for d, tf, dl in zip(ids, tfs, dls):
+                    acc[d] = acc.get(d, 0.0) + w * tf * (k1 + 1.0) / (
+                        tf + k1 * (1.0 - b + b * dl / avgdl))
+        want[qid] = sorted(acc.items(), key=lambda x: (-x[1], x[0]))[:3]
+
+    tracemalloc.start()
+    try:
+        got = _shard_kernel_many(idfs, 3, k1, b, avgdl)(blocks)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert peak < 8 << 20, peak
+    for qid in idfs:
+        part = got[got["qid"] == qid]
+        assert [(int(d), round(s, 9)) for d, s in
+                zip(part["docID"], part["score"])] == \
+            [(d, round(s, 9)) for d, s in want[qid]], qid
